@@ -27,13 +27,34 @@ reference's own object-store pattern (``convert/results_processor.py:
   results guards the fine grain (SURVEY §3.3) — url alone is NOT an
   identity, the corpus contains duplicate urls with distinct payloads.
 
-The conditional PUT is emulated on POSIX with ``os.link`` (atomic,
-fails-if-exists, and the content is complete before the name appears —
-a crash mid-write can never publish a torn manifest). On an object
-store the same call maps to ``PutObject`` with ``If-None-Match: *``
-(S3) / ``x-goog-if-generation-match: 0`` (GCS); with an Iceberg catalog
-the manifest becomes a snapshot commit and this module shrinks to a
-writer config.
+Storage contract. Every filesystem touch in the commit, streaming
+sketch-state and ingest paths goes through the primitives below, which
+speak the Hadoop FileSystem API (any scheme the JVM has a connector
+for) with the active Spark context's Hadoop configuration:
+``exists``, ``list_status``, ``committed_dirs`` (directories gated on
+their OWN ``_SUCCESS``), ``latest_version`` (newest complete
+``<prefix><int>`` directory, optionally strictly below a given id),
+``put_if_absent``, ``read_bytes`` and ``delete``. ``put_if_absent`` is
+the only step that needs atomicity, and what gives it depends on the
+scheme:
+
+- ``file``: ``os.link`` from a fully written temp name — atomic,
+  fails-if-exists, and the content is complete before the name
+  appears, so a crash mid-write never publishes a torn manifest.
+  Hadoop's local ``create(overwrite=false)`` checks and then creates,
+  which is NOT atomic, so the local branch bypasses it.
+- ``hdfs``/``viewfs``: ``FileSystem.create(path, false)``, which the
+  NameNode runs as an exclusive create (a second creator gets
+  ``FileAlreadyExistsException``). The name is visible, empty, until
+  the winner closes the stream.
+- object stores (``s3a``, ``gs``, ``abfs``): atomic only through a
+  connector that maps ``create(path, false)`` to a conditional PUT
+  (S3 ``If-None-Match: *`` / GCS ``x-goog-if-generation-match: 0``).
+  A connector that checks-then-PUTs lets two racing committers both
+  "win"; single-writer runs stay correct either way.
+
+With an Iceberg catalog the manifest becomes a snapshot commit and this
+module shrinks to a writer config.
 
 Scale note: manifests hold only group ids + attempt paths + row counts
 (bytes, not rows), so at 10^12 documents they stay tiny. Resume's fine
@@ -51,22 +72,70 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _put_if_absent(path: str, payload: bytes) -> bool:
-    """Atomically create ``path`` with ``payload`` iff it does not exist.
+def _fs(path: str):
+    """(FileSystem, Path) for ``path`` under the active Spark context's
+    Hadoop configuration — a plain path resolves against
+    ``fs.defaultFS``, exactly as Spark's own readers resolve it."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("the storage primitives need an active SparkContext")
+    # a JavaClass built by name skips the per-package reflection round
+    # trips of sc._jvm.org.apache...; these run many times per commit
+    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+    return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
 
-    POSIX emulation of an object store's conditional single-object PUT
-    (S3 ``If-None-Match: *`` / GCS ``if-generation-match: 0``): the
-    payload is fully written to a temp name first, then ``os.link``
-    publishes it — link is atomic, fails when the target exists, and
-    never exposes a partially-written object. Returns True iff this
-    caller won the name."""
+
+def exists(path: str) -> bool:
+    fs, jpath = _fs(path)
+    return bool(fs.exists(jpath))
+
+
+def list_status(root: str, prefix: str = ""):
+    """Yields the FileStatus of each child of ``root`` whose name starts
+    with ``prefix`` — one LIST, metadata-scale; nothing when ``root`` is
+    absent. Lazy, so a caller that stops early skips the per-child
+    py4j calls for the rest."""
+    fs, jroot = _fs(root)
+    if fs.exists(jroot):
+        for st in fs.listStatus(jroot):
+            if not prefix or st.getPath().getName().startswith(prefix):
+                yield st
+
+
+def committed_dirs(root: str, prefix: str = "batch=") -> dict[str, str]:
+    """{key: dir} for each directory ``root/<prefix><key>`` whose OWN
+    ``_SUCCESS`` exists — a torn write (no committer marker) is
+    invisible. No rename assumptions: object-store safe."""
+    out: dict[str, str] = {}
+    for st in list_status(root, prefix):
+        d = st.getPath().toString()
+        if st.isDirectory() and exists(f"{d}/_SUCCESS"):
+            out[st.getPath().getName()[len(prefix):]] = d
+    return out
+
+
+def latest_version(root: str, prefix: str, before: int | None = None) -> str | None:
+    """Newest complete ``root/<prefix><int>`` directory, optionally
+    restricted to versions strictly below ``before``."""
+    versions = {}
+    for key, d in committed_dirs(root, prefix).items():
+        if key.isdigit() and (before is None or int(key) < before):
+            versions[int(key)] = d
+    return versions[max(versions)] if versions else None
+
+
+def _link_if_absent(path: str, payload: bytes) -> bool:
+    """The ``file``-scheme publish: write the payload to a temp name,
+    fsync, then ``os.link`` it to ``path`` (see the module docstring)."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
     with open(tmp, "wb") as f:
         f.write(payload)
@@ -79,6 +148,56 @@ def _put_if_absent(path: str, payload: bytes) -> bool:
         return False
     finally:
         os.unlink(tmp)
+
+
+def put_if_absent(path: str, payload: bytes) -> bool:
+    """Atomically create ``path`` with ``payload`` iff it does not exist
+    — the conditional single-object PUT. Returns True iff this caller
+    won the name. Atomicity per scheme: module docstring."""
+    fs, jpath = _fs(path)
+    uri = fs.makeQualified(jpath).toUri()
+    if uri.getScheme() == "file":
+        return _link_if_absent(uri.getPath(), payload)
+    return _create_if_absent(fs, jpath, payload)
+
+
+def _create_if_absent(fs, jpath, payload: bytes) -> bool:
+    """The non-``file`` publish: ``FileSystem.create(path, false)``."""
+    try:
+        out = fs.create(jpath, False)
+    except Py4JJavaError as e:
+        name = e.java_exception.getClass().getName()
+        if name == "org.apache.hadoop.fs.FileAlreadyExistsException":
+            return False
+        raise
+    try:
+        out.write(bytearray(payload))
+    finally:
+        out.close()
+    return True
+
+
+def read_bytes(path: str) -> bytes | None:
+    """The whole object at ``path``; None when it does not exist."""
+    fs, jpath = _fs(path)
+    if not fs.exists(jpath):
+        return None
+    stream = fs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def delete(path: str) -> int:
+    """Recursively delete ``path``; returns the bytes it held (0 when
+    absent). Idempotent."""
+    fs, jpath = _fs(path)
+    if not fs.exists(jpath):
+        return 0
+    n_bytes = int(fs.getContentSummary(jpath).getLength())
+    fs.delete(jpath, True)
+    return n_bytes
 
 
 def _url_hash_sum() -> F.Column:
@@ -102,29 +221,28 @@ class CommitLog:
 
     def __init__(self, root: str) -> None:
         self.root = root
-        self.results_dir = os.path.join(root, "results")
-        self.manifest_dir = os.path.join(root, "manifest")
+        self.results_dir = f"{root.rstrip('/')}/results"
+        self.manifest_dir = f"{root.rstrip('/')}/manifest"
         for d in (self.results_dir, self.manifest_dir):
-            os.makedirs(d, exist_ok=True)
+            fs, jpath = _fs(d)
+            fs.mkdirs(jpath)
 
     # -- commit side --------------------------------------------------
 
     def _manifest_path(self, gid: int) -> str:
-        return os.path.join(self.manifest_dir, f"group-{gid}.json")
+        return f"{self.manifest_dir}/group-{gid}.json"
 
     def committed_groups(self) -> set[int]:
-        out = set()
-        for name in os.listdir(self.manifest_dir):
-            if name.startswith("group-") and name.endswith(".json"):
-                out.add(int(name[len("group-"):-len(".json")]))
-        return out
+        names = [
+            st.getPath().getName() for st in list_status(self.manifest_dir, "group-")
+        ]
+        return {
+            int(n[len("group-"):-len(".json")]) for n in names if n.endswith(".json")
+        }
 
     def read_manifest(self, gid: int) -> dict | None:
-        try:
-            with open(self._manifest_path(gid)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
+        raw = read_bytes(self._manifest_path(gid))
+        return None if raw is None else json.loads(raw)
 
     def group_result_path(self, gid: int) -> str:
         """The committed group's data location (from its manifest); before
@@ -133,10 +251,10 @@ class CommitLog:
         m = self.read_manifest(gid)
         if m is not None:
             return m["path"]
-        return os.path.join(self.results_dir, f"group={gid}")
+        return f"{self.results_dir}/group={gid}"
 
     def _attempt_path(self, gid: int, attempt: str) -> str:
-        return os.path.join(self.results_dir, f"group={gid}", f"attempt={attempt}")
+        return f"{self.results_dir}/group={gid}/attempt={attempt}"
 
     def _write_attempt(self, gid: int, results: DataFrame) -> dict:
         """Phase 1: data files to a unique final path — no rename ever."""
@@ -179,9 +297,9 @@ class CommitLog:
         manifest is returned, so every caller converges on one result."""
         gid = manifest["gid"]
         payload = json.dumps(manifest).encode()
-        if _put_if_absent(self._manifest_path(gid), payload):
+        if put_if_absent(self._manifest_path(gid), payload):
             return manifest
-        shutil.rmtree(manifest["path"], ignore_errors=True)
+        delete(manifest["path"])
         won = self.read_manifest(gid)
         assert won is not None, f"manifest for group {gid} vanished"
         return won

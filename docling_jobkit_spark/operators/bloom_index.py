@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docling_jobkit_spark.checkpoint import exists
 from docling_jobkit_spark.operators.zonemap import _canon
 
 N_BITS_DEFAULT = 1 << 13
@@ -278,11 +279,7 @@ def write_bloom_index(index: DataFrame, path: str) -> None:
 def read_bloom_index(spark: SparkSession, path: str) -> DataFrame:
     """Read a persisted manifest; refuses a torn (no _SUCCESS) or
     foreign-schema layout so a probe can't silently run against garbage."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    if not fs.exists(
-        spark._jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")  # noqa: SLF001
-    ):
+    if not exists(f"{path}/_SUCCESS"):
         raise ValueError(f"bloom index at {path} has no _SUCCESS — torn write?")
     idx = spark.read.parquet(path)
     want = {f.name for f in INDEX_SCHEMA.fields}

@@ -186,7 +186,7 @@ def ivf_index_report(
         # registrations per centroid (see similarity._cosine_array)
         from docling_jobkit_spark.operators.similarity import _cosine_array
 
-        sim_arr = _cosine_array(idx, [list(map(float, c)) for c in centroids], vec_col)
+        sim_arr = _cosine_array([list(map(float, c)) for c in centroids], vec_col)
         own = F.when(
             F.col("ivf_cell") >= 0, F.element_at(sim_arr, F.col("ivf_cell") + 1)
         )

@@ -312,7 +312,7 @@ def ivf_assign(
     # downstream filter/exchange Catalyst re-inlines the cell into)
     # re-ran all k folds per reference.
     out_cols = df.columns
-    inner = df.select("*", F.explode(F.array(_cosine_array(df, centroids, vec_col))).alias("_ca"))
+    inner = df.select("*", F.explode(F.array(_cosine_array(centroids, vec_col))).alias("_ca"))
     best_cell = (
         F.array_position(F.col("_ca"), F.array_max(F.col("_ca"))) - 1
     ).cast("int")
@@ -324,19 +324,19 @@ def ivf_assign(
     )
 
 
-def _cosine_array(
-    df: DataFrame, centroids: list[list[float]], vec_col: str
-) -> Column:
+def _cosine_array(centroids: list[list[float]], vec_col: str) -> Column:
     """The k-wide rounded-cosine array against literal centroids, as ONE
     ``F.expr`` parse (the lsh_signature precedent): the Column-API
     spelling costs ~6 py4j lambda registrations per centroid — ~0.4 s of
-    pure driver latency per build at k=16 — while the SQL text parses
-    the IDENTICAL expression tree (same aggregate/zip_with/cast/sqrt
-    nodes, ``_double_sql`` literals round-trip bit-exactly), so every
-    float is unchanged (A/B-collected on the embeddings corpus)."""
+    pure driver latency per build at k=16. The parsed tree is
+    restructured (the vector norm bound once per row, centroid norms as
+    driver literals — see below) but value- and bit-identical: the same
+    aggregate/zip_with/cast/sqrt arithmetic in the same order, and
+    ``_double_sql`` literals round-trip bit-exactly, so every float is
+    unchanged (A/B-collected on the embeddings corpus)."""
     from docling_jobkit_spark.functions.scalar import _double_sql
 
-    v = f"`{vec_col}`"
+    v = "`" + vec_col.replace("`", "``") + "`"
 
     def dot(a: str, b: str) -> str:
         return (

@@ -64,9 +64,15 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from docling_jobkit_spark.checkpoint import (
+    committed_dirs,
+    delete,
+    exists,
+    list_status,
+)
 from docling_jobkit_spark.functions.scalar import content_hash, stable_hash64
 from docling_jobkit_spark.operators.minhash_index import (
     banded_signatures,
@@ -157,34 +163,11 @@ def docs_from_extraction(results: DataFrame) -> DataFrame:
     )
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
-def _committed_batch_dirs(spark: SparkSession, family_root: str) -> dict[str, str]:
-    """{batch_id: dir} for ``family_root/batch=<id>`` dirs whose own
-    ``_SUCCESS`` exists — a torn write (no committer marker) is
-    invisible to history probes. One driver-side LIST (object-store
-    safe, no rename assumptions), metadata-scale."""
-    fs, jroot = _fs(spark, family_root)
-    if not fs.exists(jroot):
-        return {}
-    jvm = spark.sparkContext._jvm
-    out: dict[str, str] = {}
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                out[name[len("batch="):]] = st.getPath().toString()
-    return out
+def _check_batch_id(batch_id: str) -> None:
+    if not _BATCH_ID_RE.match(batch_id):
+        raise ValueError(
+            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
+        )
 
 
 def _empty_corpus(spark: SparkSession) -> DataFrame:
@@ -197,13 +180,11 @@ def _empty_corpus(spark: SparkSession) -> DataFrame:
     )
 
 
-def _has_data_files(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _fs(spark, path)
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if not name.startswith(("_", ".")):
-            return True
-    return False
+def _has_data_files(path: str) -> bool:
+    """False for an absent dir too (an expired batch's payload)."""
+    return any(
+        not st.getPath().getName().startswith(("_", ".")) for st in list_status(path)
+    )
 
 
 def history_exact_hits(
@@ -224,11 +205,11 @@ def _history_dirs(
 ) -> list[str]:
     """Committed, non-empty, non-self batch dirs — an all-dropped batch
     commits a marker-only dir that carries nothing to probe."""
-    dirs = _committed_batch_dirs(spark, family_root)
+    dirs = committed_dirs(family_root)
     return [
         d
         for b, d in sorted(dirs.items())
-        if b != current and _has_data_files(spark, d)
+        if b != current and _has_data_files(d)
     ]
 
 
@@ -247,10 +228,7 @@ def ingest_batch(
     ``docs`` needs (id, url, text) — raw pages go through
     ``extract_documents`` + ``docs_from_extraction`` first."""
     cfg = config or IngestConfig()
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
+    _check_batch_id(batch_id)
     root = state_dir.rstrip("/")
     corpus_root = f"{root}/corpus"
     seen_root = f"{root}/seen"
@@ -265,14 +243,14 @@ def ingest_batch(
     # An EXPIRED batch (payload reclaimed by expire_batch_payload) has
     # the marker but no corpus dir: still a committed no-op replay —
     # its dedup memory (seen/index) is intact; kept is empty.
-    if _exists(spark, f"{ledger_dir}/_SUCCESS"):
+    if exists(f"{ledger_dir}/_SUCCESS"):
         return IngestResult(
             batch_id=batch_id,
             replayed=True,
             ledger=spark.read.parquet(ledger_dir),
             kept=(
                 spark.read.schema(CORPUS_SCHEMA).parquet(corpus_dir)
-                if _exists(spark, corpus_dir)
+                if exists(corpus_dir)
                 else _empty_corpus(spark)
             ),
             n_new_zonemap_files=0,
@@ -405,7 +383,7 @@ def ingest_batch(
     # failed read of a partial dir
     zm_prev = (
         read_zonemap(spark, zonemap_dir)
-        if _exists(spark, f"{zonemap_dir}/_SUCCESS")
+        if exists(f"{zonemap_dir}/_SUCCESS")
         else None
     )
     zm, n_new, _n_drop = update_zonemap(
@@ -424,7 +402,7 @@ def ingest_batch(
         bloom_dir = f"{root}/bloomidx"
         bi_prev = (
             read_bloom_index(spark, bloom_dir)
-            if _exists(spark, f"{bloom_dir}/_SUCCESS")
+            if exists(f"{bloom_dir}/_SUCCESS")
             else None
         )
         if bi_prev is not None or _list_parquet_files(spark, corpus_root):
@@ -489,20 +467,13 @@ def compact_ingest_batch(
     pre-rewrite file listing and will fail with FileNotFound if
     re-executed — re-read the path after compacting (plain Spark
     overwrite semantics, same as any path rewrite)."""
-    from docling_jobkit_spark.sinks.maintenance import (
-        _list_parquet_files,
-        compact_files,
-        content_signature,
-    )
+    from docling_jobkit_spark.sinks.maintenance import compact_files
 
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
+    _check_batch_id(batch_id)
     root = state_dir.rstrip("/")
     src = f"{root}/corpus/batch={batch_id}"
     tmp = f"{root}/corpus_compact/batch={batch_id}"
-    if not _exists(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS"):
+    if not exists(f"{root}/ledger/batch={batch_id}/_SUCCESS"):
         raise ValueError(f"batch {batch_id!r} is not committed; refusing to compact")
 
     def _sig(path: str):
@@ -510,9 +481,9 @@ def compact_ingest_batch(
         return content_signature(df, key_col="content_hash")
 
     n_src_files = (
-        len(_list_parquet_files(spark, src)) if _exists(spark, src) else 0
+        len(_list_parquet_files(spark, src)) if exists(src) else 0
     )
-    tmp_complete = _exists(spark, f"{tmp}/_SUCCESS")
+    tmp_complete = exists(f"{tmp}/_SUCCESS")
     healed = False
 
     if n_src_files == 0 and not tmp_complete:
@@ -548,29 +519,9 @@ def compact_ingest_batch(
             )
 
     # manifest reconciliation: stale file rows drop, new files statted
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm, _n_new, _n_drop = update_zonemap(
-            spark, f"{root}/corpus", read_zonemap(spark, zonemap_dir),
-            ["n_chars"],
-        )
-        write_zonemap(zm.localCheckpoint(eager=True), zonemap_dir)
-    # bloom manifest likewise (indexed columns read off the index
-    # itself, so a rewrite can't silently change coverage)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi_prev = read_bloom_index(spark, bloom_dir)
-        bcols = sorted(
-            r["column"] for r in bi_prev.select("column").distinct().collect()
-        )
-        if bcols:
-            bi, _bn, _bd = update_bloom_index(
-                spark, f"{root}/corpus", bi_prev, bcols
-            )
-            write_bloom_index(bi.localCheckpoint(eager=True), bloom_dir)
-
-    fs, jtmp = _fs(spark, tmp)
-    fs.delete(jtmp, True)
+    # on the columns each manifest already indexes
+    _reconcile_manifests(spark, root)
+    delete(tmp)
     return CompactBatchStats(
         batch_id, n_src_files, stats.n_files_after, healed, None
     )
@@ -608,45 +559,20 @@ def expire_batch_payload(
     A crash between any two steps replays exactly: step 1 is a no-op
     once the rows are gone, deletes are idempotent. Uncommitted batches
     refuse (expiring an in-flight batch would race its writer)."""
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
+    _check_batch_id(batch_id)
     root = state_dir.rstrip("/")
-    if not _exists(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS"):
+    if not exists(f"{root}/ledger/batch={batch_id}/_SUCCESS"):
         raise ValueError(f"batch {batch_id!r} is not committed; refusing to expire")
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
     corpus_dir = f"{root}/corpus/batch={batch_id}"
     shards_dir = f"{root}/shards/batch={batch_id}"
 
-    # 1. manifests first: drop this batch's file rows (metadata-sized).
-    # BOTH pruning manifests stop referencing the files before any file
-    # is deleted — scan_pruned / scan_pruned_bloom read survivors by
-    # explicit manifest path, so the reverse order would leave a window
-    # where a pruned scan references deleted files.
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if keep.count() < zm.count():
-            write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if bkeep.count() < bi.count():
-            write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
+    # 1. manifests first: drop this batch's file rows (metadata-sized)
+    _drop_manifest_rows(spark, root, _in_batch(batch_id))
 
     # 2-3. delete payload dirs (idempotent; sizes counted before)
-    already = not _exists(spark, corpus_dir)
+    already = not exists(corpus_dir)
     n_files = len(_list_parquet_files(spark, corpus_dir)) if not already else 0
-    n_bytes = 0
-    for path in (corpus_dir, shards_dir):
-        if _exists(spark, path):
-            fs, jpath = _fs(spark, path)
-            n_bytes += int(fs.getContentSummary(jpath).getLength())
-            fs.delete(jpath, True)
+    n_bytes = delete(corpus_dir) + delete(shards_dir)
     return ExpireBatchStats(batch_id, n_files, n_bytes, already)
 
 
@@ -714,12 +640,9 @@ def rollback_batch(
     Reference parity: docling-jobkit's result stores are append-only
     caches with no un-commit (``docling_jobkit/connectors``) — rollback
     completes the snapshot lifecycle alongside expire and takedown."""
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
+    _check_batch_id(batch_id)
     root = state_dir.rstrip("/")
-    committed = _committed_batch_dirs(spark, f"{root}/ledger")
+    committed = committed_dirs(f"{root}/ledger")
     was_committed = batch_id in committed
     if was_committed and not allow_non_latest:
         later = sorted(b for b in committed if b > batch_id)
@@ -733,22 +656,10 @@ def rollback_batch(
     # 1. the un-commit point: one marker delete, then the batch is
     # invisible to every reader and the rest is debris cleanup
     if was_committed:
-        fs, jm = _fs(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS")
-        fs.delete(jm, False)
+        delete(f"{root}/ledger/batch={batch_id}/_SUCCESS")
 
     # 2. manifests first (expire ordering)
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if keep.count() < zm.count():
-            write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if bkeep.count() < bi.count():
-            write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
+    _drop_manifest_rows(spark, root, _in_batch(batch_id))
 
     # 3. every per-batch dir, families and tmps alike
     existed = was_committed
@@ -759,11 +670,9 @@ def rollback_batch(
         "corpus_compact", "corpus_takedown", "shards_takedown",
     ):
         path = f"{root}/{family}/batch={batch_id}"
-        if _exists(spark, path):
+        if exists(path):
             existed = True
-            fs, jpath = _fs(spark, path)
-            n_bytes += int(fs.getContentSummary(jpath).getLength())
-            fs.delete(jpath, True)
+            n_bytes += delete(path)
             n_dirs += 1
     return RollbackStats(
         batch_id=batch_id,
@@ -803,14 +712,14 @@ def read_corpus_asof(
     if on_expired not in ("raise", "skip"):
         raise ValueError(f"on_expired must be 'raise' or 'skip', got {on_expired!r}")
     root = state_dir.rstrip("/")
-    committed = _committed_batch_dirs(spark, f"{root}/ledger")
+    committed = committed_dirs(f"{root}/ledger")
     if batch_id not in committed:
         raise ValueError(
             f"batch {batch_id!r} is not committed; cannot time-travel to it"
         )
     window = sorted(b for b in committed if b <= batch_id)
     expired = [
-        b for b in window if not _exists(spark, f"{root}/corpus/batch={b}")
+        b for b in window if not exists(f"{root}/corpus/batch={b}")
     ]
     if expired and on_expired == "raise":
         raise ValueError(
@@ -868,7 +777,7 @@ def read_corpus_latest(
     (``docling_jobkit/connectors`` result-store get semantics); this is
     that shadowing over the batch-versioned corpus."""
     root = state_dir.rstrip("/")
-    committed = _committed_batch_dirs(spark, f"{root}/ledger")
+    committed = committed_dirs(f"{root}/ledger")
     if not committed:
         return _empty_corpus(spark).withColumn(
             "batch", F.lit(None).cast("string")
@@ -923,50 +832,37 @@ def vacuum_ingest_state(
     import time
 
     root = state_dir.rstrip("/")
-    committed = set(_committed_batch_dirs(spark, f"{root}/ledger"))
+    committed = set(committed_dirs(f"{root}/ledger"))
     cutoff_ms = (time.time() - float(min_age_seconds)) * 1000.0
-    deleted: list[str] = []
-    n_bytes = 0
-    n_kept_recovery = 0
 
-    def _batch_dirs(family_root: str):
-        fs, jroot = _fs(spark, family_root)
-        if not fs.exists(jroot):
-            return
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("batch="):
-                yield fs, st, name[len("batch="):]
+    def _old_batch_dirs(family: str, keep: set[str]) -> list[str]:
+        return [
+            st.getPath().toString()
+            for st in list_status(f"{root}/{family}", "batch=")
+            if st.isDirectory()
+            and st.getPath().getName()[len("batch="):] not in keep
+            and st.getModificationTime() < cutoff_ms
+        ]
 
-    for family in ("corpus", "seen", "index", "shards", "ledger"):
-        for fs, st, bid in _batch_dirs(f"{root}/{family}"):
-            if bid in committed or st.getModificationTime() >= cutoff_ms:
-                continue
-            n_bytes += int(fs.getContentSummary(st.getPath()).getLength())
-            fs.delete(st.getPath(), True)
-            deleted.append(st.getPath().toString())
-
-    jvm = spark.sparkContext._jvm
+    doomed = [
+        d
+        for family in ("corpus", "seen", "index", "shards", "ledger")
+        for d in _old_batch_dirs(family, committed)
+    ]
     # same rule for every two-phase tmp family: compaction tmps plus the
     # takedown tmps (corpus + shards) — an INCOMPLETE tmp is debris (its
     # writer restarts from source), a COMPLETE one is the certified heal
     # copy delete_content / compact_ingest_batch recover from
+    n_kept_recovery = 0
     for family in ("corpus_compact", "corpus_takedown", "shards_takedown"):
-        for fs, st, _bid in _batch_dirs(f"{root}/{family}"):
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                n_kept_recovery += 1  # certified heal copy — never vacuumed
-                continue
-            if st.getModificationTime() >= cutoff_ms:
-                continue
-            n_bytes += int(fs.getContentSummary(st.getPath()).getLength())
-            fs.delete(st.getPath(), True)
-            deleted.append(st.getPath().toString())
+        certified = set(committed_dirs(f"{root}/{family}"))
+        n_kept_recovery += len(certified)  # never vacuumed
+        doomed += _old_batch_dirs(family, certified)
 
     return VacuumStats(
-        n_dirs_deleted=len(deleted),
-        bytes_reclaimed=n_bytes,
-        deleted=tuple(sorted(deleted)),
+        n_dirs_deleted=len(doomed),
+        bytes_reclaimed=sum(delete(d) for d in doomed),
+        deleted=tuple(sorted(doomed)),
         n_kept_recovery=n_kept_recovery,
     )
 
@@ -989,7 +885,7 @@ def locate_content(
     root = state_dir.rstrip("/")
     corpus_root = f"{root}/corpus"
     bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
+    if exists(f"{bloom_dir}/_SUCCESS"):
         idx = read_bloom_index(spark, bloom_dir)
         # fully-expired corpus: the manifest is empty and there is no
         # file to derive a scan schema from — nothing to find
@@ -1033,20 +929,26 @@ _TAKEDOWN_SCHEMA = CORPUS_SCHEMA + ", src_file string"
 _SHARD_SCHEMA = "text string, url string, content_hash string"
 
 
-def _drop_manifest_rows(spark: SparkSession, root: str, files: list[str]) -> None:
-    """Both pruning manifests stop referencing ``files`` BEFORE any file
-    is deleted (the expire ordering: the reverse leaves a window where a
-    pruned scan references deleted payload). Metadata-sized."""
+def _in_batch(batch_id: str) -> Column:
+    return F.col("file").contains(f"/batch={batch_id}/")
+
+
+def _drop_manifest_rows(spark: SparkSession, root: str, drop: Column) -> None:
+    """Both pruning manifests stop referencing the files matching the
+    ``drop`` predicate (over their ``file`` column) BEFORE any file is
+    deleted — the expire ordering: the reverse leaves a window where a
+    pruned scan (which reads survivors by explicit manifest path)
+    references deleted payload. Metadata-sized."""
     zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
+    if exists(f"{zonemap_dir}/_SUCCESS"):
         zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~F.col("file").isin(files))
+        keep = zm.where(~drop)
         if keep.count() < zm.count():
             write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
     bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
+    if exists(f"{bloom_dir}/_SUCCESS"):
         bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~F.col("file").isin(files))
+        bkeep = bi.where(~drop)
         if bkeep.count() < bi.count():
             write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
 
@@ -1057,7 +959,7 @@ def _reconcile_manifests(spark: SparkSession, root: str) -> None:
     columns are read off each manifest itself."""
     corpus_root = f"{root}/corpus"
     zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
+    if exists(f"{zonemap_dir}/_SUCCESS"):
         zm_prev = read_zonemap(spark, zonemap_dir)
         zcols = sorted(
             r["col"] for r in zm_prev.select("col").distinct().collect()
@@ -1065,7 +967,7 @@ def _reconcile_manifests(spark: SparkSession, root: str) -> None:
         zm, _n, _d = update_zonemap(spark, corpus_root, zm_prev, zcols)
         write_zonemap(zm.localCheckpoint(eager=True), zonemap_dir)
     bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
+    if exists(f"{bloom_dir}/_SUCCESS"):
         bi_prev = read_bloom_index(spark, bloom_dir)
         bcols = sorted(
             r["column"] for r in bi_prev.select("column").distinct().collect()
@@ -1097,23 +999,21 @@ def _apply_takedown_tmp(
     Returns (n_files_deleted, n_rows_appended)."""
     corpus_root = f"{root}/corpus"
     batch_dir = f"{corpus_root}/batch={batch_id}"
-    if not _exists(spark, batch_dir):
+    if not exists(batch_dir):
         # the batch's payload was expired wholesale after this tmp was
         # written — a strictly stronger delete already happened; the
         # manifests dropped the batch's rows at expire time
-        fs, jt = _fs(spark, tmp_dir)
-        fs.delete(jt, True)
+        delete(tmp_dir)
         return 0, 0
     tmp = spark.read.schema(_TAKEDOWN_SCHEMA).parquet(tmp_dir)
     affected = sorted(
         r["src_file"] for r in tmp.select("src_file").distinct().collect()
     )
-    _drop_manifest_rows(spark, root, affected)
+    _drop_manifest_rows(spark, root, F.col("file").isin(affected))
     n_del = 0
     for p in affected:
-        fs, jp = _fs(spark, p)
-        if fs.exists(jp):
-            fs.delete(jp, False)
+        if exists(p):
+            delete(p)
             n_del += 1
     survivors = tmp.where(F.col("content_hash").isNotNull()).select(
         "doc_id", "url", "text", "content_hash", "n_chars"
@@ -1143,8 +1043,7 @@ def _apply_takedown_tmp(
             f"{n_lost} survivors lost, {n_dup} duplicated hashes "
             f"(certified tmp kept at {tmp_dir})"
         )
-    fs, jt = _fs(spark, tmp_dir)
-    fs.delete(jt, True)
+    delete(tmp_dir)
     return n_del, n_add
 
 
@@ -1166,8 +1065,7 @@ def _apply_shard_tmp(
             f"shard takedown copy-back signature mismatch for batch "
             f"{batch_id!r} (certified tmp kept at {tmp_dir})"
         )
-    fs, jt = _fs(spark, tmp_dir)
-    fs.delete(jt, True)
+    delete(tmp_dir)
 
 
 def delete_content(
@@ -1224,13 +1122,13 @@ def delete_content(
     n_shards = 0
 
     # -- heal: finish any certified tmp a torn prior call left ---------
-    for bid, d in sorted(_committed_batch_dirs(spark, tk_root).items()):
+    for bid, d in sorted(committed_dirs(tk_root).items()):
         nd, nr = _apply_takedown_tmp(spark, root, bid, d)
         n_files_deleted += nd
         n_rows_rewritten += nr
         healed.append(bid)
         batches.add(bid)
-    for bid, d in sorted(_committed_batch_dirs(spark, sh_tk_root).items()):
+    for bid, d in sorted(committed_dirs(sh_tk_root).items()):
         _apply_shard_tmp(spark, root, bid, d)
         n_shards += 1
         if bid not in healed:
@@ -1311,7 +1209,7 @@ def delete_content(
     if purge_shards:
         for bid in sorted(by_batch):
             sdir = f"{root}/shards/batch={bid}"
-            if not _exists(spark, sdir):
+            if not exists(sdir):
                 continue
             cur = spark.read.schema(_SHARD_SCHEMA).json(sdir)
             n_before = cur.count()
@@ -1395,18 +1293,18 @@ def supersede_batch(
     ``batch_id`` is uncommitted, or committed but payload-expired (its
     url set is no longer resolvable)."""
     root = state_dir.rstrip("/")
-    committed = _committed_batch_dirs(spark, f"{root}/ledger")
+    committed = committed_dirs(f"{root}/ledger")
     if batch_id not in committed:
         raise ValueError(
             f"batch {batch_id!r} is not committed; cannot supersede with it"
         )
     batch_dir = f"{root}/corpus/batch={batch_id}"
-    if not _exists(spark, batch_dir):
+    if not exists(batch_dir):
         raise ValueError(
             f"batch {batch_id!r} payload was expired; its url set is no "
             "longer resolvable, cannot supersede with it"
         )
-    if not _has_data_files(spark, batch_dir):
+    if not _has_data_files(batch_dir):
         # an all-dropped batch supersedes nothing
         return SupersedeStats(batch_id, 0, 0, None)
     new_urls = (
@@ -1418,9 +1316,7 @@ def supersede_batch(
     older_dirs = [
         f"{root}/corpus/batch={b}"
         for b in sorted(committed)
-        if b < batch_id
-        and _exists(spark, f"{root}/corpus/batch={b}")
-        and _has_data_files(spark, f"{root}/corpus/batch={b}")
+        if b < batch_id and _has_data_files(f"{root}/corpus/batch={b}")
     ]
     n_urls = new_urls.count()
     if not older_dirs:
@@ -1479,7 +1375,7 @@ def ingest_drift_report(
     distribution drift is left to operators — this closes that gap
     relationally."""
     root = state_dir.rstrip("/")
-    committed = _committed_batch_dirs(spark, f"{root}/ledger")
+    committed = committed_dirs(f"{root}/ledger")
     batch_ids = sorted(committed)
     out_schema = (
         "batch_id string, prev_batch_id string, docs_in bigint, "
@@ -1517,7 +1413,7 @@ def ingest_drift_report(
     )
 
     # -- length histograms (column-pruned; text never read) ------------
-    live = [b for b in batch_ids if _exists(spark, f"{root}/corpus/batch={b}")]
+    live = [b for b in batch_ids if exists(f"{root}/corpus/batch={b}")]
     if live:
         hist = (
             spark.read.option("basePath", f"{root}/corpus")
@@ -1681,10 +1577,8 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
     batches whose corpus dir was reclaimed by ``expire_batch_payload``
     (dir ABSENT — distinct from an all-dropped batch's marker-only
     empty dir, which reports 0 files but is not expired)."""
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
     root = state_dir.rstrip("/")
-    batches = _committed_batch_dirs(spark, f"{root}/ledger")
+    batches = committed_dirs(f"{root}/ledger")
     # ONE Spark job for every batch's ledger endpoints: all committed
     # ledger dirs under one basePath (the ``ingest_drift_report`` /
     # history-probe pattern), min/max stage rows per batch via struct
@@ -1714,7 +1608,7 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
     rows = []
     for bid in sorted(batches):
         corpus_dir = f"{root}/corpus/batch={bid}"
-        expired = not _exists(spark, corpus_dir)
+        expired = not exists(corpus_dir)
         files = [] if expired else _list_parquet_files(spark, corpus_dir)
         n_bytes = sum(b for _, b in files)
         docs_in, docs_kept = led_stats[bid]

@@ -34,6 +34,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from docling_jobkit_spark.checkpoint import _fs, _url_hash_sum
+
 
 @dataclass(frozen=True)
 class CompactionStats:
@@ -48,9 +50,7 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]
     Hadoop-FS listing (object-store safe: LIST, no rename assumptions),
     bounded by the file count, which is exactly what compaction is
     trying to shrink."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, jpath = _fs(path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -123,8 +123,6 @@ def content_signature(df: DataFrame, key_col: str = "url") -> tuple[int, int]:
     ``F.sum`` silently drops NULL terms). Equal signatures across a
     rewrite certify the layout change moved every row exactly once."""
     from pyspark.sql import functions as F
-
-    from docling_jobkit_spark.checkpoint import _url_hash_sum
 
     keyed = df.select(F.col(key_col).cast("string").alias("url"))
     row = keyed.agg(

@@ -23,7 +23,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.checkpoint import _put_if_absent
+from docling_jobkit_spark.checkpoint import put_if_absent
 
 MAX_FILE_BYTES = 500 * 1024 * 1024  # reference cap: results_processor.py:29
 
@@ -84,7 +84,7 @@ def write_manifest(spark: SparkSession, results_path: str, manifest_path: str) -
     # directory is STALE (the data was re-written with mode=overwrite
     # after it was sealed) and must be replaced, not returned: keeping
     # it would describe deleted files with the old run's row counts.
-    if not _put_if_absent(manifest_path, payload):
+    if not put_if_absent(manifest_path, payload):
         with open(manifest_path) as f:
             existing = json.load(f)
         if [f_["file"] for f_ in existing["files"]] == [
@@ -92,7 +92,7 @@ def write_manifest(spark: SparkSession, results_path: str, manifest_path: str) -
         ]:
             return existing
         # Stale-manifest replacement must match the publish discipline of
-        # _put_if_absent: write the payload to a tmp name and atomically
+        # put_if_absent: write the payload to a tmp name and atomically
         # rename over the manifest (atomic replace on POSIX ≡ an
         # unconditional PUT on object stores). A plain truncate+write
         # here would let a concurrent reader (or a crash mid-write)

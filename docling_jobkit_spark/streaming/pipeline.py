@@ -20,6 +20,14 @@ Structured Streaming gives all of that natively:
 - drain-and-stop: ``Trigger.AvailableNow`` processes the backlog with
   backpressure then exits — the batch-job-over-a-queue shape the
   reference's CLI paths implement by hand.
+- batch-machinery consumers (fuzzy dedup, sketch state, ingest) run
+  inside ``foreachBatch``, which is at-least-once: a crash before a
+  batch's ``commits/<id>`` entry replays it. Each consumer is
+  idempotent per ``batch_id`` instead — verdicts overwrite their own
+  ``batch_id=<id>`` dir, sketch state publishes ``<prefix><batch_id>``
+  versions through one loop (``_stream_sketch_state``) over
+  checkpoint.py's Hadoop-FS primitives (any scheme), and ingest
+  replays are no-ops past the ledger marker.
 
 No watermarks/stateful operators are needed: per-document conversion is
 stateless (the reference has no event-time semantics either, SURVEY
@@ -31,11 +39,48 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from docling_jobkit_spark.checkpoint import latest_version
 from docling_jobkit_spark.operators.extract_op import extract_documents
 
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+
+
+def _read_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema_ddl: str = PAGES_SCHEMA_DDL,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """readStream over a parquet arrival directory (the queue);
+    ``max_files_per_trigger`` is the backpressure knob."""
+    reader = spark.readStream.schema(schema_ddl).format("parquet")
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.load(input_dir)
+
+
+def _start_foreach_batch(
+    spark: SparkSession,
+    input_dir: str,
+    schema_ddl: str,
+    fn,
+    checkpoint_dir: str,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+):
+    """Run ``fn(batch, batch_id)`` on every micro-batch of the arrival
+    directory under ``checkpoint_dir``; ``available_now`` drains the
+    backlog and stops. Returns the started StreamingQuery."""
+    writer = (
+        _read_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_extract(
@@ -54,12 +99,9 @@ def stream_extract(
     mapInPandas transforms, so they lift to Structured Streaming
     unchanged.
     """
-    reader = (
-        spark.readStream.schema(PAGES_SCHEMA_DDL).format("parquet")
+    pages = _read_stream(
+        spark, input_dir, max_files_per_trigger=max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.load(input_dir)
     if payload_format == "pdf":
         from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
 
@@ -86,7 +128,7 @@ def stream_hourly_rollup(
     """
     from pyspark.sql import functions as F
 
-    events = spark.readStream.schema(schema_ddl).format("parquet").load(input_dir)
+    events = _read_stream(spark, input_dir, schema_ddl)
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
@@ -121,9 +163,7 @@ def stream_dedup_exact(
 
     from docling_jobkit_spark.functions.scalar import content_hash
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA_DDL).format("parquet").load(input_dir)
-    )
+    pages = _read_stream(spark, input_dir)
     # NULL-text rows must NOT dedupe against each other (null keys compare
     # equal in the state store — all-but-one would be silently dropped);
     # give them a surrogate key derived from the row's REMAINING content
@@ -193,9 +233,7 @@ def stream_curate(
     aggregate over an unbounded per-doc key and belong to the batch pass
     over committed output — the same arrival-vs-corpus split as
     stream_dedup_exact vs the batch dedup families."""
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA_DDL).format("parquet").load(input_dir)
-    )
+    pages = _read_stream(spark, input_dir)
     return _curate_stamp(pages, blocked_domains, blocked_exts)
 
 
@@ -233,7 +271,7 @@ def stream_dedup_fuzzy(
     (operators/minhash_index.py): documents arrive as parquet files,
     each micro-batch is probed with the exact batch machinery
     (``dedup_incremental``) inside ``foreachBatch``, and the per-doc
-    verdicts append to ``output_dir``.
+    verdicts land in ``output_dir/batch_id=<id>``.
 
     Why foreachBatch and not a streaming-native plan: the signature
     pipeline materializes its shingle intermediate (localCheckpoint —
@@ -241,35 +279,83 @@ def stream_dedup_fuzzy(
     consumer otherwise), which a continuous streaming plan cannot do;
     a micro-batch IS a batch frame, so the probe runs the identical
     code path — streaming == batch holds by construction and the
-    equivalence is test-pinned. The probe is stateless per batch (the
-    state lives in the index), so replayed batches rewrite the same
-    verdicts: the parquet sink's transaction log keeps output
-    exactly-once.
+    equivalence is test-pinned.
+
+    foreachBatch is at-least-once: after a crash between a batch's
+    write and its ``commits/<id>`` entry, the restart replays it. The
+    probe is stateless per batch (the state lives in the index), so a
+    replay computes the same verdicts, and each batch overwrites only
+    its own ``batch_id=<id>`` directory — a replay replaces its earlier
+    output instead of appending a second copy (test-pinned).
 
     The index side stays a static DataFrame loaded once; per batch the
     delta's bands broadcast (the steady-state plan shape pinned for the
     batch probe). Returns the started StreamingQuery."""
-    from pyspark.sql import functions as F
-
     from docling_jobkit_spark.operators.minhash_index import dedup_incremental
 
-    reader = spark.readStream.schema(schema_ddl).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
-
     def _probe(batch: DataFrame, batch_id: int) -> None:
-        out = dedup_incremental(batch, index, tau=tau)
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            output_dir
+        dedup_incremental(batch, index, tau=tau).write.mode("overwrite").parquet(
+            f"{output_dir.rstrip('/')}/batch_id={batch_id}"
         )
 
-    writer = docs.writeStream.foreachBatch(_probe).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        spark, input_dir, schema_ddl, _probe, checkpoint_dir,
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _stream_sketch_state(
+    spark: SparkSession,
+    input_dir: str,
+    state_dir: str,
+    checkpoint_dir: str,
+    schema_ddl: str,
+    build,
+    merge,
+    prefix: str,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+):
+    """The one versioned-sketch loop behind every ``stream_<sketch>``:
+    ONE bounded sketch table maintained across micro-batches.
+
+    Per batch: sketch the delta (``build(batch)``), merge it with the
+    newest COMPLETE persisted version strictly older than this batch
+    (``merge(prev, delta)``), and publish ``<prefix><batch_id>`` gated
+    on Spark's ``_SUCCESS`` marker — versioned PUTs, no rename, torn
+    writes are simply never read. Listing and the ``_SUCCESS`` gate go
+    through ``checkpoint.latest_version`` (Hadoop FS), so the state dir
+    may be any scheme. A replayed batch re-merges the same delta
+    against the same older version and overwrites its own directory;
+    merging its own output back in would self-overwrite the directory
+    it reads. That makes every merge exact under replay: max-merge (HLL)
+    is idempotent even under duplicated data, and count-sum (logh, CMS)
+    rides on the file source's checkpoint putting each input file in
+    exactly one batch_id."""
+
+    def _publish(batch: DataFrame, batch_id: int) -> None:
+        sk = build(batch)
+        prev = latest_version(state_dir, prefix, before=batch_id)
+        if prev is not None:
+            sk = merge(batch.sparkSession.read.parquet(prev), sk)
+        # one tiny job over the bounded sketch; coalesce(1) keeps the
+        # state a single file per version
+        sk.coalesce(1).write.mode("overwrite").parquet(
+            f"{state_dir.rstrip('/')}/{prefix}{batch_id}"
+        )
+
+    return _start_foreach_batch(
+        spark, input_dir, schema_ddl, _publish, checkpoint_dir,
+        available_now, max_files_per_trigger,
+    )
+
+
+def _read_sketch_state(spark: SparkSession, state_dir: str, prefix: str) -> DataFrame:
+    """The newest complete sketch version (raises if none published)."""
+    latest = latest_version(state_dir, prefix)
+    if latest is None:
+        raise FileNotFoundError(f"no complete {prefix}* state under {state_dir}")
+    return spark.read.parquet(latest)
 
 
 def stream_hll_distinct(
@@ -283,90 +369,26 @@ def stream_hll_distinct(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
-    """Streaming cardinality: maintain ONE HyperLogLog register table
-    (operators/sketches.py) across micro-batches — the "how many
-    distinct urls has this crawl seen so far" answer with O(2^p) state,
-    where streaming dropDuplicates-then-count would keep every key in
-    the state store forever.
-
-    Per batch: sketch the delta (``hll_registers``), merge with the
-    newest COMPLETE persisted register version (``hll_merge`` =
-    element-wise max — idempotent, so the at-least-once foreachBatch
-    contract still yields an exactly-correct sketch), and publish as
-    ``registers_v{batch_id}`` gated on Spark's _SUCCESS marker
-    (object-store-safe: versioned PUTs, no rename, torn writes are
-    simply never read). A replayed batch re-merges against versions
-    STRICTLY OLDER than itself — merging its own published output back
-    in would self-overwrite the directory it reads. streaming == batch
-    is pinned in tests/test_streaming.py: after the drain, the
-    persisted registers equal ``hll_registers`` over the full static
-    input.
-
-    Returns the started StreamingQuery."""
-    import os
-
+    """Streaming cardinality: one HyperLogLog register table
+    (operators/sketches.py) kept by ``_stream_sketch_state`` as
+    ``registers_v<batch_id>`` — the "how many distinct urls has this
+    crawl seen so far" answer with O(2^p) state, where streaming
+    dropDuplicates-then-count would keep every key in the state store
+    forever. ``hll_merge`` is element-wise max. streaming == batch is
+    pinned in tests/test_streaming.py. Returns the started
+    StreamingQuery."""
     from docling_jobkit_spark.operators.sketches import hll_merge, hll_registers
 
-    reader = spark.readStream.schema(schema_ddl).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(batch, col, p)
-        prev_dir = _latest_hll_version(state_dir, before=batch_id)
-        if prev_dir is not None:
-            regs = hll_merge(
-                batch.sparkSession.read.parquet(prev_dir), regs
-            )
-        # one tiny job over <= 2**p rows; coalesce(1) keeps the state a
-        # single file per version
-        regs.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"registers_v{batch_id}")
-        )
-
-    writer = docs.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
+    return _stream_sketch_state(
+        spark, input_dir, state_dir, checkpoint_dir, schema_ddl,
+        lambda b: hll_registers(b, col, p), hll_merge, "registers_v",
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _latest_hll_version(
-    state_dir: str, before: int | None = None, prefix: str = "registers_v"
-) -> str | None:
-    """Newest COMPLETE (has _SUCCESS) state version directory, optionally
-    restricted to versions strictly below ``before``. Shared by every
-    versioned-PUT sketch state (HLL registers, logh bucket tables)."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return None
-    best: tuple[int, str] | None = None
-    for name in os.listdir(state_dir):
-        if not name.startswith(prefix):
-            continue
-        try:
-            v = int(name.rsplit("v", 1)[1])
-        except ValueError:
-            continue
-        if before is not None and v >= before:
-            continue
-        full = os.path.join(state_dir, name)
-        if not os.path.exists(os.path.join(full, "_SUCCESS")):
-            continue
-        if best is None or v > best[0]:
-            best = (v, full)
-    return best[1] if best else None
 
 
 def read_hll_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest complete register table (raises if none published)."""
-    latest = _latest_hll_version(state_dir)
-    if latest is None:
-        raise FileNotFoundError(f"no complete HLL state under {state_dir}")
-    return spark.read.parquet(latest)
+    return _read_sketch_state(spark, state_dir, "registers_v")
 
 
 def stream_logh_quantiles(
@@ -380,58 +402,26 @@ def stream_logh_quantiles(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
-    """Streaming quantiles: maintain ONE log-bucket histogram
-    (operators/sketches.py::logh_*) across micro-batches — the "what is
-    the p99 document size of everything this crawl has seen so far"
-    answer with BOUNDED state, where a streaming exact percentile would
-    have to retain every value.
-
-    Same versioned-PUT discipline as ``stream_hll_distinct``: per batch,
-    sketch the delta (``logh_buckets``), merge with the newest COMPLETE
-    persisted version STRICTLY OLDER than this batch_id, publish as
-    ``buckets_v{batch_id}`` gated on _SUCCESS. One honest difference
-    from the HLL twin: count-sum merge is NOT idempotent under
-    duplicated DATA the way max-merge is — exactness here rides on the
-    file source's deterministic batch composition (each input file
-    belongs to exactly one batch_id; a REPLAYED batch re-merges the same
-    delta against the same older version and overwrites its own dir,
-    which is idempotent). That is the exactly-once contract Structured
-    Streaming's checkpoint provides; streaming == batch is pinned in
-    tests/test_streaming.py over disjoint arrival slices.
-
-    Returns the started StreamingQuery."""
-    import os
-
+    """Streaming quantiles: one log-bucket histogram
+    (operators/sketches.py::logh_*) kept by ``_stream_sketch_state`` as
+    ``buckets_v<batch_id>`` — the "what is the p99 document size of
+    everything this crawl has seen so far" answer with BOUNDED state,
+    where a streaming exact percentile would retain every value.
+    ``logh_merge`` sums counts. streaming == batch is pinned in
+    tests/test_streaming.py over disjoint arrival slices. Returns the
+    started StreamingQuery."""
     from docling_jobkit_spark.operators.sketches import logh_buckets, logh_merge
 
-    reader = spark.readStream.schema(schema_ddl).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        sk = logh_buckets(batch, col, sub_bits)
-        prev_dir = _latest_hll_version(state_dir, before=batch_id, prefix="buckets_v")
-        if prev_dir is not None:
-            sk = logh_merge(batch.sparkSession.read.parquet(prev_dir), sk)
-        sk.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"buckets_v{batch_id}")
-        )
-
-    writer = docs.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
+    return _stream_sketch_state(
+        spark, input_dir, state_dir, checkpoint_dir, schema_ddl,
+        lambda b: logh_buckets(b, col, sub_bits), logh_merge, "buckets_v",
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_logh_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest complete bucket table (raises if none published)."""
-    latest = _latest_hll_version(state_dir, prefix="buckets_v")
-    if latest is None:
-        raise FileNotFoundError(f"no complete logh state under {state_dir}")
-    return spark.read.parquet(latest)
+    return _read_sketch_state(spark, state_dir, "buckets_v")
 
 
 def stream_cms_counts(
@@ -446,56 +436,26 @@ def stream_cms_counts(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
-    """Streaming frequencies: maintain ONE Count-Min sketch
-    (operators/sketches.py::cms_*) across micro-batches — the "how
-    often has this crawl seen each host/token so far" answer with
-    d×w-bounded state, where a streaming exact groupBy(key) count keeps
-    every distinct key in the state store forever.
-
-    Same versioned-PUT discipline as ``stream_logh_quantiles`` (and the
-    same exactly-once contract: count-sum merge is linear, not
-    idempotent under duplicated DATA — a replayed batch re-merges the
-    same delta against the same strictly-older version and overwrites
-    its own directory, which IS idempotent; the file source's
-    checkpoint guarantees each input file lands in exactly one
-    batch_id). State versions publish as ``cms_v{batch_id}`` gated on
-    _SUCCESS; streaming == batch (cell-for-cell equality with
-    ``cms_build`` over the full static input) is pinned in
-    tests/test_streaming.py.
-
-    Returns the started StreamingQuery."""
-    import os
-
+    """Streaming frequencies: one Count-Min sketch
+    (operators/sketches.py::cms_*) kept by ``_stream_sketch_state`` as
+    ``cms_v<batch_id>`` — the "how often has this crawl seen each
+    host/token so far" answer with d×w-bounded state, where a streaming
+    exact groupBy(key) count keeps every distinct key in the state store
+    forever. ``cms_merge`` sums cells. streaming == batch (cell-for-cell
+    equality with ``cms_build`` over the full static input) is pinned in
+    tests/test_streaming.py. Returns the started StreamingQuery."""
     from docling_jobkit_spark.operators.sketches import cms_build, cms_merge
 
-    reader = spark.readStream.schema(schema_ddl).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        sk = cms_build(batch, col, depth, width)
-        prev_dir = _latest_hll_version(state_dir, before=batch_id, prefix="cms_v")
-        if prev_dir is not None:
-            sk = cms_merge(batch.sparkSession.read.parquet(prev_dir), sk)
-        sk.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"cms_v{batch_id}")
-        )
-
-    writer = docs.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
+    return _stream_sketch_state(
+        spark, input_dir, state_dir, checkpoint_dir, schema_ddl,
+        lambda b: cms_build(b, col, depth, width), cms_merge, "cms_v",
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cms_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest complete CMS cell table (raises if none published)."""
-    latest = _latest_hll_version(state_dir, prefix="cms_v")
-    if latest is None:
-        raise FileNotFoundError(f"no complete CMS state under {state_dir}")
-    return spark.read.parquet(latest)
+    return _read_sketch_state(spark, state_dir, "cms_v")
 
 
 def stream_ingest(
@@ -530,11 +490,6 @@ def stream_ingest(
     StreamingQuery."""
     from docling_jobkit_spark.plans.ingest import ingest_batch
 
-    reader = spark.readStream.schema(schema_ddl).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.load(input_dir)
-
     def _commit(batch: DataFrame, batch_id: int) -> None:
         ingest_batch(
             batch.sparkSession,
@@ -545,9 +500,7 @@ def stream_ingest(
             config=config,
         )
 
-    writer = docs.writeStream.foreachBatch(_commit).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        spark, input_dir, schema_ddl, _commit, checkpoint_dir,
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -10,20 +10,38 @@ import os
 
 import pytest
 
-from docling_jobkit_spark.checkpoint import CommitLog, _put_if_absent
+from docling_jobkit_spark.checkpoint import CommitLog, put_if_absent
 
 
 def _df(spark, urls):
     return spark.createDataFrame([(u, f"text-{u}") for u in urls], "url string, extracted_text string")
 
 
-def test_commit_is_idempotent(spark, tmp_path):
-    log = CommitLog(str(tmp_path / "o"))
+def _check_commit_is_idempotent(spark, root):
+    log = CommitLog(root)
     m1 = log.commit_group(0, _df(spark, ["a", "b"]))
     m2 = log.commit_group(0, _df(spark, ["c", "d"]))  # second writer loses
     assert m1 == m2  # the recorded manifest is the FIRST commit's
     rows = {r["url"] for r in spark.read.parquet(log.group_result_path(0)).collect()}
     assert rows == {"a", "b"}
+    # a log opened afresh on the same root sees the commit
+    assert CommitLog(root).committed_groups() == {0}
+
+
+def test_commit_is_idempotent(spark, tmp_path):
+    _check_commit_is_idempotent(spark, str(tmp_path / "o"))
+
+
+def test_commit_is_idempotent_file_uri(spark, tmp_path, monkeypatch):
+    """The same behaviour with the root given as a ``file://`` URI: the
+    manifest lands under the root itself (not under a ``file:`` dir
+    relative to the working directory), so a log opened from another
+    working directory still sees the commit."""
+    monkeypatch.chdir(tmp_path)
+    _check_commit_is_idempotent(spark, (tmp_path / "o").as_uri())
+    assert os.path.isfile(tmp_path / "o" / "manifest" / "group-0.json")
+    monkeypatch.chdir(tmp_path / "o")
+    assert CommitLog((tmp_path / "o").as_uri()).committed_groups() == {0}
 
 
 def test_partial_write_without_manifest_is_invisible(spark, tmp_path):
@@ -63,14 +81,28 @@ def test_duplicate_concurrent_committers_first_terminal_wins(spark, tmp_path):
     assert rows == ["b1", "b2"]  # exactly one attempt visible, no dupes
 
 
-def test_put_if_absent_is_exclusive_and_never_torn(tmp_path):
+def test_put_if_absent_is_exclusive_and_never_torn(spark, tmp_path):
     target = str(tmp_path / "m.json")
-    assert _put_if_absent(target, b'{"v": 1}')
-    assert not _put_if_absent(target, b'{"v": 2}')  # loser
+    assert put_if_absent(target, b'{"v": 1}')
+    assert not put_if_absent(target, b'{"v": 2}')  # loser
     with open(target) as f:
         assert json.load(f) == {"v": 1}
     # no temp residue (the staged object is always unlinked)
     assert os.listdir(str(tmp_path)) == ["m.json"]
+
+
+def test_create_if_absent_branch(spark, tmp_path):
+    """The non-``file`` publish path (exclusive ``FileSystem.create``),
+    exercised on the local FS: the winner's payload lands intact and a
+    second create reports a loss instead of raising."""
+    from docling_jobkit_spark.checkpoint import _create_if_absent, _fs, read_bytes
+
+    target = str(tmp_path / "m.json")
+    fs, jpath = _fs(target)
+    assert _create_if_absent(fs, jpath, b'{"v": 1}')
+    assert not _create_if_absent(fs, jpath, b'{"v": 2}')
+    assert read_bytes(target) == b'{"v": 1}'
+    assert read_bytes(str(tmp_path / "absent.json")) is None
 
 
 def test_no_rename_in_commit_path():
@@ -85,6 +117,33 @@ def test_no_rename_in_commit_path():
     src = inspect.getsource(cp)
     for banned in ("os.rename", "os.replace", "shutil.move"):
         assert banned not in src, f"commit path uses {banned}"
+
+
+def test_storage_goes_through_hadoop_fs():
+    """Commit, streaming sketch state and ingest touch storage only
+    through checkpoint.py's Hadoop-FS primitives, so every scheme behaves
+    alike. The one POSIX exception is put_if_absent's ``file``-scheme
+    branch (``_link_if_absent``): Hadoop's local create is not atomic."""
+    import inspect
+
+    import docling_jobkit_spark.checkpoint as cp
+    import docling_jobkit_spark.plans.ingest as ingest
+    import docling_jobkit_spark.streaming.pipeline as streaming
+
+    sources = {
+        "checkpoint.py": inspect.getsource(cp).replace(
+            inspect.getsource(cp._link_if_absent), ""
+        ),
+        "plans/ingest.py": inspect.getsource(ingest),
+        "streaming/pipeline.py": inspect.getsource(streaming),
+    }
+    banned = (
+        "os.listdir", "os.path.isdir", "os.path.exists", "os.makedirs",
+        "shutil.rmtree",
+    )
+    for name, src in sources.items():
+        for call in banned:
+            assert call not in src, f"{name} uses {call}"
 
 
 def test_sink_manifest_is_conditional_put(spark, tmp_path):

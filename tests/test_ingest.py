@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from docling_jobkit_spark.checkpoint import delete, exists
 from docling_jobkit_spark.plans.curation import CurationConfig
 from docling_jobkit_spark.plans.ingest import (
     INGEST_STAGES,
@@ -113,6 +114,21 @@ def test_committed_replay_is_noop(spark, state):
     assert res.n_new_zonemap_files == 0
     assert _stage_counts(res.ledger) == _stage_counts(res_b.ledger)
     assert res.kept.count() == res_b.kept.count()
+
+
+def test_committed_replay_is_noop_file_uri(spark, sf_dir, tmp_path):
+    """The committed-replay no-op with the state dir given as a
+    ``file://`` URI: commit marker, replay guard and read-back all go
+    through the same Hadoop-FS primitives as a plain path."""
+    a, _ = _batch_a(spark, sf_dir)
+    root = (tmp_path / "state").as_uri()
+    first = ingest_batch(spark, a, root, "2026-01", config=CFG)
+    res = ingest_batch(spark, a, root, "2026-01", config=CFG)
+    assert not first.replayed and res.replayed
+    assert res.n_new_zonemap_files == 0
+    assert _stage_counts(res.ledger) == _stage_counts(first.ledger)
+    assert res.kept.count() == first.kept.count() > 0
+    assert (tmp_path / "state" / "ledger" / "batch=2026-01" / "_SUCCESS").is_file()
 
 
 def test_torn_commit_replays_exactly(spark, sf_dir, tmp_path):
@@ -370,6 +386,32 @@ def test_compact_ingest_batch_preserves_content_and_manifest(spark, sf_dir, tmp_
     assert got2 == want
 
 
+def test_compact_ingest_batch_keeps_every_zonemap_column(spark, sf_dir, tmp_path):
+    """Compaction reconciles the zone map on the columns the manifest
+    indexes: with ``zonemap_cols=("n_chars", "doc_id")`` every
+    replacement corpus file gets ``doc_id`` stats too, not only
+    ``n_chars``."""
+    from docling_jobkit_spark.operators.zonemap import _canon, read_zonemap
+    from docling_jobkit_spark.plans.ingest import compact_ingest_batch
+    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+
+    root = str(tmp_path / "state")
+    a, _ = _batch_a(spark, sf_dir)
+    cfg = IngestConfig(
+        curation=CurationConfig(), tau=0.8, zonemap_cols=("n_chars", "doc_id")
+    )
+    ingest_batch(spark, a, root, "c1", config=cfg)
+    _fragment(spark, f"{root}/corpus/batch=c1")
+    stats = compact_ingest_batch(spark, root, "c1")
+    assert stats.n_files_after < stats.n_files_before
+
+    zm = read_zonemap(spark, f"{root}/zonemap")
+    on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, f"{root}/corpus")}
+    for col in ("n_chars", "doc_id"):
+        files = {r["file"] for r in zm.where(F.col("col") == col).collect()}
+        assert on_disk and files == on_disk, col
+
+
 def test_compact_ingest_batch_heals_torn_copy_back(spark, sf_dir, tmp_path):
     """Crash inside the copy-back's delete-then-write window: src is
     gone but the certified tmp survives — the next call must restore
@@ -458,7 +500,6 @@ def test_expire_batch_payload(spark, sf_dir, tmp_path):
     references deleted files, and the state report flags the batch."""
     from docling_jobkit_spark.operators.zonemap import read_zonemap
     from docling_jobkit_spark.plans.ingest import (
-        _exists,
         expire_batch_payload,
         ingest_state_report,
     )
@@ -473,11 +514,11 @@ def test_expire_batch_payload(spark, sf_dir, tmp_path):
     assert stats.n_files_deleted >= 1
     assert stats.bytes_reclaimed > 0
     assert not stats.already_expired
-    assert not _exists(spark, f"{root}/corpus/batch=2026-01")
-    assert not _exists(spark, f"{root}/shards/batch=2026-01")
+    assert not exists(f"{root}/corpus/batch=2026-01")
+    assert not exists(f"{root}/shards/batch=2026-01")
     # dedup memory + commit marker survive
     for family in ("ledger", "seen", "index"):
-        assert _exists(spark, f"{root}/{family}/batch=2026-01/_SUCCESS")
+        assert exists(f"{root}/{family}/batch=2026-01/_SUCCESS")
 
     # history dedup vs the EXPIRED batch still works bit-for-bit
     res_b = ingest_batch(spark, b, root, "2026-02", config=CFG)
@@ -517,7 +558,6 @@ def test_bloom_manifest_locates_content_and_survives_lifecycle(
     compaction reconciles the manifest to the rewritten files."""
     from docling_jobkit_spark.operators.bloom_index import read_bloom_index
     from docling_jobkit_spark.plans.ingest import (
-        _exists,
         compact_ingest_batch,
         expire_batch_payload,
         locate_content,
@@ -529,7 +569,7 @@ def test_bloom_manifest_locates_content_and_survives_lifecycle(
     a_probe = res_a.kept.orderBy("doc_id").limit(1).collect()[0]
     b = _make_batch_b(fresh_b, res_a.kept).localCheckpoint(eager=True)
     res_b = ingest_batch(spark, b, root, "2026-02", config=CFG)
-    assert _exists(spark, f"{root}/bloomidx/_SUCCESS")
+    assert exists(f"{root}/bloomidx/_SUCCESS")
 
     target = res_b.kept.orderBy("doc_id").limit(1).collect()[0]
     df, kept, total = locate_content(spark, root, [target["content_hash"]])
@@ -635,7 +675,6 @@ def test_vacuum_ingest_state_removes_only_unreachable_debris(
     import pathlib
 
     from docling_jobkit_spark.plans.ingest import (
-        _exists,
         vacuum_ingest_state,
     )
 
@@ -661,7 +700,7 @@ def test_vacuum_ingest_state_removes_only_unreachable_debris(
 
     # age guard first: everything is younger than an hour → no-op
     st0 = vacuum_ingest_state(spark, root, min_age_seconds=3600)
-    assert st0.n_dirs_deleted == 0 and _exists(spark, str(t_bad))
+    assert st0.n_dirs_deleted == 0 and exists(str(t_bad))
 
     st = vacuum_ingest_state(spark, root, min_age_seconds=0)
     assert st.n_dirs_deleted == 4 and st.bytes_reclaimed > 0
@@ -671,7 +710,7 @@ def test_vacuum_ingest_state_removes_only_unreachable_debris(
         "ledger/batch=torn",
         "corpus_compact/batch=v1",
     }
-    assert st.n_kept_recovery == 1 and _exists(spark, str(t_ok))
+    assert st.n_kept_recovery == 1 and exists(str(t_ok))
 
     # committed state untouched: replay still no-ops with the same kept
     res_rep = ingest_batch(spark, a, root, "v1", config=CFG)
@@ -686,13 +725,13 @@ def test_bloom_disabled_falls_back_to_full_scan(spark, sf_dir, tmp_path):
     """bloom_cols=() configs never write a manifest; locate_content
     degrades to the full corpus scan and stays correct (the index is an
     accelerator, not a correctness dependency)."""
-    from docling_jobkit_spark.plans.ingest import _exists, locate_content
+    from docling_jobkit_spark.plans.ingest import locate_content
 
     root = str(tmp_path / "state")
     cfg = IngestConfig(curation=CurationConfig(), tau=0.8, bloom_cols=())
     a, _fresh_b = _batch_a(spark, sf_dir)
     res_a = ingest_batch(spark, a, root, "2026-01", config=cfg)
-    assert not _exists(spark, f"{root}/bloomidx")
+    assert not exists(f"{root}/bloomidx")
     probe = res_a.kept.orderBy("doc_id").limit(1).collect()[0]
     df, kept, total = locate_content(spark, root, [probe["content_hash"]])
     assert kept == total > 0
@@ -903,10 +942,7 @@ def test_delete_content_heals_torn_apply(spark, sf_dir, tmp_path):
     t_b = _pick_targets(1, 3)
     hit_files = _plant_tmp(t_b)
     for p in hit_files:
-        from docling_jobkit_spark.plans.ingest import _fs
-
-        fs, jp = _fs(spark, p)
-        fs.delete(jp, False)
+        delete(p)
     n_docs_b = _sig()[0]  # survivors of the deleted file are missing now
     st = delete_content(spark, root, t_b)
     assert st.healed == ("2026-01",)
@@ -918,11 +954,8 @@ def test_delete_content_heals_torn_apply(spark, sf_dir, tmp_path):
     # (c) crash after the append: re-entry must not double any row
     t_c = _pick_targets(1, 6)
     hit_files = _plant_tmp(t_c)
-    from docling_jobkit_spark.plans.ingest import _fs
-
     for p in hit_files:
-        fs, jp = _fs(spark, p)
-        fs.delete(jp, False)
+        delete(p)
     tmp = spark.read.schema(_TAKEDOWN_SCHEMA).parquet(
         f"{root}/corpus_takedown/batch=2026-01"
     )
@@ -944,7 +977,6 @@ def test_vacuum_keeps_certified_takedown_tmps(spark, tmp_path):
     import pathlib
 
     from docling_jobkit_spark.plans.ingest import (
-        _exists,
         vacuum_ingest_state,
     )
 
@@ -958,8 +990,8 @@ def test_vacuum_keeps_certified_takedown_tmps(spark, tmp_path):
     (ok / "_SUCCESS").write_bytes(b"")
 
     st = vacuum_ingest_state(spark, root, min_age_seconds=0)
-    assert st.n_dirs_deleted == 1 and not _exists(spark, str(bad))
-    assert st.n_kept_recovery == 1 and _exists(spark, str(ok))
+    assert st.n_dirs_deleted == 1 and not exists(str(bad))
+    assert st.n_kept_recovery == 1 and exists(str(ok))
 
 
 def test_delete_content_spans_batches(spark, sf_dir, tmp_path):

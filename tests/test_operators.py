@@ -607,6 +607,20 @@ def test_ivf_assign_null_embedding_gets_sentinel_cell(spark):
     assert cells[1] == -1 and cells[2] == -1  # unscorable → sentinel, not NULL
 
 
+def test_cosine_array_vector_column_with_backtick(spark):
+    """The vector column name is quoted into F.expr SQL text; a backtick
+    in it must be escaped, not end the identifier."""
+    from docling_jobkit_spark.operators.similarity import _cosine_array
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 2.0])], "vec_id long, `em``b` array<float>"
+    )
+    got = df.select(
+        "vec_id", _cosine_array([[1.0, 0.0], [0.0, 1.0]], "em`b").alias("cos")
+    ).orderBy("vec_id")
+    assert [r["cos"] for r in got.collect()] == [[1.0, 0.0], [0.0, 1.0]]
+
+
 def test_multi_table_lsh_recovers_recall_without_quadratic_join(spark):
     """OR-of-tables blocking: multi-table candidates are a superset of
     single-table candidates and a subset of the exact all-pairs result,

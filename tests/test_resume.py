@@ -24,8 +24,7 @@ def _read_results(spark, root):
     return CommitLog(root).committed_results(spark)
 
 
-def test_crash_then_resume_replays_only_missing(spark, pages_path, corpus_rows, tmp_path):
-    root = str(tmp_path / "out")
+def _check_crash_then_resume(spark, pages_path, corpus_rows, root):
     pipe = ExtractionPipeline(spark, CFG)
     pages = spark.read.parquet(pages_path)
 
@@ -60,6 +59,18 @@ def test_crash_then_resume_replays_only_missing(spark, pages_path, corpus_rows, 
     }
     assert got == exp
     assert results.count() == len(corpus_rows)
+
+
+def test_crash_then_resume_replays_only_missing(spark, pages_path, corpus_rows, tmp_path):
+    _check_crash_then_resume(spark, pages_path, corpus_rows, str(tmp_path / "out"))
+
+
+def test_crash_then_resume_file_uri(spark, pages_path, corpus_rows, tmp_path, monkeypatch):
+    """The same crash-and-resume with the output root as a ``file://``
+    URI, run from an unrelated working directory."""
+    monkeypatch.chdir(tmp_path)
+    _check_crash_then_resume(spark, pages_path, corpus_rows, (tmp_path / "out").as_uri())
+    assert len(os.listdir(tmp_path / "out" / "manifest")) == CFG.n_commit_groups
 
 
 def test_rerun_after_success_is_noop(spark, pages_path, tmp_path):

@@ -223,19 +223,31 @@ def test_stream_curate_matches_batch(spark, tmp_path):
     assert by_url["https://a.example.com/x.html"]["n_emails"] == 1
 
 
-def test_stream_dedup_fuzzy_matches_batch_probe(spark, sf_dir, tmp_path):
-    """Streaming fuzzy dedup against the persisted MinHash index: the
-    foreachBatch probe must equal the batch probe over the same docs —
-    per-batch == global holds because the probe is stateless against a
-    static index (forced multi-batch via maxFilesPerTrigger=1)."""
-    from pyspark.sql import functions as F
+def _loc(path, uri: bool) -> str:
+    """``path`` as a plain path or as a ``file://`` URI."""
+    return path.as_uri() if uri else str(path)
 
+
+def _uncommit_last_batch(ck: str) -> int:
+    """Simulate a crash after the last micro-batch's sink write but
+    before its commit: drop ``commits/<n>`` (and its checksum), so the
+    restarted query replays batch n."""
+    commits = os.path.join(ck, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    return last
+
+
+def _fuzzy_arrivals(spark, sf_dir, tmp_path):
+    """A MinHash index over doc_id < 300 and two arrival files:
+    re-crawls (unchanged) and fresh docs."""
     from docling_jobkit_spark.operators.minhash_index import (
-        dedup_incremental,
         read_minhash_index,
         write_minhash_index,
     )
-    from docling_jobkit_spark.streaming import stream_dedup_fuzzy
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     idx_path = str(tmp_path / "idx")
@@ -251,18 +263,27 @@ def test_stream_dedup_fuzzy_matches_batch_probe(spark, sf_dir, tmp_path):
     docs.where("doc_id >= 300 and doc_id < 340").select(
         "doc_id", "text"
     ).coalesce(1).write.parquet(str(indir / "b2"), mode="overwrite")
+    return index, indir
 
-    outdir, ck = str(tmp_path / "verdicts"), str(tmp_path / "ck_fz")
-    q = stream_dedup_fuzzy(
-        spark,
-        f"{indir}/*",
-        index,
-        outdir,
-        ck,
-        tau=0.7,
-        max_files_per_trigger=1,
+
+def _start_fuzzy(spark, indir, index, outdir, ck):
+    from docling_jobkit_spark.streaming import stream_dedup_fuzzy
+
+    return stream_dedup_fuzzy(
+        spark, f"{indir}/*", index, outdir, ck, tau=0.7, max_files_per_trigger=1
     )
-    q.awaitTermination(300)
+
+
+def test_stream_dedup_fuzzy_matches_batch_probe(spark, sf_dir, tmp_path):
+    """Streaming fuzzy dedup against the persisted MinHash index: the
+    foreachBatch probe must equal the batch probe over the same docs —
+    per-batch == global holds because the probe is stateless against a
+    static index (forced multi-batch via maxFilesPerTrigger=1)."""
+    from docling_jobkit_spark.operators.minhash_index import dedup_incremental
+
+    index, indir = _fuzzy_arrivals(spark, sf_dir, tmp_path)
+    outdir, ck = str(tmp_path / "verdicts"), str(tmp_path / "ck_fz")
+    _start_fuzzy(spark, indir, index, outdir, ck).awaitTermination(300)
 
     got = {
         tuple(r)
@@ -287,13 +308,42 @@ def test_stream_dedup_fuzzy_matches_batch_probe(spark, sf_dir, tmp_path):
     assert {r[0] for r in got if r[0] < 40} <= dup_ids
 
 
+def test_stream_dedup_fuzzy_replay_is_idempotent(spark, sf_dir, tmp_path):
+    """foreachBatch is at-least-once: a restart after the last batch's
+    commit entry is lost replays that batch. Its verdicts must replace
+    the earlier copy, not append a second one — the row count stays the
+    distinct doc_id count and equal to the batch probe."""
+    from docling_jobkit_spark.operators.minhash_index import dedup_incremental
+
+    index, indir = _fuzzy_arrivals(spark, sf_dir, tmp_path)
+    outdir, ck = str(tmp_path / "verdicts"), str(tmp_path / "ck_fz")
+    _start_fuzzy(spark, indir, index, outdir, ck).awaitTermination(300)
+    last = _uncommit_last_batch(ck)
+    _start_fuzzy(spark, indir, index, outdir, ck).awaitTermination(300)
+    assert os.path.exists(os.path.join(ck, "commits", str(last)))  # replayed
+
+    out = spark.read.parquet(outdir)
+    want = dedup_incremental(spark.read.parquet(f"{indir}/*"), index, tau=0.7)
+    cols = ("doc_id", "n_index_hits", "max_est_jaccard", "is_dup")
+    assert out.count() == out.select("doc_id").distinct().count() == want.count()
+    assert sorted(map(tuple, out.select(*cols).collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
+
+
 def test_stream_hll_matches_batch_sketch(spark, sf_dir, tmp_path):
+    _check_stream_hll(spark, sf_dir, tmp_path, uri=False)
+
+
+def test_stream_hll_matches_batch_sketch_file_uri(spark, sf_dir, tmp_path):
+    _check_stream_hll(spark, sf_dir, tmp_path, uri=True)
+
+
+def _check_stream_hll(spark, sf_dir, tmp_path, uri):
     """Streaming HLL: after draining overlapping arrival batches, the
     persisted register table must EQUAL the batch sketch of the full
     input (merge = element-wise max is exact, not approximate), and the
     estimate must match the batch estimate bit-for-bit."""
-    from pyspark.sql import functions as F
-
     from docling_jobkit_spark.operators.sketches import (
         hll_estimate,
         hll_registers,
@@ -312,10 +362,10 @@ def test_stream_hll_matches_batch_sketch(spark, sf_dir, tmp_path):
             "doc_id", "text"
         ).coalesce(1).write.parquet(str(indir / name), mode="overwrite")
 
-    state, ck = str(tmp_path / "hll_state"), str(tmp_path / "ck_hll")
+    state, ck = _loc(tmp_path / "hll_state", uri), _loc(tmp_path / "ck_hll", uri)
     q = stream_hll_distinct(
         spark,
-        f"{indir}/*",
+        f"{_loc(indir, uri)}/*",
         state,
         ck,
         col="doc_id",
@@ -339,6 +389,14 @@ def test_stream_hll_matches_batch_sketch(spark, sf_dir, tmp_path):
 
 
 def test_stream_logh_matches_batch_sketch(spark, sf_dir, tmp_path):
+    _check_stream_logh(spark, sf_dir, tmp_path, uri=False)
+
+
+def test_stream_logh_matches_batch_sketch_file_uri(spark, sf_dir, tmp_path):
+    _check_stream_logh(spark, sf_dir, tmp_path, uri=True)
+
+
+def _check_stream_logh(spark, sf_dir, tmp_path, uri):
     """Streaming log-bucket quantiles: after draining DISJOINT arrival
     batches (counts are additive — each row must count exactly once),
     the persisted bucket table must EQUAL the batch sketch of the full
@@ -360,10 +418,10 @@ def test_stream_logh_matches_batch_sketch(spark, sf_dir, tmp_path):
             "doc_id", "text", "n_chars"
         ).coalesce(1).write.parquet(str(indir / name), mode="overwrite")
 
-    state, ck = str(tmp_path / "logh_state"), str(tmp_path / "ck_logh")
+    state, ck = _loc(tmp_path / "logh_state", uri), _loc(tmp_path / "ck_logh", uri)
     q = stream_logh_quantiles(
         spark,
-        f"{indir}/*",
+        f"{_loc(indir, uri)}/*",
         state,
         ck,
         col="n_chars",
@@ -390,16 +448,15 @@ def test_stream_logh_matches_batch_sketch(spark, sf_dir, tmp_path):
 
 
 def test_stream_cms_matches_batch_sketch(spark, sf_dir, tmp_path):
-    """Streaming Count-Min: after draining DISJOINT arrival batches
-    (count-sum is linear — each row must count exactly once), the
-    persisted cell table must EQUAL the batch sketch of the full input,
-    probes through the state must equal batch probes, and the shape
-    stamp must survive the state round-trip."""
-    from pyspark.sql import functions as F
+    _check_stream_cms(spark, sf_dir, tmp_path, uri=False)
 
-    from docling_jobkit_spark.operators.sketches import cms_build, cms_query
-    from docling_jobkit_spark.streaming import read_cms_state, stream_cms_counts
 
+def test_stream_cms_matches_batch_sketch_file_uri(spark, sf_dir, tmp_path):
+    _check_stream_cms(spark, sf_dir, tmp_path, uri=True)
+
+
+def _cms_arrivals(spark, sf_dir, tmp_path):
+    """Three DISJOINT arrival files over doc_id < 500 and their union."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     indir = tmp_path / "cms_arrivals"
     indir.mkdir()
@@ -407,9 +464,13 @@ def test_stream_cms_matches_batch_sketch(spark, sf_dir, tmp_path):
         docs.where(f"doc_id >= {lo} and doc_id < {hi}").select(
             "doc_id", "text", "lang"
         ).coalesce(1).write.parquet(str(indir / name), mode="overwrite")
+    return indir, docs.where("doc_id < 500").select("doc_id", "text", "lang")
 
-    state, ck = str(tmp_path / "cms_state"), str(tmp_path / "ck_cms")
-    q = stream_cms_counts(
+
+def _start_cms(spark, indir, state, ck):
+    from docling_jobkit_spark.streaming import stream_cms_counts
+
+    return stream_cms_counts(
         spark,
         f"{indir}/*",
         state,
@@ -420,10 +481,22 @@ def test_stream_cms_matches_batch_sketch(spark, sf_dir, tmp_path):
         schema_ddl="doc_id bigint, text string, lang string",
         max_files_per_trigger=1,
     )
-    q.awaitTermination(300)
+
+
+def _check_stream_cms(spark, sf_dir, tmp_path, uri):
+    """Streaming Count-Min: after draining DISJOINT arrival batches
+    (count-sum is linear — each row must count exactly once), the
+    persisted cell table must EQUAL the batch sketch of the full input,
+    probes through the state must equal batch probes, and the shape
+    stamp must survive the state round-trip."""
+    from docling_jobkit_spark.operators.sketches import cms_build, cms_query
+    from docling_jobkit_spark.streaming import read_cms_state
+
+    indir, full = _cms_arrivals(spark, sf_dir, tmp_path)
+    state, ck = _loc(tmp_path / "cms_state", uri), _loc(tmp_path / "ck_cms", uri)
+    _start_cms(spark, _loc(indir, uri), state, ck).awaitTermination(300)
 
     got = sorted(map(tuple, read_cms_state(spark, state).collect()))
-    full = docs.where("doc_id < 500").select("doc_id", "text", "lang")
     want = sorted(map(tuple, cms_build(full, "lang", 3, 64).collect()))
     assert got == want
 
@@ -444,3 +517,25 @@ def test_stream_cms_matches_batch_sketch(spark, sf_dir, tmp_path):
 
     with pytest.raises(ValueError, match=r"\(3, 64\)"):
         cms_query(read_cms_state(spark, state), probes, "lang", 4, 64)
+
+
+def test_stream_sketch_replay_keeps_count_sum_exact(spark, sf_dir, tmp_path):
+    """A replayed micro-batch re-merges its delta against the version
+    strictly older than itself and overwrites its own version, so even
+    the non-idempotent count-sum merge (CMS here; logh shares the loop)
+    stays equal to the batch sketch after a restart that replays the
+    last batch."""
+    from docling_jobkit_spark.operators.sketches import cms_build
+    from docling_jobkit_spark.streaming import read_cms_state
+
+    indir, full = _cms_arrivals(spark, sf_dir, tmp_path)
+    state, ck = str(tmp_path / "cms_state"), str(tmp_path / "ck_cms")
+    _start_cms(spark, indir, state, ck).awaitTermination(300)
+    last = _uncommit_last_batch(ck)
+    assert last == 2
+    _start_cms(spark, indir, state, ck).awaitTermination(300)
+    assert os.path.exists(os.path.join(ck, "commits", str(last)))  # replayed
+
+    got = sorted(map(tuple, read_cms_state(spark, state).collect()))
+    want = sorted(map(tuple, cms_build(full, "lang", 3, 64).collect()))
+    assert got == want
