@@ -108,6 +108,27 @@ def token_count(col) -> Column:
     return F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(tokens(c))).cast("int")
 
 
+def single_eval(col: Column) -> Column:
+    """``col`` evaluated ONCE per row, behind a single-row Generate.
+
+    Higher-order-function projections (transform/aggregate/zip_with/
+    array_intersect chains) are CodegenFallback and get no
+    subexpression elimination, and project-collapse or filter-pushdown
+    re-inlines an aliased column into every consumer: a fold referenced
+    twice, or filtered through a pushed predicate, runs twice.
+    ``explode(array(col))`` is a Generate Catalyst does not collapse
+    through, so every consumer reads one stored evaluation. Plan shape
+    pinned in tests/test_plans.py."""
+    return F.explode(F.array(col))
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), for column names spliced into ``F.expr`` text or passed
+    where Spark would otherwise parse ``a.b`` as a struct path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _double_sql(x: float) -> str:
     """Shortest round-trip double literal. Python's repr is the shortest
     string that parses back to the same bits under correct rounding, and

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import stable_hash64, tokens
+from docling_jobkit_spark.functions.scalar import single_eval, stable_hash64, tokens
 
 # Raffel et al. §2.2: "a period, exclamation mark, question mark, or end
 # quotation mark".
@@ -119,13 +119,7 @@ def c4_line_filter(
     """Surviving pages with ``text_col`` replaced by the cleaned text.
 
     Same logic as ``c4_line_stats`` fused with the page gate — still
-    zero shuffles. The kept-lines array rides through
-    ``explode(array(...))`` (a single-row Generate): the split→trim→
-    line-filter chain is CodegenFallback (no subexpression
-    elimination), so referencing it from both the page-gate filter and
-    the output projection evaluated it twice per page; the Generate
-    forces exactly one evaluation and blocks the filter from being
-    re-inlined below it."""
+    zero shuffles."""
     lines = _trimmed_lines(text_col)
     kept = F.filter(lines, lambda x: _line_kept(x, min_words_per_line))
     t = F.col(text_col)
@@ -133,7 +127,8 @@ def c4_line_filter(
     inner = df.select(
         *others,
         t.alias("_t_raw"),
-        F.explode(F.array(kept)).alias("_kept"),
+        # one line-filter chain per page, read by the gate and the output
+        single_eval(kept).alias("_kept"),
     )
     page_kept = (
         ~F.contains(F.lower(F.col("_t_raw")), F.lit("lorem ipsum"))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import stable_hash64, tokens
+from docling_jobkit_spark.functions.scalar import single_eval, stable_hash64, tokens
 
 
 def kgram_hashes(text_col, k: int) -> Column:
@@ -146,13 +146,9 @@ def _sigs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.col(id_col).alias("id"), word_shingles(text_col).alias("sh")
         )
     ).filter(F.size("sh") > 0)
-    # explode(array(...)) Generate barrier: the banding transform slices
-    # the signature BANDS times, and project collapse would re-inline the
-    # 64-channel fold into every slice (see minhash_near_duplicates)
-    return sh.select(
-        "id",
-        F.explode(F.array(minhash_signature_from_shingles("sh"))).alias("sig"),
-    )
+    # one signature fold per doc, not one per band slice
+    sig = minhash_signature_from_shingles("sh")
+    return sh.select("id", single_eval(sig).alias("sig"))
 
 
 def contamination_fuzzy_pairs(
@@ -196,18 +192,10 @@ def contamination_fuzzy_pairs(
             F.zip_with("_sc", "_sb", lambda a, b: a == b), lambda x: x
         )
     )
-    # the agreement count rides the explode(array()) Generate barrier:
-    # the min_agree filter otherwise pushes below the projection and
-    # re-inlines the 64-wide zip_with fold — one extra interpreted
-    # evaluation per candidate pair (the
-    # filter-over-expensive-projection trap; values unchanged)
+    # one agreement fold per pair: the min_agree filter would re-inline it
     return (
         corpus.join(bench, on=["band", "bucket"])
-        .select(
-            "doc_id",
-            "bench_id",
-            F.explode(F.array(n_agree.cast("int"))).alias("n_agree"),
-        )
+        .select("doc_id", "bench_id", single_eval(n_agree.cast("int")).alias("n_agree"))
         .where(F.col("n_agree") >= min_agree)
         .distinct()
         .select(

@@ -12,10 +12,7 @@ Core training-data-pipeline ops (build brief), designed Spark-first:
   hash64) so signatures are reproducible in ANY engine; permutations are
   the classic (a·x + b) mod p family with hardcoded odd constants.
   All array math uses Spark higher-order functions (transform/aggregate)
-  — zero Python in the plan. (A bit-identical Arrow-batched numpy fold
-  exists as `minhash_sign_many`/SIGNING_IMPL="arrow"; A/B-measured
-  SLOWER end-to-end at this doc shape — see `_sign_udf` — and kept as
-  the pinned alternative for long-document corpora.)
+  — zero Python in the plan.
 - **SimHash**: 48-bit sign-sum over token hashes, Hamming-distance
   candidate pairs via band equality on hex slices.
 
@@ -36,6 +33,7 @@ from pyspark.sql import functions as F
 from docling_jobkit_spark.functions.scalar import (
     content_hash,
     lit_longs,
+    single_eval,
     stable_hash64,
     tokens,
 )
@@ -396,15 +394,9 @@ def _jaccard_pairs_prefix(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    # (n_common, n_union) through a single-row Generate so the verify
-    # intersection is computed once per candidate pair — the former
-    # aliased-projection + filter spelling let Catalyst push the
-    # threshold predicate below the projection and re-inline the
-    # intersect into it (one extra evaluation per pair)
+    # one intersect per pair: the threshold filter would re-inline it
     stats = F.struct(inter.alias("nc"), union.alias("nu"))
-    jj = j.select(
-        "id_a", "id_b", F.explode(F.array(stats)).alias("_ps")
-    )
+    jj = j.select("id_a", "id_b", single_eval(stats).alias("_ps"))
     return jj.select(
         "id_a",
         "id_b",
@@ -425,114 +417,10 @@ def minhash_signature(text_col, k: int = 3):
 _SIG_INIT = 1 << 62  # aggregate() init per channel; empty shingle set = all-init
 
 
-def minhash_sign_many(shingle_lists) -> list:
-    """Vectorized pure twin of the signature fold — bit-exact by
-    construction and pinned by tests/test_minhash_vectorized.py against
-    the Catalyst expression form on the corpus plus adversarial rows.
-
-    Exactness argument (same field as the expression path): the base
-    hash is the 60-bit sha256 hex prefix (`stable_hash64(s, bits=60)` ==
-    `int(sha256(utf8).hexdigest()[:15], 16)`); hi,lo < 2^30 and
-    A,C < 2^31 make each product < 2^61 and the 3-term sum < 2^63 —
-    exact in uint64, and `%` on uint64 is the same Euclidean remainder
-    Spark's positive-operand `%` computes. Results < p < 2^62 round-trip
-    through int64 unchanged.
-
-    None stays None (the expression fold is null-preserving); an empty
-    shingle set returns the fold init vector (all 2^62), matching
-    `aggregate()` over an empty array."""
-    import hashlib
-
-    import numpy as np
-
-    a_arr = np.array([p[0] for p in _PERMS], dtype=np.uint64)
-    c_arr = np.array([p[1] for p in _PERMS], dtype=np.uint64)
-    b_arr = np.array([p[2] for p in _PERMS], dtype=np.uint64)
-    prime = np.uint64(MINHASH_PRIME)
-    shift = np.uint64(30)
-    lo_mask = np.uint64(_HALF - 1)
-    init = [_SIG_INIT] * N_HASHES
-    sha = hashlib.sha256
-    # per-call memo: dup-heavy corpora (the dedup workload) re-hash the
-    # same shingles across documents in one Arrow batch
-    memo: dict[str, int] = {}
-    out = []
-    for sh in shingle_lists:
-        if sh is None:
-            out.append(None)
-            continue
-        if len(sh) == 0:
-            out.append(init)
-            continue
-        vals = []
-        for s in sh:
-            h = memo.get(s)
-            if h is None:
-                h = int(sha(s.encode("utf-8")).hexdigest()[:15], 16)
-                memo[s] = h
-            vals.append(h)
-        base = np.array(vals, dtype=np.uint64)
-        hi = base >> shift
-        lo = base & lo_mask
-        chans = (
-            hi[:, None] * a_arr[None, :]
-            + lo[:, None] * c_arr[None, :]
-            + b_arr[None, :]
-        ) % prime
-        out.append(chans.min(axis=0).astype(np.int64))
-    return out
-
-
-_SIGN_UDF = None
-
-
-def _sign_udf():
-    """Arrow-batched signing UDF (created once) — the measured-SLOWER
-    alternative, kept as a pinned design-space record. A/B on the
-    checkpointed sf0.1 shingle table (5,000 docs, 52 shingles/doc,
-    local[32] tuned, warm CPU-seconds): expression fold 4.7, this UDF
-    8.1, a longs-only variant (sha kept JVM-side) 7.7 — the numpy math
-    itself is ~30x cheaper (0.08 vs 0.9 ms/doc) but the pandas-UDF
-    fixed costs (Arrow round trip, worker scheduling, object-Series
-    conversion) exceed the whole interpreted fold at this doc shape.
-    End-to-end the gap repeats: minhash_lsh 14.3 -> 23.2 CPU,
-    decontaminate_fuzzy 11.9 -> 20.6. Revisit only for much longer
-    documents (shingle count >> 52) where the fold grows linearly and
-    the UDF overhead stays fixed."""
-    global _SIGN_UDF
-    if _SIGN_UDF is None:
-        import pandas as pd
-
-        def _sign(sh):
-            return pd.Series(minhash_sign_many(sh), dtype=object)
-
-        # real (non-string) annotations: the module's `from __future__
-        # import annotations` would stringify inline hints and pyspark
-        # cannot resolve 'pd.Series' from a function-local import
-        _sign.__annotations__ = {"sh": pd.Series, "return": pd.Series}
-        _SIGN_UDF = F.pandas_udf(_sign, "array<bigint>")
-    return _SIGN_UDF
-
-
-# "expr" = pure-Catalyst fold (DEFAULT — measured cheaper, see
-# _sign_udf docstring; also the shape the DuckDB oracle SQL mirrors);
-# "arrow" = vectorized pandas-UDF fold (bit-identical, test-pinned).
-SIGNING_IMPL = "expr"
-
-
-def minhash_signature_from_shingles(sh_col, impl: str | None = None):
+def minhash_signature_from_shingles(sh_col):
     """Signature from an ALREADY-COMPUTED shingle column — lets pipelines
-    that also need the raw shingles (verification) tokenize once.
-    Value-identical under both impls (test-pinned)."""
-    if (impl or SIGNING_IMPL) == "arrow":
-        sh = F.col(sh_col) if isinstance(sh_col, str) else sh_col
-        return _sign_udf()(sh)
-    return minhash_signature_expr(sh_col)
-
-
-def minhash_signature_expr(sh_col):
-    """The pure-Catalyst signature fold — the executable spec for
-    `minhash_sign_many` and the form `_minhash_oracle_sql` mirrors."""
+    that also need the raw shingles (verification) tokenize once. The
+    pure-Catalyst fold ``_minhash_oracle_sql`` mirrors."""
     sh = F.col(sh_col) if isinstance(sh_col, str) else sh_col
     # 60-bit base hash split into two 30-bit halves; see the family
     # derivation at the _PERMS definition (overflow-free, wraps mod p)
@@ -551,7 +439,7 @@ def minhash_signature_expr(sh_col):
         + ",".join(f"named_struct('a',{a}L,'c',{c}L,'b',{b}L)" for a, c, b in _PERMS)
         + ")"
     )
-    init = F.expr(f"array_repeat(cast({1 << 62} as bigint), {N_HASHES})")
+    init = F.expr(f"array_repeat(cast({_SIG_INIT} as bigint), {N_HASHES})")
     half_mask = F.lit(_HALF - 1).cast("long")
     return F.aggregate(
         base_hashes,
@@ -574,24 +462,6 @@ def minhash_signature_expr(sh_col):
 
 def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return spread_for_compute(df).withColumn("minhash", minhash_signature(text_col))
-
-
-def lsh_candidates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding: equal band-slice of the
-    signature → same bucket → pair. Returns distinct (id_a, id_b)."""
-    sh = _materialize(
-        spread_for_compute(df, key=id_col).select(
-            F.col(id_col).alias("id"), word_shingles(text_col).alias("sh")
-        )
-    ).filter(F.size("sh") > 0)  # empty-set guard, see minhash_near_duplicates
-    # Generate barrier — see minhash_near_duplicates
-    sig = sh.select(
-        "id",
-        F.explode(F.array(minhash_signature_from_shingles("sh"))).alias("sig"),
-    )
-    return _band_candidates(sig)
 
 
 def _band_candidates(sig: DataFrame) -> DataFrame:
@@ -652,17 +522,9 @@ def minhash_near_duplicates(
     # pushes the predicate under the projection and re-inlines the whole
     # shingle expression (measured ~+50% CPU for a "free" filter).
     sh = sh.filter(F.size("shingles") > 0)
-    # the signature fold rides through explode(array(...)) — a
-    # single-row Generate — so the banding transform's BANDS slice
-    # references read one stored evaluation: project collapse would
-    # otherwise inline the whole 64-channel fold into the band lambda,
-    # re-running it once per band per self-join branch (measured
-    # 23.7 -> 14.8 CPU-s at sf0.1, identical pairs)
+    # one signature fold per doc, not one per band slice
     sig = sh.select(
-        "id",
-        F.explode(F.array(minhash_signature_from_shingles("shingles"))).alias(
-            "sig"
-        ),
+        "id", single_eval(minhash_signature_from_shingles("shingles")).alias("sig")
     )
     cands = _band_candidates(sig)
     j = (
@@ -671,11 +533,9 @@ def minhash_near_duplicates(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
-    # one evaluation of the intersect/union per candidate pair via the
-    # single-row Generate (the filter would otherwise re-inline both
-    # below the projection — see _jaccard_pairs_prefix)
+    # one intersect/union per pair: the threshold filter would re-inline it
     stats = F.struct(inter.alias("nc"), union.alias("nu"))
-    jj = j.select("id_a", "id_b", F.explode(F.array(stats)).alias("_ps"))
+    jj = j.select("id_a", "id_b", single_eval(stats).alias("_ps"))
     # union > 0 guard: two empty shingle sets (sub-k-token docs) collide in
     # every LSH bucket but have no defined Jaccard — drop, both engines
     return jj.filter(

@@ -47,32 +47,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from docling_jobkit_spark.functions.stamp import check_stamp, read_stamp
 from docling_jobkit_spark.operators.similarity import (
+    IVF_STAMP_KEYS,
     codebook_id,
     with_ivf_cells,
 )
 
-_META_KEYS = ("ivf_k", "ivf_codebook")
 
-
-def _stored_stamp(spark: SparkSession, path: str, vec_col: str) -> dict:
+def _stored_stamp(
+    spark: SparkSession,
+    path: str,
+    vec_col: str,
+    centroids: list[list[float]] | None = None,
+    why: str = "",
+) -> dict:
     """Codebook stamp of an existing layout, read from the schema only
     (one footer; no data). Raises if the layout is missing the vector
-    column or carries no stamp."""
+    column or carries no stamp, or — given ``centroids`` — if the stamp
+    names another codebook (``why`` says what that would break)."""
     existing = spark.read.parquet(path)
-    fields = {f.name: f for f in existing.schema.fields}
-    if vec_col not in fields or "ivf_cell" not in fields:
+    if vec_col not in existing.columns or "ivf_cell" not in existing.columns:
         raise ValueError(
             f"not an IVF index (missing '{vec_col}'/'ivf_cell'): {path}"
         )
-    meta = fields[vec_col].metadata or {}
-    stamp = {k: meta.get(k) for k in _META_KEYS if meta.get(k) is not None}
-    if "ivf_codebook" not in stamp:
-        raise ValueError(
-            f"IVF layout at {path} carries no codebook stamp; refusing to "
-            "serve vectors of unknown assignment provenance"
-        )
-    return stamp
+    stored = read_stamp(existing, [vec_col], IVF_STAMP_KEYS)
+    current = codebook_id(centroids) if centroids is not None else None
+    check_stamp(
+        stored,
+        {"ivf_codebook": current},
+        required=True,
+        missing=f"IVF layout at {path} carries no codebook stamp; refusing to "
+        "serve vectors of unknown assignment provenance",
+        mismatch=f"IVF codebook mismatch: index={stored.get('ivf_codebook')} "
+        f"current={current} — {why}",
+    )
+    return stored
 
 
 def _grouped_by_cell(assigned: DataFrame, id_col: str) -> DataFrame:
@@ -117,14 +127,14 @@ def append_ivf_index(
     and append them into the existing layout. Raises unless the
     existing layout's stamped codebook identity equals
     ``codebook_id(centroids)`` — same size, same coordinates."""
-    stored = _stored_stamp(spark, path, vec_col)
-    current = codebook_id(centroids)
-    if stored["ivf_codebook"] != current:
-        raise ValueError(
-            f"IVF codebook mismatch: index={stored['ivf_codebook']} "
-            f"current={current} — an append would mix two assignment "
-            "geometries in the same cells; rebuild with write_ivf_index"
-        )
+    _stored_stamp(
+        spark,
+        path,
+        vec_col,
+        centroids,
+        "an append would mix two assignment geometries in the same cells; "
+        "rebuild with write_ivf_index",
+    )
     assigned = with_ivf_cells(df.select(id_col, vec_col), centroids, vec_col)
     _grouped_by_cell(assigned, id_col).write.mode("append").partitionBy(
         "ivf_cell"
@@ -169,19 +179,19 @@ def ivf_index_report(
     similarity across appends is the drift signal that the codebook no
     longer fits the data and a rebuild is due."""
     vec_col = _detect_vec_col(spark, path)
-    stamp = _stored_stamp(spark, path, vec_col)
+    stored = _stored_stamp(
+        spark,
+        path,
+        vec_col,
+        centroids,
+        "similarity against foreign centroids is not the stored assignment's "
+        "geometry",
+    )
     idx = spark.read.parquet(path)
-    k = int(stamp.get("ivf_k") or 0)
+    k = int(stored.get("ivf_k") or 0)
 
     aggs = [F.count(F.lit(1)).cast("long").alias("n_vectors")]
     if centroids is not None:
-        current = codebook_id(centroids)
-        if stamp["ivf_codebook"] != current:
-            raise ValueError(
-                f"IVF codebook mismatch: index={stamp['ivf_codebook']} "
-                f"current={current} — similarity against foreign centroids "
-                "is not the stored assignment's geometry"
-            )
         # one F.expr parse — the Column-API loop costs ~6 py4j lambda
         # registrations per centroid (see similarity._cosine_array)
         from docling_jobkit_spark.operators.similarity import _cosine_array

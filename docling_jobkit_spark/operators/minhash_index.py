@@ -58,7 +58,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import stable_hash64
+from docling_jobkit_spark.functions.scalar import single_eval, stable_hash64
+from docling_jobkit_spark.functions.stamp import check_stamp, read_stamp, stamp
 from docling_jobkit_spark.operators.decontam import _sigs
 from docling_jobkit_spark.operators.dedup import (
     _BASE_BITS,
@@ -125,9 +126,9 @@ def banded_signatures(
 
 def _stamped(banded: DataFrame) -> DataFrame:
     meta = {FAMILY_META_KEY: minhash_family_digest()}
-    return banded.withColumn(
-        "bucket", F.col("bucket").alias("bucket", metadata=meta)
-    ).withColumn("sig", F.col("sig").alias("sig", metadata=meta))
+    return banded.withColumn("bucket", stamp("bucket", meta)).withColumn(
+        "sig", stamp("sig", meta)
+    )
 
 
 def write_minhash_index(
@@ -200,20 +201,17 @@ def read_minhash_index(
     for col in ("bucket", "sig"):
         if col not in fields:
             raise ValueError(f"not a minhash index (missing '{col}'): {path}")
-    stamped = (fields["bucket"].metadata or {}).get(FAMILY_META_KEY) or (
-        fields["sig"].metadata or {}
-    ).get(FAMILY_META_KEY)
+    stored = read_stamp(idx, ["sig", "bucket"], [FAMILY_META_KEY])
     current = minhash_family_digest()
-    if stamped is None:
-        raise ValueError(
-            f"minhash index at {path} carries no '{FAMILY_META_KEY}' stamp; "
-            "refusing to probe signatures of unknown provenance"
-        )
-    if stamped != current:
-        raise ValueError(
-            f"minhash family mismatch: index={stamped} current={current} — "
-            "signatures are not bit-comparable; rebuild the index"
-        )
+    check_stamp(
+        stored,
+        {FAMILY_META_KEY: current},
+        required=True,
+        missing=f"minhash index at {path} carries no '{FAMILY_META_KEY}' stamp; "
+        "refusing to probe signatures of unknown provenance",
+        mismatch=f"minhash family mismatch: index={stored.get(FAMILY_META_KEY)} "
+        f"current={current} — signatures are not bit-comparable; rebuild the index",
+    )
     return idx
 
 
@@ -252,17 +250,10 @@ def near_dup_pairs_against_index(
     n_agree = F.size(
         F.filter(F.zip_with("_s_new", "_s_idx", lambda a, b: a == b), lambda x: x)
     )
-    # Generate barrier on the agreement count: the min_agree filter
-    # otherwise pushes below the projection and re-inlines the 64-wide
-    # zip_with fold — one extra interpreted evaluation per candidate
-    # pair (the filter-over-expensive-projection trap; values unchanged)
+    # one agreement fold per pair: the min_agree filter would re-inline it
     return (
         idx.join(new_banded, on=["band", "bucket"])
-        .select(
-            "doc_id",
-            "index_id",
-            F.explode(F.array(n_agree.cast("int"))).alias("n_agree"),
-        )
+        .select("doc_id", "index_id", single_eval(n_agree.cast("int")).alias("n_agree"))
         .where(F.col("n_agree") >= min_agree)
         .distinct()
         .select(

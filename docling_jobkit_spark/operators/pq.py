@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.functions.scalar import lit_double_rows
+from docling_jobkit_spark.functions.stamp import check_stamp, read_stamp, stamp
 
 
 def _sq_l2(a: list[float], b: list[float]) -> float:
@@ -170,28 +171,21 @@ def pq_encode(
         "pq_dsub": dsub,
         "pq_codebook": pq_codebook_id(codebooks),
     }
-    return df.withColumn(
-        "pq_code",
-        F.when(v.isNotNull(), code).alias("pq_code", metadata=meta),
-    )
+    return df.withColumn("pq_code", stamp(F.when(v.isNotNull(), code), meta, "pq_code"))
 
 
 def _check_stamp(encoded: DataFrame, codebooks: list[list[list[float]]]) -> None:
-    fields = {f.name: f for f in encoded.schema.fields}
-    if "pq_code" not in fields:
+    if "pq_code" not in encoded.columns:
         raise ValueError("pq_code missing: run pq_encode first")
-    meta = dict(fields["pq_code"].metadata or {})
-    stored = meta.get("pq_codebook")
-    if stored is not None and stored != pq_codebook_id(codebooks):
-        raise ValueError(
-            "table was encoded with a different PQ codebook — stored codes "
-            "would not correspond to these centroids"
-        )
-    stored_m = meta.get("pq_m")
-    if stored_m is not None and stored_m != len(codebooks):
-        raise ValueError(
-            f"table was encoded with m={stored_m}, search uses m={len(codebooks)}"
-        )
+    stored = read_stamp(encoded, ["pq_code"], ["pq_codebook", "pq_m"])
+    check_stamp(
+        stored,
+        {"pq_codebook": pq_codebook_id(codebooks), "pq_m": len(codebooks)},
+        required=False,
+        mismatch="table was encoded with a different PQ codebook "
+        f"(m={stored.get('pq_m')}, search uses m={len(codebooks)}) — stored "
+        "codes would not correspond to these centroids",
+    )
 
 
 def adc_lookup_table(
@@ -304,30 +298,9 @@ def ivf_pq_topk(
     identity on ``ivf_cell``/vector metadata, PQ codebook on
     ``pq_code``) is verified, so a probe against either wrong codebook
     raises instead of silently searching the wrong cells/codes."""
-    # reuse the IVF family's stamp discipline (raises on mismatch)
-    from docling_jobkit_spark.operators.similarity import probe_cells
+    from docling_jobkit_spark.operators.similarity import check_ivf_stamp, probe_cells
 
-    fields = {f.name: f for f in table.schema.fields}
-    if "ivf_cell" not in fields:
-        raise ValueError("ivf_cell missing: run with_ivf_cells first")
-    vec_field = fields.get(vec_col)
-    meta = dict(vec_field.metadata or {}) if vec_field is not None else {}
-    meta.update(fields["ivf_cell"].metadata or {})
-    stored_k = meta.get("ivf_k")
-    if stored_k is not None and stored_k != len(centroids):
-        raise ValueError(
-            f"table was materialized with k={stored_k}, probe uses "
-            f"k={len(centroids)} centroids — cells would not correspond"
-        )
-    stored_cb = meta.get("ivf_codebook")
-    if stored_cb is not None:
-        from docling_jobkit_spark.operators.similarity import codebook_id
-
-        if stored_cb != codebook_id(centroids):
-            raise ValueError(
-                "table was materialized with a different IVF codebook — "
-                "probed cell ids would not correspond to these centroids"
-            )
+    check_ivf_stamp(table, centroids, vec_col)
     probe = probe_cells(query_vec, centroids, n_probe)
     return pq_topk(
         table.filter(F.col("ivf_cell").isin(probe)),

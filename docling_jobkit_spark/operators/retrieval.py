@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.functions.scalar import stable_hash64
+from docling_jobkit_spark.functions.stamp import check_stamp, read_stamp, stamp
 
 # BM25 free parameters (Robertson et al. defaults, same as Lucene)
 DEFAULT_K1 = 1.2
@@ -57,6 +58,7 @@ DEFAULT_B = 0.75
 # coarse enough for multi-GB files at corpus scale.
 TERM_BUCKET_COL = "term_bucket"
 DEFAULT_TERM_BUCKETS = 256
+BM25_STAMP_KEYS = ("bm25_n_buckets", "bm25_n_docs", "bm25_total_tokens")
 
 # One token class, shared verbatim with the DuckDB twin: lowercase runs
 # of [a-z0-9]. Both engines regex-split identically on this class (no
@@ -128,7 +130,7 @@ def write_postings(
         n_docs, total_tokens = corpus_stats
         meta["bm25_n_docs"] = int(n_docs)
         meta["bm25_total_tokens"] = int(total_tokens)
-    term = F.col("term").alias("term", metadata=meta)
+    term = stamp("term", meta)
     (
         postings.select(
             term,
@@ -160,13 +162,15 @@ def prune_to_query_buckets(
     Raises on a bucketed layout without the ``bm25_n_buckets`` stamp:
     probing with an ASSUMED bucket count would prune to the wrong files
     and return silently wrong results."""
-    if "bm25_n_buckets" not in meta:
-        raise ValueError(
-            "bucketed postings without a bm25_n_buckets stamp — "
-            "probing with an assumed bucket count would prune to the "
-            "wrong files and return silently wrong results; rewrite "
-            "the layout with write_postings"
-        )
+    check_stamp(
+        meta,
+        {"bm25_n_buckets": None},
+        required=True,
+        missing="bucketed postings without a bm25_n_buckets stamp — "
+        "probing with an assumed bucket count would prune to the "
+        "wrong files and return silently wrong results; rewrite "
+        "the layout with write_postings",
+    )
     nb = int(meta["bm25_n_buckets"])
     buckets = sorted(
         {
@@ -255,10 +259,8 @@ def bm25_topk(
         postings = build_postings(docs, id_col=id_col, text_col=text_col)
     spark = postings.sparkSession
 
-    meta = next(
-        (f.metadata for f in postings.schema.fields if f.name == "term"), {}
-    )
-    if corpus_stats is None and meta and "bm25_n_docs" in meta:
+    meta = read_stamp(postings, ["term"], BM25_STAMP_KEYS)
+    if corpus_stats is None and "bm25_n_docs" in meta:
         corpus_stats = (int(meta["bm25_n_docs"]), int(meta["bm25_total_tokens"]))
 
     if corpus_stats is not None:

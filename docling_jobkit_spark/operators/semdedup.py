@@ -58,7 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import lit_longs
+from docling_jobkit_spark.functions.scalar import lit_longs, single_eval
 
 from docling_jobkit_spark.operators.dedup import spread_for_compute
 from docling_jobkit_spark.operators.similarity import ivf_assign
@@ -78,20 +78,14 @@ def with_semdedup_rank(
     # the k-cosine assignment + own-sim projection are interpreted
     # per-row expression chains — spread before computing (no-op on
     # already-wide scans, repo invariant for single-row-group testdata).
-    # ONE cosine-array evaluation feeds both the cell argmax and the
-    # own-cell similarity via the explode(array(...)) Generate barrier
-    # (HOF folds are CodegenFallback — no subexpression elimination —
-    # so the former ivf_assign + separate sim_arr spelling ran the
-    # k-fold chain twice per row, and again under the rank window's
-    # exchange). Same argmax/tie rule and the same rounded values as
-    # ivf_assign by construction.
+    # Same argmax/tie rule and the same rounded values as ivf_assign by
+    # construction.
     from docling_jobkit_spark.operators.similarity import _cosine_array
 
     sp = spread_for_compute(df)
     out_cols = sp.columns
-    inner = sp.select(
-        "*", F.explode(F.array(_cosine_array(centroids, vec_col))).alias("_ca")
-    )
+    # one cosine array feeds the cell argmax, the own-cell sim and the rank window
+    inner = sp.select("*", single_eval(_cosine_array(centroids, vec_col)).alias("_ca"))
     cell = F.coalesce(
         (F.array_position(F.col("_ca"), F.array_max(F.col("_ca"))) - 1).cast(
             "int"
@@ -172,10 +166,6 @@ def semantic_duplicates(
         F.col("_nrm").alias("_nrm_r"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).cast("int").alias("_salt"),
     )
-    # the pair similarity rides through the explode(array(...)) Generate
-    # barrier: the tau filter otherwise pushes below the projection and
-    # re-inlines the whole interpreted dot fold (one extra evaluation
-    # per pair — the repo's filter-over-expensive-projection trap)
     sim = F.round(
         _dot(F.col("_vec_l"), F.col("_vec_r"))
         / (F.col("_nrm_l") * F.col("_nrm_r")),
@@ -184,7 +174,8 @@ def semantic_duplicates(
     pairs = (
         left.join(right, ["ivf_cell", "_salt"])
         .where(F.col("_rank_l") < F.col("_rank_r"))
-        .select(F.col("_id_r"), F.explode(F.array(sim)).alias("_sim"))
+        # one dot fold per pair: the tau filter would re-inline it
+        .select(F.col("_id_r"), single_eval(sim).alias("_sim"))
         .where(F.col("_sim") >= F.lit(float(tau)))
     )
     hit = pairs.groupBy("_id_r").agg(F.max("_sim").alias("max_prior_sim"))

@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import lit_doubles
+from docling_jobkit_spark.functions.scalar import lit_doubles, single_eval, sql_ident
+from docling_jobkit_spark.functions.stamp import check_stamp, read_stamp, stamp
 
 
 def _dot(a, b) -> Column:
@@ -159,10 +160,7 @@ def _pair_cosine_rows(pairs: DataFrame, threshold: float) -> DataFrame:
     every pair — 3× the flops of the dot — and the interpreted chain is
     CodegenFallback, so nothing dedupes it); dot/(nv_a·nv_b) multiplies
     the identical SQRT values in the same order, so every rounded
-    cosine is bit-unchanged. The similarity rides the explode(array())
-    Generate barrier: the threshold filter otherwise pushes below the
-    projection and re-inlines the whole fold (one extra evaluation per
-    pair — the filter-over-expensive-projection trap)."""
+    cosine is bit-unchanged."""
     cos = F.round(
         _dot(F.col("v_a"), F.col("v_b")) / (F.col("nv_a") * F.col("nv_b")), 6
     )
@@ -170,7 +168,8 @@ def _pair_cosine_rows(pairs: DataFrame, threshold: float) -> DataFrame:
         pairs.select(
             F.col("id_a").alias("vec_id_a"),
             F.col("id_b").alias("vec_id_b"),
-            F.explode(F.array(cos)).alias("cosine"),
+            # one cosine fold per pair: the threshold filter would re-inline it
+            single_eval(cos).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -278,7 +277,7 @@ def lsh_signature(vec_col, dim: int, n_bits: int = 12, table: int = 0) -> Column
     return F.expr(
         f"aggregate("
         f"  zip_with(aggregate("
-        f"    zip_with(`{vec_col}`, array({rows}),"
+        f"    zip_with({sql_ident(vec_col)}, array({rows}),"
         f"      (x, row) -> transform(row, p -> CAST(x AS DOUBLE) * p)),"
         f"    array({zeros}),"
         f"    (acc, c) -> zip_with(acc, c, (a, x) -> a + x)),"
@@ -305,14 +304,9 @@ def ivf_assign(
     # (A when-chain here would NEST each step's subtree into the next —
     # expression size doubles per centroid, measured 27 s for k=8; the
     # flat array form is linear and runs in milliseconds.)
-    # The cosine array rides through explode(array(...)) — a single-row
-    # Generate — because the interpreted cosine folds are
-    # CodegenFallback (no subexpression elimination): referencing the
-    # array from both array_position and array_max (and from any
-    # downstream filter/exchange Catalyst re-inlines the cell into)
-    # re-ran all k folds per reference.
-    out_cols = df.columns
-    inner = df.select("*", F.explode(F.array(_cosine_array(centroids, vec_col))).alias("_ca"))
+    # one k-fold cosine array per row, read by array_position AND array_max
+    out_cols = [F.col(sql_ident(c)) for c in df.columns]
+    inner = df.select("*", single_eval(_cosine_array(centroids, vec_col)).alias("_ca"))
     best_cell = (
         F.array_position(F.col("_ca"), F.array_max(F.col("_ca"))) - 1
     ).cast("int")
@@ -336,7 +330,7 @@ def _cosine_array(centroids: list[list[float]], vec_col: str) -> Column:
     unchanged (A/B-collected on the embeddings corpus)."""
     from docling_jobkit_spark.functions.scalar import _double_sql
 
-    v = "`" + vec_col.replace("`", "``") + "`"
+    v = sql_ident(vec_col)
 
     def dot(a: str, b: str) -> str:
         return (
@@ -551,9 +545,33 @@ def with_ivf_cells(
     keeps it."""
     meta = {"ivf_k": len(centroids), "ivf_codebook": codebook_id(centroids)}
     assigned = ivf_assign(df, centroids, vec_col)
-    return assigned.withColumn(
-        "ivf_cell", F.col("ivf_cell").alias("ivf_cell", metadata=meta)
-    ).withColumn(vec_col, F.col(vec_col).alias(vec_col, metadata=meta))
+    return assigned.withColumn("ivf_cell", stamp("ivf_cell", meta)).withColumn(
+        vec_col, stamp(vec_col, meta)
+    )
+
+
+IVF_STAMP_KEYS = ("ivf_k", "ivf_codebook")
+
+
+def check_ivf_stamp(
+    table: DataFrame, centroids: list[list[float]], vec_col: str
+) -> None:
+    """Raise unless ``table`` (a ``with_ivf_cells`` output, in-plan or
+    read back from its layout) was assigned with ``centroids``. The
+    stamp is read from the cell column in-plan and from the vector
+    column after a ``partitionBy("ivf_cell")`` round-trip (partition
+    columns drop field metadata); an unstamped table passes."""
+    if "ivf_cell" not in table.columns:
+        raise ValueError("ivf_cell missing: run with_ivf_cells first")
+    stored = read_stamp(table, [vec_col, "ivf_cell"], IVF_STAMP_KEYS)
+    check_stamp(
+        stored,
+        {"ivf_k": len(centroids), "ivf_codebook": codebook_id(centroids)},
+        required=False,
+        mismatch=f"table was materialized with a different codebook "
+        f"(k={stored.get('ivf_k')}, probe uses k={len(centroids)} centroids) — "
+        "cells of a different IVF codebook would not correspond to these centroids",
+    )
 
 
 def ivf_topk_presigned(
@@ -574,27 +592,7 @@ def ivf_topk_presigned(
     Raises if the stored cell column is missing or was materialized with
     a different codebook (size or content) — a silent mismatch would
     probe the wrong cells and return plausible-but-wrong neighbors."""
-    fields = {f.name: f for f in assigned.schema.fields}
-    if "ivf_cell" not in fields:
-        raise ValueError("ivf_cell missing: run with_ivf_cells first")
-    # metadata lives on the cell column in-plan, and on the vector column
-    # after a partitionBy("ivf_cell") round-trip (partition columns drop
-    # field metadata)
-    vec_field = fields.get(vec_col)
-    meta = dict(vec_field.metadata or {}) if vec_field is not None else {}
-    meta.update(fields["ivf_cell"].metadata or {})
-    stored_k = meta.get("ivf_k")
-    stored_cb = meta.get("ivf_codebook")
-    if stored_k is not None and stored_k != len(centroids):
-        raise ValueError(
-            f"table was materialized with k={stored_k}, probe uses "
-            f"k={len(centroids)} centroids — cells would not correspond"
-        )
-    if stored_cb is not None and stored_cb != codebook_id(centroids):
-        raise ValueError(
-            "table was materialized with a different codebook — probed "
-            "cell ids would not correspond to these centroids"
-        )
+    check_ivf_stamp(assigned, centroids, vec_col)
     probe = probe_cells(query_vec, centroids, n_probe)
     return brute_force_topk(
         assigned.filter(F.col("ivf_cell").isin(probe)), query_vec, k, vec_col, id_col
@@ -618,11 +616,12 @@ def with_ann_signatures(
     for t in range(n_tables):
         out = out.withColumn(
             f"sig_{t}",
-            # n_bits rides as column metadata so a later query cannot
-            # silently probe with mismatched parameters (Spark persists
-            # field metadata through its parquet writes)
-            lsh_signature(vec_col, dim, n_bits, t).alias(
-                f"sig_{t}", metadata={"lsh_n_bits": n_bits}
+            # n_bits stamped so a later query cannot silently probe with
+            # mismatched parameters
+            stamp(
+                lsh_signature(vec_col, dim, n_bits, t),
+                {"lsh_n_bits": n_bits},
+                f"sig_{t}",
             ),
         )
     return out
@@ -646,20 +645,21 @@ def ann_topk_presigned(
     Raises if the table's signature columns are missing or were
     materialized with a different n_bits — a mismatch would otherwise
     return a silently near-empty candidate set."""
-    fields = {f.name: f for f in signed.schema.fields}
     for t in range(n_tables):
-        f = fields.get(f"sig_{t}")
-        if f is None:
+        if f"sig_{t}" not in signed.columns:
             raise ValueError(
                 f"sig_{t} missing: table was materialized with fewer than "
                 f"{n_tables} LSH tables (run with_ann_signatures first)"
             )
-        stored_bits = f.metadata.get("lsh_n_bits")
-        if stored_bits is not None and stored_bits != n_bits:
-            raise ValueError(
-                f"sig_{t} was materialized with n_bits={stored_bits}, "
-                f"query asked for n_bits={n_bits} — buckets would never match"
-            )
+        stored = read_stamp(signed, [f"sig_{t}"], ["lsh_n_bits"])
+        check_stamp(
+            stored,
+            {"lsh_n_bits": n_bits},
+            required=False,
+            mismatch=f"sig_{t} was materialized with "
+            f"n_bits={stored.get('lsh_n_bits')}, query asked for "
+            f"n_bits={n_bits} — buckets would never match",
+        )
     cond = F.lit(False)
     for t in range(n_tables):
         cond = cond | (F.col(f"sig_{t}") == F.lit(query_signature(query_vec, t, n_bits)))

@@ -54,6 +54,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.functions.scalar import lit_doubles, tokens
+from docling_jobkit_spark.functions.stamp import (
+    check_stamp,
+    merge_stamped,
+    read_stamp,
+    stamp,
+)
 
 # Flajolet et al. 2007 bias-correction constants.
 _ALPHA = {4: 0.673, 5: 0.697, 6: 0.709}
@@ -99,31 +105,20 @@ def hll_registers(df: DataFrame, col: str, p: int = 12) -> DataFrame:
         df.where(F.col(col).isNotNull())
         .select(bucket.alias("bucket"), rho.alias("rho"))
         .groupBy("bucket")
-        .agg(
-            # p stamped in column metadata (the minhash_index discipline:
-            # register tables of different p silently merge into garbage
-            # otherwise; metadata survives parquet round-trips on data
-            # columns — partition columns would drop it, "register" never
-            # becomes one)
-            F.max("rho").alias("register", metadata={"hll_p": p})
-        )
+        # register tables of different p merge into garbage: stamp p
+        .agg(stamp(F.max("rho"), {"hll_p": p}, "register"))
     )
 
 
-def _stamped_p(registers: DataFrame) -> int | None:
-    for f in registers.schema.fields:
-        if f.name == "register":
-            return f.metadata.get("hll_p")
-    return None
-
-
 def _require_p(registers: DataFrame, p: int, where: str) -> None:
-    stamped = _stamped_p(registers)
-    if stamped is not None and stamped != p:
-        raise ValueError(
-            f"{where}: register table was built at p={stamped}, got p={p} — "
-            "mismatched sketches never agree; rebuild with one p"
-        )
+    stored = read_stamp(registers, ["register"], ["hll_p"])
+    check_stamp(
+        stored,
+        {"hll_p": p},
+        required=False,
+        mismatch=f"{where}: register table was built at p={stored.get('hll_p')}, "
+        f"got p={p} — mismatched sketches never agree; rebuild with one p",
+    )
 
 
 def hll_estimate(registers: DataFrame, p: int, label: str) -> DataFrame:
@@ -180,25 +175,15 @@ def hll_merge(*register_tables: DataFrame) -> DataFrame:
     a rescan (the same incremental posture as minhash_index.py for
     fuzzy dedup). Exactly equal to sketching the concatenated input, not
     just approximately — pinned in tests."""
-    if not register_tables:
-        raise ValueError("need at least one register table")
-    stamps = {_stamped_p(t) for t in register_tables} - {None}
-    if len(stamps) > 1:
-        raise ValueError(
-            f"hll_merge: register tables built at different p {sorted(stamps)} "
-            "— mismatched sketches never agree; rebuild with one p"
-        )
-    p = next(iter(stamps), None)
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    merged = F.max("register")
-    col = (
-        merged.alias("register", metadata={"hll_p": p})
-        if p is not None
-        else merged.alias("register")
+    return merge_stamped(
+        register_tables,
+        ["bucket"],
+        F.max("register"),
+        "register",
+        ["hll_p"],
+        "hll_merge: register tables built at different p — mismatched "
+        "sketches never agree; rebuild with one p",
     )
-    return out.groupBy("bucket").agg(col)
 
 
 def hll_oracle_sql(table_expr: str, col: str, p: int, label: str) -> str:
@@ -294,7 +279,7 @@ def hll_registers_by(
             F.col(group_col).alias("grp"), bucket.alias("bucket"), rho.alias("rho")
         )
         .groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("register", metadata={"hll_p": p}))
+        .agg(stamp(F.max("rho"), {"hll_p": p}, "register"))
     )
 
 
@@ -331,25 +316,15 @@ def hll_merge_by(*register_tables: DataFrame) -> DataFrame:
     """Grouped-sketch merge: element-wise max per (group, bucket) —
     exactly the sketch of the unioned input, per group. Same p-stamp
     enforcement as ``hll_merge``."""
-    if not register_tables:
-        raise ValueError("need at least one register table")
-    stamps = {_stamped_p(t) for t in register_tables} - {None}
-    if len(stamps) > 1:
-        raise ValueError(
-            f"hll_merge_by: register tables built at different p {sorted(stamps)} "
-            "— mismatched sketches never agree; rebuild with one p"
-        )
-    p = next(iter(stamps), None)
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    merged = F.max("register")
-    col = (
-        merged.alias("register", metadata={"hll_p": p})
-        if p is not None
-        else merged.alias("register")
+    return merge_stamped(
+        register_tables,
+        ["grp", "bucket"],
+        F.max("register"),
+        "register",
+        ["hll_p"],
+        "hll_merge_by: register tables built at different p — mismatched "
+        "sketches never agree; rebuild with one p",
     )
-    return out.groupBy("grp", "bucket").agg(col)
 
 
 def hll_grouped_oracle_sql(table_expr: str, group_col: str, col: str, p: int) -> str:
@@ -431,35 +406,12 @@ def cms_build(df: DataFrame, col: str, depth: int = 4, width: int = 1024) -> Dat
         df.where(c.isNotNull())
         .select(F.explode(channels).alias("ch"))
         .groupBy(F.col("ch.channel").alias("channel"), F.col("ch.bucket").alias("bucket"))
-        .agg(
-            # shape stamped in column metadata (the hll_p discipline):
-            # sketches of different (depth, width) silently merge/probe
-            # into garbage otherwise
-            F.count("*").alias(
-                "cnt", metadata={"cms_depth": depth, "cms_width": width}
-            )
-        )
+        # sketches of different shapes merge/probe into garbage: stamp it
+        .agg(stamp(F.count("*"), {"cms_depth": depth, "cms_width": width}, "cnt"))
     )
 
 
-def _cms_stamp(sketch: DataFrame) -> tuple[int, int] | None:
-    for f in sketch.schema.fields:
-        if f.name == "cnt":
-            d = f.metadata.get("cms_depth")
-            w = f.metadata.get("cms_width")
-            if d is not None and w is not None:
-                return (d, w)
-    return None
-
-
-def _require_cms_shape(sketch: DataFrame, depth: int, width: int, where: str) -> None:
-    stamped = _cms_stamp(sketch)
-    if stamped is not None and stamped != (depth, width):
-        raise ValueError(
-            f"{where}: sketch was built at (depth, width)={stamped}, got "
-            f"({depth}, {width}) — mismatched sketches never agree; "
-            "rebuild with one shape"
-        )
+_CMS_KEYS = ("cms_depth", "cms_width")
 
 
 def cms_merge(*sketches: DataFrame) -> DataFrame:
@@ -468,25 +420,15 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
     summary of any union is a merge, never a rescan). Exactly equal to
     sketching the concatenated input — count-sum is linear, pinned in
     tests. Raises when the inputs' stamped shapes differ."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    stamps = {_cms_stamp(s) for s in sketches} - {None}
-    if len(stamps) > 1:
-        raise ValueError(
-            f"cms_merge: sketches built at different shapes {sorted(stamps)} "
-            "— mismatched sketches never agree; rebuild with one shape"
-        )
-    shape = next(iter(stamps), None)
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    summed = F.sum("cnt")
-    col = (
-        summed.alias("cnt", metadata={"cms_depth": shape[0], "cms_width": shape[1]})
-        if shape is not None
-        else summed.alias("cnt")
+    return merge_stamped(
+        sketches,
+        ["channel", "bucket"],
+        F.sum("cnt"),
+        "cnt",
+        _CMS_KEYS,
+        "cms_merge: sketches built at different shapes — mismatched sketches "
+        "never agree; rebuild with one shape",
     )
-    return out.groupBy("channel", "bucket").agg(col)
 
 
 def cms_query(sketch: DataFrame, keys: DataFrame, col: str, depth: int = 4, width: int = 1024) -> DataFrame:
@@ -496,7 +438,15 @@ def cms_query(sketch: DataFrame, keys: DataFrame, col: str, depth: int = 4, widt
     (channel, bucket) pairs against the bounded sketch; neither side is
     corpus-sized. Raises when the sketch's stamped shape differs from
     the probe parameters (the probe would hash into the wrong cells)."""
-    _require_cms_shape(sketch, depth, width, "cms_query")
+    stored = read_stamp(sketch, ["cnt"], _CMS_KEYS)
+    check_stamp(
+        stored,
+        {"cms_depth": depth, "cms_width": width},
+        required=False,
+        mismatch="cms_query: sketch was built at (depth, width)="
+        f"{tuple(stored.get(k) for k in _CMS_KEYS)}, got ({depth}, {width}) — "
+        "mismatched sketches never agree; rebuild with one shape",
+    )
     c = F.col(col).cast("string")
     probes = keys.select(
         c.alias("key"),
@@ -565,13 +515,6 @@ GROUP BY p.key
 _LOGH_META_KEY = "logh_sub_bits"
 
 
-def _logh_stamped_bits(sketch: DataFrame) -> int | None:
-    for f in sketch.schema.fields:
-        if f.name == "cnt":
-            return f.metadata.get(_LOGH_META_KEY)
-    return None
-
-
 def logh_buckets(df: DataFrame, col: str, sub_bits: int = 6) -> DataFrame:
     """The log-bucket histogram for one non-negative integer metric
     column: ``(shift, top, cnt)`` — see module docstring for the
@@ -610,7 +553,7 @@ def logh_buckets(df: DataFrame, col: str, sub_bits: int = 6) -> DataFrame:
         # estimator's shiftleft
         .select("shift", F.expr("shiftright(_v, shift)").alias("top"))
         .groupBy("shift", "top")
-        .agg(F.count("*").alias("cnt", metadata={_LOGH_META_KEY: sub_bits}))
+        .agg(stamp(F.count("*"), {_LOGH_META_KEY: sub_bits}, "cnt"))
     )
 
 
@@ -619,22 +562,15 @@ def logh_merge(*sketches: DataFrame) -> DataFrame:
     (counts are additive per bucket) — persist one tiny bucket table per
     crawl snapshot and answer quantiles over any union of snapshots by
     merging sketches, never rescanning (the hll_merge posture)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    stamps = {_logh_stamped_bits(t) for t in sketches} - {None}
-    if len(stamps) > 1:
-        raise ValueError(
-            f"logh_merge: sketches built at different sub_bits {sorted(stamps)} "
-            "— bucket boundaries differ; rebuild with one precision"
-        )
-    bits = next(iter(stamps), None)
-    out = sketches[0]
-    for t in sketches[1:]:
-        out = out.unionByName(t)
-    meta = {_LOGH_META_KEY: bits} if bits is not None else None
-    summed = F.sum("cnt")
-    col = summed.alias("cnt", metadata=meta) if meta else summed.alias("cnt")
-    return out.groupBy("shift", "top").agg(col)
+    return merge_stamped(
+        sketches,
+        ["shift", "top"],
+        F.sum("cnt"),
+        "cnt",
+        [_LOGH_META_KEY],
+        "logh_merge: sketches built at different sub_bits — bucket "
+        "boundaries differ; rebuild with one precision",
+    )
 
 
 def logh_quantiles(

@@ -105,10 +105,6 @@ def page_count_col(html_col="html") -> Column:
     )
 
 
-def with_page_count(pages: DataFrame) -> DataFrame:
-    return pages.withColumn("n_pages", page_count_col("html"))
-
-
 def _split_batches(
     batches: Iterator[pd.DataFrame], pages_per_slice: int
 ) -> Iterator[pd.DataFrame]:

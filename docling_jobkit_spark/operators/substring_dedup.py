@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import stable_hash64, tokens
+from docling_jobkit_spark.functions.scalar import single_eval, stable_hash64, tokens
 
 K_DEFAULT = 20
 # two independent Karp-Rabin channels: 31-bit primes + odd bases; all
@@ -107,17 +107,12 @@ def exact_substring_dedup(
 
     # the tokenize + per-token hash transforms below are the cost —
     # spread a single-split scan before paying them (no-op at scale).
-    # The token array rides through explode(array(...)) — a single-row
-    # Generate — so the three consumers (_toks passthrough + the hash
-    # transform) read ONE evaluation of the tokenizer: HOF-bearing
-    # projections are CodegenFallback, which gets no subexpression
-    # elimination, so the former spelling re-ran the regex split once
-    # per reference. One sha per token (_tok31_pair) supplies both
-    # channels.
+    # One sha per token (_tok31_pair) supplies both channels.
     df = spread_for_compute(df)
     toked = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(F.array(tokens(F.col(text_col)))).alias("_toks"),
+        # one tokenizer run, read by the passthrough and the hash transform
+        single_eval(tokens(F.col(text_col))).alias("_toks"),
     )
     base = toked.select(
         "_id",

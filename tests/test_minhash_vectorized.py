@@ -1,10 +1,8 @@
-"""Bit-identity of the Arrow-batched MinHash signing path.
+"""Bit-exactness of the MinHash signature fold.
 
-The vectorized fold (`minhash_sign_many`, selectable via
-SIGNING_IMPL="arrow"; the expression fold stays the measured-cheaper
-default) must equal the pure-Catalyst expression fold
-(`minhash_signature_expr` — the executable spec the DuckDB oracle SQL
-mirrors) value-for-value on every row: the whole dedup family
+The Catalyst expression fold (`minhash_signature_from_shingles`, the
+form the DuckDB oracle SQL mirrors) must equal an independent big-int
+Python reference value-for-value on every row: the whole dedup family
 (LSH banding, the persisted index, ingest history probes, fuzzy
 decontamination) keys on these longs, and the index stamps the family
 digest — a single diverging channel would silently zero fuzzy recall
@@ -16,15 +14,12 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from docling_jobkit_spark.operators.dedup import (
     _PERMS,
     _SIG_INIT,
     MINHASH_PRIME,
     N_HASHES,
-    minhash_sign_many,
-    minhash_signature_expr,
     minhash_signature_from_shingles,
     word_shingles,
 )
@@ -45,10 +40,9 @@ ADVERSARIAL_TEXTS = [
 
 
 def _pure_python_signature(shingles: list[str]) -> list[int]:
-    """Independent big-int reference (no numpy) — guards the uint64
-    arithmetic in minhash_sign_many against silent overflow."""
-    if not shingles:
-        return [_SIG_INIT] * N_HASHES
+    """Independent big-int reference (no numpy, no Spark): Python ints
+    never wrap, so any overflow in the long arithmetic of the fold
+    shows up as a mismatch."""
     mins = [_SIG_INIT] * N_HASHES
     for s in shingles:
         x = int(hashlib.sha256(s.encode("utf-8")).hexdigest()[:15], 16)
@@ -67,56 +61,48 @@ def _py_shingles(text: str, k: int = 3) -> list[str]:
     return list(dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)))
 
 
-def test_vectorized_fold_matches_pure_python_reference():
+def test_vectorized_fold_matches_pure_python_reference(spark):
+    """The single-pass fold (all 64 channels updated per shingle) on
+    hand-made shingle lists, including a null and an empty array."""
     lists = [_py_shingles(t) for t in ADVERSARIAL_TEXTS] + [None, []]
-    got = minhash_sign_many(lists)
+    df = spark.createDataFrame(list(enumerate(lists)), "i long, sh array<string>")
+    got = [
+        r["sig"]
+        for r in df.select("i", minhash_signature_from_shingles("sh").alias("sig"))
+        .orderBy("i")
+        .collect()
+    ]
     assert got[-2] is None  # null-preserving
     assert list(got[-1]) == [_SIG_INIT] * N_HASHES  # empty = fold init
     for sh, g in zip(lists[:-2], got[:-2]):
-        assert [int(v) for v in g] == _pure_python_signature(sh)
+        assert list(g) == _pure_python_signature(sh)
 
 
 def test_arrow_and_expr_paths_bit_equal_on_corpus(spark, sf_dir):
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .withColumn("sh", word_shingles("text"))
-    )
+    """The expression fold over Spark-computed shingles equals the
+    reference on every corpus + adversarial row, and the longs survive
+    the Arrow collection path (``toArrow``) as well as row collection:
+    the values sit near 2**61, where any float round trip would lose
+    low bits."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     adversarial = spark.createDataFrame(
         [(10_000 + i, t) for i, t in enumerate(ADVERSARIAL_TEXTS)],
         "doc_id long, text string",
-    ).withColumn("sh", word_shingles("text"))
-    both = docs.unionByName(adversarial).select(
-        "doc_id",
-        minhash_signature_from_shingles("sh", impl="arrow").alias("sig_arrow"),
-        minhash_signature_expr("sh").alias("sig_expr"),
     )
-    diverged = both.where(
-        ~(F.col("sig_arrow") == F.col("sig_expr"))
-        | F.col("sig_arrow").isNull()
-        | F.col("sig_expr").isNull()
+    signed = (
+        docs.unionByName(adversarial)
+        .withColumn("sh", word_shingles("text"))
+        .select("doc_id", "sh", minhash_signature_from_shingles("sh").alias("sig"))
     )
-    assert diverged.count() == 0
+    rows = signed.collect()
+    assert len(rows) == docs.count() + len(ADVERSARIAL_TEXTS)
+    for r in rows:
+        assert list(r["sig"]) == _pure_python_signature(r["sh"]), r["doc_id"]
+    via_rows = {r["doc_id"]: list(r["sig"]) for r in rows}
+    via_arrow = signed.select("doc_id", "sig").toArrow().to_pydict()
+    assert dict(zip(via_arrow["doc_id"], via_arrow["sig"])) == via_rows
     # non-degeneracy spot check: channels disagree across docs
-    n_distinct = both.select(
-        F.countDistinct(F.element_at("sig_arrow", 1)).alias("d")
-    ).collect()[0]["d"]
-    assert n_distinct > 100
-
-
-def test_default_impl_is_expr_and_switch_works(spark):
-    """The expression fold is the measured-cheaper default (see
-    _sign_udf's A/B numbers); the arrow switch must stay value-equal."""
-    from docling_jobkit_spark.operators import dedup
-
-    assert dedup.SIGNING_IMPL == "expr"
-    df = spark.createDataFrame([(1, "alpha beta gamma delta")], "id long, text string")
-    row = df.select(
-        minhash_signature_from_shingles(word_shingles("text"), impl="arrow").alias("a"),
-        minhash_signature_from_shingles(word_shingles("text")).alias("e"),
-    ).collect()[0]
-    assert list(row["a"]) == list(row["e"])
-    assert len(row["a"]) == N_HASHES
+    assert len({r["sig"][0] for r in rows}) > 100
 
 
 @pytest.mark.parametrize("n_words,expect_init", [(0, True), (2, True), (3, False)])

@@ -621,6 +621,30 @@ def test_cosine_array_vector_column_with_backtick(spark):
     assert [r["cos"] for r in got.collect()] == [[1.0, 0.0], [0.0, 1.0]]
 
 
+@pytest.mark.parametrize("vec_col", ["e.v", "e`v"])
+def test_vector_column_needing_quotes(spark, vec_col):
+    """ivf_assign and with_ann_signatures take a vector column whose name
+    must be quoted (a dot would parse as a struct path, a backtick would
+    end the identifier) and give the same cells and signatures as under
+    a plain name."""
+    from docling_jobkit_spark.operators.similarity import (
+        ivf_assign,
+        with_ann_signatures,
+    )
+
+    rows = [(0, [1.0, 0.0, 0.5]), (1, [0.0, 2.0, -1.0]), (2, [-1.0, 1.0, 3.0])]
+    plain = spark.createDataFrame(rows, "vec_id long, v array<float>")
+    odd = plain.withColumnRenamed("v", vec_col)
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+
+    def result(df, col):
+        out = with_ann_signatures(ivf_assign(df, cents, col), 3, 4, 2, col)
+        assert out.columns == ["vec_id", col, "ivf_cell", "sig_0", "sig_1"]
+        return out.withColumnRenamed(col, "v").orderBy("vec_id").collect()
+
+    assert result(odd, vec_col) == result(plain, "v")
+
+
 def test_multi_table_lsh_recovers_recall_without_quadratic_join(spark):
     """OR-of-tables blocking: multi-table candidates are a superset of
     single-table candidates and a subset of the exact all-pairs result,

@@ -388,3 +388,133 @@ def test_pdf_slice_routing_estimate_is_jvm_side(spark, pages_path):
     pages = spark.read.parquet(pages_path)
     plan = _plan(pages.select(pdf_page_count_col("html").alias("n")))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def _barrier_frames(spark):
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda".split()
+
+    def text(i):
+        base = " ".join(words[(i + j) % 11] for j in range(9))
+        return f"{base} doc{i % 6}\nsecond line of page {i % 4} has words.\n{base}"
+
+    docs = spark.createDataFrame(
+        [(i, text(i), "en") for i in range(20)], "doc_id long, text string, lang string"
+    )
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + d * 3) % 11 - 5) for d in range(8)], i % 2) for i in range(20)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    return docs, emb
+
+
+_CENTS = [[1.0] * 8, [d - 3.5 for d in range(8)], [(-1.0) ** d for d in range(8)]]
+
+
+def _barrier_operator(name, docs, emb):
+    from docling_jobkit_spark.operators.c4_filters import c4_line_filter
+    from docling_jobkit_spark.operators.decontam import contamination_fuzzy_pairs
+    from docling_jobkit_spark.operators.dedup import (
+        jaccard_pairs,
+        minhash_near_duplicates,
+    )
+    from docling_jobkit_spark.operators.minhash_index import (
+        banded_signatures,
+        near_dup_pairs_against_index,
+    )
+    from docling_jobkit_spark.operators.semdedup import (
+        semantic_duplicates,
+        with_semdedup_rank,
+    )
+    from docling_jobkit_spark.operators.similarity import (
+        embedding_near_duplicates,
+        ivf_assign,
+    )
+    from docling_jobkit_spark.operators.substring_dedup import exact_substring_dedup
+    from docling_jobkit_spark.operators.textstats import gopher_filter, gopher_stamp
+
+    return {
+        "jaccard_pairs": lambda: jaccard_pairs(docs, prefix_filter=True),
+        "minhash_near_duplicates": lambda: minhash_near_duplicates(docs),
+        "contamination_fuzzy_pairs": lambda: contamination_fuzzy_pairs(
+            docs, docs.where("doc_id < 5")
+        ),
+        "near_dup_pairs_against_index": lambda: near_dup_pairs_against_index(
+            docs, banded_signatures(docs)
+        ),
+        "with_semdedup_rank": lambda: with_semdedup_rank(emb, _CENTS),
+        "semantic_duplicates": lambda: semantic_duplicates(emb, _CENTS),
+        "embedding_near_duplicates": lambda: embedding_near_duplicates(emb, 0.9),
+        "ivf_assign": lambda: ivf_assign(emb, _CENTS),
+        "gopher_filter": lambda: gopher_filter(docs),
+        "gopher_stamp": lambda: gopher_stamp(docs),
+        "c4_line_filter": lambda: c4_line_filter(docs),
+        "exact_substring_dedup": lambda: exact_substring_dedup(docs),
+    }[name]()
+
+
+# (operator, the fold its single_eval guards, Generate explode(array(...))
+# count, fold count) over the optimized plans of the result and of every
+# frame it localCheckpoints — pinned from the plans before single_eval
+# existed. A Spark upgrade that drops the barrier, or a rewrite that
+# re-inlines the fold, changes one of the counts.
+_BARRIER_PLANS = [
+    ("jaccard_pairs", "array_intersect(", 1, 2),
+    ("minhash_near_duplicates", "zip_with(", 3, 2),
+    ("contamination_fuzzy_pairs", "zip_with(", 3, 3),
+    ("near_dup_pairs_against_index", "zip_with(", 3, 3),
+    ("with_semdedup_rank", "aggregate(", 1, 2),
+    ("semantic_duplicates", "aggregate(", 2, 5),
+    ("embedding_near_duplicates", "aggregate(", 1, 3),
+    ("ivf_assign", "aggregate(", 1, 2),
+    ("gopher_filter", "aggregate(", 1, 1),
+    ("gopher_stamp", "aggregate(", 1, 1),
+    ("c4_line_filter", "filter(", 1, 1),
+    ("exact_substring_dedup", "split(", 1, 1),
+]
+
+
+@pytest.mark.parametrize(
+    "name,fold,n_generate,n_fold", _BARRIER_PLANS, ids=[p[0] for p in _BARRIER_PLANS]
+)
+def test_single_eval_barrier_in_plan(spark, monkeypatch, name, fold, n_generate, n_fold):
+    docs, emb = _barrier_frames(spark)
+    plans = []
+    checkpoint = type(docs).localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", recording_checkpoint)
+    out = _barrier_operator(name, docs, emb)
+    plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+    text = "\n".join(plans)
+    assert text.count("Generate explode(array(") == n_generate, text[:3000]
+    assert text.count(fold) == n_fold, text[:3000]
+
+
+def test_barrier_and_stamps_have_one_home():
+    """The Generate barrier is spelled only in ``single_eval`` (profiling's
+    multi-row report explode is a real explode), and field metadata is
+    read or written only in ``functions/stamp.py`` (zonemap's parquet
+    footer ``pf.metadata`` is file metadata, not a field stamp)."""
+    import inspect
+    import pathlib
+
+    import docling_jobkit_spark
+    from docling_jobkit_spark.functions.scalar import single_eval
+
+    root = pathlib.Path(docling_jobkit_spark.__file__).parent
+    for path in root.rglob("*.py"):
+        name = path.relative_to(root).as_posix()
+        src = path.read_text()
+        if name == "functions/scalar.py":
+            src = src.replace(inspect.getsource(single_eval), "")
+        if name != "operators/profiling.py":
+            assert "F.explode(F.array(" not in src, f"{name}: use single_eval"
+        if name == "operators/zonemap.py":
+            src = src.replace("pf.metadata", "")
+        if name != "functions/stamp.py":
+            assert not re.search(r"\.metadata\b|metadata=", src), (
+                f"{name}: stamp through functions/stamp.py"
+            )
