@@ -17,6 +17,9 @@ table. Design points, each mapped to reference behavior:
 - **Failures are rows** — per-document try/except inside ``extract()``
   yields an ``error`` struct column; a malformed page can never fail the
   Spark task (``serve_deployment.py:1590-1627`` degrade precedent).
+- **One map for every payload format** — HTML, PDF and mixed corpora
+  run the same batch loop; each row carries its PDF/HTML decision as a
+  JVM column (``payload_is_pdf``) and ``extract_one`` dispatches on it.
 - **Per-partition metrics rows** — emitted via a companion operator in
   metrics.py (the reference's ``BatchResult``, ``cli/multiproc.py:54-63``).
 """
@@ -24,15 +27,12 @@ table. Design points, each mapped to reference behavior:
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-if TYPE_CHECKING:  # pragma: no cover
-    pass
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -97,8 +97,6 @@ def with_document_identity(results: DataFrame) -> DataFrame:
 
     A pure codegen projection over the FINAL rows, so the sliced and
     single-shot paths stamp byte-identical values by construction."""
-    from pyspark.sql import functions as F
-
     from docling_jobkit_spark.functions.scalar import content_hash
 
     failed = F.col("status") == "FAILURE"
@@ -118,6 +116,45 @@ def with_document_identity(results: DataFrame) -> DataFrame:
     )
 
 
+def pdf_sniff_col(payload) -> Column:
+    """JVM twin of ``extractor.pdf.is_pdf``, the one PDF/HTML sniff: the
+    ``%PDF-`` magic within the first 1024 BYTES. ``decode(...,
+    'ISO-8859-1')`` maps each byte to one character, so ``instr`` sees
+    exactly the bytes ``is_pdf`` sees — a ``cast(binary as string)`` wrap
+    would count UTF-8 characters, and a stray lead byte would swallow the
+    magic. NULL payloads are not PDFs. Pure codegen, no Python node."""
+    c = F.col(payload) if isinstance(payload, str) else payload
+    head = F.decode(F.substring(c, 1, 1024), "ISO-8859-1")
+    return F.coalesce(F.instr(head, "%PDF-") > 0, F.lit(False))
+
+
+def payload_is_pdf(payload_format: str, payload_col: str) -> Column:
+    """The per-row PDF/HTML decision every extraction path dispatches on,
+    made once as a JVM column and carried with the row: constant for
+    "html" and "pdf", the content sniff for "auto" (mixed crawl payloads;
+    the reference resolves a backend per document, ``convert/manager.py:
+    1554-1565``). The one check of ``payload_format``: the batch pipeline
+    and streaming both reach it through the extraction operators."""
+    if payload_format not in ("html", "pdf", "auto"):
+        raise ValueError(f"payload_format must be html|pdf|auto, got {payload_format!r}")
+    if payload_format == "auto":
+        return pdf_sniff_col(payload_col)
+    return F.lit(payload_format == "pdf")
+
+
+def extract_one(payload, url, as_pdf: bool, max_bytes, profile):
+    """The one per-document dispatch: the from-scratch PDF layout
+    extractor (extractor/pdf.py — the analog of the reference's PDF
+    pipeline selection, ``convert/manager.py:1672-1723``) or the HTML
+    extractor. Both never raise; failures are ``ExtractResult`` rows."""
+    from docling_jobkit_spark.extractor.extract import extract
+    from docling_jobkit_spark.extractor.pdf import extract_pdf
+
+    if as_pdf:
+        return extract_pdf(payload, url, max_bytes=max_bytes)
+    return extract(payload, url, max_bytes=max_bytes, profile=profile)
+
+
 def _extract_batches(
     batches: Iterator[pd.DataFrame], max_bytes: int | None, profile: str
 ) -> Iterator[pd.DataFrame]:
@@ -125,21 +162,17 @@ def _extract_batches(
     # pickled to executors (standard pandas-UDF pattern); the profile
     # travels as its NAME and resolves once per worker — the analog of
     # the reference's options-hash converter cache (manager.py:369-479)
-    from docling_jobkit_spark.extractor.extract import PROFILES, extract
+    from docling_jobkit_spark.extractor.extract import PROFILES
 
     prof = PROFILES[profile]
 
-    for pdf in batches:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        out: dict[str, list] = {
-            "url": [], "status": [], "extracted_text": [], "spans": [],
-            "error": [], "n_pages": [], "n_bytes": [], "n_spans": [],
-            "timings": [],
-        }
-        for url, html in zip(urls, htmls):
-            payload = bytes(html) if html is not None else None
-            res = extract(payload, url, max_bytes=max_bytes, profile=prof)
+    for batch in batches:
+        out: dict[str, list] = {f.name: [] for f in RESULT_SCHEMA.fields}
+        for url, raw, as_pdf in zip(
+            batch["url"].tolist(), batch["html"].tolist(), batch["_as_pdf"].tolist()
+        ):
+            payload = bytes(raw) if raw is not None else None
+            res = extract_one(payload, url, as_pdf, max_bytes, prof)
             out["url"].append(url)
             out["status"].append(res.status)
             out["extracted_text"].append(res.text)
@@ -154,95 +187,36 @@ def _extract_batches(
         yield pd.DataFrame(out)
 
 
-def extract_documents(
-    pages: DataFrame,
-    max_bytes: int | None = None,
-    profile: str = "default",
-) -> DataFrame:
-    """pages(url, html, ...) → results(RESULT_SCHEMA).
-
-    Column pruning: only (url, html) cross the Arrow boundary — Catalyst
-    prunes the parquet scan down to those two columns (verify with
-    ``.explain``: ReadSchema contains url,html only). Output carries the
-    document-identity columns (FULL_RESULT_SCHEMA).
-    """
-    pruned = pages.select("url", "html")
-    mapped = pruned.mapInPandas(
+def extract_decided(docs: DataFrame, max_bytes: int | None, profile: str) -> DataFrame:
+    """(url, html, _as_pdf) → results(FULL_RESULT_SCHEMA): the one batch
+    loop, for rows whose format decision (``payload_is_pdf``) is already
+    a column — the slice router's direct branch reuses it as is."""
+    mapped = docs.select("url", "html", "_as_pdf").mapInPandas(
         lambda it: _extract_batches(it, max_bytes, profile), schema=RESULT_SCHEMA
     )
     return with_document_identity(mapped)
 
 
-def _extract_pdf_batches(
-    batches: Iterator[pd.DataFrame],
-    max_bytes: int | None,
-    payload_col: str,
-    auto: bool,
-    profile: str,
-) -> Iterator[pd.DataFrame]:
-    from docling_jobkit_spark.extractor.extract import PROFILES, extract
-    from docling_jobkit_spark.extractor.pdf import extract_pdf, is_pdf
-
-    prof = PROFILES[profile]
-    for batch in batches:
-        urls = batch["url"].tolist()
-        payloads = batch[payload_col].tolist()
-        out: dict[str, list] = {
-            "url": [], "status": [], "extracted_text": [], "spans": [],
-            "error": [], "n_pages": [], "n_bytes": [], "n_spans": [],
-            "timings": [],
-        }
-        for url, raw in zip(urls, payloads):
-            payload = bytes(raw) if raw is not None else None
-            if auto and not (payload is not None and is_pdf(payload)):
-                res = extract(payload, url, max_bytes=max_bytes, profile=prof)
-            else:
-                res = extract_pdf(payload, url, max_bytes=max_bytes)
-            out["url"].append(url)
-            out["status"].append(res.status)
-            out["extracted_text"].append(res.text)
-            out["spans"].append(res.spans)
-            out["error"].append(res.error.as_dict() if res.error else None)
-            out["n_pages"].append(res.n_pages)
-            out["n_bytes"].append(len(payload) if payload is not None else 0)
-            out["n_spans"].append(len(res.spans))
-            out["timings"].append(res.timings)
-        yield pd.DataFrame(out)
-
-
-def extract_pdf_documents(
+def extract_documents(
     pages: DataFrame,
     max_bytes: int | None = None,
-    payload_col: str = "pdf",
-) -> DataFrame:
-    """pages(url, <payload_col>) → results(FULL_RESULT_SCHEMA) through the
-    from-scratch PDF layout extractor (extractor/pdf.py — the analog of
-    the reference's PDF pipeline selection, ``convert/manager.py:
-    1672-1723``). Same operator shape as ``extract_documents``: Arrow
-    batches, column-pruned scan, failures as rows."""
-    pruned = pages.select("url", payload_col)
-    mapped = pruned.mapInPandas(
-        lambda it: _extract_pdf_batches(it, max_bytes, payload_col, False, "default"),
-        schema=RESULT_SCHEMA,
-    )
-    return with_document_identity(mapped)
-
-
-def extract_documents_auto(
-    pages: DataFrame,
-    max_bytes: int | None = None,
-    payload_col: str = "html",
     profile: str = "default",
+    payload_format: str = "html",
+    payload_col: str = "html",
 ) -> DataFrame:
-    """Mixed-corpus flagship map: per-row content sniff routes each
-    payload to the PDF extractor (``%PDF-`` magic within the first 1 KB)
-    or the HTML extractor — the reference's per-document backend
-    selection (``convert/manager.py:1554-1565``) re-expressed as one
-    format-dispatching ``mapInPandas`` so a crawl table whose binary
-    column mixes formats converts in a single pass."""
-    pruned = pages.select("url", payload_col)
-    mapped = pruned.mapInPandas(
-        lambda it: _extract_pdf_batches(it, max_bytes, payload_col, True, profile),
-        schema=RESULT_SCHEMA,
+    """pages(url, <payload_col>, ...) → results(FULL_RESULT_SCHEMA).
+
+    ``payload_format`` picks the extractor per row: "html", "pdf" (the
+    whole column is PDFs) or "auto" (``%PDF-`` sniff, so a crawl table
+    whose binary column mixes formats converts in a single pass).
+
+    Column pruning: Catalyst prunes the parquet scan down to (url,
+    payload) (verify with ``.explain``: ReadSchema contains those two
+    only); the Arrow batches carry them plus the boolean decision.
+    """
+    docs = pages.select(
+        "url",
+        F.col(payload_col).alias("html"),
+        payload_is_pdf(payload_format, payload_col).alias("_as_pdf"),
     )
-    return with_document_identity(mapped)
+    return extract_decided(docs, max_bytes, profile)

@@ -24,7 +24,14 @@ Spark-first re-expression:
   payloads; grouping by url would interleave two documents' slices);
 - byte-exactness is by construction: ``extract()`` DEFINES full-document
   text as the page-wise extraction joined by PAGE_JOIN, and a slice's
-  payload is exactly its pages re-joined by the marker (see extract.py).
+  payload is exactly its pages re-joined by the marker (see extract.py);
+  a PDF slice is a self-contained sub-PDF carrying exactly its pages'
+  object closure, and PDF layout analysis is per-page
+  (``extractor/pdf.py::split_pdf``);
+- ONE path for every payload format: the PDF/HTML decision is made once
+  per document as a column (``extract_op.payload_is_pdf``) and rides
+  into the slice rows, so the splitter and the slice extractor each
+  dispatch per row instead of forking the plan per format.
 
 Only oversized documents are routed here (``extract_documents_sliced``),
 so the slice shuffle touches a small fraction of rows — and only
@@ -45,7 +52,10 @@ from docling_jobkit_spark.operators.extract_op import (
     ERROR_TYPE,
     RESULT_SCHEMA,
     SPAN_TYPE,
-    extract_documents,
+    extract_decided,
+    extract_one,
+    payload_is_pdf,
+    pdf_sniff_col,
     with_document_identity,
 )
 
@@ -57,9 +67,9 @@ SLICE_SCHEMA = T.StructType(
         T.StructField("url", T.StringType()),
         T.StructField("slice_index", T.IntegerType()),
         T.StructField("slice_html", T.BinaryType()),
+        T.StructField("_as_pdf", T.BooleanType()),
         T.StructField("clean", T.BooleanType()),
         T.StructField("page_lo", T.IntegerType()),
-        T.StructField("page_hi", T.IntegerType()),
         T.StructField("n_pages", T.IntegerType()),
         T.StructField("n_bytes", T.LongType()),
     ]
@@ -105,45 +115,100 @@ def page_count_col(html_col="html") -> Column:
     )
 
 
+def _occurrences(s: Column, needle: str) -> Column:
+    """Non-overlapping substring count as a length difference (the
+    page_count_col technique: replace-and-measure, no per-page substring
+    materialization, pure codegen)."""
+    return (
+        F.length(s) - F.length(F.replace(s, F.lit(needle), F.lit("")))
+    ) / F.lit(len(needle))
+
+
+def pdf_page_count_col(payload_col="pdf") -> Column:
+    """JVM-side PDF page-count ESTIMATE for slice routing: occurrences of
+    the page-leaf marker ``/Type /Page`` (both spacings) minus the
+    ``/Type /Pages`` tree nodes the shorter needle also matches, over the
+    unchecked binary→string wrap. NULL payloads and payloads failing the
+    ``%PDF-`` sniff (``pdf_sniff_col``, the twin of ``is_pdf``) estimate
+    1: single-shot admission handles them, and slicing one would let the
+    tolerant object scan 'repair' a document the single-shot path
+    rejects. Counting bytes this way can miss pages (object-stream PDFs)
+    or over-count (the marker inside compressed data) — both mis-routes
+    are output-identical, see ``extract_documents_sliced``; exact counting
+    stays in the Python ``pdf_page_count`` used by the splitter itself."""
+    c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
+    s = c.cast("string")
+    est = (
+        _occurrences(s, "/Type /Page")
+        - _occurrences(s, "/Type /Pages")
+        + _occurrences(s, "/Type/Page")
+        - _occurrences(s, "/Type/Pages")
+    )
+    return (
+        F.when(~pdf_sniff_col(c), F.lit(1))
+        .otherwise(F.greatest(est, F.lit(1)))
+        .cast("int")
+    )
+
+
 def _split_batches(
     batches: Iterator[pd.DataFrame], pages_per_slice: int
 ) -> Iterator[pd.DataFrame]:
     from docling_jobkit_spark.extractor.extract import PAGE_BREAK
+    from docling_jobkit_spark.extractor.pdf import pdf_page_count, split_pdf
 
     k = pages_per_slice
-    for pdf in batches:
+    for batch in batches:
         out: dict[str, list] = {f.name: [] for f in SLICE_SCHEMA.fields}
-        for key, url, html in zip(pdf["_doc_key"], pdf["url"], pdf["html"]):
-            payload = bytes(html)
-            try:
-                payload.decode("utf-8", errors="strict")
-                clean = True
-            except UnicodeDecodeError:
-                clean = False
-            pages = payload.split(PAGE_BREAK)
-            n = len(pages)
-            n_slices = (n + k - 1) // k
-            for si in range(n_slices):
-                lo = si * k
-                hi = min(lo + k, n)
+        for key, url, raw, as_pdf in zip(
+            batch["_doc_key"], batch["url"], batch["html"], batch["_as_pdf"]
+        ):
+            payload = bytes(raw)
+            if as_pdf:
+                clean = True  # PDFs have no decode-partial state
+                try:
+                    # self-contained sub-PDFs + the EXACT page total
+                    parts, n = split_pdf(payload, k)
+                except Exception:
+                    # split failed (unparseable OR unserializable): degrade
+                    # to one full-payload slice — its extraction row IS the
+                    # single-shot row; count pages exactly so a slice that
+                    # still extracts reports the single-shot n_pages
+                    parts, n = [payload], pdf_page_count(payload)
+            else:
+                try:
+                    payload.decode("utf-8", errors="strict")
+                    clean = True
+                except UnicodeDecodeError:
+                    clean = False
+                pages = payload.split(PAGE_BREAK)
+                n = len(pages)
+                parts = [PAGE_BREAK.join(pages[lo : lo + k]) for lo in range(0, n, k)]
+            for si, part in enumerate(parts):
                 out["_doc_key"].append(int(key))
                 out["url"].append(url)
                 out["slice_index"].append(si + 1)
-                out["slice_html"].append(PAGE_BREAK.join(pages[lo:hi]))
+                out["slice_html"].append(part)
+                out["_as_pdf"].append(bool(as_pdf))
                 out["clean"].append(clean)
-                out["page_lo"].append(lo + 1)
-                out["page_hi"].append(hi)
-                out["n_pages"].append(n)
+                out["page_lo"].append(si * k + 1)
+                out["n_pages"].append(int(n))
                 out["n_bytes"].append(len(payload))
         yield pd.DataFrame(out)
 
 
 def split_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
-    """(_doc_key, url, html) → one row per slice carrying ONLY its pages'
-    bytes. One Arrow round-trip of the payload total — per-slice rows sum
-    to ~the document size (plus dropped markers), so the downstream
-    shuffle and extraction never move whole-document bytes again."""
-    cols = big_docs.select("_doc_key", "url", "html")
+    """(_doc_key, url, html[, _as_pdf]) → one row per slice carrying ONLY
+    its pages' bytes: HTML splits on the page marker, PDFs into
+    self-contained sub-PDFs (``extractor/pdf.py::split_pdf``; reference:
+    single-PDF slice plan ``serve_deployment.py:437-464``). Rows without
+    an ``_as_pdf`` decision are HTML. One Arrow round-trip of the payload
+    total — per-slice rows sum to ~the document size, so the downstream
+    shuffle and extraction never move whole-document bytes again. The
+    carried ``n_pages`` is the splitter's exact total; the JVM routing
+    estimate never reaches output rows."""
+    as_pdf = F.col("_as_pdf") if "_as_pdf" in big_docs.columns else F.lit(False)
+    cols = big_docs.select("_doc_key", "url", "html", as_pdf.alias("_as_pdf"))
     return cols.mapInPandas(
         lambda it: _split_batches(it, pages_per_slice), schema=SLICE_SCHEMA
     )
@@ -152,48 +217,67 @@ def split_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
 def _extract_slice_batches(
     batches: Iterator[pd.DataFrame], profile: str = "default"
 ) -> Iterator[pd.DataFrame]:
+    import re
+    import time
+
     from docling_jobkit_spark.extractor.errors import classify_failure
-    from docling_jobkit_spark.extractor.extract import PROFILES, extract_page_range
+    from docling_jobkit_spark.extractor.extract import PROFILES, Span, extract_page_range
 
     prof = PROFILES[profile]
+    page_re = re.compile(r"^p(\d+)/")
 
-    for pdf in batches:
+    for batch in batches:
         out: dict[str, list] = {f.name: [] for f in SLICE_RESULT_SCHEMA.fields}
-        for key, url, sidx, payload, clean, n_pages, n_bytes in zip(
-            pdf["_doc_key"], pdf["url"], pdf["slice_index"], pdf["slice_html"],
-            pdf["clean"], pdf["n_pages"], pdf["n_bytes"],
+        for key, url, sidx, raw, as_pdf, clean, page_lo, n_pages, n_bytes in zip(
+            batch["_doc_key"], batch["url"], batch["slice_index"], batch["slice_html"],
+            batch["_as_pdf"], batch["clean"], batch["page_lo"], batch["n_pages"],
+            batch["n_bytes"],
         ):
-            payload = bytes(payload)
-            try:
-                import time as _time
-
-                t0 = _time.perf_counter()
-                text, spans, _ = extract_page_range(payload, 1, 1 << 30, prof)
-                out["timings"].append({"extract": _time.perf_counter() - t0})
-                out["status"].append("SUCCESS" if clean else "PARTIAL_SUCCESS")
-                out["extracted_text"].append(text)
-                out["spans"].append(spans)  # Span NamedTuples → Arrow structs
-                out["error"].append(None)
-            except Exception as exc:
-                out["status"].append("FAILURE")
-                out["extracted_text"].append("")
-                out["spans"].append([])
-                out["error"].append(classify_failure(exc).as_dict())
-                out["timings"].append({})
+            payload = bytes(raw)
+            if as_pdf:
+                # a sub-PDF is a whole document; its pages renumber from
+                # 1, so shift the span-path page prefix back to document
+                # numbering (sliced == single-shot)
+                res = extract_one(payload, url, True, None, prof)
+                status, text, error, timings = res.status, res.text, res.error, res.timings
+                shift = int(page_lo) - 1
+                spans = [
+                    Span(
+                        s.start, s.end, s.kind,
+                        page_re.sub(lambda m: f"p{int(m.group(1)) + shift}/", s.path),
+                    )
+                    for s in res.spans
+                ] if shift else res.spans
+            else:
+                # status comes from the whole document's decode (``clean``)
+                t0 = time.perf_counter()
+                try:
+                    text, spans, _ = extract_page_range(payload, 1, 1 << 30, prof)
+                    status = "SUCCESS" if clean else "PARTIAL_SUCCESS"
+                    error, timings = None, {"extract": time.perf_counter() - t0}
+                except Exception as exc:
+                    status, text, spans, timings = "FAILURE", "", [], {}
+                    error = classify_failure(exc)
             out["_doc_key"].append(int(key))
             out["url"].append(url)
             out["slice_index"].append(int(sidx))
+            out["status"].append(status)
+            out["extracted_text"].append(text)
+            out["spans"].append(spans)  # Span NamedTuples → Arrow structs
+            out["error"].append(error.as_dict() if error else None)
             out["n_pages"].append(int(n_pages))
             out["n_bytes"].append(int(n_bytes))
+            out["timings"].append(timings)
         yield pd.DataFrame(out)
 
 
 def extract_slices(slices: DataFrame, profile: str = "default") -> DataFrame:
     """Per-slice extraction. Each slice row is self-contained (its own
-    pages' bytes + the carried doc-level clean flag / totals), so this map
-    runs wherever the repartition put the row."""
+    pages' bytes + the carried format decision, doc-level clean flag and
+    totals), so this map runs wherever the repartition put the row."""
     cols = slices.select(
-        "_doc_key", "url", "slice_index", "slice_html", "clean", "n_pages", "n_bytes"
+        "_doc_key", "url", "slice_index", "slice_html", "_as_pdf", "clean",
+        "page_lo", "n_pages", "n_bytes",
     )
     return cols.mapInPandas(
         lambda it: _extract_slice_batches(it, profile), schema=SLICE_RESULT_SCHEMA
@@ -297,17 +381,29 @@ def extract_documents_sliced(
     max_bytes: int | None = None,
     profile: str = "default",
     slice_partitions: int | None = None,
+    payload_format: str = "html",
+    payload_col: str = "html",
 ) -> DataFrame:
     """Route: multi-page docs above the slice threshold go through
     split → repartition → slice-extract → reassemble; everything else
     (including over-``max_bytes`` docs, which must receive the POLICY
     FAILURE row the single-shot oracle produces) takes the direct map.
     Output schema identical either way; values byte-identical by
-    construction."""
-    size_ok = (
-        F.lit(True) if max_bytes is None else (F.length("html") <= F.lit(max_bytes))
-    )
-    counted = pages.withColumn("n_pages", page_count_col("html"))
+    construction.
+
+    ``payload_format`` is decided once per row (``payload_is_pdf``) and
+    the decision rides into the slice rows, so every format plans the
+    same three maps and one reassembly. PDF page counts for ROUTING are
+    a pure-JVM structural estimate (``pdf_page_count_col``), not a
+    Python parse: at corpus scale an admission-path pandas UDF would pay
+    a full object scan per document just to pick a branch. The estimate
+    may be wrong either way because both mis-routes are output-identical:
+    an undercount sends a multi-page doc to the direct map (the oracle
+    itself); an overcount slices a document into one slice or fails the
+    split, which degrades to a single full-payload slice whose extraction
+    row reassembles to the single-shot row (FAILURE rows pin n_pages=1
+    on both paths)."""
+    as_pdf = payload_is_pdf(payload_format, payload_col)
     if "_doc_key" in pages.columns:
         # adopting a caller-provided key: it MUST be the long id this
         # module's schemas expect, and unique per row (the pipeline's
@@ -315,9 +411,7 @@ def extract_documents_sliced(
         # makes accidental collision with user data unlikely; a wrong
         # TYPE would otherwise surface as a task failure inside the
         # splitter, violating the failures-are-rows invariant.
-        dtype = dict(
-            (f.name, f.dataType) for f in pages.schema.fields
-        )["_doc_key"]
+        dtype = pages.schema["_doc_key"].dataType
         if not isinstance(dtype, T.LongType):
             raise ValueError(
                 f"_doc_key column must be LongType (unique per row), got {dtype}"
@@ -331,158 +425,30 @@ def extract_documents_sliced(
         # recomputation, which could remap keys under task retry).
         # Callers that shuffle first must assign _doc_key themselves
         # upstream of the shuffle (ExtractionPipeline does exactly this).
-        counted = counted.withColumn("_doc_key", F.monotonically_increasing_id())
-    route_sliced = (
-        F.col("html").isNotNull()
-        & (F.col("n_pages") >= F.lit(slice_min_pages))
-        & size_ok
+        pages = pages.withColumn("_doc_key", F.monotonically_increasing_id())
+    docs = pages.select(
+        "_doc_key", "url", F.col(payload_col).alias("html"), as_pdf.alias("_as_pdf")
     )
-    big = counted.filter(route_sliced)
-    small = counted.filter(~route_sliced).drop("n_pages", "_doc_key")
-
-    direct = extract_documents(small, max_bytes=max_bytes, profile=profile)
+    n_pages = F.when(F.col("_as_pdf"), pdf_page_count_col("html")).otherwise(
+        page_count_col("html")
+    )
+    size_ok = (
+        F.lit(True) if max_bytes is None else (F.length("html") <= F.lit(max_bytes))
+    )
+    route_sliced = (
+        F.col("html").isNotNull() & (n_pages >= F.lit(slice_min_pages)) & size_ok
+    )
+    direct = extract_decided(docs.filter(~route_sliced), max_bytes, profile)
     # spread one document's slices across tasks — hash of (_doc_key,
     # slice_index) is uniform, and only slice-sized bytes move
-    slices = spread_slices(split_slices(big, pages_per_slice), slice_partitions)
+    slices = spread_slices(
+        split_slices(docs.filter(route_sliced), pages_per_slice), slice_partitions
+    )
     # identity stamped over the FINAL reassembled rows — same projection
-    # as the direct branch (inside extract_documents), identical values
-    # by construction
+    # as the direct branch (inside extract_decided), identical values by
+    # construction
     sliced = with_document_identity(reassemble_slices(extract_slices(slices, profile)))
     return direct.unionByName(sliced)
-
-
-# ---------------------------------------------------------------------------
-# PDF slice fan-out — the same F1/F2 machinery over real page splits
-# (extractor/pdf.py::split_pdf builds self-contained sub-PDFs, so slice
-# rows ship slice-sized bytes exactly like the HTML path; reference:
-# single-PDF slice plan ``serve_deployment.py:437-464``)
-# ---------------------------------------------------------------------------
-def _occurrences(s: Column, needle: str) -> Column:
-    """Non-overlapping substring count as a length difference (the
-    page_count_col technique: replace-and-measure, no per-page substring
-    materialization, pure codegen)."""
-    return (
-        F.length(s) - F.length(F.replace(s, F.lit(needle), F.lit("")))
-    ) / F.lit(len(needle))
-
-
-def pdf_page_count_col(payload_col="pdf") -> Column:
-    """JVM-side PDF page-count ESTIMATE for slice routing: occurrences of
-    the page-leaf marker ``/Type /Page`` (both spacings) minus the
-    ``/Type /Pages`` tree nodes the shorter needle also matches, over the
-    unchecked binary→string wrap. Payloads missing the ``%PDF-`` magic
-    estimate 1 (single-shot admission handles them). Counting bytes this
-    way can miss pages (object-stream PDFs) or over-count (the marker
-    inside compressed data) — both mis-routes are output-identical, see
-    ``extract_pdf_documents_sliced``; exact counting stays in the Python
-    ``pdf_page_count`` used by the splitter itself."""
-    c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
-    s = c.cast("string")
-    est = (
-        _occurrences(s, "/Type /Page")
-        - _occurrences(s, "/Type /Pages")
-        + _occurrences(s, "/Type/Page")
-        - _occurrences(s, "/Type/Pages")
-    )
-    looks_pdf = F.instr(F.substring(s, 1, 1100), "%PDF-") > 0
-    return (
-        F.when(c.isNull() | ~looks_pdf, F.lit(1))
-        .otherwise(F.greatest(est, F.lit(1)))
-        .cast("int")
-    )
-
-
-def _split_pdf_batches(
-    batches: Iterator[pd.DataFrame], pages_per_slice: int
-) -> Iterator[pd.DataFrame]:
-    from docling_jobkit_spark.extractor.pdf import pdf_page_count, split_pdf
-
-    for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in SLICE_SCHEMA.fields}
-        for key, url, payload in zip(pdf["_doc_key"], pdf["url"], pdf["pdf"]):
-            payload = bytes(payload)
-            try:
-                parts, doc_pages = split_pdf(payload, pages_per_slice)
-            except Exception:
-                # split failed (unparseable OR unserializable): degrade to
-                # one full-payload slice — its extraction row IS the
-                # single-shot row; count pages exactly so a slice that
-                # still extracts reports the single-shot n_pages
-                parts, doc_pages = [payload], pdf_page_count(payload)
-            for si, part in enumerate(parts):
-                out["_doc_key"].append(int(key))
-                out["url"].append(url)
-                out["slice_index"].append(si + 1)
-                out["slice_html"].append(part)  # schema-shared payload column
-                out["clean"].append(True)  # PDFs have no decode-partial state
-                out["page_lo"].append(si * pages_per_slice + 1)
-                out["page_hi"].append(
-                    min((si + 1) * pages_per_slice, int(doc_pages))
-                )
-                out["n_pages"].append(int(doc_pages))
-                out["n_bytes"].append(len(payload))
-        yield pd.DataFrame(out)
-
-
-def split_pdf_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
-    """(_doc_key, url, pdf) → one SLICE_SCHEMA row per sub-PDF; the
-    carried ``n_pages`` is the EXACT total from the split's own parse
-    (the JVM routing estimate never reaches output rows). The payload
-    column keeps the schema's ``slice_html`` name so the spread /
-    reassembly stages are shared verbatim with the HTML path."""
-    cols = big_docs.select("_doc_key", "url", F.col("pdf"))
-    return cols.mapInPandas(
-        lambda it: _split_pdf_batches(it, pages_per_slice), schema=SLICE_SCHEMA
-    )
-
-
-def _extract_pdf_slice_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import re
-
-    from docling_jobkit_spark.extractor.extract import Span
-    from docling_jobkit_spark.extractor.pdf import extract_pdf
-
-    page_re = re.compile(r"^p(\d+)/")
-
-    for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in SLICE_RESULT_SCHEMA.fields}
-        for key, url, sidx, payload, page_lo, n_pages, n_bytes in zip(
-            pdf["_doc_key"], pdf["url"], pdf["slice_index"], pdf["slice_html"],
-            pdf["page_lo"], pdf["n_pages"], pdf["n_bytes"],
-        ):
-            res = extract_pdf(bytes(payload), url)
-            spans = res.spans
-            if int(page_lo) > 1:
-                # sub-PDF pages renumber from 1; shift the span-path page
-                # prefix back to document numbering so sliced == single-shot
-                shift = int(page_lo) - 1
-                spans = [
-                    Span(
-                        s.start, s.end, s.kind,
-                        page_re.sub(lambda m: f"p{int(m.group(1)) + shift}/", s.path),
-                    )
-                    for s in spans
-                ]
-            out["_doc_key"].append(int(key))
-            out["url"].append(url)
-            out["slice_index"].append(int(sidx))
-            out["status"].append(res.status)
-            out["extracted_text"].append(res.text)
-            out["spans"].append(spans)
-            out["error"].append(res.error.as_dict() if res.error else None)
-            out["n_pages"].append(int(n_pages))
-            out["n_bytes"].append(int(n_bytes))
-            out["timings"].append(res.timings)
-        yield pd.DataFrame(out)
-
-
-def extract_pdf_slices(slices: DataFrame) -> DataFrame:
-    cols = slices.select(
-        "_doc_key", "url", "slice_index", "slice_html", "page_lo", "n_pages", "n_bytes"
-    )
-    return cols.mapInPandas(_extract_pdf_slice_batches, schema=SLICE_RESULT_SCHEMA)
 
 
 def extract_pdf_documents_sliced(
@@ -493,40 +459,8 @@ def extract_pdf_documents_sliced(
     payload_col: str = "pdf",
     slice_partitions: int | None = None,
 ) -> DataFrame:
-    """PDF twin of ``extract_documents_sliced``: multi-page PDFs above the
-    threshold split into self-contained sub-PDFs, spread across tasks,
-    extracted per slice, reassembled in slice order — byte-identical to
-    the single-shot path because PDF layout analysis is per-page and a
-    sub-PDF carries exactly its pages' object closure.
-
-    ROUTING is a pure-JVM structural estimate (``pdf_page_count_col``),
-    not a Python parse: at corpus scale an admission-path pandas UDF
-    would pay a full object scan per document just to pick a branch.
-    The estimate is allowed to be wrong in either direction because both
-    mis-routes are output-identical: an undercount sends a multi-page
-    doc to the single-shot map (the oracle itself); an overcount slices
-    a document into one slice or fails the split, which degrades to a
-    single full-payload slice whose extraction row reassembles to the
-    single-shot row (FAILURE rows pin n_pages=1 on both paths)."""
-    from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
-
-    renamed = pages.withColumnRenamed(payload_col, "pdf")
-    size_ok = (
-        F.lit(True) if max_bytes is None else (F.length("pdf") <= F.lit(max_bytes))
+    """``extract_documents_sliced`` over a column of PDFs."""
+    return extract_documents_sliced(
+        pages, pages_per_slice, slice_min_pages, max_bytes,
+        slice_partitions=slice_partitions, payload_format="pdf", payload_col=payload_col,
     )
-    counted = renamed.withColumn("n_pages", pdf_page_count_col("pdf"))
-    if "_doc_key" not in counted.columns:
-        # same determinism contract as the HTML router (see above)
-        counted = counted.withColumn("_doc_key", F.monotonically_increasing_id())
-    route_sliced = (
-        F.col("pdf").isNotNull()
-        & (F.col("n_pages") >= F.lit(slice_min_pages))
-        & size_ok
-    )
-    big = counted.filter(route_sliced)
-    small = counted.filter(~route_sliced).drop("n_pages", "_doc_key")
-
-    direct = extract_pdf_documents(small, max_bytes=max_bytes)
-    slices = spread_slices(split_pdf_slices(big, pages_per_slice), slice_partitions)
-    sliced = with_document_identity(reassemble_slices(extract_pdf_slices(slices)))
-    return direct.unionByName(sliced)

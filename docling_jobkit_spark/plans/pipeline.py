@@ -14,12 +14,15 @@ play the durable task state.
 Scan multiplicity at scale (deliberate tradeoff, quantified):
 - admission_split's admitted/rejected branches and the slice router's
   big/small branches are FILTERS of the same scan, so one commit group
-  evaluates the (column-pruned: url+html) source up to 4×, and the run
-  loop does that once per group. Filters-as-branches is what keeps
-  failures as relational rows and admission ahead of the UDF; the
-  alternatives are worse at 100 TB: persist() of the group slice
-  duplicates a corpus-scale payload to executor storage, and routing
-  inside the UDF forfeits scan-level pushdown of the gates.
+  evaluates the (column-pruned: url+html) source 3× with slicing on and
+  2× with it off, and the run loop does that once per group. The payload
+  format adds no branch: the PDF/HTML decision is a per-row column, so
+  "html", "pdf" and "auto" plan the same scans and Python operators.
+  Filters-as-branches is what keeps failures as relational rows and
+  admission ahead of the UDF; the alternatives are worse at 100 TB:
+  persist() of the group slice duplicates a corpus-scale payload to
+  executor storage, and routing inside the UDF forfeits scan-level
+  pushdown of the gates.
 - Mitigations that make the re-scans cheap in production: (1) lay the
   pages table out partitioned by the url-hash bucket — the commit-group
   predicate (a pmod of that bucket) then PRUNES partitions, so each
@@ -44,19 +47,12 @@ from docling_jobkit_spark.metrics import (
     with_lineage,
 )
 from docling_jobkit_spark.operators.admission import admission_split
-from docling_jobkit_spark.operators.extract_op import (
-    extract_documents,
-    extract_documents_auto,
-    extract_pdf_documents,
-)
+from docling_jobkit_spark.operators.extract_op import extract_documents
 from docling_jobkit_spark.operators.partitioning import (
     salted_repartition,
     url_bucket_col,
 )
-from docling_jobkit_spark.operators.slices import (
-    extract_documents_sliced,
-    extract_pdf_documents_sliced,
-)
+from docling_jobkit_spark.operators.slices import extract_documents_sliced
 
 
 @dataclass
@@ -76,13 +72,14 @@ class PipelineConfig:
     # of oversized docs, and keep the payload bytes off the shuffle.
     repartition: bool = True
     profile: str = "default"                   # extraction preset (T3 registry)
-    # payload routing for the binary column: "html" (default), "pdf"
+    # extractor choice for the binary column: "html" (default), "pdf"
     # (the whole corpus is PDFs), or "auto" (per-row %PDF- content
-    # sniff — Common-Crawl WARC payload mixes; the reference resolves a
-    # backend per document, manager.py:1554-1565). NOTE: the admission
-    # max_pages gate counts PAGE_BREAK markers, so PDF payloads pass it
-    # as single-page — giant PDFs are still bounded by max_bytes and by
-    # the slice fan-out.
+    # sniff, extract_op.pdf_sniff_col — Common-Crawl WARC payload mixes;
+    # the reference resolves a backend per document, manager.py:1554-1565).
+    # Every value plans the same operators: one map unsliced, three maps
+    # and one reassembly sliced. NOTE: the admission max_pages gate counts
+    # PAGE_BREAK markers, so PDF payloads pass it as single-page — giant
+    # PDFs are still bounded by max_bytes and by the slice fan-out.
     payload_format: str = "html"
 
 
@@ -120,55 +117,19 @@ class ExtractionPipeline:
             )
         if cfg.repartition:
             admitted = salted_repartition(admitted, cfg.num_partitions, cfg.n_buckets)
-        extracted = self._extract_routed(admitted)
+        if cfg.use_slicing:
+            extracted = extract_documents_sliced(
+                admitted,
+                pages_per_slice=cfg.pages_per_slice,
+                slice_min_pages=cfg.slice_min_pages,
+                profile=cfg.profile,
+                payload_format=cfg.payload_format,
+            )
+        else:
+            extracted = extract_documents(
+                admitted, profile=cfg.profile, payload_format=cfg.payload_format
+            )
         return extracted.unionByName(rejected)
-
-    def _extract_routed(self, admitted: DataFrame) -> DataFrame:
-        """Format routing × slice routing. For "auto", the corpus splits
-        on a pure-JVM magic sniff and each side takes its own slice
-        fan-out; both sides adopt the pre-assigned ``_doc_key``, so
-        reassembly identity survives the split."""
-        cfg = self.config
-        fmt = cfg.payload_format
-        if fmt == "html":
-            if cfg.use_slicing:
-                return extract_documents_sliced(
-                    admitted,
-                    pages_per_slice=cfg.pages_per_slice,
-                    slice_min_pages=cfg.slice_min_pages,
-                    profile=cfg.profile,
-                )
-            return extract_documents(admitted, profile=cfg.profile)
-        if fmt == "pdf":
-            if cfg.use_slicing:
-                return extract_pdf_documents_sliced(
-                    admitted,
-                    pages_per_slice=cfg.pages_per_slice,
-                    slice_min_pages=cfg.slice_min_pages,
-                    payload_col="html",
-                )
-            return extract_pdf_documents(admitted, payload_col="html")
-        if fmt != "auto":
-            raise ValueError(f"payload_format must be html|pdf|auto, got {fmt!r}")
-        if not cfg.use_slicing:
-            return extract_documents_auto(admitted, profile=cfg.profile)
-        c = F.col("html").cast("string")
-        looks_pdf = F.col("html").isNotNull() & (
-            F.instr(F.substring(c, 1, 1100), "%PDF-") > 0
-        )
-        html_side = extract_documents_sliced(
-            admitted.filter(~looks_pdf),
-            pages_per_slice=cfg.pages_per_slice,
-            slice_min_pages=cfg.slice_min_pages,
-            profile=cfg.profile,
-        )
-        pdf_side = extract_pdf_documents_sliced(
-            admitted.filter(looks_pdf),
-            pages_per_slice=cfg.pages_per_slice,
-            slice_min_pages=cfg.slice_min_pages,
-            payload_col="html",
-        )
-        return html_side.unionByName(pdf_side)
 
     # -- resumable run -------------------------------------------------
 

@@ -95,22 +95,14 @@ def stream_extract(
     ``max_files_per_trigger`` is the backpressure knob (the reference's
     per-tenant ``max_queued_tasks`` / admission gate, O8).
     ``payload_format``: "html", "pdf", or "auto" (per-row content sniff)
-    — the batch pipeline's format routing; all three are plain
-    mapInPandas transforms, so they lift to Structured Streaming
-    unchanged.
+    — the batch pipeline's format routing through the same
+    ``extract_documents``, which rejects any other value; a plain
+    mapInPandas transform, so it lifts to Structured Streaming unchanged.
     """
     pages = _read_stream(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger
     )
-    if payload_format == "pdf":
-        from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
-
-        return extract_pdf_documents(pages, max_bytes=max_bytes, payload_col="html")
-    if payload_format == "auto":
-        from docling_jobkit_spark.operators.extract_op import extract_documents_auto
-
-        return extract_documents_auto(pages, max_bytes=max_bytes)
-    return extract_documents(pages, max_bytes=max_bytes)
+    return extract_documents(pages, max_bytes=max_bytes, payload_format=payload_format)
 
 
 def stream_hourly_rollup(

@@ -280,7 +280,7 @@ def test_truncated_pdf_is_failure_row_not_exception():
 # Spark operators
 # ---------------------------------------------------------------------------
 def test_spark_pdf_operator_matches_driver(spark):
-    from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
+    from docling_jobkit_spark.operators.extract_op import extract_documents
 
     pages = _mixed_pages()
     rows = [("pdf://doc/%d" % i, g.build_pdf(pages, compress=bool(i % 2)))
@@ -289,7 +289,10 @@ def test_spark_pdf_operator_matches_driver(spark):
         pd.DataFrame(rows, columns=["url", "pdf"]),
         schema="url string, pdf binary",
     )
-    got = {r["url"]: r for r in extract_pdf_documents(df).collect()}
+    got = {
+        r["url"]: r
+        for r in extract_documents(df, payload_format="pdf", payload_col="pdf").collect()
+    }
     for url, data in rows:
         exp = extract_pdf(data, url)
         assert got[url]["status"] == exp.status
@@ -300,7 +303,7 @@ def test_spark_pdf_operator_matches_driver(spark):
 
 
 def test_spark_auto_routing_mixed_corpus(spark):
-    from docling_jobkit_spark.operators.extract_op import extract_documents_auto
+    from docling_jobkit_spark.operators.extract_op import extract_documents
 
     pdf_bytes = g.build_pdf([g.Page.of([g.para("pdf payload body text")])])
     html_bytes = (b"<html><body><p>" +
@@ -313,7 +316,7 @@ def test_spark_auto_routing_mixed_corpus(spark):
         ),
         schema="url string, html binary",
     )
-    got = {r["url"]: r for r in extract_documents_auto(df).collect()}
+    got = {r["url"]: r for r in extract_documents(df, payload_format="auto").collect()}
     assert got["u://pdf"]["extracted_text"] == "pdf payload body text"
     assert "an html paragraph" in got["u://html"]["extracted_text"]
     # junk routes to the HTML extractor (no %PDF- magic): any structured
@@ -353,7 +356,7 @@ def test_split_pdf_raises_on_unparseable():
 
 
 def test_spark_pdf_sliced_matches_single_shot(spark):
-    from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
+    from docling_jobkit_spark.operators.extract_op import extract_documents
     from docling_jobkit_spark.operators.slices import extract_pdf_documents_sliced
 
     multi = g.build_pdf(_threepage_spec(), compress=True)
@@ -368,7 +371,7 @@ def test_spark_pdf_sliced_matches_single_shot(spark):
         pd.DataFrame(rows, columns=["url", "pdf"]), schema="url string, pdf binary"
     )
     sliced = extract_pdf_documents_sliced(df, pages_per_slice=1, slice_min_pages=2)
-    direct = extract_pdf_documents(df)
+    direct = extract_documents(df, payload_format="pdf", payload_col="pdf")
 
     def key(r):
         return (r["url"], r["n_bytes"], r["extracted_text"])
@@ -390,7 +393,7 @@ def test_warc_pdf_mixed_corpus_composes_with_auto_router(spark, tmp_path):
     """Common-Crawl shape: a .warc.gz shard holding BOTH html and pdf
     response payloads scans through read_warc and converts in one pass
     via the content-sniffing router — the mixed-format crawl loop."""
-    from docling_jobkit_spark.operators.extract_op import extract_documents_auto
+    from docling_jobkit_spark.operators.extract_op import extract_documents
     from docling_jobkit_spark.sources.warc import read_warc, write_warc
 
     pdf_bytes = g.build_pdf([g.Page.of([g.para("warc pdf body text")])], compress=True)
@@ -409,7 +412,7 @@ def test_warc_pdf_mixed_corpus_composes_with_auto_router(spark, tmp_path):
     pages = records.select(
         records["target_uri"].alias("url"), records["payload"].alias("html")
     )
-    got = {r["url"]: r for r in extract_documents_auto(pages).collect()}
+    got = {r["url"]: r for r in extract_documents(pages, payload_format="auto").collect()}
     assert got["w://pdf"]["extracted_text"] == "warc pdf body text"
     assert "a kept html paragraph" in got["w://html"]["extracted_text"]
 
@@ -652,12 +655,118 @@ def test_stream_extract_auto_routes_mixed_payloads(spark, tmp_path):
     assert "a streamed html paragraph" in got["s://html"]["extracted_text"]
 
 
+def _sniff_probes() -> dict[str, bytes | None]:
+    """Payloads on the edge of the ``%PDF-`` sniff: the magic inside or
+    just outside the first 1024 bytes, behind multi-byte characters,
+    and behind stray UTF-8 lead bytes that a character-counting check
+    would let swallow it."""
+    multi = g.build_pdf(_threepage_spec(), compress=True)
+    html = b"<!--PAGE_BREAK-->".join(
+        b"<html><body><p>page %d of an html document long enough to be "
+        b"kept by the block classifier</p></body></html>" % i
+        for i in range(3)
+    )
+    return {
+        "s://at0": multi,
+        "s://at1019": b"x" * 1019 + multi,
+        "s://at1020": b"x" * 1020 + multi,
+        "s://at1030": b"x" * 1030 + multi,
+        "s://eacute": "\u00e9".encode() * 600 + multi,
+        "s://f0": b"\xf0" + multi,
+        "s://abe2": b"ab\xe2" + multi,
+        "s://html": html,
+        "s://null": None,
+    }
+
+
+def test_pdf_sniff_is_one_decision_on_every_path(spark, tmp_path):
+    """``is_pdf`` is the one PDF/HTML definition: its JVM twin agrees on
+    every probe, and the auto pipeline with and without slicing and the
+    streaming extractor all give the rows of the single-shot extractor
+    that ``is_pdf`` picks."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_jobkit_spark.extractor.extract import extract as extract_html
+    from docling_jobkit_spark.operators.extract_op import pdf_sniff_col
+    from docling_jobkit_spark.plans.pipeline import ExtractionPipeline, PipelineConfig
+    from docling_jobkit_spark.streaming import start_file_stream, stream_extract
+
+    probes = _sniff_probes()
+    df = spark.createDataFrame(list(probes.items()), "url string, html binary")
+    sniffed = {
+        r["url"]: r["s"]
+        for r in df.select("url", pdf_sniff_col("html").alias("s")).collect()
+    }
+    assert sniffed == {u: pdf.is_pdf(p) for u, p in probes.items()}
+    assert sniffed["s://at1030"] is False and sniffed["s://f0"] is True
+
+    def rows(results):
+        return {
+            r["url"]: (r["status"], r["extracted_text"], r["n_pages"], r["n_bytes"],
+                       [tuple(s) for s in r["spans"]], r["content_hash"])
+            for r in results.collect()
+        }
+
+    def oracle(url, p):
+        res = extract_pdf(p, url) if pdf.is_pdf(p) else extract_html(p, url)
+        return res.status, res.text, res.n_pages, [tuple(s) for s in res.spans]
+
+    want = {u: oracle(u, p) for u, p in probes.items()}
+    got = []
+    for slicing in (False, True):
+        pipe = ExtractionPipeline(spark, PipelineConfig(
+            num_partitions=2, payload_format="auto", use_slicing=slicing,
+            pages_per_slice=1, slice_min_pages=2,
+        ))
+        got.append(rows(pipe.extract(df)))
+    indir = tmp_path / "in"
+    indir.mkdir()
+    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+    pq.write_table(pa.table({
+        "url": list(probes),
+        "warc_ts": pa.array([ts] * len(probes), pa.timestamp("us", tz="UTC")),
+        "html": pa.array(list(probes.values()), pa.binary()),
+        "text": [""] * len(probes),
+        "lang": ["en"] * len(probes),
+    }), str(indir / "batch1.parquet"))
+    q = start_file_stream(
+        stream_extract(spark, str(indir), payload_format="auto"),
+        str(tmp_path / "out"), str(tmp_path / "ckpt"), available_now=True,
+    )
+    q.awaitTermination(180)
+    got.append(rows(spark.read.parquet(str(tmp_path / "out"))))
+    assert got[0] == got[1] == got[2]
+    assert {u: (r[0], r[1], r[2], r[4]) for u, r in got[0].items()} == want
+    # the probes exercise both extractors, sliced and not
+    assert want["s://at1030"][0] == "PARTIAL_SUCCESS"
+    assert want["s://f0"][:3] == want["s://at0"][:3] == ("SUCCESS", want["s://at0"][1], 3)
+
+
+@pytest.mark.parametrize("surface", ["pipeline", "stream"])
+def test_unknown_payload_format_is_rejected(spark, tmp_path, surface):
+    """An unknown ``payload_format`` (formats are lower-case) raises on
+    both surfaces instead of silently running the HTML extractor."""
+    from docling_jobkit_spark.plans.pipeline import ExtractionPipeline, PipelineConfig
+    from docling_jobkit_spark.streaming import stream_extract
+
+    with pytest.raises(ValueError, match="payload_format must be html"):
+        if surface == "pipeline":
+            pages = spark.createDataFrame([("u", b"x")], "url string, html binary")
+            ExtractionPipeline(spark, PipelineConfig(payload_format="PDF")).extract(pages)
+        else:
+            (tmp_path / "in").mkdir()
+            stream_extract(spark, str(tmp_path / "in"), payload_format="PDF")
+
+
 def test_chunker_consumes_pdf_extraction_with_heading_sections(spark):
     """Downstream composition: the hierarchical chunker consumes PDF
     extraction rows unchanged — PDF heading spans become section
     boundaries and propagate as chunk heading context."""
     from docling_jobkit_spark.operators.chunker import chunk_documents
-    from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
+    from docling_jobkit_spark.operators.extract_op import extract_documents
 
     pages = [g.Page.of(
         [g.heading("Alpha Section"),
@@ -670,7 +779,8 @@ def test_chunker_consumes_pdf_extraction_with_heading_sections(spark):
         schema="url string, pdf binary",
     )
     chunks = chunk_documents(
-        extract_pdf_documents(df), max_tokens=32, overlap=4, mode="hierarchical"
+        extract_documents(df, payload_format="pdf", payload_col="pdf"),
+        max_tokens=32, overlap=4, mode="hierarchical",
     ).collect()
     assert len(chunks) >= 3
     heads = {tuple(c["headings"]) for c in chunks}
@@ -682,11 +792,11 @@ def test_chunker_consumes_pdf_extraction_with_heading_sections(spark):
 
 def test_pdf_corpus_flows_through_production_ingest_loop(spark, tmp_path):
     """Capstone composition: a PDF crawl batch runs the FULL production
-    loop — extract_pdf_documents → docs_from_extraction bridge →
-    ingest_batch (curation funnel → exact dedup → commit). Exact PDF
+    loop — extract_documents(payload_format="pdf") → docs_from_extraction
+    bridge → ingest_batch (curation funnel → exact dedup → commit). Exact PDF
     re-posts of already-committed documents are dropped by the history
     stage on the second batch; the bit-identical replay no-ops."""
-    from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
+    from docling_jobkit_spark.operators.extract_op import extract_documents
     from docling_jobkit_spark.plans.ingest import (
         IngestConfig,
         docs_from_extraction,
@@ -744,13 +854,17 @@ def test_pdf_corpus_flows_through_production_ingest_loop(spark, tmp_path):
     state = str(tmp_path / "pdf_ingest")
     cfg = IngestConfig()
     res_a = ingest_batch(
-        spark, docs_from_extraction(extract_pdf_documents(batch_a)),
+        spark, docs_from_extraction(
+            extract_documents(batch_a, payload_format="pdf", payload_col="pdf")
+        ),
         state, "2026-01", config=cfg,
     )
     kept_a = res_a.kept.count()
     assert kept_a >= 5  # funnel may drop at most a stray
     res_b = ingest_batch(
-        spark, docs_from_extraction(extract_pdf_documents(batch_b)),
+        spark, docs_from_extraction(
+            extract_documents(batch_b, payload_format="pdf", payload_col="pdf")
+        ),
         state, "2026-02", config=cfg,
     )
     ledger_b = {r["stage"]: r["docs_dropped"] for r in res_b.ledger.collect()}
@@ -758,7 +872,9 @@ def test_pdf_corpus_flows_through_production_ingest_loop(spark, tmp_path):
     assert res_b.kept.count() == 2
     # bit-identical replay no-ops
     replay = ingest_batch(
-        spark, docs_from_extraction(extract_pdf_documents(batch_b)),
+        spark, docs_from_extraction(
+            extract_documents(batch_b, payload_format="pdf", payload_col="pdf")
+        ),
         state, "2026-02", config=cfg,
     )
     assert replay.replayed

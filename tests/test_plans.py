@@ -362,22 +362,41 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
 
 
 def test_pdf_extraction_scan_prunes_columns(spark, pages_path):
-    """The PDF map and the auto router prune the parquet scan to
-    (url, payload) exactly like the HTML flagship — at corpus scale the
-    other columns never leave the footers."""
-    from docling_jobkit_spark.operators.extract_op import (
-        extract_documents_auto,
-        extract_pdf_documents,
-    )
+    """Every payload format prunes the parquet scan to (url, payload)
+    exactly like the HTML flagship — at corpus scale the other columns
+    never leave the footers."""
+    from docling_jobkit_spark.operators.extract_op import extract_documents
 
     pages = spark.read.parquet(pages_path)
-    for op in (
-        lambda df: extract_pdf_documents(df, payload_col="html"),
-        extract_documents_auto,
-    ):
-        plan = _plan(op(pages))
+    for fmt in ("html", "pdf", "auto"):
+        plan = _plan(extract_documents(pages, payload_format=fmt))
         m = re.search(r"ReadSchema: ([^\n]*)", plan)
         assert m and "warc_ts" not in m.group(1) and "lang" not in m.group(1)
+
+
+@pytest.mark.parametrize(
+    "fmt,slicing", [(f, s) for f in ("html", "pdf", "auto") for s in (False, True)]
+)
+def test_extraction_python_operators(spark, pages_path, fmt, slicing):
+    """One extraction operator for every payload format: the PDF/HTML
+    decision is a per-row column, so no format adds a branch. Unsliced
+    is one map; sliced is splitter + direct map + slice extractor, one
+    reassembly, and one spread exchange on (_doc_key, slice_index) (the
+    other _doc_key exchange is the reassembly's grouping)."""
+    from docling_jobkit_spark.plans.pipeline import ExtractionPipeline, PipelineConfig
+
+    pipe = ExtractionPipeline(
+        spark,
+        PipelineConfig(num_partitions=4, payload_format=fmt, use_slicing=slicing),
+    )
+    df = pipe.extract(spark.read.parquet(pages_path))
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("MapInPandas") == (3 if slicing else 1), opt
+    assert opt.count("FlatMapGroupsInPandas") == (1 if slicing else 0), opt
+    plan = _plan(df)
+    spread = re.findall(r"hashpartitioning\(_doc_key#\d+L, slice_index#\d+", plan)
+    assert len(spread) == (1 if slicing else 0), plan
+    assert plan.count("hashpartitioning(_doc_key") == (2 if slicing else 0), plan
 
 
 def test_pdf_slice_routing_estimate_is_jvm_side(spark, pages_path):
@@ -518,3 +537,36 @@ def test_barrier_and_stamps_have_one_home():
             assert not re.search(r"\.metadata\b|metadata=", src), (
                 f"{name}: stamp through functions/stamp.py"
             )
+
+
+def test_extraction_dispatch_has_one_home():
+    """Each extractor entry point is called from ONE function in
+    operators/: whole documents (direct rows and sub-PDF slices) go
+    through ``extract_op.extract_one``, HTML page slices through
+    ``slices._extract_slice_batches``. The PDF/HTML decision is the JVM
+    column ``pdf_sniff_col`` (``is_pdf``'s twin, pinned equal in
+    test_pdf), so no operator calls ``is_pdf``. A second call site would
+    re-fork the extraction path per format."""
+    import ast
+    import pathlib
+
+    import docling_jobkit_spark.operators as ops
+
+    names = ("extract", "extract_pdf", "extract_page_range", "is_pdf")
+    sites: dict[str, set[str]] = {n: set() for n in names}
+    for path in pathlib.Path(ops.__file__).parent.glob("*.py"):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in sites:
+                    sites[name].add(f"{path.stem}.{getattr(top, 'name', '<module>')}")
+    assert sites == {
+        "extract": {"extract_op.extract_one"},
+        "extract_pdf": {"extract_op.extract_one"},
+        "extract_page_range": {"slices._extract_slice_batches"},
+        "is_pdf": set(),
+    }, sites
