@@ -8,10 +8,24 @@ timestamps round-trip deterministically.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_MEMORY_UNITS = {None: 2**20, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def _memory_mb(size: str) -> int:
+    """A Spark memory string in whole MiB, read as Spark reads it: a bare
+    number is MiB; k, m, g and t take an optional b, in any case
+    ("2G", "512M", "2gb")."""
+    m = re.fullmatch(r"(\d+)(?:([kmgt])b?)?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark memory size: {size!r}")
+    return int(m[1]) * _MEMORY_UNITS[m[2]] // 2**20
 
 
 def get_spark(
@@ -39,9 +53,18 @@ def get_spark(
     multiplies heaps and GC bandwidth, while ``local[4N]`` quadruples mutator
     threads inside ONE fixed heap (measured: per-doc JVM CPU inflates with
     thread count under local[N]; see BENCH.md round-5 scaling notes).
-    Executor JVMs get the same GC profile as the tuned driver, sized to their
-    own core count, and inherit PYTHONPATH so pandas UDFs can import this
-    package (executors do not inherit the driver's sys.path, unlike local[N]).
+    Executor JVMs get the same GC profile as the tuned driver, sized to
+    their own core count.
+
+    Every session, in either mode, forks its Python workers from
+    ``docling_jobkit_spark.pyworker`` instead of ``pyspark.daemon``, and
+    ships this package's root in the workers' PYTHONPATH so that daemon and
+    the pandas UDFs resolve in any executor (workers do not inherit the
+    driver's sys.path). The daemon stat-gates the zip re-reads that
+    ``importlib.invalidate_caches()`` triggers on every task: on Python
+    3.10-3.12 that was ~16 parses of pyspark.zip's directory per task, most
+    of a Python task's fixed cost (~0.23 -> ~0.045 CPU-s; OPTIMIZATION_r06.md
+    §13). Plans and rows are unchanged.
 
     ``tuned=True`` applies the measured throughput profile for the
     pandas-UDF extraction workload (see BENCH.md for the evidence):
@@ -51,14 +74,14 @@ def get_spark(
       JVM↔python wakeups (expensive on virtualized hosts);
     - a persistent python-worker pool: without it, idle workers are
       reaped between stages and every stage pays a fork+import stampede.
+      Pooling does not remove the per-task zip re-read; the daemon above
+      does, in every profile.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cores
     if n_executors:
         exec_cores = max(1, cores // n_executors)
-        exec_mem_mb = int(executor_memory.rstrip("gm")) * (
-            1024 if executor_memory.endswith("g") else 1
-        )
+        exec_mem_mb = _memory_mb(executor_memory)
         master = f"local-cluster[{n_executors},{exec_cores},{exec_mem_mb}]"
     else:
         master = f"local[{cores}]"
@@ -100,19 +123,14 @@ def get_spark(
         # and executor behavior are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # pyspark.daemon with stat-gated zip re-reads (see the docstring)
+        .config("spark.python.daemon.module", "docling_jobkit_spark.pyworker")
+        # a real deployment ships the package with spark-submit --py-files
+        # or a cluster-wide install instead
+        .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
     )
     if n_executors:
-        import docling_jobkit_spark as _pkg
-
-        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(_pkg.__file__)))
-        builder = (
-            builder.config("spark.executor.memory", executor_memory)
-            # local-cluster executors spawn their python workers from the
-            # executor JVM's environment, not the driver's sys.path — ship
-            # the package root explicitly (a real deployment uses
-            # spark-submit --py-files / a cluster-wide install instead)
-            .config("spark.executorEnv.PYTHONPATH", pkg_root)
-        )
+        builder = builder.config("spark.executor.memory", executor_memory)
     if tuned:
         jvm_cores = max(1, cores // n_executors) if n_executors else cores
         gc_opts = f"-XX:+UseParallelGC -XX:ActiveProcessorCount={jvm_cores}"
