@@ -28,15 +28,25 @@ reference's own object-store pattern (``convert/results_processor.py:
   identity, the corpus contains duplicate urls with distinct payloads.
 
 Storage contract. Every filesystem touch in the commit, streaming
-sketch-state and ingest paths goes through the primitives below, which
-speak the Hadoop FileSystem API (any scheme the JVM has a connector
-for) with the active Spark context's Hadoop configuration:
+sketch-state, ingest and sink paths goes through the primitives below,
+which speak the Hadoop FileSystem API (any scheme the JVM has a
+connector for) with the active Spark context's Hadoop configuration:
 ``exists``, ``list_status``, ``committed_dirs`` (directories gated on
 their OWN ``_SUCCESS``), ``latest_version`` (newest complete
 ``<prefix><int>`` directory, optionally strictly below a given id),
-``put_if_absent``, ``read_bytes`` and ``delete``. ``put_if_absent`` is
-the only step that needs atomicity, and what gives it depends on the
-scheme:
+``put_if_absent``, ``read_bytes`` and ``delete``. Two seams are built
+on them, and nothing else publishes or rewrites:
+
+- publish: ``put_if_absent`` — one conditional object PUT makes a
+  version (a manifest, a sketch state) visible;
+- rewrite: ``certified_rewrite`` — data that must change in place
+  (compaction, takedown, shard purge) moves through a tmp directory
+  certified by ``content_signature`` on the way in and on the way out;
+  the tmp is deleted last, a complete tmp found on entry is finished,
+  and a tmp that fails its own certificate is deleted at once.
+
+``put_if_absent`` is the only step that needs atomicity, and what gives
+it depends on the scheme:
 
 - ``file``: ``os.link`` from a fully written temp name — atomic,
   fails-if-exists, and the content is complete before the name
@@ -73,6 +83,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from typing import Callable
 
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
@@ -214,6 +225,67 @@ def _url_hash_sum() -> F.Column:
         F.substring(F.sha2(F.coalesce(F.col("url"), F.lit("")), 256), 1, 14), 16, 10
     ).cast("decimal(28,0)")
     return F.sum(h).cast("decimal(38,0)")
+
+
+def content_signature(df: DataFrame, key_col: str = "url") -> tuple[int, int]:
+    """(n_rows, order-insensitive key-hash sum) — the manifest signature
+    (``_url_hash_sum``: 56-bit sha prefixes summed as decimal(38,0),
+    overflow-proof to 10^12 rows, null-guarded because ``F.sum``
+    silently drops NULL terms). Equal signatures across a rewrite
+    certify the layout change moved every row exactly once."""
+    keyed = df.select(F.col(key_col).cast("string").alias("url"))
+    row = keyed.agg(
+        F.count("*").alias("n"),
+        # empty input: F.sum is NULL, the signature of nothing is 0
+        F.coalesce(_url_hash_sum(), F.lit(0).cast("decimal(38,0)")).alias("sig"),
+    ).collect()[0]
+    return int(row["n"]), int(row["sig"])
+
+
+def certified_rewrite(
+    tmp: str,
+    read: Callable[[str], DataFrame],
+    key_col: str,
+    apply: Callable[[str], DataFrame],
+    stage: Callable[[str], DataFrame] | None = None,
+) -> bool:
+    """The one in-place rewrite protocol, object-store safe (no rename):
+    the new content goes to the ``tmp`` directory first and is checked
+    by ``content_signature`` on ``key_col`` at every hop.
+
+    1. A complete ``tmp`` (its own ``_SUCCESS``) found on entry was
+       certified by an earlier call that did not finish: its content is
+       the target, and ``stage`` is never called.
+    2. Otherwise ``stage(tmp)`` writes the tmp from the untouched source
+       and returns the content it must hold. A tmp whose ``read(tmp)``
+       signature differs is DELETED before raising — left in place, its
+       ``_SUCCESS`` would make the next call apply it as a heal copy.
+    3. ``apply(tmp)`` moves the content into place and returns what
+       landed. A mismatch raises and KEEPS the tmp: it may be the only
+       intact copy, and re-running heals from it.
+    4. The tmp is deleted last.
+
+    Returns True iff a complete tmp was finished (step 1)."""
+    healed = exists(f"{tmp}/_SUCCESS")
+    if healed:
+        want = content_signature(read(tmp), key_col)
+    elif stage is None:
+        raise ValueError(f"no complete rewrite tmp at {tmp} and nothing to stage")
+    else:
+        want = content_signature(stage(tmp), key_col)
+        if content_signature(read(tmp), key_col) != want:
+            delete(tmp)
+            raise RuntimeError(
+                f"rewrite tmp {tmp} does not match its source; tmp deleted, "
+                f"source untouched"
+            )
+    if content_signature(apply(tmp), key_col) != want:
+        raise RuntimeError(
+            f"rewrite landed content that does not match its tmp; recover by "
+            f"re-running (the certified tmp is kept at {tmp})"
+        )
+    delete(tmp)
+    return healed
 
 
 class CommitLog:

@@ -68,6 +68,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.checkpoint import (
+    certified_rewrite,
     committed_dirs,
     delete,
     exists,
@@ -91,10 +92,7 @@ from docling_jobkit_spark.operators.zonemap import (
     update_zonemap,
     write_zonemap,
 )
-from docling_jobkit_spark.sinks.maintenance import (
-    _list_parquet_files,
-    content_signature,
-)
+from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
 from docling_jobkit_spark.plans.curation import (
     STAGES,
     CurationConfig,
@@ -119,6 +117,16 @@ LEDGER_SCHEMA = (
     "stage_order int, stage string, docs_in bigint, "
     "docs_dropped bigint, docs_kept bigint"
 )
+_CORPUS_COLS = tuple(p.split()[0] for p in CORPUS_SCHEMA.split(","))
+
+# the per-batch families, and the tmp roots of the three in-place
+# rewrites (checkpoint.certified_rewrite): compaction, corpus takedown
+# and shard purge — each tmp is ``<root>/batch=<id>``
+_BATCH_FAMILIES = ("corpus", "seen", "index", "shards", "ledger")
+_COMPACT_TMP = "corpus_compact"
+_TAKEDOWN_TMP = "corpus_takedown"
+_SHARD_TMP = "shards_takedown"
+_TMP_FAMILIES = (_COMPACT_TMP, _TAKEDOWN_TMP, _SHARD_TMP)
 
 
 @dataclass(frozen=True)
@@ -428,7 +436,7 @@ class CompactBatchStats:
     batch_id: str
     n_files_before: int
     n_files_after: int
-    healed: bool  # True = a prior torn copy-back was recovered from tmp
+    healed: bool  # True = a complete tmp left by a prior call was finished
     skipped: str | None  # non-None = nothing to do (reason)
 
 
@@ -444,23 +452,24 @@ def compact_ingest_batch(
     applied to the ingest layout; the dir name must stay ``batch=<id>``
     because replays read it directly).
 
-    Object-store-safe (no rename): two-phase copy through a tmp dir,
-    certified by the checkpoint content signature at every hop —
-    compaction must be a pure layout change.
+    Object-store-safe (no rename): one ``checkpoint.certified_rewrite``
+    through ``corpus_compact/batch=<id>`` (OUTSIDE the corpus root so
+    the zone-map listing never sees it) — compaction must be a pure
+    layout change, so the content signature certifies every hop:
 
-        1. compact src → ``corpus_compact/batch=<id>`` (tmp; OUTSIDE the
-           corpus root so the zone-map listing never sees it)
-        2. verify sig(tmp) == sig(src); mismatch RAISES, src untouched
-        3. compact tmp → src (overwrite; same scan-side packing confs)
-        4. verify sig(src) == sig; then reconcile the zone-map manifest
-           (stale rows drop, new files get footer-statted) and delete tmp
+        1. compact src → tmp; a tmp whose signature differs from src is
+           deleted and the call raises, src untouched
+        2. compact tmp → src (overwrite; same scan-side packing confs),
+           reconcile the zone-map and Bloom manifests (stale rows drop,
+           new files get footer-statted)
+        3. verify sig(src) == sig(tmp), then delete the tmp
 
-    Crash recovery makes the op idempotent: on entry, a complete tmp
-    (its _SUCCESS present) whose signature matches a DAMAGED src —
-    a crash inside step 3's delete-then-write window — is re-applied
-    from tmp (``healed=True``); a complete tmp matching an INTACT src
-    resumes at step 3. Only committed batches compact (ledger marker
-    required) — compacting an in-flight batch would race its writer.
+    Crash recovery makes the op idempotent: a complete tmp (its
+    _SUCCESS present) found on entry is re-applied from step 2 whatever
+    src holds — a crash inside step 2's delete-then-write window can
+    leave src absent or torn — and reported as ``healed=True``. Only
+    committed batches compact (ledger marker required) — compacting an
+    in-flight batch would race its writer.
 
     Same-session caveat: DataFrames created over this batch dir BEFORE
     compaction (e.g. an earlier ``IngestResult.kept``) hold the
@@ -472,59 +481,29 @@ def compact_ingest_batch(
     _check_batch_id(batch_id)
     root = state_dir.rstrip("/")
     src = f"{root}/corpus/batch={batch_id}"
-    tmp = f"{root}/corpus_compact/batch={batch_id}"
+    tmp = f"{root}/{_COMPACT_TMP}/batch={batch_id}"
     if not exists(f"{root}/ledger/batch={batch_id}/_SUCCESS"):
         raise ValueError(f"batch {batch_id!r} is not committed; refusing to compact")
+    n_src_files = len(_list_parquet_files(spark, src)) if exists(src) else 0
+    if n_src_files <= 1 and not exists(f"{tmp}/_SUCCESS"):
+        reason = "already one file" if n_src_files else "empty batch dir"
+        return CompactBatchStats(batch_id, n_src_files, n_src_files, False, reason)
 
-    def _sig(path: str):
-        df = spark.read.schema(CORPUS_SCHEMA).parquet(path)
-        return content_signature(df, key_col="content_hash")
+    def read(path: str) -> DataFrame:
+        return spark.read.schema(CORPUS_SCHEMA).parquet(path)
 
-    n_src_files = (
-        len(_list_parquet_files(spark, src)) if exists(src) else 0
-    )
-    tmp_complete = exists(f"{tmp}/_SUCCESS")
-    healed = False
+    def stage(path: str) -> DataFrame:
+        compact_files(spark, src, path, target_file_bytes)
+        return read(src)
 
-    if n_src_files == 0 and not tmp_complete:
-        return CompactBatchStats(batch_id, 0, 0, False, "empty batch dir")
-    if n_src_files <= 1 and not tmp_complete:
-        return CompactBatchStats(
-            batch_id, n_src_files, n_src_files, False, "already one file"
-        )
+    def apply(path: str) -> DataFrame:
+        compact_files(spark, path, src, target_file_bytes)
+        _reconcile_manifests(spark, root)
+        return read(src)
 
-    if tmp_complete:
-        # resume/heal: tmp is the certified copy from a prior attempt.
-        # A fully torn step-3 window can leave src absent/empty — never
-        # read it before re-applying from tmp.
-        want = _sig(tmp)
-        healed = n_src_files == 0 or _sig(src) != want
-        stats = compact_files(spark, tmp, src, target_file_bytes)
-        if _sig(src) != want:
-            raise RuntimeError(
-                f"compaction signature mismatch after heal of {src}"
-            )
-    else:
-        want = _sig(src)
-        compact_files(spark, src, tmp, target_file_bytes)
-        if _sig(tmp) != want:
-            raise RuntimeError(
-                f"compaction signature mismatch writing {tmp}; source untouched"
-            )
-        stats = compact_files(spark, tmp, src, target_file_bytes)
-        if _sig(src) != want:
-            raise RuntimeError(
-                f"compaction signature mismatch after copy-back to {src}; "
-                f"recover by re-running (tmp at {tmp} is complete and certified)"
-            )
-
-    # manifest reconciliation: stale file rows drop, new files statted
-    # on the columns each manifest already indexes
-    _reconcile_manifests(spark, root)
-    delete(tmp)
-    return CompactBatchStats(
-        batch_id, n_src_files, stats.n_files_after, healed, None
-    )
+    healed = certified_rewrite(tmp, read, "content_hash", apply, stage)
+    n_after = len(_list_parquet_files(spark, src))
+    return CompactBatchStats(batch_id, n_src_files, n_after, healed, None)
 
 
 @dataclass(frozen=True)
@@ -665,10 +644,7 @@ def rollback_batch(
     existed = was_committed
     n_dirs = 0
     n_bytes = 0
-    for family in (
-        "corpus", "seen", "index", "shards", "ledger",
-        "corpus_compact", "corpus_takedown", "shards_takedown",
-    ):
+    for family in _BATCH_FAMILIES + _TMP_FAMILIES:
         path = f"{root}/{family}/batch={batch_id}"
         if exists(path):
             existed = True
@@ -801,7 +777,7 @@ class VacuumStats:
     n_dirs_deleted: int
     bytes_reclaimed: int
     deleted: tuple[str, ...]
-    n_kept_recovery: int  # complete compact tmps left for heal
+    n_kept_recovery: int  # complete rewrite tmps left for heal
 
 
 def vacuum_ingest_state(
@@ -816,12 +792,14 @@ def vacuum_ingest_state(
        partial writes. History probes already ignore them
        (probe-NEVER-SELF gates on each dir's own ``_SUCCESS``), replay
        rewrites them mode=overwrite; they are pure dead storage.
-    2. INCOMPLETE compaction tmps (``corpus_compact/batch=<id>`` with
-       no ``_SUCCESS``) — ``compact_ingest_batch`` never reads an
-       uncertified tmp (it restarts from src), so these are dead too.
-       A COMPLETE tmp is NEVER touched: it is the certified recovery
-       copy a torn copy-back heals from; deleting it could orphan the
-       only intact copy of a damaged src.
+    2. INCOMPLETE rewrite tmps (``corpus_compact``, ``corpus_takedown``
+       or ``shards_takedown`` ``/batch=<id>`` with no ``_SUCCESS``) —
+       ``certified_rewrite`` never reads an uncertified tmp (it restarts
+       from the source), so these are dead too. A COMPLETE tmp is NEVER
+       touched: it is the certified recovery copy a torn apply heals
+       from (a tmp that fails its certificate is deleted by its
+       writer); deleting it could orphan the only intact copy of a
+       damaged source.
 
     ``min_age_seconds`` (default 24 h) is the same writer-race guard
     Iceberg uses: a dir younger than the cutoff might belong to the
@@ -846,15 +824,13 @@ def vacuum_ingest_state(
 
     doomed = [
         d
-        for family in ("corpus", "seen", "index", "shards", "ledger")
+        for family in _BATCH_FAMILIES
         for d in _old_batch_dirs(family, committed)
     ]
-    # same rule for every two-phase tmp family: compaction tmps plus the
-    # takedown tmps (corpus + shards) — an INCOMPLETE tmp is debris (its
-    # writer restarts from source), a COMPLETE one is the certified heal
-    # copy delete_content / compact_ingest_batch recover from
+    # every rewrite tmp family: an INCOMPLETE tmp is debris, a COMPLETE
+    # one is the certified heal copy
     n_kept_recovery = 0
-    for family in ("corpus_compact", "corpus_takedown", "shards_takedown"):
+    for family in _TMP_FAMILIES:
         certified = set(committed_dirs(f"{root}/{family}"))
         n_kept_recovery += len(certified)  # never vacuumed
         doomed += _old_batch_dirs(family, certified)
@@ -977,95 +953,88 @@ def _reconcile_manifests(spark: SparkSession, root: str) -> None:
             write_bloom_index(bi.localCheckpoint(eager=True), bloom_dir)
 
 
-def _apply_takedown_tmp(
-    spark: SparkSession, root: str, batch_id: str, tmp_dir: str
+def _rewrite_corpus(
+    spark: SparkSession, root: str, batch_id: str, stage=None
 ) -> tuple[int, int]:
-    """Apply a CERTIFIED takedown tmp to its batch dir and delete the
-    tmp. The tmp is self-describing — survivor rows plus one sentinel
-    row per affected source file (``src_file``; sentinels carry the
-    files whose every row was deleted) — so a heal needs nothing beyond
-    the tmp itself. Every step is idempotent:
-
-        1. drop manifest rows for the affected files (expire ordering)
-        2. delete the affected files (skip already-gone)
-        3. append the survivors NOT already present — content_hash is
-           unique corpus-wide (within-batch exact dedup + history_exact
-           guarantee it), so presence is exact membership and a torn
-           append can never double a row
-        4. reconcile manifests (replacement files get statted)
-        5. certify: every survivor present, none duplicated; then drop
-           the tmp (the takedown is fully applied)
-
-    Returns (n_files_deleted, n_rows_appended)."""
-    corpus_root = f"{root}/corpus"
-    batch_dir = f"{corpus_root}/batch={batch_id}"
+    """One certified takedown rewrite of a batch's corpus dir through
+    ``corpus_takedown/batch=<id>`` (``delete_content`` docstring has the
+    tmp layout and the apply steps). Returns (n_files_deleted,
+    n_rows_appended)."""
+    batch_dir = f"{root}/corpus/batch={batch_id}"
+    tmp = f"{root}/{_TAKEDOWN_TMP}/batch={batch_id}"
     if not exists(batch_dir):
         # the batch's payload was expired wholesale after this tmp was
         # written — a strictly stronger delete already happened; the
         # manifests dropped the batch's rows at expire time
-        delete(tmp_dir)
+        delete(tmp)
         return 0, 0
-    tmp = spark.read.schema(_TAKEDOWN_SCHEMA).parquet(tmp_dir)
-    affected = sorted(
-        r["src_file"] for r in tmp.select("src_file").distinct().collect()
-    )
-    _drop_manifest_rows(spark, root, F.col("file").isin(affected))
-    n_del = 0
-    for p in affected:
-        if exists(p):
-            delete(p)
-            n_del += 1
-    survivors = tmp.where(F.col("content_hash").isNotNull()).select(
-        "doc_id", "url", "text", "content_hash", "n_chars"
-    )
-    current = spark.read.schema(CORPUS_SCHEMA).parquet(batch_dir)
-    # materialize before the self-append: the anti-join must evaluate
-    # against the PRE-append file listing exactly once
-    missing = survivors.join(
-        current.select("content_hash"), on="content_hash", how="left_anti"
-    ).localCheckpoint(eager=True)
-    n_add = missing.count()
-    if n_add:
-        missing.select(
-            "doc_id", "url", "text", "content_hash", "n_chars"
-        ).write.mode("append").parquet(batch_dir)
-    _reconcile_manifests(spark, root)
-    got = spark.read.schema(CORPUS_SCHEMA).parquet(batch_dir)
-    n_lost = survivors.join(
-        got.select("content_hash"), on="content_hash", how="left_anti"
-    ).count()
-    n_dup = (
-        got.groupBy("content_hash").count().where(F.col("count") > 1).count()
-    )
-    if n_lost or n_dup:
-        raise RuntimeError(
-            f"takedown apply certificate failed for batch {batch_id!r}: "
-            f"{n_lost} survivors lost, {n_dup} duplicated hashes "
-            f"(certified tmp kept at {tmp_dir})"
+    n_del = n_add = 0
+
+    def survivors(path: str) -> DataFrame:
+        return (
+            spark.read.schema(_TAKEDOWN_SCHEMA)
+            .parquet(path)
+            .where(F.col("content_hash").isNotNull())
+            .select(*_CORPUS_COLS)
         )
-    delete(tmp_dir)
+
+    def apply(path: str) -> DataFrame:
+        nonlocal n_del, n_add
+        affected = sorted(
+            r["src_file"]
+            for r in spark.read.schema(_TAKEDOWN_SCHEMA)
+            .parquet(path).select("src_file").distinct().collect()
+        )
+        _drop_manifest_rows(spark, root, F.col("file").isin(affected))
+        for p in affected:
+            if exists(p):
+                delete(p)
+                n_del += 1
+        keep = survivors(path)
+        # materialize before the self-append: the anti-join must
+        # evaluate against the PRE-append file listing exactly once
+        missing = keep.join(
+            spark.read.schema(CORPUS_SCHEMA).parquet(batch_dir)
+            .select("content_hash"),
+            on="content_hash",
+            how="left_anti",
+        ).localCheckpoint(eager=True)
+        n_add = missing.count()
+        if n_add:
+            missing.select(*_CORPUS_COLS).write.mode("append").parquet(batch_dir)
+        _reconcile_manifests(spark, root)
+        got = spark.read.schema(CORPUS_SCHEMA).parquet(batch_dir)
+        n_dup = got.groupBy("content_hash").count().where(F.col("count") > 1).count()
+        if n_dup:
+            raise RuntimeError(
+                f"takedown left {n_dup} duplicated hashes in batch "
+                f"{batch_id!r} (certified tmp kept at {path})"
+            )
+        return got.join(keep.select("content_hash"), on="content_hash", how="left_semi")
+
+    certified_rewrite(tmp, survivors, "content_hash", apply, stage)
     return n_del, n_add
 
 
-def _apply_shard_tmp(
-    spark: SparkSession, root: str, batch_id: str, tmp_dir: str
+def _rewrite_shards(
+    spark: SparkSession, root: str, batch_id: str, stage=None
 ) -> None:
-    """Copy-back a certified shard tmp over the real shard dir. The tmp
-    is only deleted after the rewritten dir's content signature matches,
-    so a torn overwrite heals by re-entering here."""
+    """One certified shard-purge rewrite of a batch's JSONL shards
+    through ``shards_takedown/batch=<id>``."""
     sdir = f"{root}/shards/batch={batch_id}"
-    tmp = spark.read.schema(_SHARD_SCHEMA).json(tmp_dir)
-    want = content_signature(tmp, key_col="content_hash")
-    write_training_shards(
-        tmp, sdir, text_col="text", meta_cols=("url", "content_hash")
-    )
-    got = spark.read.schema(_SHARD_SCHEMA).json(sdir)
-    if content_signature(got, key_col="content_hash") != want:
-        raise RuntimeError(
-            f"shard takedown copy-back signature mismatch for batch "
-            f"{batch_id!r} (certified tmp kept at {tmp_dir})"
+
+    def read(path: str) -> DataFrame:
+        return spark.read.schema(_SHARD_SCHEMA).json(path)
+
+    def apply(path: str) -> DataFrame:
+        write_training_shards(
+            read(path), sdir, text_col="text", meta_cols=("url", "content_hash")
         )
-    delete(tmp_dir)
+        return read(sdir)
+
+    certified_rewrite(
+        f"{root}/{_SHARD_TMP}/batch={batch_id}", read, "content_hash", apply, stage
+    )
 
 
 def delete_content(
@@ -1087,19 +1056,30 @@ def delete_content(
     granularity — ``locate_content`` opens only the survivor files, and
     only the files that actually HOLD target rows are rewritten (a
     10^6-file corpus rewrites a handful; untouched files are never read
-    or written). Per affected batch, the protocol is a certified
-    self-describing tmp (``corpus_takedown/batch=<id>``: survivor rows
-    + one sentinel row per affected file) applied by
-    ``_apply_takedown_tmp`` — object-store-safe (no rename), idempotent
-    at every step, and healed on entry: any complete tmp left by a torn
+    or written). Per affected batch, the rewrite is one
+    ``checkpoint.certified_rewrite`` through a self-describing tmp
+    (``corpus_takedown/batch=<id>``: every row of the affected files,
+    each target row a stub with only ``src_file`` set, so the tmp names
+    every affected file) — object-store-safe (no rename), idempotent at
+    every step, and healed on entry: any complete tmp left by a torn
     prior call is finished FIRST, using nothing but the tmp itself.
+    Applying a tmp is itself idempotent:
+
+        1. drop manifest rows for the affected files (expire ordering)
+        2. delete the affected files (skip already-gone)
+        3. append the survivors NOT already present — content_hash is
+           unique corpus-wide (within-batch exact dedup + history_exact
+           guarantee it), so presence is exact membership and a torn
+           append can never double a row
+        4. reconcile manifests (replacement files get statted); refuse
+           a batch dir holding any content_hash twice
 
     Dedup memory is deliberately KEPT: the deleted content's hash stays
     in the ``seen`` table and its bands stay in the MinHash index, so
     the content can never re-enter the corpus through a later crawl — a
     takedown tombstone (pinned in tests). Shard purge (``purge_shards``)
     rewrites the affected batches' JSONL shards batch-granularly
-    (count+signature certified, two-phase through
+    (signature certified, the same primitive through
     ``shards_takedown/batch=<id>``); a crash between the corpus apply
     and the shard rewrite is completed by RETRYING the takedown with the
     same hashes (the corpus half no-ops, the shard half still sees the
@@ -1112,9 +1092,8 @@ def delete_content(
     if not hashes:
         raise ValueError("hashes must be non-empty")
     targets = sorted({str(h) for h in hashes})
+    hit = F.col("content_hash").isin(targets)
     root = state_dir.rstrip("/")
-    tk_root = f"{root}/corpus_takedown"
-    sh_tk_root = f"{root}/shards_takedown"
     healed: list[str] = []
     n_files_deleted = 0
     n_rows_rewritten = 0
@@ -1122,17 +1101,16 @@ def delete_content(
     n_shards = 0
 
     # -- heal: finish any certified tmp a torn prior call left ---------
-    for bid, d in sorted(committed_dirs(tk_root).items()):
-        nd, nr = _apply_takedown_tmp(spark, root, bid, d)
+    for bid in sorted(committed_dirs(f"{root}/{_TAKEDOWN_TMP}")):
+        nd, nr = _rewrite_corpus(spark, root, bid)
         n_files_deleted += nd
         n_rows_rewritten += nr
         healed.append(bid)
         batches.add(bid)
-    for bid, d in sorted(committed_dirs(sh_tk_root).items()):
-        _apply_shard_tmp(spark, root, bid, d)
+    for bid in sorted(committed_dirs(f"{root}/{_SHARD_TMP}")):
+        _rewrite_shards(spark, root, bid)
         n_shards += 1
-        if bid not in healed:
-            healed.append(bid)
+        healed.append(bid)
 
     # -- locate current targets (Bloom-bounded file set) ---------------
     located, _k, _t = locate_content(spark, root, targets)
@@ -1150,57 +1128,24 @@ def delete_content(
             )
         by_batch.setdefault(m.group(1), set()).add(r["file"])
 
-    # -- per affected batch: write the certified tmp, then apply -------
+    # -- per affected batch: stage the certified tmp, then apply -------
     for bid in sorted(by_batch):
-        affected = sorted(by_batch[bid])
-        tmp_dir = f"{tk_root}/batch={bid}"
         src = (
             spark.read.schema(CORPUS_SCHEMA)
-            .parquet(*affected)
+            .parquet(*sorted(by_batch[bid]))
             .withColumn("src_file", F.input_file_name())
         )
-        survivors_src = src.where(~F.col("content_hash").isin(targets))
-        want = content_signature(survivors_src, key_col="content_hash")
-        # sentinels make the tmp self-describing even for files whose
-        # every row is deleted; bounded literal dim via range+explode
-        # (repo invariant: never createDataFrame(list))
-        sentinels = (
-            spark.range(1)
-            .select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(None).cast("bigint").alias("doc_id"),
-                                F.lit(None).cast("string").alias("url"),
-                                F.lit(None).cast("string").alias("text"),
-                                F.lit(None).cast("string").alias(
-                                    "content_hash"
-                                ),
-                                F.lit(None).cast("bigint").alias("n_chars"),
-                                F.lit(p).alias("src_file"),
-                            )
-                            for p in affected
-                        ]
-                    )
-                ).alias("r")
-            )
-            .select("r.*")
-        )
-        survivors_src.select(
-            "doc_id", "url", "text", "content_hash", "n_chars", "src_file"
-        ).unionByName(sentinels).write.mode("overwrite").parquet(tmp_dir)
-        got = (
-            spark.read.schema(_TAKEDOWN_SCHEMA)
-            .parquet(tmp_dir)
-            .where(F.col("content_hash").isNotNull())
-        )
-        if content_signature(got, key_col="content_hash") != want:
-            raise RuntimeError(
-                f"takedown tmp signature mismatch for batch {bid!r}; "
-                f"source files untouched"
-            )
-        nd, nr = _apply_takedown_tmp(spark, root, bid, tmp_dir)
+
+        def stage_corpus(path: str) -> DataFrame:
+            # a deleted row keeps only src_file: every affected file holds
+            # a target row, so the tmp names each file it replaces
+            src.select(
+                *[F.when(~hit, F.col(c)).alias(c) for c in _CORPUS_COLS],
+                "src_file",
+            ).write.mode("overwrite").parquet(path)
+            return src.where(~hit)
+
+        nd, nr = _rewrite_corpus(spark, root, bid, stage_corpus)
         n_files_deleted += nd
         n_rows_rewritten += nr
         batches.add(bid)
@@ -1212,25 +1157,17 @@ def delete_content(
             if not exists(sdir):
                 continue
             cur = spark.read.schema(_SHARD_SCHEMA).json(sdir)
-            n_before = cur.count()
-            n_hit = cur.where(F.col("content_hash").isin(targets)).count()
-            if n_hit == 0:
+            if cur.where(hit).count() == 0:
                 continue
-            tmp_dir = f"{sh_tk_root}/batch={bid}"
-            write_training_shards(
-                cur.where(~F.col("content_hash").isin(targets)),
-                tmp_dir,
-                text_col="text",
-                meta_cols=("url", "content_hash"),
-            )
-            n_tmp = spark.read.schema(_SHARD_SCHEMA).json(tmp_dir).count()
-            if n_tmp != n_before - n_hit:
-                raise RuntimeError(
-                    f"shard takedown tmp row count mismatch for batch "
-                    f"{bid!r} ({n_tmp} != {n_before} - {n_hit}); real "
-                    f"shards untouched"
+
+            def stage_shards(path: str) -> DataFrame:
+                write_training_shards(
+                    cur.where(~hit), path, text_col="text",
+                    meta_cols=("url", "content_hash"),
                 )
-            _apply_shard_tmp(spark, root, bid, tmp_dir)
+                return cur.where(~hit)
+
+            _rewrite_shards(spark, root, bid, stage_shards)
             n_shards += 1
 
     # -- final certificate: no target row anywhere in the corpus -------

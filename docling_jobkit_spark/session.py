@@ -7,9 +7,12 @@ timestamps round-trip deterministically.
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -26,6 +29,13 @@ def _memory_mb(size: str) -> int:
     if m is None:
         raise ValueError(f"not a Spark memory size: {size!r}")
     return int(m[1]) * _MEMORY_UNITS[m[2]] // 2**20
+
+
+def _remove_app_dir(sc: SparkContext, app_dir: str) -> None:
+    """Stop the app (its executors exit with it; a no-op when already
+    stopped), then delete its executor directory."""
+    sc.stop()
+    shutil.rmtree(app_dir, ignore_errors=True)
 
 
 def get_spark(
@@ -54,7 +64,10 @@ def get_spark(
     threads inside ONE fixed heap (measured: per-doc JVM CPU inflates with
     thread count under local[N]; see BENCH.md round-5 scaling notes).
     Executor JVMs get the same GC profile as the tuned driver, sized to
-    their own core count.
+    their own core count. Spark's local cluster gives its workers no work
+    dir, so executors write under ``$SPARK_HOME/work/<app id>``, inside
+    the Spark installation; the driver stops the app and removes that
+    directory when it exits.
 
     Every session, in either mode, forks its Python workers from
     ``docling_jobkit_spark.pyworker`` instead of ``pyspark.daemon``, and
@@ -147,5 +160,11 @@ def get_spark(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    if sc.master.startswith("local-cluster"):
+        home = sc._jvm.System.getenv("SPARK_HOME")  # the workers' home
+        atexit.register(
+            _remove_app_dir, sc, os.path.join(home, "work", sc.applicationId)
+        )
     return spark

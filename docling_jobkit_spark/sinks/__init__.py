@@ -1,7 +1,4 @@
 from docling_jobkit_spark.sinks.writers import (  # noqa: F401
-    write_results,
-    write_manifest,
     write_bucketed,
     write_training_shards,
-    MAX_FILE_BYTES,
 )

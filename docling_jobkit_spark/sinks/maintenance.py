@@ -32,9 +32,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from docling_jobkit_spark.checkpoint import _fs, _url_hash_sum
+from docling_jobkit_spark.checkpoint import _fs, content_signature  # noqa: F401
 
 
 @dataclass(frozen=True)
@@ -70,9 +70,9 @@ def compact_files(
     """Rewrite ``src_path``'s parquet fragments into ~``target_file_bytes``
     files at ``dst_path`` with no shuffle, and return before/after stats.
 
-    The caller verifies content equality (the checkpoint-manifest
-    signature pattern: row count + key-hash sum) — compaction must be a
-    pure layout change."""
+    The caller certifies content equality (``checkpoint.
+    certified_rewrite``: row count + key-hash sum) — compaction must be
+    a pure layout change."""
     files = _list_parquet_files(spark, src_path)
     bytes_before = sum(b for _, b in files)
 
@@ -114,20 +114,3 @@ def compact_files(
         bytes_before=bytes_before,
         n_rows=n_rows,
     )
-
-
-def content_signature(df: DataFrame, key_col: str = "url") -> tuple[int, int]:
-    """(n_rows, order-insensitive key-hash sum) — checkpoint.py's
-    manifest signature (``_url_hash_sum``: 56-bit sha prefixes summed as
-    decimal(38,0), overflow-proof to 10^12 rows, null-guarded because
-    ``F.sum`` silently drops NULL terms). Equal signatures across a
-    rewrite certify the layout change moved every row exactly once."""
-    from pyspark.sql import functions as F
-
-    keyed = df.select(F.col(key_col).cast("string").alias("url"))
-    row = keyed.agg(
-        F.count("*").alias("n"),
-        # empty input: F.sum is NULL, the signature of nothing is 0
-        F.coalesce(_url_hash_sum(), F.lit(0).cast("decimal(38,0)")).alias("sig"),
-    ).collect()[0]
-    return int(row["n"]), int(row["sig"])

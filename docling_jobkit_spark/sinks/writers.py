@@ -6,105 +6,18 @@ free: it accumulates rows in pandas, splits files at 500 MB
 parquet`` and writes a JSON manifest listing filenames + document hashes
 (``results_processor.py:372-452``).
 
-Spark-first: one ``DataFrameWriter`` with ``maxRecordsPerFile`` /
-``write.target-file-size-bytes`` (Iceberg) for the size cap, directory
-layout via ``partitionBy``, and a manifest derived FROM the committed
-files (never a second source of truth). With an Iceberg catalog the
-manifest is the snapshot; this parquet fallback mirrors the reference's
-own layout exactly.
+Spark-first: extraction results are published by ``checkpoint.
+CommitLog`` — data files to a unique path, then one conditional
+manifest PUT per commit group — so this module holds no second
+manifest publisher. What remains are the layouts downstream readers
+need: a bucketed table for repeated co-located joins, and size-capped
+JSONL training shards (``maxRecordsPerFile`` plays the 500 MB cap's
+role without buffering anything in memory).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from docling_jobkit_spark.checkpoint import put_if_absent
-
-MAX_FILE_BYTES = 500 * 1024 * 1024  # reference cap: results_processor.py:29
-
-
-def write_results(
-    results: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    max_records_per_file: int | None = 50_000,
-    mode: str = "overwrite",
-) -> None:
-    """Write the results table with a file-size discipline.
-
-    ``maxRecordsPerFile`` plays the 500 MB cap's role (rows are
-    bounded-size after admission, so a record cap bounds file bytes
-    without buffering anything in memory — unlike the reference's
-    accumulate-then-split loop).
-    """
-    writer = results.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_manifest(spark: SparkSession, results_path: str, manifest_path: str) -> dict:
-    """JSON manifest of the committed output: per-file row counts and
-    the set of document hashes — derived from the files themselves
-    (the reference builds the same manifest at upload time,
-    ``results_processor.py:372-452``)."""
-    df = spark.read.parquet(results_path)
-    per_file = (
-        df.groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.when(F.col("status") == "SUCCESS", 1).otherwise(0)).alias("n_ok"),
-        )
-        .collect()
-    )
-    manifest = {
-        "created_at": time.time(),
-        "results_path": results_path,
-        "n_files": len(per_file),
-        "files": [
-            {"file": r["file"], "n_rows": r["n_rows"], "n_ok": r["n_ok"]}
-            for r in sorted(per_file, key=lambda r: r["file"])
-        ],
-        "total_rows": int(sum(r["n_rows"] for r in per_file)),
-    }
-    os.makedirs(os.path.dirname(manifest_path), exist_ok=True)
-    payload = json.dumps(manifest, indent=1).encode()
-    # single conditional object PUT — first terminal state wins, and the
-    # primitive exists on object stores (no rename; see checkpoint.py).
-    # Concurrent committers derive IDENTICAL file lists from the same
-    # directory, so losing the race and returning the winner's manifest
-    # is correct — but a manifest whose file list no longer matches the
-    # directory is STALE (the data was re-written with mode=overwrite
-    # after it was sealed) and must be replaced, not returned: keeping
-    # it would describe deleted files with the old run's row counts.
-    if not put_if_absent(manifest_path, payload):
-        with open(manifest_path) as f:
-            existing = json.load(f)
-        if [f_["file"] for f_ in existing["files"]] == [
-            f_["file"] for f_ in manifest["files"]
-        ]:
-            return existing
-        # Stale-manifest replacement must match the publish discipline of
-        # put_if_absent: write the payload to a tmp name and atomically
-        # rename over the manifest (atomic replace on POSIX ≡ an
-        # unconditional PUT on object stores). A plain truncate+write
-        # here would let a concurrent reader (or a crash mid-write)
-        # observe a torn/empty manifest — the exact failure the
-        # conditional-PUT path exists to prevent. Concurrent re-writers
-        # each publish a complete payload; last-PUT-wins is fine because
-        # both describe the same (current) directory listing.
-        tmp_path = f"{manifest_path}.tmp.{os.getpid()}.{time.time_ns()}"
-        with open(tmp_path, "wb") as f:
-            f.write(payload)
-        os.rename(tmp_path, manifest_path)
-    return manifest
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(

@@ -105,6 +105,78 @@ def test_create_if_absent_branch(spark, tmp_path):
     assert read_bytes(str(tmp_path / "absent.json")) is None
 
 
+def _rewrite_io(spark, tmp_path):
+    """(read, apply into ``dst``) over plain parquet dirs keyed on url."""
+    dst = str(tmp_path / "dst")
+
+    def read(path):
+        return spark.read.schema("url string, extracted_text string").parquet(path)
+
+    def apply(path):
+        read(path).write.mode("overwrite").parquet(dst)
+        return read(dst)
+
+    return read, apply, dst
+
+
+def test_certified_rewrite_finishes_complete_tmp_without_staging(spark, tmp_path):
+    """A complete tmp on entry is the certified heal copy: it is applied
+    as-is, ``stage`` never runs, and the call reports True."""
+    from docling_jobkit_spark.checkpoint import certified_rewrite, exists
+
+    read, apply, dst = _rewrite_io(spark, tmp_path)
+    tmp = str(tmp_path / "tmp")
+    _df(spark, ["a", "b", "c"]).write.parquet(tmp)
+
+    def stage(path):
+        raise AssertionError("stage must not run over a complete tmp")
+
+    assert certified_rewrite(tmp, read, "url", apply, stage) is True
+    assert sorted(r["url"] for r in read(dst).collect()) == ["a", "b", "c"]
+    assert not exists(tmp)
+
+
+def test_certified_rewrite_landing_mismatch_keeps_tmp(spark, tmp_path):
+    """What landed differs from the certified tmp: raise and keep the tmp
+    (the only intact copy); a plain re-run heals from it."""
+    from docling_jobkit_spark.checkpoint import certified_rewrite, exists
+
+    read, apply, dst = _rewrite_io(spark, tmp_path)
+    tmp = str(tmp_path / "tmp")
+    src = _df(spark, ["a", "b", "c"]).localCheckpoint(eager=True)
+
+    def stage(path):
+        src.write.parquet(path)
+        return src
+
+    def torn_apply(path):
+        read(path).where("url != 'b'").write.mode("overwrite").parquet(dst)
+        return read(dst)
+
+    with pytest.raises(RuntimeError, match="kept"):
+        certified_rewrite(tmp, read, "url", torn_apply, stage)
+    assert exists(f"{tmp}/_SUCCESS")
+    assert certified_rewrite(tmp, read, "url", apply) is True
+    assert sorted(r["url"] for r in read(dst).collect()) == ["a", "b", "c"]
+
+
+def test_certified_rewrite_deletes_tmp_failing_its_certificate(spark, tmp_path):
+    """A tmp that does not match its source is deleted before the raise,
+    so no later call can apply it as a heal copy."""
+    from docling_jobkit_spark.checkpoint import certified_rewrite, exists
+
+    read, apply, dst = _rewrite_io(spark, tmp_path)
+    tmp = str(tmp_path / "tmp")
+
+    def lossy_stage(path):
+        _df(spark, ["a", "b"]).write.parquet(path)
+        return _df(spark, ["a", "b", "c"])
+
+    with pytest.raises(RuntimeError, match="source untouched"):
+        certified_rewrite(tmp, read, "url", apply, lossy_stage)
+    assert not exists(tmp) and not exists(dst)
+
+
 def test_no_rename_in_commit_path():
     """The object-store-safety property itself: the commit module must not
     rely on rename/move primitives (atomic on POSIX, nonexistent on object
@@ -113,21 +185,27 @@ def test_no_rename_in_commit_path():
     import inspect
 
     import docling_jobkit_spark.checkpoint as cp
+    import docling_jobkit_spark.sinks.maintenance as maintenance
+    import docling_jobkit_spark.sinks.writers as writers
 
-    src = inspect.getsource(cp)
-    for banned in ("os.rename", "os.replace", "shutil.move"):
-        assert banned not in src, f"commit path uses {banned}"
+    for mod in (cp, maintenance, writers):
+        src = inspect.getsource(mod)
+        for banned in ("os.rename", "os.replace", "shutil.move"):
+            assert banned not in src, f"{mod.__name__} uses {banned}"
 
 
 def test_storage_goes_through_hadoop_fs():
-    """Commit, streaming sketch state and ingest touch storage only
-    through checkpoint.py's Hadoop-FS primitives, so every scheme behaves
-    alike. The one POSIX exception is put_if_absent's ``file``-scheme
-    branch (``_link_if_absent``): Hadoop's local create is not atomic."""
+    """Commit, streaming sketch state, ingest and the sinks touch storage
+    only through checkpoint.py's Hadoop-FS primitives, so every scheme
+    behaves alike. The one POSIX exception is put_if_absent's
+    ``file``-scheme branch (``_link_if_absent``): Hadoop's local create
+    is not atomic."""
     import inspect
 
     import docling_jobkit_spark.checkpoint as cp
     import docling_jobkit_spark.plans.ingest as ingest
+    import docling_jobkit_spark.sinks.maintenance as maintenance
+    import docling_jobkit_spark.sinks.writers as writers
     import docling_jobkit_spark.streaming.pipeline as streaming
 
     sources = {
@@ -136,6 +214,8 @@ def test_storage_goes_through_hadoop_fs():
         ),
         "plans/ingest.py": inspect.getsource(ingest),
         "streaming/pipeline.py": inspect.getsource(streaming),
+        "sinks/maintenance.py": inspect.getsource(maintenance),
+        "sinks/writers.py": inspect.getsource(writers),
     }
     banned = (
         "os.listdir", "os.path.isdir", "os.path.exists", "os.makedirs",
@@ -144,54 +224,6 @@ def test_storage_goes_through_hadoop_fs():
     for name, src in sources.items():
         for call in banned:
             assert call not in src, f"{name} uses {call}"
-
-
-def test_sink_manifest_is_conditional_put(spark, tmp_path):
-    """write_manifest publishes with the same no-rename conditional PUT:
-    a second writer gets the FIRST manifest back, unmodified."""
-    from pyspark.sql import functions as F
-
-    from docling_jobkit_spark.sinks import write_manifest, write_results
-
-    out = str(tmp_path / "res")
-    write_results(_df(spark, ["a"]).withColumn("status", F.lit("SUCCESS")), out)
-    mpath = str(tmp_path / "manifest" / "m.json")
-    m1 = write_manifest(spark, out, mpath)
-    m2 = write_manifest(spark, out, mpath)
-    assert m1 == m2
-    assert m1["total_rows"] == 1
-
-
-def test_stale_manifest_replaced_atomically(spark, tmp_path):
-    """When the data directory is re-written after the manifest was
-    sealed, write_manifest must REPLACE the stale manifest — via
-    tmp+rename (atomic replace ≡ unconditional PUT), never a truncate+
-    write a concurrent reader could observe torn — and leave no tmp
-    residue."""
-    from pyspark.sql import functions as F
-
-    from docling_jobkit_spark.sinks import write_manifest, write_results
-
-    out = str(tmp_path / "res")
-    write_results(_df(spark, ["a"]).withColumn("status", F.lit("SUCCESS")), out)
-    mpath = str(tmp_path / "manifest" / "m.json")
-    m1 = write_manifest(spark, out, mpath)
-    # re-write the data (overwrite): old manifest is now stale
-    write_results(
-        _df(spark, ["a", "b", "c"]).withColumn("status", F.lit("SUCCESS")), out
-    )
-    m2 = write_manifest(spark, out, mpath)
-    assert m2["total_rows"] == 3 and m1["total_rows"] == 1
-    with open(mpath) as f:
-        assert json.load(f)["total_rows"] == 3
-    assert os.listdir(str(tmp_path / "manifest")) == ["m.json"], "tmp residue"
-    # the replacement discipline is tmp+atomic-rename, not truncate+write
-    import inspect
-
-    import docling_jobkit_spark.sinks.writers as w
-
-    src = inspect.getsource(w.write_manifest)
-    assert "os.rename(tmp_path, manifest_path)" in src
 
 
 def test_remaining_pages_prunes_committed_groups(spark, tmp_path):
@@ -326,32 +358,6 @@ def test_url_hash_sum_null_guarded(spark, tmp_path):
     plan = remaining._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, "NULL url must not break the steady state"
     assert {r["url"] for r in remaining.collect()} == {"u2"}
-
-
-def test_sink_manifest_refreshes_after_overwrite(spark, tmp_path):
-    """A manifest sealed for run 1 must be REPLACED, not returned, when
-    the results were re-written with mode=overwrite: the old manifest
-    describes deleted files with stale counts."""
-    from pyspark.sql import functions as F
-
-    from docling_jobkit_spark.sinks import write_manifest, write_results
-
-    out = str(tmp_path / "res")
-    mpath = str(tmp_path / "manifest" / "m.json")
-    write_results(_df(spark, ["a"]).withColumn("status", F.lit("SUCCESS")), out)
-    m1 = write_manifest(spark, out, mpath)
-    assert m1["total_rows"] == 1
-
-    write_results(
-        _df(spark, ["b", "c"]).withColumn("status", F.lit("SUCCESS")), out
-    )
-    m2 = write_manifest(spark, out, mpath)
-    assert m2["total_rows"] == 2
-    import json as _json
-
-    with open(mpath) as f:
-        on_disk = _json.load(f)
-    assert on_disk["total_rows"] == 2  # the stale manifest was replaced
 
 
 def test_training_shards_round_trip(spark, tmp_path):

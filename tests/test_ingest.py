@@ -448,6 +448,48 @@ def test_compact_ingest_batch_refuses_uncommitted(spark, sf_dir, tmp_path):
         compact_ingest_batch(spark, str(tmp_path / "nostate"), "nope")
 
 
+def test_failed_tmp_certificate_is_never_healed(spark, sf_dir, tmp_path, monkeypatch):
+    """A compaction tmp that lost a data file fails its certificate and
+    is deleted before the raise: the plain retry compacts from the
+    intact source instead of applying the short tmp as a heal copy."""
+    import docling_jobkit_spark.sinks.maintenance as maintenance
+    from docling_jobkit_spark.plans.ingest import CORPUS_SCHEMA, compact_ingest_batch
+    from docling_jobkit_spark.sinks.maintenance import (
+        _list_parquet_files,
+        content_signature,
+    )
+
+    root = str(tmp_path / "state")
+    a, _ = _batch_a(spark, sf_dir)
+    ingest_batch(spark, a, root, "c1", config=CFG)
+    src = f"{root}/corpus/batch=c1"
+    _fragment(spark, src)
+    # several output files, so the lost one is a part of the batch
+    target = max(1, sum(b for _, b in _list_parquet_files(spark, src)) // 4)
+
+    def corpus_sig():
+        return content_signature(
+            spark.read.schema(CORPUS_SCHEMA).parquet(src), key_col="content_hash"
+        )
+
+    want = corpus_sig()
+    real = maintenance.compact_files
+
+    def lossy(spark_, src_path, dst_path, *args, **kwargs):
+        stats = real(spark_, src_path, dst_path, *args, **kwargs)
+        if "/corpus_compact/" in dst_path:
+            files = _list_parquet_files(spark_, dst_path)
+            delete(max(files, key=lambda f: f[1])[0])
+        return stats
+
+    monkeypatch.setattr(maintenance, "compact_files", lossy)
+    with pytest.raises(RuntimeError, match="source untouched"):
+        compact_ingest_batch(spark, root, "c1", target_file_bytes=target)
+    monkeypatch.setattr(maintenance, "compact_files", real)
+    compact_ingest_batch(spark, root, "c1", target_file_bytes=target)
+    assert corpus_sig() == want
+
+
 def test_ingest_state_report(spark, state):
     from docling_jobkit_spark.plans.ingest import ingest_state_report
     from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
@@ -969,6 +1011,37 @@ def test_delete_content_heals_torn_apply(spark, sf_dir, tmp_path):
     assert got.where(F.col("content_hash").isin(t_c)).count() == 0
     assert _sig()[0] == want_n  # nothing re-appended
     assert got.groupBy("content_hash").count().where("count > 1").count() == 0
+
+
+def test_delete_content_heals_shard_tmp(spark, sf_dir, tmp_path):
+    """A complete shard tmp left by a torn purge after the shard dir was
+    deleted (the copy-back's delete-then-write window): the next
+    delete_content restores the shard rows from the tmp."""
+    from docling_jobkit_spark.plans.ingest import _SHARD_SCHEMA, delete_content
+    from docling_jobkit_spark.sinks.writers import write_training_shards
+
+    root, _cfg, _res = _takedown_state(spark, sf_dir, tmp_path)
+    sdir = f"{root}/shards/batch=2026-01"
+    tmp = f"{root}/shards_takedown/batch=2026-01"
+
+    def rows(path):
+        return sorted(
+            tuple(r) for r in spark.read.schema(_SHARD_SCHEMA).json(path).collect()
+        )
+
+    shards = spark.read.schema(_SHARD_SCHEMA).json(sdir)
+    target = shards.orderBy("content_hash").limit(1).collect()[0]["content_hash"]
+    write_training_shards(
+        shards.where(F.col("content_hash") != target), tmp,
+        text_col="text", meta_cols=("url", "content_hash"),
+    )
+    want = rows(tmp)
+    delete(sdir)
+
+    st = delete_content(spark, root, ["0" * 64])
+    assert st.healed == ("2026-01",) and st.n_shard_batches_rewritten == 1
+    assert rows(sdir) == want
+    assert not exists(tmp)
 
 
 def test_vacuum_keeps_certified_takedown_tmps(spark, tmp_path):

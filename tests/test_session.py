@@ -137,7 +137,8 @@ spark.stop()
 def test_local_cluster_extraction_matches_oracle(tmp_path):
     """Two executor JVMs: their daemons resolve pyworker through the
     shipped PYTHONPATH, rows equal the single-threaded extractor per url,
-    and tasks re-read no zip directory."""
+    tasks re-read no zip directory, and the app's executor dir under
+    ``$SPARK_HOME/work`` is gone once the driver exits."""
     from pyspark.find_spark_home import _find_spark_home
 
     from docling_jobkit_spark.corpus import generate_pages
@@ -159,6 +160,7 @@ def test_local_cluster_extraction_matches_oracle(tmp_path):
         capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
+    assert not list((home / "work").glob("app-*"))
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["master"] == "local-cluster[2,1,1024]"
 
