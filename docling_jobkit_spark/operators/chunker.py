@@ -71,32 +71,24 @@ def chunk_text(
     overlapped spans), ``has_image`` (constant False: the text extractor's
     tokenizer emits no image blocks — images produce no text).
     """
-    parsed = _parse_doc(text, spans)
-    if parsed is None:
-        return []
-    toks, page_starts, headings, all_spans = parsed
-    return _window_loop(
-        text, toks, page_starts, headings, all_spans, max_tokens, overlap
-    )
+    return _window_loop(text, *_parse_doc(text, spans), max_tokens, overlap)
 
 
 def _parse_doc(text: str, spans: list[dict] | None):
     """Shared per-doc parse: token offsets, page boundaries, sorted
-    heading/span tuples. Returns None for empty docs."""
+    heading/span tuples. A doc without tokens parses to empty lists."""
     from docling_jobkit_spark.extractor.extract import PAGE_JOIN
 
-    if not text:
-        return None
     # token offsets (start, end) in document order. \S+ matches exactly
     # str.split()'s tokens (Python re \s is Unicode-aware incl. the
     # \x1c-\x1f file separators — verified), ~3x faster than the
     # split+index scan this replaces (profiled as the post-linearization
     # hot spot).
     toks: list[tuple[int, int]] = [
-        m.span() for m in _TOKEN_RE.finditer(text)
+        m.span() for m in _TOKEN_RE.finditer(text or "")
     ]
     if not toks:
-        return None
+        return [], [], [], []
 
     # page boundary offsets
     page_starts = [0]
@@ -119,6 +111,20 @@ def _parse_doc(text: str, spans: list[dict] | None):
     return toks, page_starts, headings, all_spans
 
 
+def _check_window(max_tokens: int, overlap: int) -> None:
+    """Window parameters every chunker needs: ``1 <= max_tokens`` and
+    ``0 <= overlap < max_tokens``. A negative overlap would step past
+    tokens (silently dropping them) and ``max_tokens = 0`` would fail
+    inside the task; chunk_documents and token_window_chunks run this at
+    plan time, since a mis-configuration is a caller bug, not a
+    document row."""
+    if max_tokens < 1 or not 0 <= overlap < max_tokens:
+        raise ValueError(
+            f"need 1 <= max_tokens and 0 <= overlap < max_tokens, "
+            f"got max_tokens={max_tokens}, overlap={overlap}"
+        )
+
+
 def _window_loop(
     text: str,
     toks: list[tuple[int, int]],
@@ -128,8 +134,15 @@ def _window_loop(
     max_tokens: int,
     overlap: int,
     ci0: int = 0,
+    cost=None,
 ) -> list[dict]:
-    """The token-window sweep over one contiguous token run.
+    """The token-window sweep over one contiguous token run — the one
+    sweep of every chunking mode. Only the window END differs by mode:
+    ``cost=None`` takes ``max_tokens`` tokens; a per-token ``cost(i)``
+    extends the window greedily while the summed cost stays within
+    ``max_tokens`` (≥1 token always), and ``num_tokens`` reports that
+    sum. Each window advances by its length minus ``overlap`` tokens
+    (≥1), so fixed windows start at multiples of ``max_tokens - overlap``.
 
     Linear sweep (windows advance monotonically in lo and hi, so
     per-chunk rescans of spans/pages/headings are unnecessary — the
@@ -144,17 +157,28 @@ def _window_loop(
       (differential-tested)."""
     from bisect import bisect_right
 
-    if not toks:
-        return []
-    step = max_tokens - overlap
+    _check_window(max_tokens, overlap)
+    n = len(toks)
     chunks = []
     ci = ci0
     heading_starts = [s for s, _, _ in headings]
     span_ptr = 0
     active: list[tuple[int, int, str, str]] = []
-    for t0 in range(0, len(toks), step):
-        window = toks[t0 : t0 + max_tokens]
-        lo, hi = window[0][0], window[-1][1]
+    t0 = 0
+    while t0 < n:
+        if cost is None:
+            t1 = min(t0 + max_tokens, n)
+            num_tokens = t1 - t0
+        else:
+            num_tokens = cost(t0)
+            t1 = t0 + 1
+            while t1 < n:
+                c = cost(t1)
+                if num_tokens + c > max_tokens:
+                    break
+                num_tokens += c
+                t1 += 1
+        lo, hi = toks[t0][0], toks[t1 - 1][1]
         chunk_str = text[lo:hi]
         # all pages the chunk crosses (1-based), sorted distinct
         p_lo = bisect_right(page_starts, lo)
@@ -171,25 +195,25 @@ def _window_loop(
             active.append(all_spans[span_ptr])
             span_ptr += 1
         active = [sp for sp in active if sp[1] > lo]
-        overlapped = active
         chunks.append(
             {
                 "chunk_index": ci,
                 "text": ctx_text,
                 "raw_text": chunk_str,
-                "num_tokens": len(window),
+                "num_tokens": num_tokens,
                 "headings": [h for _, _, h in nearest],
                 "captions": [
-                    text[s:e] for s, e, kind, _ in overlapped if kind == "caption"
+                    text[s:e] for s, e, kind, _ in active if kind == "caption"
                 ],
                 "page_numbers": pages,
-                "doc_items": [p for _, _, _, p in overlapped],
+                "doc_items": [p for _, _, _, p in active],
                 "has_image": False,
             }
         )
         ci += 1
-        if t0 + max_tokens >= len(toks):
+        if t1 >= n:
             break
+        t0 += max(t1 - t0 - overlap, 1)
     return chunks
 
 
@@ -215,12 +239,9 @@ def chunk_text_hierarchical(
     ``chunk_text``. Windows restart at each boundary — the LAST window of
     a section may carry fewer than ``max_tokens`` tokens (by design:
     structure wins over window fill)."""
-    parsed = _parse_doc(text, spans)
-    if parsed is None:
-        return []
-    toks, page_starts, headings, all_spans = parsed
-
     from bisect import bisect_left
+
+    toks, page_starts, headings, all_spans = _parse_doc(text, spans)
 
     tok_starts = [s for s, _ in toks]
     # distinct heading starts define section boundaries
@@ -265,79 +286,20 @@ def chunk_text_budgeted(
 
     ``cost_fn`` is called once per distinct word (memoized here), so the
     per-doc cost is near-linear for Zipfian text."""
-    from bisect import bisect_right
-
-    parsed = _parse_doc(text, spans)
-    if parsed is None:
-        return []
-    toks, page_starts, headings, all_spans = parsed
-
+    toks, page_starts, headings, all_spans = _parse_doc(text, spans)
     memo: dict[str, int] = {}
 
     def cost(i: int) -> int:
         w = text[toks[i][0] : toks[i][1]]
         c = memo.get(w)
         if c is None:
-            c = cost_fn(w)
-            memo[w] = c
+            c = memo[w] = cost_fn(w)
         return c
 
-    chunks: list[dict] = []
-    heading_starts = [s for s, _, _ in headings]
-    span_ptr = 0
-    active: list[tuple[int, int, str, str]] = []
-    n = len(toks)
-    t0 = 0
-    ci = 0
-    while t0 < n:
-        budget = cost(t0)
-        t1 = t0 + 1
-        while t1 < n:
-            c = cost(t1)
-            if budget + c > max_tokens:
-                break
-            budget += c
-            t1 += 1
-        window = toks[t0:t1]
-        lo, hi = window[0][0], window[-1][1]
-        chunk_str = text[lo:hi]
-        p_lo = bisect_right(page_starts, lo)
-        p_hi = bisect_right(page_starts, hi - 1)
-        pages = list(range(p_lo, p_hi + 1))
-        h_idx = bisect_right(heading_starts, lo) - 1
-        nearest = [headings[h_idx]] if h_idx >= 0 else []
-        if nearest and nearest[0][1] <= lo:
-            ctx_text = nearest[0][2] + "\n" + chunk_str
-        else:
-            ctx_text = chunk_str
-        while span_ptr < len(all_spans) and all_spans[span_ptr][0] < hi:
-            active.append(all_spans[span_ptr])
-            span_ptr += 1
-        active = [sp for sp in active if sp[1] > lo]
-        chunks.append(
-            {
-                "chunk_index": ci,
-                "text": ctx_text,
-                "raw_text": chunk_str,
-                "num_tokens": budget,
-                "headings": [h for _, _, h in nearest],
-                "captions": [
-                    text[s:e] for s, e, kind, _ in active if kind == "caption"
-                ],
-                "page_numbers": pages,
-                "doc_items": [p for _, _, _, p in active],
-                "has_image": False,
-            }
-        )
-        ci += 1
-        if t1 >= n:
-            break
-        step = (t1 - t0) - overlap
-        t0 += step if step > 0 else 1
-        # NOTE on the span active-list: t0 only moves forward, so lo is
-        # nondecreasing and the enter-once/leave-permanently invariant of
-        # _window_loop holds here too
-    return chunks
+    return _window_loop(
+        text, toks, page_starts, headings, all_spans, max_tokens, overlap,
+        cost=cost,
+    )
 
 
 def _chunk_batches(
@@ -384,13 +346,7 @@ def chunk_documents(
     HybridChunker sizes chunks by what the model tokenizer counts, not
     by whitespace words; ``convert/chunking.py:109-199``). The merge
     table rides the UDF closure (a few KB per executor)."""
-    if overlap >= max_tokens:
-        # fail eagerly at plan time: a step <= 0 would otherwise surface
-        # as a TASK failure inside the UDF, against the failures-are-rows
-        # posture (mis-CONFIGURATION is a caller bug, not a document row)
-        raise ValueError(
-            f"overlap ({overlap}) must be < max_tokens ({max_tokens})"
-        )
+    _check_window(max_tokens, overlap)
     if mode == "budgeted":
         if merges is None:
             raise ValueError("mode='budgeted' requires a trained merges table")
@@ -404,6 +360,8 @@ def chunk_documents(
                 max_tokens, overlap,
             )
     else:
+        if merges is not None:
+            raise ValueError(f"merges applies only to mode='budgeted', not {mode!r}")
         try:
             chunk_fn = {
                 "window": chunk_text,
@@ -434,10 +392,7 @@ def token_window_chunks(
     final window is the first one reaching the end)."""
     from docling_jobkit_spark.functions.scalar import tokens
 
-    if overlap >= max_tokens:
-        raise ValueError(
-            f"overlap ({overlap}) must be < max_tokens ({max_tokens})"
-        )
+    _check_window(max_tokens, overlap)
     step = max_tokens - overlap
     toks = tokens(F.col(text_col))
     n = F.size(toks)

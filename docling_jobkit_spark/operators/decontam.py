@@ -28,7 +28,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import single_eval, stable_hash64, tokens
+from docling_jobkit_spark.functions.scalar import stable_hash64, tokens
+from docling_jobkit_spark.operators.minhash_index import (
+    _agreeing_pairs,
+    _per_doc,
+    banded_signatures,
+)
 
 
 def kgram_hashes(text_col, k: int) -> Column:
@@ -102,53 +107,8 @@ def contamination(
 # and the GPT-4 report decontaminate FUZZILY — flag a training document
 # when its estimated similarity to any eval sample crosses a threshold.
 # This variant estimates Jaccard from MinHash signature agreement
-# (Broder 1997), reusing dedup.py's bit-exact 64-permutation signatures
-# and r=4/b=16 LSH banding.
-
-
-def _banded(sig: DataFrame, id_alias: str, sig_alias: str) -> DataFrame:
-    """(id, sig) → (band, bucket, id, sig) — dedup.py's exact banding
-    (sha256 of the JSON band slice), one row per band."""
-    from docling_jobkit_spark.operators.dedup import BANDS, ROWS_PER_BAND
-
-    return sig.select(
-        F.col("id").alias(id_alias),
-        F.col("sig").alias(sig_alias),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(BANDS - 1)),
-                lambda b: F.sha2(
-                    F.to_json(
-                        F.slice("sig", b * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-                    ),
-                    256,
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-
-
-def _sigs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Materialized (id, sig) — empty-shingle docs dropped (all-empty
-    signatures are identical and would band-collide quadratically;
-    they cannot be fuzzy-contaminated). Filter sits ABOVE the
-    materialization (repo invariant: a pushed-down predicate re-inlines
-    the shingle chain)."""
-    from docling_jobkit_spark.operators.dedup import (
-        _materialize,
-        minhash_signature_from_shingles,
-        spread_for_compute,
-        word_shingles,
-    )
-
-    sh = _materialize(
-        spread_for_compute(df).select(
-            F.col(id_col).alias("id"), word_shingles(text_col).alias("sh")
-        )
-    ).filter(F.size("sh") > 0)
-    # one signature fold per doc, not one per band slice
-    sig = minhash_signature_from_shingles("sh")
-    return sh.select("id", single_eval(sig).alias("sig"))
+# (Broder 1997), reusing the minhash index's bit-exact 64-permutation
+# banded signatures (r=4/b=16) and its band-join probe.
 
 
 def contamination_fuzzy_pairs(
@@ -168,45 +128,15 @@ def contamination_fuzzy_pairs(
 
     Scale shape: the benchmark's banded signatures broadcast (eval sets
     are thousands of rows; ``broadcast_benchmark=False`` falls back to a
-    shuffled equi-join on the uniform sha bucket), so the corpus side is
-    scan → signature → map-side band join. Candidate pairs are
-    LSH-bounded; the verify is a zip_with over the two 64-long arrays
-    already riding the join — document text never moves."""
-    import math as _math
-
-    from docling_jobkit_spark.operators.dedup import N_HASHES
-
-    if not (0.0 < tau <= 1.0):
-        raise ValueError(f"tau must be in (0, 1], got {tau}")
-    min_agree = int(_math.ceil(N_HASHES * tau - 1e-9))
-    corpus = _banded(_sigs(df, text_col, id_col), "doc_id", "_sc")
-    bench = _banded(
-        _sigs(benchmark, bench_text_col or text_col, bench_id_col),
-        "bench_id",
-        "_sb",
-    )
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    n_agree = F.size(
-        F.filter(
-            F.zip_with("_sc", "_sb", lambda a, b: a == b), lambda x: x
-        )
-    )
-    # one agreement fold per pair: the min_agree filter would re-inline it
-    return (
-        corpus.join(bench, on=["band", "bucket"])
-        .select("doc_id", "bench_id", single_eval(n_agree.cast("int")).alias("n_agree"))
-        .where(F.col("n_agree") >= min_agree)
-        .distinct()
-        .select(
-            "doc_id",
-            "bench_id",
-            "n_agree",
-            F.round(F.col("n_agree") / F.lit(N_HASHES), 6).alias(
-                "est_jaccard"
-            ),
-        )
-    )
+    shuffled equi-join on the uniform bucket), so the corpus side is
+    scan → signature → map-side band join — the minhash index's probe
+    (``minhash_index._agreeing_pairs``) with the benchmark as the probe.
+    Document text never moves."""
+    corpus = banded_signatures(df, text_col, id_col)
+    bench = banded_signatures(benchmark, bench_text_col or text_col, bench_id_col)
+    return _agreeing_pairs(
+        bench, corpus, tau, "bench_id", "doc_id", broadcast_benchmark
+    ).select("doc_id", "bench_id", "n_agree", "est_jaccard")
 
 
 def contamination_fuzzy(
@@ -232,17 +162,4 @@ def contamination_fuzzy(
         bench_text_col,
         broadcast_benchmark,
     )
-    per_doc = pairs.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_bench_hits"),
-        F.max("est_jaccard").alias("max_est_jaccard"),
-    )
-    return (
-        df.select(F.col(id_col).alias("doc_id"))
-        .join(per_doc, on="doc_id", how="left")
-        .select(
-            "doc_id",
-            F.coalesce("n_bench_hits", F.lit(0)).alias("n_bench_hits"),
-            "max_est_jaccard",
-            F.col("n_bench_hits").isNotNull().alias("contaminated"),
-        )
-    )
+    return _per_doc(df, id_col, pairs, "n_bench_hits", "contaminated")

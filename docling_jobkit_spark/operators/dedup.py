@@ -464,27 +464,49 @@ def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return spread_for_compute(df).withColumn("minhash", minhash_signature(text_col))
 
 
-def _band_candidates(sig: DataFrame) -> DataFrame:
-    """(id, sig) → distinct candidate pairs sharing any band bucket."""
+_BUCKET_BITS = 60  # band bucket key width (sha prefix → long)
+
+
+def _minhash_bands(
+    df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The one MinHash signing and banding: ``(sh, bands)``.
+
+    ``sh`` is the materialized ``(id, sh)`` shingle table (computed ONCE,
+    so the signature fold and an exact-Jaccard verify share it) with
+    empty-shingle docs dropped: <k-token docs have all-empty signatures,
+    which are identical, collide in every band and would make a
+    quadratic candidate set; they can never be near-duplicates. The
+    filter sits ABOVE the materialization on purpose: below it, Catalyst
+    pushes the predicate under the projection and re-inlines the whole
+    shingle expression (measured ~+50% CPU for a "free" filter).
+
+    ``bands`` is ``(band, bucket, id, sig)``, one row per (doc, band) —
+    the persisted index's row shape. The bucket is the 60-bit sha256
+    prefix of the band slice's JSON, a LONG (8 bytes against 64 for the
+    hex string, per row × 16 rows per doc). A (≈2^-60) bucket collision
+    only adds a candidate, which every caller's verify removes."""
+    sh = _materialize(
+        df.select(F.col(id_col).alias("id"), word_shingles(text_col).alias("sh"))
+    ).filter(F.size("sh") > 0)
+    # one signature fold per doc, not one per band slice
+    sig = sh.select(
+        "id", single_eval(minhash_signature_from_shingles("sh")).alias("sig")
+    )
+    r = ROWS_PER_BAND
     bands = sig.select(
-        "id",
+        F.col("id"),
+        F.col("sig"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(BANDS - 1)),
-                lambda b: F.sha2(
-                    F.to_json(F.slice("sig", b * ROWS_PER_BAND + 1, ROWS_PER_BAND)), 256
+                lambda b: stable_hash64(
+                    F.to_json(F.slice("sig", b * r + 1, r)), bits=_BUCKET_BITS
                 ),
             )
         ).alias("band", "bucket"),
-    )
-    left = bands.select(F.col("band"), F.col("bucket"), F.col("id").alias("id_a"))
-    right = bands.select(F.col("band"), F.col("bucket"), F.col("id").alias("id_b"))
-    return (
-        left.join(right, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    ).select("band", "bucket", "id", "sig")
+    return sh, bands
 
 
 def minhash_near_duplicates(
@@ -511,26 +533,18 @@ def minhash_near_duplicates(
     its two redundant inner spreads)."""
     if spread:
         df = spread_for_compute(df, key=id_col)
-    sh = _materialize(
-        df.select(F.col(id_col).alias("id"), word_shingles(text_col).alias("shingles"))
+    sh, bands = _minhash_bands(df, text_col, id_col)
+    left = bands.select("band", "bucket", F.col("id").alias("id_a"))
+    right = bands.select("band", "bucket", F.col("id").alias("id_b"))
+    cands = (
+        left.join(right, on=["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
     )
-    # <k-token docs have EMPTY shingle sets; all-empty signatures are
-    # identical, so they'd collide in every band and generate a quadratic
-    # candidate set that the union>0 verify only discards AFTER the
-    # blowup. They can never be output pairs — drop them here. The filter
-    # sits ABOVE the materialization on purpose: below it, Catalyst
-    # pushes the predicate under the projection and re-inlines the whole
-    # shingle expression (measured ~+50% CPU for a "free" filter).
-    sh = sh.filter(F.size("shingles") > 0)
-    # one signature fold per doc, not one per band slice
-    sig = sh.select(
-        "id", single_eval(minhash_signature_from_shingles("shingles")).alias("sig")
-    )
-    cands = _band_candidates(sig)
-    j = (
-        cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("shingles", "sh_a"), on="id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("shingles", "sh_b"), on="id_b")
-    )
+    j = cands.join(
+        sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), on="id_a"
+    ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), on="id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     # one intersect/union per pair: the threshold filter would re-inline it

@@ -58,21 +58,21 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docling_jobkit_spark.functions.scalar import single_eval, stable_hash64
+from docling_jobkit_spark.functions.scalar import single_eval
 from docling_jobkit_spark.functions.stamp import check_stamp, read_stamp, stamp
-from docling_jobkit_spark.operators.decontam import _sigs
 from docling_jobkit_spark.operators.dedup import (
     _BASE_BITS,
+    _BUCKET_BITS,
     _PERMS,
     BANDS,
     MINHASH_PRIME,
     N_HASHES,
-    ROWS_PER_BAND,
+    _minhash_bands,
+    spread_for_compute,
 )
 
 FAMILY_META_KEY = "minhash_family"
 _SHINGLE_K = 3  # word_shingles default — part of the family identity
-_BUCKET_BITS = 60  # persisted bucket key width (sha prefix → long)
 
 
 def minhash_family_digest() -> str:
@@ -99,29 +99,11 @@ def banded_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(band, bucket, id, sig) for every doc with a non-empty shingle
-    set — the index row shape. Sub-k-token docs are dropped (their
-    all-empty signatures are identical and would band-collide with
-    every other empty doc; they cannot be near-duplicates).
-
-    The bucket is the 60-bit sha prefix of the band slice's JSON — a
-    LONG, not dedup.py's in-memory 64-hex sha string: the index is a
-    PERSISTED artifact and the bucket is its dominant column (8 bytes
-    vs 64 per row × 16 rows per doc). Candidates from a (≈2^-60)
-    bucket collision are removed by the signature-agreement verify
-    that rides the probe join anyway."""
-    r = ROWS_PER_BAND
-    return _sigs(df, text_col, id_col).select(
-        F.col("id"),
-        F.col("sig"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(BANDS - 1)),
-                lambda b: stable_hash64(
-                    F.to_json(F.slice("sig", b * r + 1, r)), bits=_BUCKET_BITS
-                ),
-            )
-        ).alias("band", "bucket"),
-    ).select("band", "bucket", "id", "sig")
+    set — the index row shape (``dedup._minhash_bands``: sub-k-token
+    docs are dropped, the bucket is the 60-bit sha prefix of the band
+    slice, a LONG — the index is a PERSISTED artifact and the bucket is
+    its dominant column)."""
+    return _minhash_bands(spread_for_compute(df), text_col, id_col)[1]
 
 
 def _stamped(banded: DataFrame) -> DataFrame:
@@ -215,6 +197,76 @@ def read_minhash_index(
     return idx
 
 
+def _agreeing_pairs(
+    probe: DataFrame,
+    target: DataFrame,
+    tau: float,
+    probe_id: str,
+    target_id: str,
+    broadcast_probe: bool,
+) -> DataFrame:
+    """The one band-join → agreement verify over two banded-signature
+    frames: ``(probe_id, target_id, n_agree, est_jaccard)`` for every pair
+    sharing an LSH band with signature agreement ≥ ceil(tau·64) channels
+    (integer compare — no float threshold ambiguity). With
+    ``broadcast_probe`` the probe's bands broadcast and the target scan
+    never shuffles; otherwise it is a shuffled equi-join on the uniform
+    (band, bucket) key. The verify is a zip_with over the two 64-long
+    arrays already riding the join — document text never moves."""
+    if not (0.0 < tau <= 1.0):
+        raise ValueError(f"tau must be in (0, 1], got {tau}")
+    min_agree = int(math.ceil(N_HASHES * tau - 1e-9))
+    probe = probe.select(
+        F.col("band"),
+        F.col("bucket"),
+        F.col("id").alias(probe_id),
+        F.col("sig").alias("_s_new"),
+    )
+    if broadcast_probe:
+        probe = F.broadcast(probe)
+    target = target.select(
+        "band", "bucket", F.col("id").alias(target_id), F.col("sig").alias("_s_idx")
+    )
+    n_agree = F.size(
+        F.filter(F.zip_with("_s_new", "_s_idx", lambda a, b: a == b), lambda x: x)
+    )
+    # one agreement fold per pair: the min_agree filter would re-inline it
+    return (
+        target.join(probe, on=["band", "bucket"])
+        .select(probe_id, target_id, single_eval(n_agree.cast("int")).alias("n_agree"))
+        .where(F.col("n_agree") >= min_agree)
+        .distinct()
+        .select(
+            probe_id,
+            target_id,
+            "n_agree",
+            F.round(F.col("n_agree") / F.lit(N_HASHES), 6).alias("est_jaccard"),
+        )
+    )
+
+
+def _per_doc(
+    docs: DataFrame, id_col: str, pairs: DataFrame, hits: str, flag: str
+) -> DataFrame:
+    """Per-doc rollup of agreeing ``pairs`` keyed by ``doc_id``: (doc_id,
+    <hits>, max_est_jaccard, <flag>) — one row per doc of ``docs``, docs
+    without a pair included (``flag`` false, ``hits`` 0)."""
+    per_doc = pairs.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("int").alias(hits),
+        F.max("est_jaccard").alias("max_est_jaccard"),
+    )
+    return (
+        docs.select(F.col(id_col).alias("doc_id"))
+        .join(per_doc, on="doc_id", how="left")
+        .select(
+            "doc_id",
+            F.coalesce(hits, F.lit(0)).alias(hits),
+            "max_est_jaccard",
+            F.col(hits).isNotNull().alias(flag),
+        )
+    )
+
+
 def near_dup_pairs_against_index(
     new_df: DataFrame,
     index: DataFrame,
@@ -226,43 +278,14 @@ def near_dup_pairs_against_index(
 ) -> DataFrame:
     """(doc_id, index_id, n_agree, est_jaccard) for every new doc ×
     indexed doc sharing an LSH band with signature agreement ≥
-    ceil(tau·64) channels (integer compare — no float threshold
-    ambiguity). ``broadcast_new=True`` is the steady-state plan: the
-    delta's bands broadcast, the index scan never shuffles.
-    ``new_banded`` (this module's ``banded_signatures`` output for
-    ``new_df``) skips re-signing when the caller already holds it."""
-    if not (0.0 < tau <= 1.0):
-        raise ValueError(f"tau must be in (0, 1], got {tau}")
-    min_agree = int(math.ceil(N_HASHES * tau - 1e-9))
+    ceil(tau·64) channels (``_agreeing_pairs``). ``broadcast_new=True``
+    is the steady-state plan: the delta's bands broadcast, the index
+    scan never shuffles. ``new_banded`` (this module's
+    ``banded_signatures`` output for ``new_df``) skips re-signing when
+    the caller already holds it."""
     if new_banded is None:
         new_banded = banded_signatures(new_df, text_col, id_col)
-    new_banded = new_banded.select(
-        F.col("band"),
-        F.col("bucket"),
-        F.col("id").alias("doc_id"),
-        F.col("sig").alias("_s_new"),
-    )
-    if broadcast_new:
-        new_banded = F.broadcast(new_banded)
-    idx = index.select(
-        "band", "bucket", F.col("id").alias("index_id"), F.col("sig").alias("_s_idx")
-    )
-    n_agree = F.size(
-        F.filter(F.zip_with("_s_new", "_s_idx", lambda a, b: a == b), lambda x: x)
-    )
-    # one agreement fold per pair: the min_agree filter would re-inline it
-    return (
-        idx.join(new_banded, on=["band", "bucket"])
-        .select("doc_id", "index_id", single_eval(n_agree.cast("int")).alias("n_agree"))
-        .where(F.col("n_agree") >= min_agree)
-        .distinct()
-        .select(
-            "doc_id",
-            "index_id",
-            "n_agree",
-            F.round(F.col("n_agree") / F.lit(N_HASHES), 6).alias("est_jaccard"),
-        )
-    )
+    return _agreeing_pairs(new_banded, index, tau, "doc_id", "index_id", broadcast_new)
 
 
 def dedup_incremental(
@@ -280,17 +303,4 @@ def dedup_incremental(
     pairs = near_dup_pairs_against_index(
         new_df, index, tau, text_col, id_col, broadcast_new, new_banded
     )
-    per_doc = pairs.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_index_hits"),
-        F.max("est_jaccard").alias("max_est_jaccard"),
-    )
-    return (
-        new_df.select(F.col(id_col).alias("doc_id"))
-        .join(per_doc, on="doc_id", how="left")
-        .select(
-            "doc_id",
-            F.coalesce("n_index_hits", F.lit(0)).alias("n_index_hits"),
-            "max_est_jaccard",
-            F.col("n_index_hits").isNotNull().alias("is_dup"),
-        )
-    )
+    return _per_doc(new_df, id_col, pairs, "n_index_hits", "is_dup")

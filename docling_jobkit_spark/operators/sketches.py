@@ -77,16 +77,17 @@ def _hash60(col) -> F.Column:
     )
 
 
-def hll_registers(df: DataFrame, col: str, p: int = 12) -> DataFrame:
-    """The HLL register table for one key column: ``(bucket, register)``
-    with at most ``2^p`` rows. bucket = top ``p`` bits of the 60-bit
+def _hll_table(df: DataFrame, col: str, p: int, group_col: str | None) -> DataFrame:
+    """The one HLL register builder: ``([grp,] bucket, register)`` with at
+    most ``2^p`` rows per group. bucket = top ``p`` bits of the 60-bit
     hash; register = max over the bucket's keys of rho(remainder) =
-    (#leading zero bits in the low ``S = 60-p`` bits) + 1.
+    (#leading zero bits in the low ``S = 60-p`` bits) + 1. Rows with a
+    null key (or null group) are dropped.
 
     Everything is whole-stage-codegen arithmetic (sha2/conv/floor/bin);
     the single groupBy is map-side combined and its key space is capped
-    at ``2^p`` — THE scale property: the shuffle is O(m), not O(n).
-    bit-length via ``length(bin(r))`` (no leading zeros in either
+    at ``2^p`` per group — THE scale property: the shuffle is O(m), not
+    O(n). bit-length via ``length(bin(r))`` (no leading zeros in either
     engine's ``bin``); ``r = 0`` (bit length 0) is special-cased because
     ``bin(0) = '0'`` has string length 1 in both engines.
     """
@@ -101,13 +102,24 @@ def hll_registers(df: DataFrame, col: str, p: int = 12) -> DataFrame:
     r = h % F.lit(1 << s_bits)
     bitlen = F.when(r == 0, F.lit(0)).otherwise(F.length(F.bin(r)))
     rho = (F.lit(s_bits) - bitlen + F.lit(1)).cast("int")
+    keep = F.col(col).isNotNull()
+    grp, by = [], []
+    if group_col is not None:
+        keep = keep & F.col(group_col).isNotNull()
+        grp, by = [F.col(group_col).alias("grp")], ["grp"]
     return (
-        df.where(F.col(col).isNotNull())
-        .select(bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy("bucket")
+        df.where(keep)
+        .select(*grp, bucket.alias("bucket"), rho.alias("rho"))
+        .groupBy(*by, "bucket")
         # register tables of different p merge into garbage: stamp p
         .agg(stamp(F.max("rho"), {"hll_p": p}, "register"))
     )
+
+
+def hll_registers(df: DataFrame, col: str, p: int = 12) -> DataFrame:
+    """The HLL register table for one key column: ``(bucket, register)``
+    with at most ``2^p`` rows (see ``_hll_table``)."""
+    return _hll_table(df, col, p, None)
 
 
 def _require_p(registers: DataFrame, p: int, where: str) -> None:
@@ -121,9 +133,12 @@ def _require_p(registers: DataFrame, p: int, where: str) -> None:
     )
 
 
-def hll_estimate(registers: DataFrame, p: int, label: str) -> DataFrame:
-    """One summary row from a register table: the HLL cardinality
-    estimate with the small-range linear-counting correction.
+def _hll_estimates(
+    registers: DataFrame, p: int, where: str, by: list[str], head: list
+) -> DataFrame:
+    """The one HLL estimator: one row per ``by`` group (one row in all
+    for ``by = []``), ``head`` columns first. The cardinality estimate
+    carries the small-range linear-counting correction.
 
     ``Z_scaled = sum(2^(S+1-reg)) + v_zero * 2^(S+1)`` is an exact
     integer (≤ 2^61, see module docstring); the raw estimate is
@@ -131,16 +146,17 @@ def hll_estimate(registers: DataFrame, p: int, label: str) -> DataFrame:
     division. When ``E_raw <= 2.5 m`` and some buckets are empty, linear
     counting ``m * ln(m / v_zero)`` is the better estimator (Flajolet
     §4); ``method`` records which branch fired so the oracle can branch
-    identically.
+    identically. The aggregation runs over the bounded register rows
+    (map-side combinable per group; nothing corpus-sized moves).
     """
-    _require_p(registers, p, "hll_estimate")
+    _require_p(registers, p, where)
     m = 1 << p
     s1 = (60 - p) + 1  # S + 1: scale exponent, also the rho=0 contribution
     alpha_m2_scaled = _alpha(p) * float(m) * float(m) * float(1 << s1)
     # shiftleft with a COLUMN bit count needs the SQL form (the pyspark
     # wrapper only accepts a literal int for numBits)
     contrib = F.expr(f"shiftleft(CAST(1 AS BIGINT), {s1} - register)")
-    agg = registers.agg(
+    agg = registers.groupBy(*by).agg(
         F.count("*").alias("n_present"),
         # coalesce: SUM over an empty register table is NULL (empty/all-
         # null input column) — the all-empty sketch must still estimate 0
@@ -152,13 +168,25 @@ def hll_estimate(registers: DataFrame, p: int, label: str) -> DataFrame:
     use_lc = (e_raw <= F.lit(2.5 * m)) & (v_zero > 0)
     e_lc = F.lit(float(m)) * F.log(F.lit(float(m)) / v_zero.cast("double"))
     return agg.select(
-        F.lit(label).alias("column"),
-        F.lit(m).alias("m"),
+        *head,
+        *by,
         v_zero.cast("int").alias("v_zero"),
         F.when(use_lc, F.lit("linear_counting"))
         .otherwise(F.lit("hll_raw"))
         .alias("method"),
         F.round(F.when(use_lc, e_lc).otherwise(e_raw), 2).alias("estimate"),
+    )
+
+
+def hll_estimate(registers: DataFrame, p: int, label: str) -> DataFrame:
+    """One summary row ``(column, m, v_zero, method, estimate)`` from a
+    register table (see ``_hll_estimates``)."""
+    return _hll_estimates(
+        registers,
+        p,
+        "hll_estimate",
+        [],
+        [F.lit(label).alias("column"), F.lit(1 << p).alias("m")],
     )
 
 
@@ -257,59 +285,22 @@ def hll_intersect_estimate(
 def hll_registers_by(
     df: DataFrame, group_col: str, col: str, p: int = 12
 ) -> DataFrame:
-    """Grouped HLL: one register table PER GROUP — ``(group, bucket,
+    """Grouped HLL: one register table PER GROUP — ``(grp, bucket,
     register)`` with at most ``2^p`` rows per group. The scale answer to
     "distinct urls per host / distinct docs per language" where an exact
     ``groupBy(g).agg(countDistinct(k))`` shuffles every (group, key)
     pair: here the shuffle is bounded by ``n_groups × 2^p`` regardless
     of corpus size, and the per-group state merges across snapshots like
-    the global sketch (``hll_merge_by``). Same hash, rho, and stamp
-    discipline as ``hll_registers``."""
-    if not 4 <= p <= 18:
-        raise ValueError(f"p must be in [4, 18], got {p}")
-    s_bits = 60 - p
-    h = _hash60(col)
-    bucket = F.shiftright(h, s_bits).cast("int")
-    r = h % F.lit(1 << s_bits)
-    bitlen = F.when(r == 0, F.lit(0)).otherwise(F.length(F.bin(r)))
-    rho = (F.lit(s_bits) - bitlen + F.lit(1)).cast("int")
-    return (
-        df.where(F.col(col).isNotNull() & F.col(group_col).isNotNull())
-        .select(
-            F.col(group_col).alias("grp"), bucket.alias("bucket"), rho.alias("rho")
-        )
-        .groupBy("grp", "bucket")
-        .agg(stamp(F.max("rho"), {"hll_p": p}, "register"))
-    )
+    the global sketch (``hll_merge_by``). Same builder as
+    ``hll_registers``; rows with a null group are dropped too."""
+    return _hll_table(df, col, p, group_col)
 
 
 def hll_estimate_by(registers: DataFrame, p: int) -> DataFrame:
-    """One estimate row per group from a ``hll_registers_by`` table —
-    identical math and branch rule to ``hll_estimate``, evaluated per
-    group (map-side-combinable aggregation over the bounded register
-    rows; nothing corpus-sized moves)."""
-    _require_p(registers, p, "hll_estimate_by")
-    m = 1 << p
-    s1 = (60 - p) + 1
-    alpha_m2_scaled = _alpha(p) * float(m) * float(m) * float(1 << s1)
-    contrib = F.expr(f"shiftleft(CAST(1 AS BIGINT), {s1} - register)")
-    agg = registers.groupBy("grp").agg(
-        F.count("*").alias("n_present"),
-        F.coalesce(F.sum(contrib), F.lit(0)).cast("long").alias("z_present"),
-    )
-    v_zero = F.lit(m) - F.col("n_present")
-    z_scaled = F.col("z_present") + v_zero * F.lit(1 << s1).cast("long")
-    e_raw = F.lit(alpha_m2_scaled) / z_scaled.cast("double")
-    use_lc = (e_raw <= F.lit(2.5 * m)) & (v_zero > 0)
-    e_lc = F.lit(float(m)) * F.log(F.lit(float(m)) / v_zero.cast("double"))
-    return agg.select(
-        F.col("grp"),
-        v_zero.cast("int").alias("v_zero"),
-        F.when(use_lc, F.lit("linear_counting"))
-        .otherwise(F.lit("hll_raw"))
-        .alias("method"),
-        F.round(F.when(use_lc, e_lc).otherwise(e_raw), 2).alias("estimate"),
-    )
+    """One ``(grp, v_zero, method, estimate)`` row per group from a
+    ``hll_registers_by`` table — the estimator of ``hll_estimate``,
+    evaluated per group."""
+    return _hll_estimates(registers, p, "hll_estimate_by", ["grp"], [])
 
 
 def hll_merge_by(*register_tables: DataFrame) -> DataFrame:

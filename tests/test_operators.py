@@ -336,6 +336,42 @@ def test_chunk_documents_hierarchical_mode(spark):
         chunk_documents(df, mode="nope")
 
 
+@pytest.mark.parametrize(
+    "max_tokens,overlap,mode",
+    [
+        (4, -2, "window"),  # would step past w4, w5, w10, w11, ...
+        (4, -2, "budgeted"),
+        (0, -1, "window"),  # would raise IndexError inside the task
+        (4, 4, "hierarchical"),
+        (3, 5, "window"),
+    ],
+)
+def test_chunkers_reject_bad_window_parameters_at_plan_time(
+    spark, max_tokens, overlap, mode
+):
+    """Both chunkers need 1 <= max_tokens and 0 <= overlap < max_tokens,
+    checked before any task runs; ``merges`` outside mode='budgeted' is
+    an error, not silently ignored."""
+    from docling_jobkit_spark.operators.chunker import (
+        chunk_documents,
+        token_window_chunks,
+    )
+
+    results = spark.createDataFrame(
+        [("u1", "SUCCESS", "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11", [])],
+        "url string, status string, extracted_text string, "
+        "spans array<struct<start:long,end:long,kind:string,path:string>>",
+    )
+    merges = [("w", "0")] if mode == "budgeted" else None
+    with pytest.raises(ValueError, match="max_tokens"):
+        chunk_documents(results, max_tokens, overlap, mode=mode, merges=merges)
+    docs = results.select(F.lit(1).alias("doc_id"), F.col("extracted_text").alias("text"))
+    with pytest.raises(ValueError, match="max_tokens"):
+        token_window_chunks(docs, max_tokens=max_tokens, overlap=overlap)
+    with pytest.raises(ValueError, match="merges applies only"):
+        chunk_documents(results, 4, 1, mode="window", merges=[("w", "0")])
+
+
 def test_chunker_hierarchical_diverges_from_flat_on_sectioned_corpus(spark, sf_dir):
     """On the heading-DENSE corpus variant (sectioned=True: an <h2>
     before every 4th sentence), the hierarchical chunker must produce a

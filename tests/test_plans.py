@@ -570,3 +570,71 @@ def test_extraction_dispatch_has_one_home():
         "extract_page_range": {"slices._extract_slice_batches"},
         "is_pdf": set(),
     }, sites
+
+
+def test_twin_algorithms_have_one_home():
+    """Each algorithm is written in ONE top-level function under
+    operators/: the chunk-row dict (its ``"raw_text"`` key) in the one
+    chunk-window sweep, the HLL bucket/rho arithmetic (``shiftright`` of
+    the hash beside ``length(bin(r))``) and the HLL estimator's scaled
+    ``shiftleft`` for global and grouped sketches alike, the band slice
+    of ``sig`` in the one MinHash banding, and the signature-agreement
+    ``zip_with(..., a == b)`` fold in the one band-join probe. A second
+    site is a twin that can drift from the first."""
+    import ast
+    import pathlib
+
+    import docling_jobkit_spark.operators as ops
+
+    def call_name(node):
+        f = node.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    def is_const(node, value):
+        return isinstance(node, ast.Constant) and node.value == value
+
+    sites: dict[str, set[str]] = {
+        k: set() for k in ("chunk_row", "hll_rho", "hll_estimator", "band_slice", "agreement")
+    }
+    for path in pathlib.Path(ops.__file__).parent.glob("*.py"):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            where = f"{path.stem}.{getattr(top, 'name', '<module>')}"
+            calls = set()
+            for node in ast.walk(top):
+                if isinstance(node, ast.Dict) and any(
+                    is_const(k, "raw_text") for k in node.keys
+                ):
+                    sites["chunk_row"].add(where)
+                if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if node.value == " - register)":  # 2^(S+1-register)
+                        sites["hll_estimator"].add(where)
+                if not isinstance(node, ast.Call):
+                    continue
+                name = call_name(node)
+                calls.add(name)
+                if name == "slice" and node.args and is_const(node.args[0], "sig"):
+                    sites["band_slice"].add(where)
+                if (
+                    name == "zip_with"
+                    and len(node.args) == 3
+                    and isinstance(node.args[2], ast.Lambda)
+                    and isinstance(node.args[2].body, ast.Compare)
+                    and isinstance(node.args[2].body.ops[0], ast.Eq)
+                ):
+                    sites["agreement"].add(where)
+            if {"shiftright", "bin"} <= calls:
+                sites["hll_rho"].add(where)
+    assert sites == {
+        "chunk_row": {"chunker._window_loop"},
+        "hll_rho": {"sketches._hll_table"},
+        "hll_estimator": {"sketches._hll_estimates"},
+        "band_slice": {"dedup._minhash_bands"},
+        "agreement": {"minhash_index._agreeing_pairs"},
+    }, sites
+
+    index_src = (pathlib.Path(ops.__file__).parent / "minhash_index.py").read_text()
+    for node in ast.walk(ast.parse(index_src)):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("decontam"):
+            private = [a.name for a in node.names if a.name.startswith("_")]
+            assert not private, f"minhash_index imports {private} from decontam"
