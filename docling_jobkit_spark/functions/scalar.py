@@ -10,7 +10,7 @@ for the sha-prefix key: ``connectors/artifact_paths.py:9-10``
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -196,3 +196,16 @@ def lit_strings(vals) -> Column:
         return out.replace("\n", "\\n").replace("\r", "\\r").replace("\x00", "\\0")
 
     return F.expr("array(" + ",".join(f"'{esc(s)}'" for s in xs) + ")")
+
+
+def empty_frame(spark, schema) -> DataFrame:
+    """Zero-row frame of ``schema`` (a ``StructType`` or a
+    ``"name type, ..."`` DDL string) built on ``range(0)`` — never
+    ``createDataFrame([])``, whose Python-RDD path forks a worker per
+    default-parallelism partition even for zero rows. Every column is
+    nullable."""
+    if isinstance(schema, str):
+        cols = [p.strip().rsplit(" ", 1) for p in schema.split(",")]
+    else:
+        cols = [(f.name, f.dataType) for f in schema.fields]
+    return spark.range(0).select(*[F.lit(None).cast(t).alias(c) for c, t in cols])

@@ -29,9 +29,10 @@ data rows):
 - probe: probe values are a handful of literals, hashed DRIVER-side with
   the pure-Python twin of ``stable_hash64``; the per-file test folds the
   word→bits rows into a bounded map (≤ n_bits/62 entries) and evaluates
-  the masks as a codegen expression. Only the surviving FILE LIST is
-  collected — metadata-sized, the planner cost Iceberg pays reading
-  manifests.
+  the masks as one parsed codegen expression. The driver collects two
+  FILE LISTS — the manifest summary (every indexed file with its
+  stamp) and the excluded files — metadata-sized, the planner cost
+  Iceberg pays reading manifests.
 - geometry is data, not convention: every row carries (n_bits, k_hashes,
   family). A probe derives positions from the index's own stamp and
   RAISES on a mixed or foreign geometry — positions computed under the
@@ -60,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from docling_jobkit_spark.checkpoint import exists
+from docling_jobkit_spark.functions.scalar import empty_frame
 from docling_jobkit_spark.operators.zonemap import _canon
 
 N_BITS_DEFAULT = 1 << 13
@@ -184,22 +186,68 @@ def build_bloom_index(
     return _index_for_scan(df, cols, n_bits, k_hashes)
 
 
-def _geometry(index: DataFrame) -> tuple[int, int]:
-    """The index's single (n_bits, k_hashes) stamp; raises on a mixed or
+def _summary(index: DataFrame) -> tuple[tuple[int, int] | None, set[str]]:
+    """(geometry, indexed files) of a manifest from ONE metadata-sized
+    collect of its distinct (file, stamp) rows: the geometry is the
+    single (n_bits, k_hashes) stamp, or None for an empty manifest
+    (fully expired: valid, but it stamps nothing). Raises on a mixed or
     foreign-family index."""
-    geoms = index.select("n_bits", "k_hashes", "family").distinct().collect()
+    rows = index.select("file", "n_bits", "k_hashes", "family").distinct().collect()
+    geoms = {(r["n_bits"], r["k_hashes"], r["family"]) for r in rows}
+    if not geoms:
+        return None, set()
     if len(geoms) != 1:
         raise ValueError(
             f"bloom index mixes {len(geoms)} geometries — probe positions "
             "would be wrong for all but one; rebuild or split the index"
         )
-    g = geoms[0]
-    if g["family"] != FAMILY:
+    n_bits, k_hashes, family = geoms.pop()
+    if family != FAMILY:
         raise ValueError(
-            f"bloom index family {g['family']!r} != this build's "
+            f"bloom index family {family!r} != this build's "
             f"{FAMILY!r} — positions from a foreign hash family never match"
         )
-    return int(g["n_bits"]), int(g["k_hashes"])
+    return (int(n_bits), int(k_hashes)), {r["file"] for r in rows}
+
+
+def _prune(
+    index: DataFrame, col: str, values: Sequence[str]
+) -> tuple[list[str], set[str]]:
+    """(surviving files, every indexed file) for ``col IN (values)`` —
+    the manifest summary plus ONE collect of the excluded files."""
+    values = [str(v) for v in values]
+    if not values:
+        raise ValueError("values must be non-empty")
+    geometry, files = _summary(index)
+    if geometry is None:
+        return [], files
+    n_bits, k_hashes = geometry
+    # bounded per-file word map (<= n_bits/62 + 1 entries)
+    per_file = (
+        index.where(F.col("column") == col)
+        .groupBy("file")
+        .agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("word_idx", "bits"))
+            ).alias("_words")
+        )
+    )
+    # the probe as ONE parsed expression: a value is maybe-present iff
+    # every word it sets carries all of its bits
+    maybe_any = " OR ".join(
+        "("
+        + " AND ".join(
+            f"(coalesce(element_at(_words, {word}L), 0L) & {mask}L) = {mask}L"
+            for word, mask in sorted(_value_words(v, n_bits, k_hashes).items())
+        )
+        + ")"
+        for v in values
+    )
+    excluded = {
+        r["file"]
+        for r in per_file.where(F.expr(f"NOT ({maybe_any})")).select("file").collect()
+    }
+    return sorted(files - excluded), files
 
 
 def prune_files_bloom(
@@ -209,35 +257,9 @@ def prune_files_bloom(
     ``col IN (values)``. A file survives iff its filter says SOME probe
     value is maybe-present, or it was never indexed for ``col`` (missing
     index entries keep, the zone-map rule). Geometry comes from the
-    index's own stamp."""
-    values = [str(v) for v in values]
-    if not values:
-        raise ValueError("values must be non-empty")
-    n_bits, k_hashes = _geometry(index)
-
-    rows = index.where(F.col("column") == col)
-    all_files = index.select("file").distinct()
-    # bounded per-file word map (<= n_bits/62 + 1 entries)
-    per_file = rows.groupBy("file").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("word_idx", "bits"))
-        ).alias("_words")
-    )
-    maybe_any = F.lit(False)
-    for v in values:
-        ok = F.lit(True)
-        for word, mask in sorted(_value_words(v, n_bits, k_hashes).items()):
-            got = F.coalesce(
-                F.element_at(F.col("_words"), F.lit(word).cast("long")),
-                F.lit(0).cast("long"),
-            )
-            ok = ok & (got.bitwiseAND(F.lit(mask)) == F.lit(mask))
-        maybe_any = maybe_any | ok
-    excluded = per_file.where(~maybe_any).select("file")
-    kept = [
-        r["file"] for r in all_files.join(excluded, "file", "left_anti").collect()
-    ]
-    return sorted(kept), all_files.count()
+    index's own stamp; an empty manifest keeps nothing: ``([], 0)``."""
+    kept, files = _prune(index, col, values)
+    return kept, len(files)
 
 
 def scan_pruned_bloom(
@@ -253,20 +275,23 @@ def scan_pruned_bloom(
     happen by construction). ``pre_kept`` intersects another pruner's
     surviving set (zone map) — exclusions compose. Returns
     (df, files_kept, files_total); an empty survivor set returns an
-    empty, correctly-typed frame."""
-    kept, total = prune_files_bloom(index, col, values)
+    empty, correctly-typed frame. An empty manifest raises: it names no
+    file to take the scan's schema from."""
+    kept, files = _prune(index, col, values)
+    if not files:
+        raise ValueError(
+            "bloom index is empty (a fully expired manifest indexes no "
+            "file) — there is no file to derive the scan schema from"
+        )
     if pre_kept is not None:
         pre = {_canon(p) for p in pre_kept}
         kept = [p for p in kept if p in pre]
-    src = kept if kept else [
-        r["file"] for r in index.select("file").limit(1).collect()
-    ]
-    df = spark.read.parquet(*src).where(
+    df = spark.read.parquet(*(kept or [min(files)])).where(
         F.col(col).cast("string").isin([str(v) for v in values])
     )
     if not kept:
         df = df.where(F.lit(False))
-    return df, len(kept), total
+    return df, len(kept), len(files)
 
 
 def write_bloom_index(index: DataFrame, path: str) -> None:
@@ -277,18 +302,14 @@ def write_bloom_index(index: DataFrame, path: str) -> None:
 
 
 def read_bloom_index(spark: SparkSession, path: str) -> DataFrame:
-    """Read a persisted manifest; refuses a torn (no _SUCCESS) or
-    foreign-schema layout so a probe can't silently run against garbage."""
+    """Read a persisted manifest with the known ``INDEX_SCHEMA`` (no
+    schema-inference job); refuses a torn (no _SUCCESS) layout. A
+    foreign layout reads its missing stamp columns as NULL, which the
+    first probe or update refuses as a foreign family, so nothing runs
+    against garbage."""
     if not exists(f"{path}/_SUCCESS"):
         raise ValueError(f"bloom index at {path} has no _SUCCESS — torn write?")
-    idx = spark.read.parquet(path)
-    want = {f.name for f in INDEX_SCHEMA.fields}
-    have = set(idx.columns)
-    if want - have:
-        raise ValueError(
-            f"bloom index at {path} missing columns {sorted(want - have)}"
-        )
-    return idx
+    return spark.read.schema(INDEX_SCHEMA).parquet(path)
 
 
 def update_bloom_index(
@@ -312,22 +333,19 @@ def update_bloom_index(
     on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, table_path)}
     # a fully-expired manifest is valid but stamp-less (0 rows) — there is
     # no geometry to inherit, so it reconciles exactly like a fresh build
-    if index is not None and index.limit(1).count() == 0:
-        index = None
-    if index is None:
+    geometry, known = _summary(index) if index is not None else (None, set())
+    if geometry is None:
         if not on_disk:  # nothing to index and no stamp to keep
-            return spark.createDataFrame([], INDEX_SCHEMA), 0, 0
+            return empty_frame(spark, INDEX_SCHEMA), 0, 0
         idx = build_bloom_index(spark, table_path, cols, n_bits, k_hashes)
         return idx, len(on_disk), 0
 
-    got_bits, got_k = _geometry(index)
-    if (got_bits, got_k) != (n_bits, k_hashes):
+    if geometry != (n_bits, k_hashes):
         raise ValueError(
-            f"existing index is stamped n_bits={got_bits}/k={got_k}, update "
-            f"asked for {n_bits}/{k_hashes} — mixed geometries never match; "
-            "rebuild instead"
+            f"existing index is stamped n_bits={geometry[0]}/k={geometry[1]}, "
+            f"update asked for {n_bits}/{k_hashes} — mixed geometries never "
+            "match; rebuild instead"
         )
-    known = {r["file"] for r in index.select("file").distinct().collect()}
     new_files = sorted(on_disk - known)
     stale = known - on_disk
 

@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from docling_jobkit_spark.functions.scalar import lit_strings
+from docling_jobkit_spark.functions.scalar import empty_frame, lit_strings
 
 ZONEMAP_SCHEMA = T.StructType(
     [
@@ -171,7 +171,7 @@ def _zonemap_for_files(
     spark: SparkSession, files: list[str], cols: Sequence[str]
 ) -> DataFrame:
     if not files:
-        return spark.createDataFrame([], ZONEMAP_SCHEMA)
+        return empty_frame(spark, ZONEMAP_SCHEMA)
     cols = list(cols)
 
     # literal-array explode: stays JVM-side (createDataFrame(list) forks
@@ -280,7 +280,10 @@ def write_zonemap(zm: DataFrame, path: str) -> None:
 
 
 def read_zonemap(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Read a persisted manifest with the known ``ZONEMAP_SCHEMA`` — no
+    schema-inference job (file sources read every column nullable, as
+    inference does)."""
+    return spark.read.schema(ZONEMAP_SCHEMA).parquet(path)
 
 
 def update_zonemap(

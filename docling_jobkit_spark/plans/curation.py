@@ -26,8 +26,8 @@ Posture — stamps and a LEDGER, never silent drops:
   policy doesn't re-run the corpus.
 - ``ledger`` is the per-stage attrition report (stage_order, stage,
   docs_in, docs_dropped, docs_kept) — the dataset-card funnel table,
-  derived from ONE aggregation over the stamps (7 + 1 rows; the stage
-  dimension is built range(1)+explode, never createDataFrame(list) —
+  derived from ONE lazy aggregation over the stamps (one row per stage,
+  exploded from the single aggregate row — never createDataFrame(list),
   repo invariant).
 - Stage semantics are SEQUENTIAL: each dedup family elects its
   keep-first representative among the docs that SURVIVED every earlier
@@ -310,37 +310,35 @@ def funnel_ledger(
     stamped: DataFrame, stages: tuple[str, ...] = STAGES
 ) -> DataFrame:
     """(stage_order, stage, docs_in, docs_dropped, docs_kept) — one row
-    per stage, docs_in(k) = docs_in(k-1) - docs_dropped(k-1). One small
-    agg + a window over the 8-row stage dimension; the corpus total is
-    a single bounded scalar (the pagerank dangling-mass precedent —
-    joining a 1-row total onto the dim plans a nested-loop join).
+    per stage, docs_in(k) = docs_in(k-1) - docs_dropped(k-1). ONE lazy
+    aggregation over the stamps (the corpus total plus one drop count
+    per stage, a single row) exploded into the stage rows: no job runs
+    until the caller reads it, and there is no join and no window (an
+    unpartitioned window pulls every row into one partition and logs a
+    WindowExec warning per execution).
 
     ``stages`` lets composed plans that extend the funnel (the ingest
     plan's history-dedup stages) reuse the same arithmetic over their
     longer stage dimension."""
-    spark = stamped.sparkSession
-    total = stamped.count()
-    # stage dimension via range(1)+explode — never createDataFrame(list)
-    dim = spark.range(1).select(
-        F.posexplode(F.array(*[F.lit(st) for st in stages])).alias(
-            "stage_order", "stage"
+    counts = stamped.agg(
+        F.count(F.lit(1)).alias("_total"),
+        *[
+            F.count(F.when(F.col("drop_stage") == st, 1)).alias(f"_d{i}")
+            for i, st in enumerate(stages)
+        ],
+    )
+    rows = []
+    docs_in = F.col("_total")
+    for i, st in enumerate(stages):
+        dropped = F.col(f"_d{i}")
+        rows.append(
+            F.struct(
+                F.lit(i).alias("stage_order"),
+                F.lit(st).alias("stage"),
+                docs_in.alias("docs_in"),
+                dropped.alias("docs_dropped"),
+                (docs_in - dropped).alias("docs_kept"),
+            )
         )
-    )
-    drops = stamped.where(F.col("drop_stage").isNotNull()).groupBy(
-        F.col("drop_stage").alias("stage")
-    ).agg(F.count(F.lit(1)).alias("docs_dropped"))
-    w = Window.orderBy("stage_order").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow - 1
-    )
-    led = (
-        dim.join(drops, on="stage", how="left")
-        .withColumn("docs_dropped", F.coalesce("docs_dropped", F.lit(0)))
-        .withColumn(
-            "docs_in",
-            F.lit(total) - F.coalesce(F.sum("docs_dropped").over(w), F.lit(0)),
-        )
-        .withColumn("docs_kept", F.col("docs_in") - F.col("docs_dropped"))
-    )
-    return led.select(
-        "stage_order", "stage", "docs_in", "docs_dropped", "docs_kept"
-    ).orderBy("stage_order")
+        docs_in = docs_in - dropped
+    return counts.select(F.inline(F.array(*rows))).orderBy("stage_order")

@@ -74,7 +74,11 @@ from docling_jobkit_spark.checkpoint import (
     exists,
     list_status,
 )
-from docling_jobkit_spark.functions.scalar import content_hash, stable_hash64
+from docling_jobkit_spark.functions.scalar import (
+    content_hash,
+    empty_frame,
+    stable_hash64,
+)
 from docling_jobkit_spark.operators.minhash_index import (
     banded_signatures,
     dedup_incremental,
@@ -82,8 +86,8 @@ from docling_jobkit_spark.operators.minhash_index import (
     write_minhash_index,
 )
 from docling_jobkit_spark.operators.bloom_index import (
+    prune_files_bloom,
     read_bloom_index,
-    scan_pruned_bloom,
     update_bloom_index,
     write_bloom_index,
 )
@@ -92,7 +96,10 @@ from docling_jobkit_spark.operators.zonemap import (
     update_zonemap,
     write_zonemap,
 )
-from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+from docling_jobkit_spark.sinks.maintenance import (
+    _list_parquet_files,
+    shared_listing,
+)
 from docling_jobkit_spark.plans.curation import (
     STAGES,
     CurationConfig,
@@ -178,16 +185,6 @@ def _check_batch_id(batch_id: str) -> None:
         )
 
 
-def _empty_corpus(spark: SparkSession) -> DataFrame:
-    """Empty frame with the CORPUS_SCHEMA — via range(0), never
-    createDataFrame(list) (repo invariant: the Python-RDD path forks a
-    worker per default-parallelism partition even for zero rows)."""
-    pairs = [p.strip().rsplit(" ", 1) for p in CORPUS_SCHEMA.split(",")]
-    return spark.range(0).select(
-        *[F.lit(None).cast(t).alias(c) for c, t in pairs]
-    )
-
-
 def _has_data_files(path: str) -> bool:
     """False for an absent dir too (an expired batch's payload)."""
     return any(
@@ -255,11 +252,11 @@ def ingest_batch(
         return IngestResult(
             batch_id=batch_id,
             replayed=True,
-            ledger=spark.read.parquet(ledger_dir),
+            ledger=spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir),
             kept=(
                 spark.read.schema(CORPUS_SCHEMA).parquet(corpus_dir)
                 if exists(corpus_dir)
-                else _empty_corpus(spark)
+                else empty_frame(spark, CORPUS_SCHEMA)
             ),
             n_new_zonemap_files=0,
         )
@@ -394,30 +391,30 @@ def ingest_batch(
         if exists(f"{zonemap_dir}/_SUCCESS")
         else None
     )
-    zm, n_new, _n_drop = update_zonemap(
-        spark, corpus_root, zm_prev, list(cfg.zonemap_cols)
-    )
-    # overwrite reads lazily from the dir being replaced — break the
-    # self-dependency before writing (manifest is metadata-sized)
-    zm = zm.localCheckpoint(eager=True)
-    write_zonemap(zm, zonemap_dir)
-
-    # Bloom manifest over the same corpus (point-predicate twin of the
-    # zone map; operators/bloom_index.py): incremental — only this
-    # batch's new files are scanned, steady state scans nothing. Same
-    # torn-write posture (gate on _SUCCESS, degrade to rebuild).
-    if cfg.bloom_cols:
-        bloom_dir = f"{root}/bloomidx"
-        bi_prev = (
-            read_bloom_index(spark, bloom_dir)
-            if exists(f"{bloom_dir}/_SUCCESS")
-            else None
+    # both manifests reconcile against ONE listing of the corpus, which
+    # nothing writes to from here on
+    with shared_listing(spark, corpus_root) as corpus_files:
+        zm, n_new, n_drop = update_zonemap(
+            spark, corpus_root, zm_prev, list(cfg.zonemap_cols)
         )
-        if bi_prev is not None or _list_parquet_files(spark, corpus_root):
-            bi, _bn, _bd = update_bloom_index(
-                spark, corpus_root, bi_prev, list(cfg.bloom_cols)
+        _write_if_changed(write_zonemap, zm, zonemap_dir, zm_prev, n_new + n_drop)
+
+        # Bloom manifest over the same corpus (point-predicate twin of the
+        # zone map; operators/bloom_index.py): incremental — only this
+        # batch's new files are scanned, steady state scans nothing. Same
+        # torn-write posture (gate on _SUCCESS, degrade to rebuild).
+        if cfg.bloom_cols:
+            bloom_dir = f"{root}/bloomidx"
+            bi_prev = (
+                read_bloom_index(spark, bloom_dir)
+                if exists(f"{bloom_dir}/_SUCCESS")
+                else None
             )
-            write_bloom_index(bi.localCheckpoint(eager=True), bloom_dir)
+            if bi_prev is not None or corpus_files:
+                bi, bn, bd = update_bloom_index(
+                    spark, corpus_root, bi_prev, list(cfg.bloom_cols)
+                )
+                _write_if_changed(write_bloom_index, bi, bloom_dir, bi_prev, bn + bd)
 
     ledger = funnel_ledger(stamped, stages=INGEST_STAGES)
     ledger.coalesce(1).write.mode("overwrite").parquet(ledger_dir)
@@ -425,7 +422,7 @@ def ingest_batch(
     return IngestResult(
         batch_id=batch_id,
         replayed=False,
-        ledger=spark.read.parquet(ledger_dir),
+        ledger=spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir),
         kept=committed,
         n_new_zonemap_files=n_new,
     )
@@ -707,7 +704,7 @@ def read_corpus_asof(
         f"{root}/corpus/batch={b}" for b in window if b not in set(expired)
     ]
     if not dirs:
-        return _empty_corpus(spark).withColumn(
+        return empty_frame(spark, CORPUS_SCHEMA).withColumn(
             "batch", F.lit(None).cast("string")
         )
     return (
@@ -755,7 +752,7 @@ def read_corpus_latest(
     root = state_dir.rstrip("/")
     committed = committed_dirs(f"{root}/ledger")
     if not committed:
-        return _empty_corpus(spark).withColumn(
+        return empty_frame(spark, CORPUS_SCHEMA).withColumn(
             "batch", F.lit(None).cast("string")
         )
     latest = max(committed)
@@ -863,32 +860,20 @@ def locate_content(
     bloom_dir = f"{root}/bloomidx"
     if exists(f"{bloom_dir}/_SUCCESS"):
         idx = read_bloom_index(spark, bloom_dir)
-        # fully-expired corpus: the manifest is empty and there is no
-        # file to derive a scan schema from — nothing to find
-        if idx.limit(1).count() == 0:
-            return (
-                spark.createDataFrame([], CORPUS_SCHEMA + ", file string"),
-                0,
-                0,
-            )
-        df, kept, total = scan_pruned_bloom(
-            spark, idx, "content_hash", hashes
-        )
-        return df.withColumn("file", F.input_file_name()), kept, total
-    files = [p for p, _ in _list_parquet_files(spark, corpus_root)]
+        # a fully-expired corpus has an empty manifest: nothing to find
+        files, total = prune_files_bloom(idx, "content_hash", hashes)
+    else:
+        files = [p for p, _ in _list_parquet_files(spark, corpus_root)]
+        total = len(files)
     if not files:
-        return (
-            spark.createDataFrame([], CORPUS_SCHEMA + ", file string"),
-            0,
-            0,
-        )
+        return empty_frame(spark, CORPUS_SCHEMA + ", file string"), 0, total
     df = (
         spark.read.schema(CORPUS_SCHEMA)
         .parquet(*files)
         .where(F.col("content_hash").isin([str(h) for h in hashes]))
         .withColumn("file", F.input_file_name())
     )
-    return df, len(files), len(files)
+    return df, len(files), total
 
 
 @dataclass(frozen=True)
@@ -914,19 +899,26 @@ def _drop_manifest_rows(spark: SparkSession, root: str, drop: Column) -> None:
     ``drop`` predicate (over their ``file`` column) BEFORE any file is
     deleted — the expire ordering: the reverse leaves a window where a
     pruned scan (which reads survivors by explicit manifest path)
-    references deleted payload. Metadata-sized."""
-    zonemap_dir = f"{root}/zonemap"
-    if exists(f"{zonemap_dir}/_SUCCESS"):
-        zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~drop)
-        if keep.count() < zm.count():
-            write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if exists(f"{bloom_dir}/_SUCCESS"):
-        bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~drop)
-        if bkeep.count() < bi.count():
-            write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
+    references deleted payload. Metadata-sized: one ``count_if``
+    aggregate per manifest, and a rewrite only where it counts rows."""
+    for name, read, write in (
+        ("zonemap", read_zonemap, write_zonemap),
+        ("bloomidx", read_bloom_index, write_bloom_index),
+    ):
+        path = f"{root}/{name}"
+        if exists(f"{path}/_SUCCESS"):
+            manifest = read(spark, path)
+            if manifest.select(F.count_if(drop)).head()[0]:
+                write(manifest.where(~drop).localCheckpoint(eager=True), path)
+
+
+def _write_if_changed(write, manifest, path, prev, n_changed: int) -> None:
+    """Persist a reconciled manifest unless it equals the one already at
+    ``path`` (``prev`` read from there, no file added or dropped). The
+    overwrite reads lazily from the dir being replaced, so the manifest
+    (metadata-sized) is materialized first."""
+    if prev is None or n_changed:
+        write(manifest.localCheckpoint(eager=True), path)
 
 
 def _reconcile_manifests(spark: SparkSession, root: str) -> None:
@@ -940,8 +932,8 @@ def _reconcile_manifests(spark: SparkSession, root: str) -> None:
         zcols = sorted(
             r["col"] for r in zm_prev.select("col").distinct().collect()
         ) or ["n_chars"]
-        zm, _n, _d = update_zonemap(spark, corpus_root, zm_prev, zcols)
-        write_zonemap(zm.localCheckpoint(eager=True), zonemap_dir)
+        zm, n_new, n_drop = update_zonemap(spark, corpus_root, zm_prev, zcols)
+        _write_if_changed(write_zonemap, zm, zonemap_dir, zm_prev, n_new + n_drop)
     bloom_dir = f"{root}/bloomidx"
     if exists(f"{bloom_dir}/_SUCCESS"):
         bi_prev = read_bloom_index(spark, bloom_dir)
@@ -949,8 +941,8 @@ def _reconcile_manifests(spark: SparkSession, root: str) -> None:
             r["column"] for r in bi_prev.select("column").distinct().collect()
         )
         if bcols:
-            bi, _bn, _bd = update_bloom_index(spark, corpus_root, bi_prev, bcols)
-            write_bloom_index(bi.localCheckpoint(eager=True), bloom_dir)
+            bi, bn, bd = update_bloom_index(spark, corpus_root, bi_prev, bcols)
+            _write_if_changed(write_bloom_index, bi, bloom_dir, bi_prev, bn + bd)
 
 
 def _rewrite_corpus(
@@ -1328,8 +1320,8 @@ def ingest_drift_report(
     # -- ledger vectors: per-stage drop share + kept share -------------
     led = (
         spark.read.option("basePath", f"{root}/ledger")
+        .schema(LEDGER_SCHEMA + ", batch string")
         .parquet(*[f"{root}/ledger/batch={b}" for b in batch_ids])
-        .withColumn("batch", F.col("batch").cast("string"))
     )
     totals = led.groupBy("batch").agg(
         F.min(F.struct("stage_order", "docs_in"))["docs_in"].alias("docs_in"),

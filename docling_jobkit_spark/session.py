@@ -20,6 +20,17 @@ _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _MEMORY_UNITS = {None: 2**20, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
+# Entries of Spark's generated-class cache (the static conf
+# spark.sql.codegen.cache.maxEntries, default 100). One ingest_batch
+# step plus its read side generates about 250 distinct classes
+# (whole-stage, projection and predicate code), so at 100 the cache
+# evicts each one before the next batch comes back to the same plan
+# shape and every step re-runs Janino on all of them (about 250
+# compiles, 1.1-2.7 CPU-s). At this size the steady state compiles only
+# the ~20 classes per step whose code is new; the cost is driver
+# metaspace for the classes actually generated (OPTIMIZATION_r06.md §14).
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def _memory_mb(size: str) -> int:
     """A Spark memory string in whole MiB, read as Spark reads it: a bare
@@ -79,6 +90,12 @@ def get_spark(
     of a Python task's fixed cost (~0.23 -> ~0.045 CPU-s; OPTIMIZATION_r06.md
     §13). Plans and rows are unchanged.
 
+    Every session also keeps ``CODEGEN_CACHE_ENTRIES`` generated classes
+    (Spark's default is 100), so a plan shape that recurs — the same
+    ingest step batch after batch — is compiled once per session, not
+    once per batch. The conf is static: it applies to the session that
+    builds the JVM, not to one ``getOrCreate`` picks up.
+
     ``tuned=True`` applies the measured throughput profile for the
     pandas-UDF extraction workload (see BENCH.md for the evidence):
     - ParallelGC: the output is a high-rate churn of large short-lived
@@ -136,6 +153,7 @@ def get_spark(
         # and executor behavior are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # pyspark.daemon with stat-gated zip re-reads (see the docstring)
         .config("spark.python.daemon.module", "docling_jobkit_spark.pyworker")
         # a real deployment ships the package with spark-submit --py-files

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -32,3 +33,32 @@ def pages_path(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+# the SparkContext local properties a job group is made of
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn, *args, **kwargs) -> (fn's result, n_jobs)``: the
+    Spark jobs ``fn`` runs, counted under a job group of their own
+    (``statusTracker``). The caller's job group is restored afterwards."""
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kwargs):
+        saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+        group = f"count_jobs_{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -237,3 +237,15 @@ def test_composes_with_zonemap(spark, table, index):
     )
     assert sorted(r["doc_id"] for r in df.collect()) == want
     assert kept <= total
+
+
+def test_empty_manifest_prunes_to_nothing(spark, index, tmp_path):
+    """A fully expired manifest is valid and stamps nothing: a probe
+    keeps no file of none; a scan over it has no file to take its
+    schema from and says so."""
+    out = str(tmp_path / "expired")
+    write_bloom_index(index.where(F.lit(False)), out)
+    empty = read_bloom_index(spark, out)
+    assert prune_files_bloom(empty, "content_hash", ["0" * 64]) == ([], 0)
+    with pytest.raises(ValueError, match="empty"):
+        scan_pruned_bloom(spark, empty, "content_hash", ["0" * 64])

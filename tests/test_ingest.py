@@ -18,6 +18,16 @@ from docling_jobkit_spark.plans.ingest import (
 )
 
 CFG = IngestConfig(curation=CurationConfig(), tau=0.8)
+# Job and compile ceilings, measured on local[8] with the sf0.001 docs:
+# a history batch ran 51 jobs (65 before the Bloom/ledger/zone-map
+# bookkeeping was cut); a second same-shape batch compiled 0 classes (142
+# with Spark's default 100-entry codegen cache); dropping nothing from
+# both manifests ran 4 jobs (10 with two counts per manifest), dropping
+# a batch 8 (14).
+INGEST_JOB_BUDGET = 53
+SECOND_BATCH_COMPILES = 20
+DROP_ROWS_NOOP_JOBS = 4
+DROP_ROWS_JOBS = 8
 
 
 def _batch_a(spark, sf_dir):
@@ -508,7 +518,7 @@ def test_ingest_state_report(spark, state):
     assert empty.count() == 0 and "fragmented" in empty.columns
 
 
-def test_ingest_state_report_runs_O1_jobs(spark, state):
+def test_ingest_state_report_runs_O1_jobs(spark, state, count_jobs):
     """The report must read every batch's ledger in ONE multi-dir scan
     (basePath + groupBy endpoints), not one read+collect job per batch:
     at a year of daily snapshots the per-batch spelling is hundreds of
@@ -518,21 +528,141 @@ def test_ingest_state_report_runs_O1_jobs(spark, state):
     from docling_jobkit_spark.plans.ingest import ingest_state_report
 
     root, *_ = state
-    sc = spark.sparkContext
-    sc.setJobGroup("isr_jobcount", "state report job count")
-    try:
-        rep = ingest_state_report(spark, root).collect()
-    finally:
-        sc.setJobGroup(None, None)
+    rep, n_jobs = count_jobs(lambda: ingest_state_report(spark, root).collect())
     assert len(rep) == 2
-    jobs = sc.statusTracker().getJobIdsForGroup("isr_jobcount")
     # Constant budget: the endpoints groupBy-collect and the final
     # report collect, each split into per-exchange jobs by AQE stage
     # materialization (~2-3 jobs per query). The per-batch spelling
     # adds one read+collect job PER BATCH on top (2 batches -> >= 7,
     # 365 batches -> hundreds); the single-scan form stays at <= 5
     # regardless of batch count.
-    assert len(jobs) <= 5, f"state report ran {len(jobs)} jobs: {jobs}"
+    assert n_jobs <= 5, f"state report ran {n_jobs} jobs"
+
+
+@pytest.fixture(scope="module")
+def history_root(spark, sf_dir, tmp_path_factory):
+    """A state dir with one committed batch, and the next batch (fresh
+    docs plus planted re-posts of the committed ones) not yet ingested."""
+    root = str(tmp_path_factory.mktemp("ingest_budget"))
+    a, fresh_b = _batch_a(spark, sf_dir)
+    res_a = ingest_batch(spark, a, root, "2026-01", config=CFG)
+    return root, _make_batch_b(fresh_b, res_a.kept).localCheckpoint(eager=True)
+
+
+def test_ingest_batch_job_budget(spark, history_root, count_jobs):
+    """A batch with history pays a bounded number of sequential jobs:
+    the funnel, both history probes, five commit writes, the two
+    manifest reconciliations and the ledger. The bookkeeping used to
+    cost more than the rows: geometry, emptiness and known-file
+    collects per Bloom update, schema-inference reads of every
+    manifest, an eager count for the ledger (twice: once for the
+    funnel's own, unread ledger) and an unpartitioned ledger window."""
+    root, b = history_root
+    res, n_jobs = count_jobs(ingest_batch, spark, b, root, "2026-02", config=CFG)
+    assert not res.replayed
+    assert _stage_counts(res.ledger)["history_exact"] > 0
+    assert n_jobs <= INGEST_JOB_BUDGET, f"ingest_batch ran {n_jobs} jobs"
+
+
+def test_locate_content_job_budget(spark, state, count_jobs):
+    """A point lookup is planned from the Bloom manifest in a constant
+    number of jobs — its summary and the excluded-file collect — and the
+    survivor read takes the known corpus schema; the caller's collect
+    is the only job that opens corpus files."""
+    from docling_jobkit_spark.plans.ingest import locate_content
+
+    root, *_, res_b = state
+    want = sorted(r["content_hash"] for r in res_b.kept.limit(8).collect())
+    (df, kept, total), n_jobs = count_jobs(locate_content, spark, root, want)
+    assert n_jobs <= 5, f"locate_content ran {n_jobs} jobs before the collect"
+    assert sorted(r["content_hash"] for r in df.collect()) == want
+    assert 0 < kept <= total
+
+
+def test_ingest_batch_compiles_each_plan_shape_once(spark, sf_dir, tmp_path):
+    """The session's codegen cache holds a whole ingest step: a second
+    batch of the same plan shape reuses the generated classes of the
+    first instead of re-running Janino on ~all of them (with Spark's
+    default 100-entry cache every batch recompiled them)."""
+    a, _ = _batch_a(spark, sf_dir)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    ingest_batch(spark, a, str(tmp_path / "first"), "2026-01", config=CFG)
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    ingest_batch(spark, a, str(tmp_path / "second"), "2026-01", config=CFG)
+    n_compiles = compiles.METRIC_COMPILATION_TIME().getCount() - before
+    assert n_compiles <= SECOND_BATCH_COMPILES, f"{n_compiles} classes compiled"
+
+
+def test_drop_manifest_rows_counts_each_manifest_once(spark, tmp_path, count_jobs):
+    """Expire, rollback and takedown drop manifest rows through one
+    ``count_if`` aggregate per manifest (not a count of the manifest and
+    another of what it keeps), and rewrite only a manifest that holds
+    matching rows."""
+    from docling_jobkit_spark.operators.bloom_index import (
+        build_bloom_index,
+        read_bloom_index,
+        write_bloom_index,
+    )
+    from docling_jobkit_spark.operators.zonemap import (
+        build_zonemap,
+        read_zonemap,
+        write_zonemap,
+    )
+    from docling_jobkit_spark.plans.ingest import _drop_manifest_rows, _in_batch
+
+    root = str(tmp_path / "state")
+    for bid in ("x", "y"):
+        spark.range(20).select(
+            F.col("id").alias("n_chars"), F.col("id").cast("string").alias("content_hash")
+        ).coalesce(1).write.parquet(f"{root}/corpus/batch={bid}")
+    write_zonemap(build_zonemap(spark, f"{root}/corpus", ["n_chars"]), f"{root}/zonemap")
+    write_bloom_index(
+        build_bloom_index(spark, f"{root}/corpus", ["content_hash"]), f"{root}/bloomidx"
+    )
+
+    _, n_noop = count_jobs(_drop_manifest_rows, spark, root, _in_batch("z"))
+    assert n_noop <= DROP_ROWS_NOOP_JOBS, f"{n_noop} jobs to drop nothing"
+    _, n_drop = count_jobs(_drop_manifest_rows, spark, root, _in_batch("x"))
+    assert n_drop <= DROP_ROWS_JOBS, f"{n_drop} jobs to drop one batch"
+    for manifest in (read_zonemap(spark, f"{root}/zonemap"),
+                     read_bloom_index(spark, f"{root}/bloomidx")):
+        files = {r["file"] for r in manifest.select("file").distinct().collect()}
+        assert files and all("/batch=y/" in f for f in files)
+
+
+def test_empty_results_are_range_plans(spark, tmp_path):
+    """Empty results are built on ``range(0)``, never on a Python RDD
+    (``createDataFrame([])`` forks a worker per partition for zero
+    rows): ``locate_content`` over an expired manifest and over an empty
+    corpus without one, a Bloom update and a zone map over no files."""
+    from docling_jobkit_spark.operators.bloom_index import (
+        build_bloom_index,
+        update_bloom_index,
+        write_bloom_index,
+    )
+    from docling_jobkit_spark.operators.zonemap import build_zonemap
+    from docling_jobkit_spark.plans.ingest import locate_content
+
+    table = str(tmp_path / "table")
+    spark.range(5).select(F.col("id").cast("string").alias("k")).write.parquet(table)
+    expired = str(tmp_path / "expired")  # every batch's rows dropped
+    write_bloom_index(
+        build_bloom_index(spark, table, ["k"]).where(F.lit(False)), f"{expired}/bloomidx"
+    )
+    bare = tmp_path / "bare"  # no Bloom manifest, empty corpus
+    (bare / "corpus").mkdir(parents=True)
+    no_files = tmp_path / "no_files"
+    no_files.mkdir()
+
+    frames = [
+        locate_content(spark, expired, ["0"])[0],
+        locate_content(spark, str(bare), ["0"])[0],
+        update_bloom_index(spark, str(no_files), None, ["k"])[0],
+        build_zonemap(spark, str(no_files), ["k"]),
+    ]
+    for df in frames:
+        assert df.count() == 0
+        assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
 
 
 def test_expire_batch_payload(spark, sf_dir, tmp_path):
