@@ -62,7 +62,7 @@ from pyspark.sql import types as T
 
 from docling_jobkit_spark.checkpoint import exists
 from docling_jobkit_spark.functions.scalar import empty_frame
-from docling_jobkit_spark.operators.zonemap import _canon
+from docling_jobkit_spark.operators.zonemap import _canon, _data_files, _reconcile
 
 N_BITS_DEFAULT = 1 << 13
 K_HASHES_DEFAULT = 5
@@ -110,16 +110,18 @@ def _value_words(value: str, n_bits: int, k_hashes: int) -> dict[int, int]:
 
 
 def _index_for_scan(
-    df: DataFrame,
+    scan: DataFrame,
     cols: Sequence[str],
     n_bits: int,
     k_hashes: int,
 ) -> DataFrame:
-    """(file, column, word_idx, bits, geometry) rows for a scan that
-    already carries ``_file`` (canonical URI). One map-side-combined
-    aggregation per column + the sentinel marker rows."""
+    """(file, column, word_idx, bits, geometry) rows for a parquet scan,
+    keyed by each row's ``input_file_name()`` (canonical URI). One
+    map-side-combined aggregation per column + the sentinel marker
+    rows."""
     from docling_jobkit_spark.operators.bloom import bloom_positions
 
+    df = scan.select(*cols).withColumn("_file", F.input_file_name())
     parts = []
     for col in cols:
         pos = df.select(
@@ -178,24 +180,25 @@ def build_bloom_index(
     cols = list(cols)
     if not cols:
         raise ValueError("cols must name at least one column")
-    df = (
-        spark.read.parquet(table_path)
-        .select(*cols)
-        .withColumn("_file", F.input_file_name())
+    return _index_for_scan(spark.read.parquet(table_path), cols, n_bits, k_hashes)
+
+
+def _summary(
+    index: DataFrame,
+) -> tuple[tuple[int, int] | None, set[str], set[str]]:
+    """(geometry, indexed files, indexed columns) of a manifest from ONE
+    metadata-sized collect of its distinct (file, column, stamp) rows:
+    the geometry is the single (n_bits, k_hashes) stamp, or None for an
+    empty manifest (fully expired: valid, but it stamps nothing). Raises
+    on a mixed or foreign-family index."""
+    rows = (
+        index.select("file", "column", "n_bits", "k_hashes", "family")
+        .distinct()
+        .collect()
     )
-    return _index_for_scan(df, cols, n_bits, k_hashes)
-
-
-def _summary(index: DataFrame) -> tuple[tuple[int, int] | None, set[str]]:
-    """(geometry, indexed files) of a manifest from ONE metadata-sized
-    collect of its distinct (file, stamp) rows: the geometry is the
-    single (n_bits, k_hashes) stamp, or None for an empty manifest
-    (fully expired: valid, but it stamps nothing). Raises on a mixed or
-    foreign-family index."""
-    rows = index.select("file", "n_bits", "k_hashes", "family").distinct().collect()
     geoms = {(r["n_bits"], r["k_hashes"], r["family"]) for r in rows}
     if not geoms:
-        return None, set()
+        return None, set(), set()
     if len(geoms) != 1:
         raise ValueError(
             f"bloom index mixes {len(geoms)} geometries — probe positions "
@@ -207,7 +210,11 @@ def _summary(index: DataFrame) -> tuple[tuple[int, int] | None, set[str]]:
             f"bloom index family {family!r} != this build's "
             f"{FAMILY!r} — positions from a foreign hash family never match"
         )
-    return (int(n_bits), int(k_hashes)), {r["file"] for r in rows}
+    return (
+        (int(n_bits), int(k_hashes)),
+        {r["file"] for r in rows},
+        {r["column"] for r in rows},
+    )
 
 
 def _prune(
@@ -218,7 +225,7 @@ def _prune(
     values = [str(v) for v in values]
     if not values:
         raise ValueError("values must be non-empty")
-    geometry, files = _summary(index)
+    geometry, files, _ = _summary(index)
     if geometry is None:
         return [], files
     n_bits, k_hashes = geometry
@@ -316,50 +323,42 @@ def update_bloom_index(
     spark: SparkSession,
     table_path: str,
     index: DataFrame | None,
-    cols: Sequence[str],
+    cols: Sequence[str] | None,
     n_bits: int = N_BITS_DEFAULT,
     k_hashes: int = K_HASHES_DEFAULT,
+    listing: Iterable[str] | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Incremental manifest maintenance (the ``update_zonemap``
-    discipline): reconcile a persisted index with the files on disk,
-    scanning ONLY files the manifest has never seen. Appends are
-    O(delta); compactions drop the vanished files' rows and index their
-    replacements. Returns (merged index, n_new_files, n_dropped_files).
-    The merged index inherits the existing stamp — a geometry argument
-    that disagrees with it raises rather than mixing filters that can
-    never agree."""
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    discipline, the same ``_reconcile``): reconcile a persisted index
+    with the files on disk, scanning ONLY files the manifest has never
+    seen. Appends are O(delta); compactions drop the vanished files'
+    rows and index their replacements. Returns (merged index,
+    n_new_files, n_dropped_files). The merged index inherits the
+    existing stamp — a geometry argument that disagrees with it raises
+    rather than mixing filters that can never agree.
 
-    on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, table_path)}
+    ``cols=None`` indexes the columns the manifest already holds (read
+    in its summary collect). ``listing`` is the data files under
+    ``table_path`` when the caller has listed them already; None lists
+    ``table_path`` here."""
     # a fully-expired manifest is valid but stamp-less (0 rows) — there is
     # no geometry to inherit, so it reconciles exactly like a fresh build
-    geometry, known = _summary(index) if index is not None else (None, set())
-    if geometry is None:
-        if not on_disk:  # nothing to index and no stamp to keep
-            return empty_frame(spark, INDEX_SCHEMA), 0, 0
-        idx = build_bloom_index(spark, table_path, cols, n_bits, k_hashes)
-        return idx, len(on_disk), 0
-
-    if geometry != (n_bits, k_hashes):
+    geometry, known, indexed = (
+        _summary(index) if index is not None else (None, set(), set())
+    )
+    if geometry is not None and geometry != (n_bits, k_hashes):
         raise ValueError(
             f"existing index is stamped n_bits={geometry[0]}/k={geometry[1]}, "
             f"update asked for {n_bits}/{k_hashes} — mixed geometries never "
             "match; rebuild instead"
         )
-    new_files = sorted(on_disk - known)
-    stale = known - on_disk
+    cols = sorted(indexed) if cols is None else list(cols)
+    if listing is None:
+        listing = _data_files(spark, table_path)
 
-    kept = index
-    if stale:
-        kept = kept.where(~F.col("file").isin(sorted(stale)))
-    if new_files:
-        fresh = _index_for_scan(
-            spark.read.parquet(*new_files)
-            .select(*cols)
-            .withColumn("_file", F.input_file_name()),
-            list(cols),
-            n_bits,
-            k_hashes,
-        )
-        kept = kept.unionByName(fresh)
-    return kept, len(new_files), len(stale)
+    def index_files(files: list[str]) -> DataFrame:
+        if not files or not cols:
+            return empty_frame(spark, INDEX_SCHEMA)
+        return _index_for_scan(spark.read.parquet(*files), cols, n_bits, k_hashes)
+
+    return _reconcile(None if geometry is None else index, known, listing, index_files)

@@ -52,7 +52,7 @@ same contract Iceberg's ``rewrite_data_files`` with a sort order has.
 from __future__ import annotations
 
 import math
-from typing import Iterable, Iterator, Sequence
+from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -98,6 +98,43 @@ def _canon(path: str) -> str:
     if path.startswith("file:/") and not path.startswith("file:///"):
         return "file:///" + path[len("file:/") :].lstrip("/")
     return path
+
+
+def _data_files(spark: SparkSession, path: str) -> list[str]:
+    """Canonical URIs of the parquet data files under ``path`` — one
+    driver-side listing."""
+    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+
+    return [_canon(p) for p, _ in _list_parquet_files(spark, path)]
+
+
+def _reconcile(
+    prev: DataFrame | None,
+    known: set[str],
+    listing: Iterable[str],
+    index_files: Callable[[list[str]], DataFrame],
+) -> tuple[DataFrame, int, int]:
+    """The one file-set diff behind every per-file manifest: rows of
+    files no longer on disk drop, ``index_files`` builds rows for the
+    files on disk that ``prev`` (whose file set is ``known``) has never
+    seen, and the two union. ``prev=None`` (no manifest yet) indexes
+    every listed file. Returns (merged manifest, n_new_files,
+    n_dropped_files).
+
+    A driver-side set diff over file PATHS — metadata-scale; steady
+    state (nothing added or dropped) indexes nothing, the
+    incremental-resume discipline of ``checkpoint.py`` applied to scan
+    planning."""
+    on_disk = {_canon(p) for p in listing}
+    new_files = sorted(on_disk - known)
+    stale = known - on_disk
+    merged = prev
+    if stale:
+        merged = merged.where(~F.col("file").isin(sorted(stale)))
+    if new_files or prev is None:
+        fresh = index_files(new_files)
+        merged = fresh if prev is None else merged.unionByName(fresh)
+    return merged, len(new_files), len(stale)
 
 
 def _file_stats(path: str, cols: Sequence[str]) -> list[dict]:
@@ -161,16 +198,13 @@ def build_zonemap(
     ``path``. IO is footers only, read on executors; the driver handles
     just the file LIST (the same cost compaction and the checkpoint
     manifest already pay)."""
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
-    files = [_canon(p) for p, _ in _list_parquet_files(spark, path)]
-    return _zonemap_for_files(spark, files, cols)
+    return _zonemap_for_files(spark, _data_files(spark, path), cols)
 
 
 def _zonemap_for_files(
     spark: SparkSession, files: list[str], cols: Sequence[str]
 ) -> DataFrame:
-    if not files:
+    if not files or not cols:
         return empty_frame(spark, ZONEMAP_SCHEMA)
     cols = list(cols)
 
@@ -212,14 +246,11 @@ def prune_files(
     return prune_files_multi(zonemap, {col: (lo, hi)})
 
 
-def prune_files_multi(
+def _prune(
     zonemap: DataFrame, ranges: dict[str, tuple[float, float]]
-) -> tuple[list[str], int]:
-    """Conjunctive (AND) pruning over several columns: a file is
-    EXCLUDED if ANY column's stats prove its range misses the query —
-    exclusion sets compose, missing stats never exclude. One manifest
-    filter + distinct; the collect is metadata-sized (the planner-side
-    cost Iceberg pays reading manifests)."""
+) -> tuple[list[str], list[str]]:
+    """(surviving files, every manifest file), both sorted, from ONE
+    grouped collect: per file, whether any of its rows proves a miss."""
     if not ranges:
         raise ValueError("ranges must name at least one column")
     miss = F.lit(False)
@@ -229,13 +260,20 @@ def prune_files_multi(
             & F.col("has_stats")
             & ((F.col("vmax") < F.lit(float(lo))) | (F.col("vmin") > F.lit(float(hi))))
         )
-    all_files = zonemap.select("file").distinct()
-    excluded = zonemap.where(miss).select("file").distinct()
-    kept = [
-        r["file"]
-        for r in all_files.join(excluded, "file", "left_anti").collect()
-    ]
-    return sorted(kept), all_files.count()
+    rows = sorted(zonemap.groupBy("file").agg(F.max(miss).alias("miss")).collect())
+    return [r["file"] for r in rows if not r["miss"]], [r["file"] for r in rows]
+
+
+def prune_files_multi(
+    zonemap: DataFrame, ranges: dict[str, tuple[float, float]]
+) -> tuple[list[str], int]:
+    """Conjunctive (AND) pruning over several columns: a file is
+    EXCLUDED if ANY column's stats prove its range misses the query —
+    exclusion sets compose, missing stats never exclude. One grouped
+    manifest collect; it is metadata-sized (the planner-side cost
+    Iceberg pays reading manifests)."""
+    kept, files = _prune(zonemap, ranges)
+    return kept, len(files)
 
 
 def scan_pruned(
@@ -260,16 +298,13 @@ def scan_pruned_multi(
     empty survivor set returns an empty, correctly-typed frame via an
     impossible filter on one file (parquet schema still comes from the
     footer)."""
-    kept, total = prune_files_multi(zonemap, ranges)
-    src = kept if kept else [
-        r["file"] for r in zonemap.select("file").limit(1).collect()
-    ]
-    df = spark.read.parquet(*src)
+    kept, files = _prune(zonemap, ranges)
+    df = spark.read.parquet(*(kept or files[:1]))
     for col, (lo, hi) in ranges.items():
         df = df.where(F.col(col).between(F.lit(float(lo)), F.lit(float(hi))))
     if not kept:
         df = df.where(F.lit(False))
-    return df, len(kept), total
+    return df, len(kept), len(files)
 
 
 def write_zonemap(zm: DataFrame, path: str) -> None:
@@ -290,38 +325,34 @@ def update_zonemap(
     spark: SparkSession,
     table_path: str,
     zonemap: DataFrame | None,
-    cols: Sequence[str],
+    cols: Sequence[str] | None,
+    listing: Iterable[str] | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Incremental manifest maintenance (Iceberg manifest-append from
     scratch): reconcile a persisted zone map with the files actually on
-    disk, reading footers ONLY for files the manifest has never seen.
-    Appends are O(delta); compactions/rewrites drop the vanished files'
-    rows and stat only their replacements. Returns
+    disk (``_reconcile``), reading footers ONLY for files the manifest
+    has never seen. Appends are O(delta); compactions/rewrites drop the
+    vanished files' rows and stat only their replacements. Returns
     (merged manifest, n_new_files, n_dropped_files).
 
-    The reconciliation is a driver-side set diff over file PATHS —
-    metadata-scale, the same listing cost ``build_zonemap`` and
-    compaction already pay. Steady state (no new files) reads zero
-    footers, the incremental-resume discipline of ``checkpoint.py``
-    applied to scan planning."""
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
-    on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, table_path)}
-    if zonemap is None:
-        zm = build_zonemap(spark, table_path, cols)
-        return zm, len(on_disk), 0
-
-    known = {r["file"] for r in zonemap.select("file").distinct().collect()}
-    new_files = sorted(on_disk - known)
-    stale = known - on_disk
-
-    kept = zonemap
-    if stale:
-        kept = kept.where(~F.col("file").isin(sorted(stale)))
-    if new_files:
-        fresh = _zonemap_for_files(spark, new_files, cols)
-        kept = kept.unionByName(fresh)
-    return kept, len(new_files), len(stale)
+    ``cols=None`` stats the columns the manifest already holds (its file
+    set and columns come from one collect). ``listing`` is the data
+    files under ``table_path`` when the caller has listed them already;
+    None lists ``table_path`` here."""
+    known: set[str] = set()
+    if zonemap is not None:
+        rows = zonemap.select("file", "col").distinct().collect()
+        known = {r["file"] for r in rows}
+        if cols is None:
+            cols = sorted({r["col"] for r in rows})
+    if listing is None:
+        listing = _data_files(spark, table_path)
+    return _reconcile(
+        zonemap,
+        known,
+        listing,
+        lambda files: _zonemap_for_files(spark, files, cols or []),
+    )
 
 
 def write_clustered(

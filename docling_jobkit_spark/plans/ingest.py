@@ -8,8 +8,8 @@ directory, batch-versioned and replay-idempotent:
       → history dedup (exact content-hash + fuzzy MinHash-index probe
         against EVERY previously committed batch — never recomputed)
       → commit: corpus parquet + seen-hash table + MinHash index delta
-        + gzip-JSONL training shards + zone-map manifest + attrition
-        ledger.
+        + gzip-JSONL training shards + zone-map and Bloom manifests +
+        attrition ledger.
 
 Reference parity: docling-jobkit's job model is exactly this loop run
 by hand — convert a batch, cache results keyed by task identity, feed
@@ -26,8 +26,11 @@ State layout (all per-batch families are ``<family>/batch=<id>``):
     index/batch=<id>/    MinHash band delta (band-partitioned,
                          family-digest stamped — minhash_index.py)
     shards/batch=<id>/   gzip JSONL training shards
-    zonemap/             manifest over corpus/ (shared, reconciled
-                         incrementally — operators/zonemap.py)
+    zonemap/             per-file min/max manifest over corpus/
+                         (operators/zonemap.py)
+    bloomidx/            per-file Bloom manifest over corpus/
+                         (operators/bloom_index.py); both are shared
+                         and reconciled by ``_reconcile_manifests``
     ledger/batch=<id>/   per-stage attrition rows; its _SUCCESS is
                          the batch's COMMIT MARKER (written last)
 
@@ -43,9 +46,9 @@ Replay contract (at-least-once driver, exactly-once state):
   is deterministic given (input batch, committed history), so a
   partially committed delta another batch may already have probed is
   byte-identical to what the replay rewrites.
-- The shared zone-map manifest is reconciled against the files on
-  disk every commit (``update_zonemap`` reads footers only for unseen
-  files); losing it entirely just means one full rebuild.
+- The shared manifests are reconciled against ONE listing of the
+  files on disk every commit (only unseen files are indexed); losing
+  either entirely just means one full rebuild.
 
 Single-writer per state_dir: batches commit sequentially (a crawl
 cadence, not a concurrency domain). The intra-batch exactly-once
@@ -92,14 +95,12 @@ from docling_jobkit_spark.operators.bloom_index import (
     write_bloom_index,
 )
 from docling_jobkit_spark.operators.zonemap import (
+    _data_files,
     read_zonemap,
     update_zonemap,
     write_zonemap,
 )
-from docling_jobkit_spark.sinks.maintenance import (
-    _list_parquet_files,
-    shared_listing,
-)
+from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
 from docling_jobkit_spark.plans.curation import (
     STAGES,
     CurationConfig,
@@ -134,6 +135,9 @@ _COMPACT_TMP = "corpus_compact"
 _TAKEDOWN_TMP = "corpus_takedown"
 _SHARD_TMP = "shards_takedown"
 _TMP_FAMILIES = (_COMPACT_TMP, _TAKEDOWN_TMP, _SHARD_TMP)
+# the two pruning manifests over corpus/ (operators/zonemap.py,
+# operators/bloom_index.py), one dir each
+_ZONEMAP, _BLOOMIDX = "zonemap", "bloomidx"
 
 
 @dataclass(frozen=True)
@@ -141,6 +145,7 @@ class IngestConfig:
     curation: CurationConfig = field(default_factory=CurationConfig)
     tau: float = 0.8  # fuzzy threshold vs history (est. Jaccard)
     broadcast_delta: bool = True  # steady state: delta ≪ history
+    # file-level min/max manifest over the corpus. Empty tuple disables.
     zonemap_cols: tuple[str, ...] = ("n_chars",)
     # file-level Bloom index over the corpus (point lookups: audits /
     # takedown "which files hold this doc" — zone maps can't prune a
@@ -240,7 +245,6 @@ def ingest_batch(
     index_root = f"{root}/index"
     shards_root = f"{root}/shards"
     ledger_root = f"{root}/ledger"
-    zonemap_dir = f"{root}/zonemap"
     corpus_dir = f"{corpus_root}/batch={batch_id}"
     ledger_dir = f"{ledger_root}/batch={batch_id}"
 
@@ -383,38 +387,9 @@ def ingest_batch(
         max_shard_bytes=cfg.max_shard_bytes,
     )
 
-    # gate on the committer marker: a torn manifest overwrite (crash
-    # between delete and write) degrades to a full rebuild, never a
-    # failed read of a partial dir
-    zm_prev = (
-        read_zonemap(spark, zonemap_dir)
-        if exists(f"{zonemap_dir}/_SUCCESS")
-        else None
-    )
-    # both manifests reconcile against ONE listing of the corpus, which
-    # nothing writes to from here on
-    with shared_listing(spark, corpus_root) as corpus_files:
-        zm, n_new, n_drop = update_zonemap(
-            spark, corpus_root, zm_prev, list(cfg.zonemap_cols)
-        )
-        _write_if_changed(write_zonemap, zm, zonemap_dir, zm_prev, n_new + n_drop)
-
-        # Bloom manifest over the same corpus (point-predicate twin of the
-        # zone map; operators/bloom_index.py): incremental — only this
-        # batch's new files are scanned, steady state scans nothing. Same
-        # torn-write posture (gate on _SUCCESS, degrade to rebuild).
-        if cfg.bloom_cols:
-            bloom_dir = f"{root}/bloomidx"
-            bi_prev = (
-                read_bloom_index(spark, bloom_dir)
-                if exists(f"{bloom_dir}/_SUCCESS")
-                else None
-            )
-            if bi_prev is not None or corpus_files:
-                bi, bn, bd = update_bloom_index(
-                    spark, corpus_root, bi_prev, list(cfg.bloom_cols)
-                )
-                _write_if_changed(write_bloom_index, bi, bloom_dir, bi_prev, bn + bd)
+    # both pruning manifests reconcile against ONE listing of the
+    # corpus, which nothing writes to from here on
+    n_new, _ = _reconcile_manifests(spark, root, (cfg.zonemap_cols, cfg.bloom_cols))
 
     ledger = funnel_ledger(stamped, stages=INGEST_STAGES)
     ledger.coalesce(1).write.mode("overwrite").parquet(ledger_dir)
@@ -704,9 +679,7 @@ def read_corpus_asof(
         f"{root}/corpus/batch={b}" for b in window if b not in set(expired)
     ]
     if not dirs:
-        return empty_frame(spark, CORPUS_SCHEMA).withColumn(
-            "batch", F.lit(None).cast("string")
-        )
+        return empty_frame(spark, CORPUS_SCHEMA + ", batch string")
     return (
         spark.read.option("basePath", f"{root}/corpus")
         .schema(CORPUS_SCHEMA)
@@ -752,9 +725,7 @@ def read_corpus_latest(
     root = state_dir.rstrip("/")
     committed = committed_dirs(f"{root}/ledger")
     if not committed:
-        return empty_frame(spark, CORPUS_SCHEMA).withColumn(
-            "batch", F.lit(None).cast("string")
-        )
+        return empty_frame(spark, CORPUS_SCHEMA + ", batch string")
     latest = max(committed)
     corpus = read_corpus_asof(spark, root, latest, on_expired=on_expired)
     narrow = corpus.select("doc_id", "url", "batch")
@@ -857,7 +828,7 @@ def locate_content(
         raise ValueError("hashes must be non-empty")
     root = state_dir.rstrip("/")
     corpus_root = f"{root}/corpus"
-    bloom_dir = f"{root}/bloomidx"
+    bloom_dir = f"{root}/{_BLOOMIDX}"
     if exists(f"{bloom_dir}/_SUCCESS"):
         idx = read_bloom_index(spark, bloom_dir)
         # a fully-expired corpus has an empty manifest: nothing to find
@@ -894,6 +865,17 @@ def _in_batch(batch_id: str) -> Column:
     return F.col("file").contains(f"/batch={batch_id}/")
 
 
+def _manifests() -> tuple[tuple, ...]:
+    """(dir name, read, write, update) of each pruning manifest over
+    ``corpus/``. Built per call, so the updaters are looked up by their
+    module-level names when a reconcile runs (a wrapper set on this
+    module, such as perfbench's span tracer, sees every call)."""
+    return (
+        (_ZONEMAP, read_zonemap, write_zonemap, update_zonemap),
+        (_BLOOMIDX, read_bloom_index, write_bloom_index, update_bloom_index),
+    )
+
+
 def _drop_manifest_rows(spark: SparkSession, root: str, drop: Column) -> None:
     """Both pruning manifests stop referencing the files matching the
     ``drop`` predicate (over their ``file`` column) BEFORE any file is
@@ -901,10 +883,7 @@ def _drop_manifest_rows(spark: SparkSession, root: str, drop: Column) -> None:
     pruned scan (which reads survivors by explicit manifest path)
     references deleted payload. Metadata-sized: one ``count_if``
     aggregate per manifest, and a rewrite only where it counts rows."""
-    for name, read, write in (
-        ("zonemap", read_zonemap, write_zonemap),
-        ("bloomidx", read_bloom_index, write_bloom_index),
-    ):
+    for name, read, write, _ in _manifests():
         path = f"{root}/{name}"
         if exists(f"{path}/_SUCCESS"):
             manifest = read(spark, path)
@@ -912,37 +891,40 @@ def _drop_manifest_rows(spark: SparkSession, root: str, drop: Column) -> None:
                 write(manifest.where(~drop).localCheckpoint(eager=True), path)
 
 
-def _write_if_changed(write, manifest, path, prev, n_changed: int) -> None:
-    """Persist a reconciled manifest unless it equals the one already at
-    ``path`` (``prev`` read from there, no file added or dropped). The
-    overwrite reads lazily from the dir being replaced, so the manifest
-    (metadata-sized) is materialized first."""
-    if prev is None or n_changed:
-        write(manifest.localCheckpoint(eager=True), path)
-
-
-def _reconcile_manifests(spark: SparkSession, root: str) -> None:
-    """Standard incremental reconciliation after a layout change: stale
-    rows drop, unseen files get footer-statted (O(new files)). Indexed
-    columns are read off each manifest itself."""
+def _reconcile_manifests(
+    spark: SparkSession, root: str, cols: tuple[tuple[str, ...], ...] | None = None
+) -> list[int]:
+    """The one reconciliation of the pruning manifests with the corpus
+    files on disk, after a commit or a layout change: ONE listing of
+    ``corpus/``; each manifest is read behind its ``_SUCCESS`` gate (a
+    torn overwrite degrades to a rebuild, never a failed read of a
+    partial dir), reconciled (stale rows drop, unseen files are
+    indexed, O(new files)) and rewritten only if a file was added or
+    dropped. ``cols`` holds the columns to index per manifest, in
+    ``_manifests()`` order (``ingest_batch``'s config; an empty tuple
+    skips that manifest); None reconciles only the manifests that
+    exist, over the columns each already indexes (compaction,
+    takedown). Returns each manifest's new-file count."""
     corpus_root = f"{root}/corpus"
-    zonemap_dir = f"{root}/zonemap"
-    if exists(f"{zonemap_dir}/_SUCCESS"):
-        zm_prev = read_zonemap(spark, zonemap_dir)
-        zcols = sorted(
-            r["col"] for r in zm_prev.select("col").distinct().collect()
-        ) or ["n_chars"]
-        zm, n_new, n_drop = update_zonemap(spark, corpus_root, zm_prev, zcols)
-        _write_if_changed(write_zonemap, zm, zonemap_dir, zm_prev, n_new + n_drop)
-    bloom_dir = f"{root}/bloomidx"
-    if exists(f"{bloom_dir}/_SUCCESS"):
-        bi_prev = read_bloom_index(spark, bloom_dir)
-        bcols = sorted(
-            r["column"] for r in bi_prev.select("column").distinct().collect()
-        )
-        if bcols:
-            bi, bn, bd = update_bloom_index(spark, corpus_root, bi_prev, bcols)
-            _write_if_changed(write_bloom_index, bi, bloom_dir, bi_prev, bn + bd)
+    listing = _data_files(spark, corpus_root)
+    n_new = []
+    for i, (name, read, write, update) in enumerate(_manifests()):
+        path = f"{root}/{name}"
+        want = None if cols is None else cols[i]
+        prev = read(spark, path) if exists(f"{path}/_SUCCESS") else None
+        disabled = want is not None and not want
+        # a layout change keeps what exists; a commit creates what is
+        # missing, except a Bloom manifest over an empty corpus (no stamp)
+        absent = prev is None and (want is None or (name == _BLOOMIDX and not listing))
+        if disabled or absent:
+            n_new.append(0)
+            continue
+        merged, n, n_drop = update(spark, corpus_root, prev, want, listing=listing)
+        if prev is None or n + n_drop:
+            # the overwrite reads lazily from the dir it replaces
+            write(merged.localCheckpoint(eager=True), path)
+        n_new.append(n)
+    return n_new
 
 
 def _rewrite_corpus(
@@ -1262,6 +1244,26 @@ def supersede_batch(
     return SupersedeStats(batch_id, n_urls, len(targets), del_stats)
 
 
+def _read_ledgers(spark: SparkSession, root: str, batch_ids: list[str]) -> DataFrame:
+    """Every listed batch's ledger rows in ONE scan under one basePath,
+    with the ``batch`` partition column."""
+    return (
+        spark.read.option("basePath", f"{root}/ledger")
+        .schema(LEDGER_SCHEMA + ", batch string")
+        .parquet(*[f"{root}/ledger/batch={b}" for b in batch_ids])
+    )
+
+
+def _ledger_endpoints(led: DataFrame) -> DataFrame:
+    """(batch, docs_in, docs_kept) per batch of ``_read_ledgers`` rows:
+    the first stage's docs_in and the last stage's docs_kept, by struct
+    extrema on stage_order."""
+    return led.groupBy("batch").agg(
+        F.min(F.struct("stage_order", "docs_in"))["docs_in"].alias("docs_in"),
+        F.max(F.struct("stage_order", "docs_kept"))["docs_kept"].alias("docs_kept"),
+    )
+
+
 def ingest_drift_report(
     spark: SparkSession,
     state_dir: str,
@@ -1312,23 +1314,11 @@ def ingest_drift_report(
         "stage_tv double, drifted boolean"
     )
     if not batch_ids:
-        pairs_t = [p.strip().rsplit(" ", 1) for p in out_schema.split(",")]
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(c) for c, t in pairs_t]
-        )
+        return empty_frame(spark, out_schema)
 
     # -- ledger vectors: per-stage drop share + kept share -------------
-    led = (
-        spark.read.option("basePath", f"{root}/ledger")
-        .schema(LEDGER_SCHEMA + ", batch string")
-        .parquet(*[f"{root}/ledger/batch={b}" for b in batch_ids])
-    )
-    totals = led.groupBy("batch").agg(
-        F.min(F.struct("stage_order", "docs_in"))["docs_in"].alias("docs_in"),
-        F.max(F.struct("stage_order", "docs_kept"))["docs_kept"].alias(
-            "docs_kept"
-        ),
-    )
+    led = _read_ledgers(spark, root, batch_ids)
+    totals = _ledger_endpoints(led)
     # attrition vector components: one per stage, plus "kept" — shares
     # of docs_in, so the vector sums to exactly 1 per batch
     drops = led.select(
@@ -1447,10 +1437,7 @@ def ingest_drift_report(
             F.sequence(F.lit(0), F.lit(n_buckets - 1)),
         ).withColumnsRenamed({"tv": "length_tv"})
     else:
-        length_tv = spark.range(0).select(
-            F.lit("").alias("batch_id"),
-            F.lit(0.0).alias("length_tv"),
-        )
+        length_tv = empty_frame(spark, "batch_id string, length_tv double")
 
     rep = (
         pair_dim.join(
@@ -1519,19 +1506,9 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
     # opened).
     led_stats: dict[str, tuple[int, int]] = {}
     if batches:
-        led = (
-            spark.read.option("basePath", f"{root}/ledger")
-            .schema(LEDGER_SCHEMA + ", batch string")
-            .parquet(*[f"{root}/ledger/batch={b}" for b in sorted(batches)])
-        )
-        endpoints = led.groupBy("batch").agg(
-            F.min(F.struct("stage_order", "docs_in"))["docs_in"].alias("_in"),
-            F.max(F.struct("stage_order", "docs_kept"))["docs_kept"].alias(
-                "_kept"
-            ),
-        )
+        endpoints = _ledger_endpoints(_read_ledgers(spark, root, sorted(batches)))
         led_stats = {
-            r["batch"]: (int(r["_in"]), int(r["_kept"]))
+            r["batch"]: (int(r["docs_in"]), int(r["docs_kept"]))
             for r in endpoints.collect()
         }
     rows = []

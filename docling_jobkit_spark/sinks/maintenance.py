@@ -30,7 +30,6 @@ PLANNED (scan partitions fixed) before restore.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -46,31 +45,11 @@ class CompactionStats:
     n_rows: int
 
 
-# path -> the listing ``shared_listing`` took on entry to its block
-_SHARED: dict[str, list[tuple[str, int]]] = {}
-
-
-@contextmanager
-def shared_listing(spark: SparkSession, path: str):
-    """Inside the block, every ``_list_parquet_files(spark, path)`` answers
-    from ONE listing taken on entry (yielded too) instead of listing
-    ``path`` again: the zone-map and Bloom reconciliations of one commit
-    share it. The caller guarantees nothing under ``path`` changes
-    inside the block."""
-    _SHARED[path] = _list_parquet_files(spark, path)
-    try:
-        yield list(_SHARED[path])
-    finally:
-        del _SHARED[path]
-
-
 def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(path, bytes) of the data files under ``path`` — one driver-side
     Hadoop-FS listing (object-store safe: LIST, no rename assumptions),
     bounded by the file count, which is exactly what compaction is
     trying to shrink."""
-    if path in _SHARED:
-        return list(_SHARED[path])
     fs, jpath = _fs(path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(jpath, True)

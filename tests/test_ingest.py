@@ -28,6 +28,9 @@ INGEST_JOB_BUDGET = 53
 SECOND_BATCH_COMPILES = 20
 DROP_ROWS_NOOP_JOBS = 4
 DROP_ROWS_JOBS = 8
+# Compacting a 4-file batch and reconciling both manifests ran 28 jobs
+# (32 with a distinct-column collect per manifest).
+COMPACT_JOBS = 29
 
 
 def _batch_a(spark, sf_dir):
@@ -1316,3 +1319,79 @@ def test_ingest_drift_report_flags_planted_drift(spark, sf_dir, tmp_path):
     assert rep2["2026-02"]["kept_rate"] == pytest.approx(
         rep[1]["kept_rate"]
     )
+
+
+def test_compact_ingest_batch_job_budget(spark, tmp_path, count_jobs):
+    """Compaction reconciles both manifests against one corpus listing,
+    reading each manifest's file set and indexed columns in ONE collect
+    (a separate distinct-column collect per manifest ran on top of
+    it), and leaves both manifests naming exactly the files on disk."""
+    from docling_jobkit_spark.operators.bloom_index import (
+        build_bloom_index,
+        read_bloom_index,
+        write_bloom_index,
+    )
+    from docling_jobkit_spark.operators.zonemap import (
+        _canon,
+        build_zonemap,
+        read_zonemap,
+        write_zonemap,
+    )
+    from docling_jobkit_spark.plans.ingest import compact_ingest_batch
+    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+
+    root = str(tmp_path / "state")
+    spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("https://x.example/"), F.col("id").cast("string")).alias("url"),
+        F.col("id").cast("string").alias("text"),
+        F.sha2(F.col("id").cast("string"), 256).alias("content_hash"),
+        F.col("id").alias("n_chars"),
+    ).repartition(4).write.parquet(f"{root}/corpus/batch=x")
+    spark.range(1).write.parquet(f"{root}/ledger/batch=x")  # the commit marker
+    write_zonemap(build_zonemap(spark, f"{root}/corpus", ["n_chars"]), f"{root}/zonemap")
+    write_bloom_index(
+        build_bloom_index(spark, f"{root}/corpus", ["content_hash"]), f"{root}/bloomidx"
+    )
+
+    stats, n_jobs = count_jobs(compact_ingest_batch, spark, root, "x")
+    assert stats.n_files_before == 4 and stats.n_files_after == 1
+    assert n_jobs <= COMPACT_JOBS, f"compact_ingest_batch ran {n_jobs} jobs"
+    on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, f"{root}/corpus")}
+    for manifest in (read_zonemap(spark, f"{root}/zonemap"),
+                     read_bloom_index(spark, f"{root}/bloomidx")):
+        assert {r["file"] for r in manifest.select("file").distinct().collect()} == on_disk
+
+
+@pytest.mark.parametrize("reader", ["asof", "latest", "drift"])
+def test_empty_state_reads_keep_their_schema(spark, tmp_path, reader):
+    """The empty results of the time-travel, latest-view and drift reads
+    keep their exact schema, every column nullable: the corpus columns
+    plus a string ``batch``, and the drift report's eight columns."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from docling_jobkit_spark.plans.ingest import (
+        CORPUS_SCHEMA,
+        ingest_drift_report,
+        read_corpus_asof,
+        read_corpus_latest,
+    )
+
+    root = str(tmp_path / "state")
+    if reader == "asof":  # committed, payload expired: nothing left to read
+        spark.range(1).write.parquet(f"{root}/ledger/batch=b1")
+        df = read_corpus_asof(spark, root, "b1", on_expired="skip")
+        ddl = CORPUS_SCHEMA + ", batch string"
+    elif reader == "latest":
+        df = read_corpus_latest(spark, root)
+        ddl = CORPUS_SCHEMA + ", batch string"
+    else:
+        df = ingest_drift_report(spark, root)
+        ddl = (
+            "batch_id string, prev_batch_id string, docs_in bigint, "
+            "docs_kept bigint, kept_rate double, length_tv double, "
+            "stage_tv double, drifted boolean"
+        )
+    assert df.schema == _parse_datatype_string(ddl)
+    assert all(f.nullable for f in df.schema.fields)
+    assert df.count() == 0

@@ -638,3 +638,64 @@ def test_twin_algorithms_have_one_home():
         if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("decontam"):
             private = [a.name for a in node.names if a.name.startswith("_")]
             assert not private, f"minhash_index imports {private} from decontam"
+
+
+def test_manifest_reconcile_has_one_home():
+    """Manifest reconciliation is written once. The on-disk vs known
+    file-set diff (``a - b`` beside ``b - a``) lives in ONE top-level
+    function of the package, ``zonemap._reconcile``, which the zone-map
+    and Bloom updaters both call; no ``sinks/`` module keeps a
+    module-level mutable cache (a listing cache there silently changed
+    what ``_list_parquet_files`` returned); and ``plans/ingest.py``
+    names the manifest dirs ``zonemap`` and ``bloomidx`` in one
+    statement, which every manifest loop reads."""
+    import ast
+    import pathlib
+
+    import docling_jobkit_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    diff_sites = set()
+    for path in root.rglob("*.py"):
+        for top in ast.parse(path.read_text()).body:
+            subs = {
+                (ast.dump(n.left), ast.dump(n.right))
+                for n in ast.walk(top)
+                if isinstance(n, ast.BinOp) and isinstance(n.op, ast.Sub)
+            }
+            if any((b, a) in subs for a, b in subs):
+                stem = path.relative_to(root).with_suffix("").as_posix()
+                diff_sites.add(f"{stem}.{getattr(top, 'name', '<module>')}")
+    assert diff_sites == {"operators/zonemap._reconcile"}, diff_sites
+
+    mutable = (ast.Dict, ast.List, ast.Set, ast.DictComp, ast.ListComp, ast.SetComp)
+    for path in (root / "sinks").glob("*.py"):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, (ast.Assign, ast.AnnAssign)) and top.value is not None:
+                value = top.value
+                is_call = isinstance(value, ast.Call) and getattr(
+                    value.func, "id", getattr(value.func, "attr", None)
+                ) in ("dict", "list", "set", "defaultdict", "OrderedDict")
+                assert not (isinstance(value, mutable) or is_call), (
+                    f"{path.name}:{top.lineno}: module-level mutable state"
+                )
+
+    tree = ast.parse((root / "plans" / "ingest.py").read_text())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    named = {
+        top.lineno
+        for top in tree.body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docstrings
+        and re.search(r"(^|/)(zonemap|bloomidx)(/|$)", node.value)
+    }
+    assert len(named) == 1, f"manifest dirs named at lines {sorted(named)}"

@@ -20,6 +20,11 @@ from docling_jobkit_spark.operators.zonemap import (
     write_clustered,
 )
 
+# Jobs to plan a pruned scan of a 16-file manifest, with survivors and
+# without: 3 either way (8 with the anti-join collect, the file count
+# and the schema-file collect).
+PRUNED_SCAN_JOBS = 4
+
 
 @pytest.fixture(scope="module")
 def clustered(spark, tmp_path_factory):
@@ -203,3 +208,18 @@ def test_multi_column_conjunctive_prune(spark, tmp_path):
     )
     assert got2.count() == full2.count() > 0
     assert kept2 <= len(kept_v) and kept2 < total2
+
+
+def test_pruned_scan_reads_the_manifest_once(spark, clustered, count_jobs):
+    """A pruned scan is planned from ONE grouped collect of the manifest
+    (per file: does any row prove a miss), which gives the survivors, the
+    total, and the file an empty scan takes its schema from — not an
+    anti-join collect, a count of every file and, when nothing
+    survives, a third ``limit(1)`` collect. The rest is the survivor
+    read's schema inference."""
+    zm = build_zonemap(spark, clustered, ["v"]).localCheckpoint(eager=True)
+    (df, kept, total), n_some = count_jobs(scan_pruned, spark, zm, "v", 10.0, 24.0)
+    assert 0 < kept < total
+    (empty, kept0, total0), n_none = count_jobs(scan_pruned, spark, zm, "v", 1e9, 2e9)
+    assert kept0 == 0 and total0 == total and empty.count() == 0
+    assert n_some <= PRUNED_SCAN_JOBS and n_none <= PRUNED_SCAN_JOBS, (n_some, n_none)
