@@ -190,7 +190,7 @@ def _q_jaccard_pairs(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     return jaccard_pairs(
         docs, block_cols=("lang",), threshold_num=1, threshold_den=2,
-        shingle_k=3, prefix_filter=True,
+        shingle_k=3,
     ).select("id_a", "id_b", "n_common", "n_union", "jaccard")
 
 
@@ -2008,7 +2008,7 @@ def _q_content_locate(spark, sf_dir):
         locate_content,
     )
 
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     base = (
         _read(spark, sf_dir, "documents")
@@ -2180,7 +2180,7 @@ def _q_takedown_delete(spark, sf_dir):
         ingest_batch,
         locate_content,
     )
-    from docling_jobkit_spark.sinks.maintenance import (
+    from docling_jobkit_spark.checkpoint import (
         _list_parquet_files,
         content_signature,
     )
@@ -2342,7 +2342,7 @@ def _q_batch_rollback(spark, sf_dir):
         read_corpus_asof,
         rollback_batch,
     )
-    from docling_jobkit_spark.sinks.maintenance import content_signature
+    from docling_jobkit_spark.checkpoint import content_signature
 
     def _batch(cls):
         return (
@@ -2425,7 +2425,7 @@ def _q_upsert_latest(spark, sf_dir):
         read_corpus_latest,
         supersede_batch,
     )
-    from docling_jobkit_spark.sinks.maintenance import content_signature
+    from docling_jobkit_spark.checkpoint import content_signature
 
     def _batch(cls):
         return (
@@ -2649,10 +2649,8 @@ def _q_compact_roundtrip(spark, sf_dir):
     import os
     import tempfile
 
-    from docling_jobkit_spark.sinks.maintenance import (
-        compact_files,
-        content_signature,
-    )
+    from docling_jobkit_spark.checkpoint import content_signature
+    from docling_jobkit_spark.sinks.maintenance import compact_files
 
     docs = _read(spark, sf_dir, "documents")
     # per-(sf, process) path: same no-race discipline as the shards entry
@@ -2663,13 +2661,12 @@ def _q_compact_roundtrip(spark, sf_dir):
     frag, dst = os.path.join(base, "frag"), os.path.join(base, "compact")
     docs.write.mode("overwrite").option("maxRecordsPerFile", 40).parquet(frag)
     stats = compact_files(spark, frag, dst, target_file_bytes=8 * 1024 * 1024)
-    match = content_signature(
-        spark.read.parquet(frag), "doc_id"
-    ) == content_signature(spark.read.parquet(dst), "doc_id")
+    got = content_signature(spark.read.parquet(dst), "doc_id")
+    match = content_signature(spark.read.parquet(frag), "doc_id") == got
     return spark.range(1).select(
         F.lit(stats.n_files_before).alias("n_files_before"),
         F.lit(stats.n_files_after).alias("n_files_after"),
-        F.lit(stats.n_rows).cast("long").alias("n_rows"),
+        F.lit(got[0]).cast("long").alias("n_rows"),
         F.lit(bool(match)).alias("content_match"),
     )
 

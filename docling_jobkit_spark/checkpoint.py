@@ -122,6 +122,21 @@ def list_status(root: str, prefix: str = ""):
                 yield st
 
 
+def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(path, bytes) of the parquet data files anywhere under ``path`` —
+    one recursive driver-side LIST, bounded by the file count; ``_``/``.``
+    metadata files are skipped."""
+    fs, jpath = _fs(path)
+    out: list[tuple[str, int]] = []
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        st = it.next()
+        name = st.getPath().getName()
+        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+            out.append((st.getPath().toString(), int(st.getLen())))
+    return out
+
+
 def committed_dirs(root: str, prefix: str = "batch=") -> dict[str, str]:
     """{key: dir} for each directory ``root/<prefix><key>`` whose OWN
     ``_SUCCESS`` exists — a torn write (no committer marker) is

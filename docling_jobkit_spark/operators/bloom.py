@@ -52,6 +52,17 @@ def bloom_positions(
     )
 
 
+def bloom_word() -> tuple[Column, Column]:
+    """(word_idx, _mask) for a bit position column ``_pos``: the packed
+    long the bit lands in and its one-bit mask within that long."""
+    return (
+        F.expr(f"_pos div {_WORD}").alias("word_idx"),
+        F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, {_WORD}) AS INT))").alias(
+            "_mask"
+        ),
+    )
+
+
 def build_bloom(
     df: DataFrame,
     key_col: str = "url",
@@ -59,22 +70,11 @@ def build_bloom(
     k_hashes: int = K_HASHES_DEFAULT,
 ) -> DataFrame:
     """(word_idx, bits) — the packed filter, <= ceil(n_bits/62) rows."""
-    pos = (
-        df.select(
-            F.explode(
-                bloom_positions(F.col(key_col), n_bits, k_hashes)
-            ).alias("_pos")
-        )
+    pos = df.select(
+        F.explode(bloom_positions(F.col(key_col), n_bits, k_hashes)).alias("_pos")
     )
     return (
-        pos.select(
-            F.expr(f"_pos div {_WORD}").alias("word_idx"),
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, {_WORD}) AS INT))").alias(
-                "_mask"
-            ),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("_mask").alias("bits"))
+        pos.select(*bloom_word()).groupBy("word_idx").agg(F.bit_or("_mask").alias("bits"))
     )
 
 
@@ -93,13 +93,7 @@ def bloom_probe(
         F.explode(bloom_positions(F.col(key_col), n_bits, k_hashes)).alias(
             "_pos"
         ),
-    ).select(
-        "_k",
-        F.expr(f"_pos div {_WORD}").alias("word_idx"),
-        F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, {_WORD}) AS INT))"
-        ).alias("_mask"),
-    )
+    ).select("_k", *bloom_word())
     hit = (
         probes.join(F.broadcast(bloom), on="word_idx", how="left")
         .select(

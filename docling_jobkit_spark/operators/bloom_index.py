@@ -62,11 +62,11 @@ from pyspark.sql import types as T
 
 from docling_jobkit_spark.checkpoint import exists
 from docling_jobkit_spark.functions.scalar import empty_frame
+from docling_jobkit_spark.operators.bloom import _WORD, bloom_positions, bloom_word
 from docling_jobkit_spark.operators.zonemap import _canon, _data_files, _reconcile
 
 N_BITS_DEFAULT = 1 << 13
 K_HASHES_DEFAULT = 5
-_WORD = 62  # bits per packed long; <= 62 keeps every mask positive everywhere
 # identity of the position derivation below — a probe against an index
 # stamped with anything else raises (foreign hash family would silently
 # never match)
@@ -119,8 +119,6 @@ def _index_for_scan(
     keyed by each row's ``input_file_name()`` (canonical URI). One
     map-side-combined aggregation per column + the sentinel marker
     rows."""
-    from docling_jobkit_spark.operators.bloom import bloom_positions
-
     df = scan.select(*cols).withColumn("_file", F.input_file_name())
     parts = []
     for col in cols:
@@ -131,13 +129,7 @@ def _index_for_scan(
             ).alias("_pos"),
         ).where(F.col("_pos").isNotNull())
         words = (
-            pos.select(
-                "file",
-                F.expr(f"_pos div {_WORD}").alias("word_idx"),
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, {_WORD}) AS INT))"
-                ).alias("_mask"),
-            )
+            pos.select("file", *bloom_word())
             .groupBy("file", "word_idx")
             .agg(F.bit_or("_mask").alias("bits"))
         )

@@ -6,18 +6,13 @@ de-duplication against eval sets): any training doc containing a k-gram
 that also appears in a benchmark text is contaminated and must be
 dropped or scrubbed before training.
 
-Spark-first shape, two regimes:
-
-- **Broadcast regime** (default; benchmark = thousands-to-millions of
-  samples): the benchmark reduces to its DISTINCT k-gram hashes — a
-  small table — broadcast to every executor. The corpus side is then
-  scan -> explode(k-gram hashes) -> broadcast semi-join -> groupBy(doc).
-  The corpus never shuffles its text; the only corpus-wide shuffle
-  carries (doc_id, matched-hash) pairs AFTER the semi-join, i.e. only
-  the contaminated slice.
-- **Shuffle regime** (``broadcast_benchmark=False``; benchmark too big
-  to broadcast): same plan but a shuffled semi-join on the uniform
-  56-bit gram hash — no skew by construction.
+Spark-first shape: a benchmark is thousands-to-millions of samples, so
+it reduces to its DISTINCT k-gram hashes — a small table — broadcast to
+every executor. The corpus side is then scan -> explode(k-gram hashes)
+-> broadcast semi-join -> groupBy(doc). The corpus never shuffles its
+text; the only corpus-wide shuffle carries (doc_id, matched-hash) pairs
+AFTER the semi-join, i.e. only the contaminated slice. The fuzzy
+variant below broadcasts the benchmark's banded signatures the same way.
 
 Hashes use the cross-engine ``stable_hash64`` (sha256-prefix) so the
 DuckDB oracle reproduces the decision bit-for-bit.
@@ -54,7 +49,7 @@ def benchmark_gram_set(
     benchmark: DataFrame, text_col: str = "text", k: int = 5
 ) -> DataFrame:
     """The benchmark's distinct k-gram hashes — one narrow long column,
-    the unit that gets broadcast (or shuffled) against the corpus."""
+    the unit that gets broadcast against the corpus."""
     return (
         benchmark.select(F.explode(kgram_hashes(text_col, k)).alias("bench_gram"))
         .distinct()
@@ -67,7 +62,6 @@ def contamination(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    broadcast_benchmark: bool = True,
     spread: bool = True,
 ) -> DataFrame:
     """Per-document contamination stats against a benchmark set.
@@ -83,9 +77,7 @@ def contamination(
     """
     from docling_jobkit_spark.operators.dedup import spread_for_compute
 
-    bench = benchmark_gram_set(benchmark, text_col, k)
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(benchmark_gram_set(benchmark, text_col, k))
     if spread:
         df = spread_for_compute(df, key=id_col)
     doc_grams = df.select(
@@ -119,7 +111,6 @@ def contamination_fuzzy_pairs(
     id_col: str = "doc_id",
     bench_id_col: str = "doc_id",
     bench_text_col: str | None = None,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """(doc_id, bench_id, n_agree, est_jaccard) for every corpus doc ×
     benchmark sample that shares an LSH band AND whose signature
@@ -127,16 +118,15 @@ def contamination_fuzzy_pairs(
     ceil(tau · 64) — no float threshold ambiguity).
 
     Scale shape: the benchmark's banded signatures broadcast (eval sets
-    are thousands of rows; ``broadcast_benchmark=False`` falls back to a
-    shuffled equi-join on the uniform bucket), so the corpus side is
+    are thousands of rows), so the corpus side is
     scan → signature → map-side band join — the minhash index's probe
     (``minhash_index._agreeing_pairs``) with the benchmark as the probe.
     Document text never moves."""
     corpus = banded_signatures(df, text_col, id_col)
     bench = banded_signatures(benchmark, bench_text_col or text_col, bench_id_col)
-    return _agreeing_pairs(
-        bench, corpus, tau, "bench_id", "doc_id", broadcast_benchmark
-    ).select("doc_id", "bench_id", "n_agree", "est_jaccard")
+    return _agreeing_pairs(bench, corpus, tau, "bench_id", "doc_id").select(
+        "doc_id", "bench_id", "n_agree", "est_jaccard"
+    )
 
 
 def contamination_fuzzy(
@@ -147,19 +137,11 @@ def contamination_fuzzy(
     id_col: str = "doc_id",
     bench_id_col: str = "doc_id",
     bench_text_col: str | None = None,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per-doc rollup: (id, n_bench_hits, max_est_jaccard, contaminated)
     — one row per corpus doc, clean docs included (the droppable set is
     ``where contaminated``)."""
     pairs = contamination_fuzzy_pairs(
-        df,
-        benchmark,
-        tau,
-        text_col,
-        id_col,
-        bench_id_col,
-        bench_text_col,
-        broadcast_benchmark,
+        df, benchmark, tau, text_col, id_col, bench_id_col, bench_text_col
     )
     return _per_doc(df, id_col, pairs, "n_bench_hits", "contaminated")

@@ -4,9 +4,9 @@ Core training-data-pipeline ops (build brief), designed Spark-first:
 
 - **exact**: hash-groupBy on the normalized-text sha256 — one shuffle on
   a uniform 256-bit key; min(doc_id) is the canonical representative.
-- **jaccard pairs**: word-set Jaccard over a *blocked* self-join — the
-  equi-join key caps the candidate space, Catalyst picks broadcast vs
-  sort-merge. Exact arithmetic: |∩| and |∪| are ints.
+- **jaccard pairs**: word- or shingle-set Jaccard within blocks via a
+  PPJoin prefix-filtered equi-join on rare prefix elements — no
+  quadratic block join. Exact arithmetic: |∩| and |∪| are ints.
 - **MinHash+LSH**: shingle → 64 permutation-min signatures → band/bucket
   → bucket-join. Shingle hashes come from sha256 hex prefixes (stable_
   hash64) so signatures are reproducible in ANY engine; permutations are
@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.functions.scalar import (
@@ -206,88 +206,20 @@ def jaccard_pairs(
     threshold_num: int = 1,
     threshold_den: int = 2,
     shingle_k: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
-    """Near-duplicate pairs by set Jaccard within blocks.
-
-    ``prefix_filter=True`` switches to the PPJoin-style prefix-filtered
-    plan: identical output, but candidates come from an equi-join on
-    rare prefix elements instead of the all-pairs block join — the
-    variant that survives at corpus scale (measured: 233 s → seconds on
-    5k docs; all-pairs is quadratic in block size).
+    """Near-duplicate pairs by set Jaccard within blocks: (id_a, id_b,
+    n_common, n_union, jaccard) with id_a < id_b sharing every
+    ``block_cols`` value.
 
     ``shingle_k=None`` compares distinct-word sets; ``shingle_k=k``
     compares k-word shingle sets (far more discriminative on
     small-vocabulary corpora — word sets saturate when most documents
     share the vocabulary). Jaccard ≥ num/den tested in integer
-    arithmetic (deterministic): |∩| * den ≥ |∪| * num.
-    """
-    df = spread_for_compute(df, key=id_col)
-    if shingle_k is not None:
-        words = word_shingles(text_col, shingle_k)
-    else:
-        words = F.array_distinct(tokens(F.lower(F.col(text_col))))
-    if prefix_filter:
-        return _jaccard_pairs_prefix(
-            df, words, id_col, block_cols, threshold_num, threshold_den
-        )
-    base = df.select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in block_cols],
-        words.alias("words"),
-        F.size(words).alias("nw"),
-    )
-    a = base.select(
-        F.col("id").alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in block_cols],
-        F.col("words").alias("words_a"),
-        F.col("nw").alias("nw_a"),
-    )
-    b = base.select(
-        F.col("id").alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in block_cols],
-        F.col("words").alias("words_b"),
-        F.col("nw").alias("nw_b"),
-    )
-    cond = F.col("id_a") < F.col("id_b")
-    for c in block_cols:
-        cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    # length-ratio prefilter (standard set-similarity-join pruning):
-    # J(A,B) ≥ t ⇒ |A|/|B| and |B|/|A| ≥ t — a NECESSARY condition, so
-    # the output is unchanged but the expensive intersect runs on far
-    # fewer pairs (measured: 68 s → a few s on 5k docs at t=0.6)
-    cond = (
-        cond
-        & (F.col("nw_a") * threshold_den >= F.col("nw_b") * threshold_num)
-        & (F.col("nw_b") * threshold_den >= F.col("nw_a") * threshold_num)
-    )
-    joined = a.join(b, on=cond)
-    inter = F.size(F.array_intersect("words_a", "words_b"))
-    union = F.size(F.array_union("words_a", "words_b"))
-    return (
-        joined.select(
-            "id_a",
-            "id_b",
-            inter.alias("n_common"),
-            union.alias("n_union"),
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .filter(
-            (F.col("n_common") * threshold_den >= F.col("n_union") * threshold_num)
-            & (F.col("n_union") > 0)
-        )
-    )
+    arithmetic (deterministic): |∩| * den ≥ |∪| * num, with
+    0 < num ≤ den — a pair with no common element is never a candidate,
+    so a threshold ≤ 0 is refused rather than answered short.
 
-
-def _jaccard_pairs_prefix(
-    df: DataFrame,
-    words,
-    id_col: str,
-    block_cols: tuple[str, ...],
-    threshold_num: int,
-    threshold_den: int,
-) -> DataFrame:
-    """Prefix-filtered set-similarity join (PPJoin family, public
+    Prefix-filtered set-similarity join (PPJoin family, public
     algorithm): J(A,B) ≥ t implies A and B share at least one element
     among the first ``n - ceil(t·n) + 1`` elements under ANY global total
     order. The order used here is ASCENDING DOCUMENT FREQUENCY (rarest
@@ -297,7 +229,8 @@ def _jaccard_pairs_prefix(
     prefix. The candidate join also applies the length-ratio filter
     (J ≥ t ⇒ t·|B| ≤ |A| ≤ |B|/t), so oversized/undersized pairs never
     reach verification. Exact verification afterwards — output identical
-    to the all-pairs plan.
+    to an all-pairs block join, which is quadratic in block size
+    (measured: 233 s → seconds on 5k docs).
 
     Plan shape at scale: one token-frequency agg (shuffle on token), one
     doc re-group (shuffle on id), the prefix candidate equi-join (shuffle
@@ -320,19 +253,29 @@ def _jaccard_pairs_prefix(
     (measured at sf0.1: 36.5 → 27.9 CPU-s end to end, identical pairs).
     One exchange (the window's hash partition by id) replaces two (the
     regroup and the prefix re-explode's lineage), and the per-doc
-    interpreted array sort disappears."""
-    from pyspark.sql import Window
-
+    interpreted array sort disappears.
+    """
+    if not 0 < threshold_num <= threshold_den:
+        raise ValueError(
+            "jaccard_pairs needs 0 < threshold_num / threshold_den <= 1, "
+            f"got {threshold_num}/{threshold_den}"
+        )
+    df = spread_for_compute(df, key=id_col)
+    if shingle_k is not None:
+        words = word_shingles(text_col, shingle_k)
+    else:
+        words = F.array_distinct(tokens(F.lower(F.col(text_col))))
     hashed = F.transform(words, lambda s: stable_hash64(s, bits=52))
-    sets = df.select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in block_cols],
-        hashed.alias("sh"),
     # materialized ONCE: the tokenize→shingle→sha chain is the dominant
     # interpreted cost and would otherwise re-run for the freq agg, the
     # prefix ranking, and both verify sides
+    sets = _materialize(
+        df.select(
+            F.col(id_col).alias("id"),
+            *[F.col(c) for c in block_cols],
+            hashed.alias("sh"),
+        )
     )
-    sets = _materialize(sets)
     tok = sets.select(
         "id", *block_cols, F.size("sh").alias("n"), F.explode("sh").alias("t")
     )

@@ -31,12 +31,11 @@ Design (Spark-first):
   ``bucket`` and ``sig`` columns, not the partition column: partition
   columns drop field metadata on read-back (lesson recorded on the
   IVF layout).
-- **The probe never shuffles the index** when ``broadcast_new=True``:
-  the new snapshot's banded signatures broadcast and the index side is
-  a map-side scan → join (plan-pinned in tests). That is the steady-
-  state shape — a monthly delta is small next to years of history.
-  With ``broadcast_new=False`` (a backfill-sized "new" side) the join
-  degrades to a shuffled equi-join on the uniform (band, bucket) key.
+- **The probe never shuffles the index**: the new snapshot's banded
+  signatures broadcast and the index side is a map-side scan → join
+  (plan-pinned in tests). A monthly delta is small next to years of
+  history; a backfill too big to broadcast is deduplicated in one
+  self-join (``dedup.minhash_near_duplicates``) before it is indexed.
 - **Probe BEFORE append**: ``update_minhash_index`` appends the new
   snapshot's rows into the same layout; probing after appending would
   report every new doc as a duplicate of itself.
@@ -203,27 +202,25 @@ def _agreeing_pairs(
     tau: float,
     probe_id: str,
     target_id: str,
-    broadcast_probe: bool,
 ) -> DataFrame:
     """The one band-join → agreement verify over two banded-signature
     frames: ``(probe_id, target_id, n_agree, est_jaccard)`` for every pair
     sharing an LSH band with signature agreement ≥ ceil(tau·64) channels
-    (integer compare — no float threshold ambiguity). With
-    ``broadcast_probe`` the probe's bands broadcast and the target scan
-    never shuffles; otherwise it is a shuffled equi-join on the uniform
-    (band, bucket) key. The verify is a zip_with over the two 64-long
-    arrays already riding the join — document text never moves."""
+    (integer compare — no float threshold ambiguity). The probe is the
+    small side: its bands broadcast and the target scan never shuffles.
+    The verify is a zip_with over the two 64-long arrays already riding
+    the join — document text never moves."""
     if not (0.0 < tau <= 1.0):
         raise ValueError(f"tau must be in (0, 1], got {tau}")
     min_agree = int(math.ceil(N_HASHES * tau - 1e-9))
-    probe = probe.select(
-        F.col("band"),
-        F.col("bucket"),
-        F.col("id").alias(probe_id),
-        F.col("sig").alias("_s_new"),
+    probe = F.broadcast(
+        probe.select(
+            F.col("band"),
+            F.col("bucket"),
+            F.col("id").alias(probe_id),
+            F.col("sig").alias("_s_new"),
+        )
     )
-    if broadcast_probe:
-        probe = F.broadcast(probe)
     target = target.select(
         "band", "bucket", F.col("id").alias(target_id), F.col("sig").alias("_s_idx")
     )
@@ -273,19 +270,17 @@ def near_dup_pairs_against_index(
     tau: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_new: bool = True,
     new_banded: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, index_id, n_agree, est_jaccard) for every new doc ×
     indexed doc sharing an LSH band with signature agreement ≥
-    ceil(tau·64) channels (``_agreeing_pairs``). ``broadcast_new=True``
-    is the steady-state plan: the delta's bands broadcast, the index
-    scan never shuffles. ``new_banded`` (this module's
+    ceil(tau·64) channels (``_agreeing_pairs``): the delta's bands
+    broadcast, the index scan never shuffles. ``new_banded`` (this module's
     ``banded_signatures`` output for ``new_df``) skips re-signing when
     the caller already holds it."""
     if new_banded is None:
         new_banded = banded_signatures(new_df, text_col, id_col)
-    return _agreeing_pairs(new_banded, index, tau, "doc_id", "index_id", broadcast_new)
+    return _agreeing_pairs(new_banded, index, tau, "doc_id", "index_id")
 
 
 def dedup_incremental(
@@ -294,13 +289,10 @@ def dedup_incremental(
     tau: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_new: bool = True,
     new_banded: DataFrame | None = None,
 ) -> DataFrame:
     """Per-new-doc rollup against the persisted index: (doc_id,
     n_index_hits, max_est_jaccard, is_dup) — one row per new doc,
     clean docs included (the keep set is ``where not is_dup``)."""
-    pairs = near_dup_pairs_against_index(
-        new_df, index, tau, text_col, id_col, broadcast_new, new_banded
-    )
+    pairs = near_dup_pairs_against_index(new_df, index, tau, text_col, id_col, new_banded)
     return _per_doc(new_df, id_col, pairs, "n_index_hits", "is_dup")

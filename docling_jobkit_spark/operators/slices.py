@@ -380,7 +380,6 @@ def extract_documents_sliced(
     slice_min_pages: int = 3,
     max_bytes: int | None = None,
     profile: str = "default",
-    slice_partitions: int | None = None,
     payload_format: str = "html",
     payload_col: str = "html",
 ) -> DataFrame:
@@ -441,9 +440,7 @@ def extract_documents_sliced(
     direct = extract_decided(docs.filter(~route_sliced), max_bytes, profile)
     # spread one document's slices across tasks — hash of (_doc_key,
     # slice_index) is uniform, and only slice-sized bytes move
-    slices = spread_slices(
-        split_slices(docs.filter(route_sliced), pages_per_slice), slice_partitions
-    )
+    slices = spread_slices(split_slices(docs.filter(route_sliced), pages_per_slice))
     # identity stamped over the FINAL reassembled rows — same projection
     # as the direct branch (inside extract_decided), identical values by
     # construction
@@ -457,10 +454,9 @@ def extract_pdf_documents_sliced(
     slice_min_pages: int = 3,
     max_bytes: int | None = None,
     payload_col: str = "pdf",
-    slice_partitions: int | None = None,
 ) -> DataFrame:
     """``extract_documents_sliced`` over a column of PDFs."""
     return extract_documents_sliced(
         pages, pages_per_slice, slice_min_pages, max_bytes,
-        slice_partitions=slice_partitions, payload_format="pdf", payload_col=payload_col,
+        payload_format="pdf", payload_col=payload_col,
     )

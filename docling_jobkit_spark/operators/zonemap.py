@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docling_jobkit_spark.checkpoint import _list_parquet_files
 from docling_jobkit_spark.functions.scalar import empty_frame, lit_strings
 
 ZONEMAP_SCHEMA = T.StructType(
@@ -103,8 +104,6 @@ def _canon(path: str) -> str:
 def _data_files(spark: SparkSession, path: str) -> list[str]:
     """Canonical URIs of the parquet data files under ``path`` — one
     driver-side listing."""
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
     return [_canon(p) for p, _ in _list_parquet_files(spark, path)]
 
 

@@ -129,7 +129,6 @@ def curate_corpus(
     text_col: str = "text",
     id_col: str = "doc_id",
     url_col: str = "url",
-    materialize: bool = True,
 ) -> CurationResult:
     """Run the 8-stage funnel. ``docs`` needs (id, url, text); the
     benchmark (decontamination target) is optional — without it stage 7
@@ -188,8 +187,7 @@ def curate_corpus(
     # 27.0 → 17.9 CPU-s / 3.05 → 1.68 s wall with this checkpoint,
     # bit-identical rows. The dedup windows keep their narrow
     # projections (payload never enters a window exchange).
-    if materialize:
-        s = s.localCheckpoint(eager=False)
+    s = s.localCheckpoint(eager=False)
 
     # -- 4+5: exact dedup, then canonical-url dedup, among survivors
     # (keep-first = smallest id), as ONE plan fragment. Stage 5's
@@ -248,8 +246,7 @@ def curate_corpus(
     # Lazy: the fuzzy stage's first action materializes it inside its
     # own job (an eager checkpoint is a separate blocking driver job;
     # same blocks either way).
-    if materialize:
-        s = s.localCheckpoint(eager=False)
+    s = s.localCheckpoint(eager=False)
 
     # -- 6: fuzzy dedup among survivors (clusters, keep canonical) ----
     surv = s.where(F.col("drop_stage").isNull())
@@ -262,7 +259,7 @@ def curate_corpus(
         surv.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
         threshold_num=cfg.minhash_threshold_num,
         threshold_den=cfg.minhash_threshold_den,
-        spread=not materialize,
+        spread=False,
     )
     clusters = near_dup_clusters(pairs)
     non_canonical = clusters.where(F.col("cluster_id") != F.col("id")).select(
@@ -279,7 +276,7 @@ def curate_corpus(
             surv.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
             benchmark,
             k=cfg.contam_k,
-            spread=not materialize,  # same reasoning as the fuzzy stage
+            spread=False,  # same reasoning as the fuzzy stage
         )
         hits = contam.where(F.col("contaminated")).select(
             F.col("doc_id").alias(id_col)
@@ -293,11 +290,9 @@ def curate_corpus(
 
     # Three consumers (stamped / kept / ledger) share this lineage —
     # materialize once (repo invariant: multi-consumer lineage re-runs
-    # the whole funnel per consumer otherwise). At cluster scale a
-    # caller writing stamped to a table first gets the same effect.
-    # Lazy for the same reason as the mid-funnel checkpoint.
-    if materialize:
-        s = s.localCheckpoint(eager=False)
+    # the whole funnel per consumer otherwise). Lazy for the same
+    # reason as the mid-funnel checkpoint.
+    s = s.localCheckpoint(eager=False)
     kept = (
         s.where(F.col("drop_stage").isNull())
         .withColumn(text_col, F.col("redacted_text"))

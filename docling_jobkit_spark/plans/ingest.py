@@ -71,6 +71,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.checkpoint import (
+    _list_parquet_files,
     certified_rewrite,
     committed_dirs,
     delete,
@@ -100,7 +101,6 @@ from docling_jobkit_spark.operators.zonemap import (
     update_zonemap,
     write_zonemap,
 )
-from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
 from docling_jobkit_spark.plans.curation import (
     STAGES,
     CurationConfig,
@@ -144,7 +144,6 @@ _ZONEMAP, _BLOOMIDX = "zonemap", "bloomidx"
 class IngestConfig:
     curation: CurationConfig = field(default_factory=CurationConfig)
     tau: float = 0.8  # fuzzy threshold vs history (est. Jaccard)
-    broadcast_delta: bool = True  # steady state: delta ≪ history
     # file-level min/max manifest over the corpus. Empty tuple disables.
     zonemap_cols: tuple[str, ...] = ("n_chars",)
     # file-level Bloom index over the corpus (point lookups: audits /
@@ -197,17 +196,15 @@ def _has_data_files(path: str) -> bool:
     )
 
 
-def history_exact_hits(
-    hist_hashes: DataFrame, delta_hashes: DataFrame, broadcast_delta: bool = True
-) -> DataFrame:
+def history_exact_hits(hist_hashes: DataFrame, delta_hashes: DataFrame) -> DataFrame:
     """Delta rows whose content_hash is already committed. The history
     side (years of hashes) streams MAP-SIDE against the broadcast
     delta — the seen table, like the MinHash index, is never shuffled
     (plan-pinned in tests/test_ingest.py). ``delta_hashes`` carries
     (id, content_hash); the id column rides through."""
-    if broadcast_delta:
-        delta_hashes = F.broadcast(delta_hashes)
-    return hist_hashes.join(delta_hashes, on="content_hash").drop("content_hash")
+    return hist_hashes.join(F.broadcast(delta_hashes), on="content_hash").drop(
+        "content_hash"
+    )
 
 
 def _history_dirs(
@@ -273,7 +270,6 @@ def ingest_batch(
         text_col=text_col,
         id_col=id_col,
         url_col=url_col,
-        materialize=True,
     )
     stamped = cur.stamped  # carries redacted_text for survivors
 
@@ -293,9 +289,7 @@ def ingest_batch(
             F.col(id_col),
             content_hash(F.col("redacted_text")).alias("content_hash"),
         )
-        flagged = history_exact_hits(
-            hist_hashes, delta_hashes, cfg.broadcast_delta
-        ).select(id_col)
+        flagged = history_exact_hits(hist_hashes, delta_hashes).select(id_col)
         stamped = _drop_flagged(
             stamped, flagged, id_col, "history_exact", F.lit("seen_content_hash")
         )
@@ -315,13 +309,7 @@ def ingest_batch(
             F.col("redacted_text").alias("text"),
         )
         surv_banded = banded_signatures(surv).localCheckpoint(eager=False)
-        verdicts = dedup_incremental(
-            surv,
-            idx,
-            tau=cfg.tau,
-            broadcast_new=cfg.broadcast_delta,
-            new_banded=surv_banded,
-        )
+        verdicts = dedup_incremental(surv, idx, tau=cfg.tau, new_banded=surv_banded)
         flagged = verdicts.where(F.col("is_dup")).select(
             F.col("doc_id").alias(id_col)
         )
@@ -694,7 +682,6 @@ def read_corpus_latest(
     spark: SparkSession,
     state_dir: str,
     on_expired: str = "raise",
-    broadcast_losers: bool = True,
 ) -> DataFrame:
     """Merge-on-read upsert view — the newest copy of every url across
     all committed batches (the Iceberg MOR / ``MERGE INTO`` read-side
@@ -712,9 +699,7 @@ def read_corpus_latest(
     computed on a narrow (doc_id, url, batch) projection (the only
     frame that exchanges), then removed with a broadcast LEFT ANTI join
     on doc_id — document text crosses no Exchange (plan-pinned in
-    tests/test_supersede.py). ``broadcast_losers=False`` opts into a
-    shuffled anti-join for a corpus whose accumulated re-crawl set
-    outgrew the broadcast threshold. doc_id is a sound anti-join key:
+    tests/test_supersede.py). doc_id is a sound anti-join key:
     it hashes (url, content_hash) and content_hash is unique
     corpus-wide (within-batch exact dedup + history_exact).
 
@@ -735,9 +720,7 @@ def read_corpus_latest(
         .where(F.col("batch") < F.col("_newest"))
         .select("doc_id")
     )
-    if broadcast_losers:
-        losers = F.broadcast(losers)
-    return corpus.join(losers, on="doc_id", how="left_anti")
+    return corpus.join(F.broadcast(losers), on="doc_id", how="left_anti")
 
 
 @dataclass(frozen=True)

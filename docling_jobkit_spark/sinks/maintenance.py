@@ -34,7 +34,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from docling_jobkit_spark.checkpoint import _fs, content_signature  # noqa: F401
+from docling_jobkit_spark.checkpoint import _list_parquet_files
 
 
 @dataclass(frozen=True)
@@ -42,23 +42,6 @@ class CompactionStats:
     n_files_before: int
     n_files_after: int
     bytes_before: int
-    n_rows: int
-
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) of the data files under ``path`` — one driver-side
-    Hadoop-FS listing (object-store safe: LIST, no rename assumptions),
-    bounded by the file count, which is exactly what compaction is
-    trying to shrink."""
-    fs, jpath = _fs(path)
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            out.append((st.getPath().toString(), int(st.getLen())))
-    return out
 
 
 def compact_files(
@@ -106,11 +89,8 @@ def compact_files(
             else:
                 conf.set(k, v)
 
-    after = _list_parquet_files(spark, dst_path)
-    n_rows = spark.read.parquet(dst_path).count()
     return CompactionStats(
         n_files_before=len(files),
-        n_files_after=len(after),
+        n_files_after=len(_list_parquet_files(spark, dst_path)),
         bytes_before=bytes_before,
-        n_rows=n_rows,
     )

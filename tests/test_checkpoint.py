@@ -199,8 +199,12 @@ def test_storage_goes_through_hadoop_fs():
     only through checkpoint.py's Hadoop-FS primitives, so every scheme
     behaves alike. The one POSIX exception is put_if_absent's
     ``file``-scheme branch (``_link_if_absent``): Hadoop's local create
-    is not atomic."""
+    is not atomic. No other package module reaches for the raw
+    FileSystem handle (``checkpoint._fs``): listings live beside
+    ``list_status``."""
     import inspect
+    import pathlib
+    import re
 
     import docling_jobkit_spark.checkpoint as cp
     import docling_jobkit_spark.plans.ingest as ingest
@@ -224,6 +228,13 @@ def test_storage_goes_through_hadoop_fs():
     for name, src in sources.items():
         for call in banned:
             assert call not in src, f"{name} uses {call}"
+    pkg = pathlib.Path(cp.__file__).parent
+    raw_fs = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p != pkg / "checkpoint.py" and re.search(r"\b_fs\b", p.read_text())
+    )
+    assert not raw_fs, f"modules outside checkpoint.py name _fs: {raw_fs}"
 
 
 def test_remaining_pages_prunes_committed_groups(spark, tmp_path):

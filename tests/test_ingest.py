@@ -29,8 +29,9 @@ SECOND_BATCH_COMPILES = 20
 DROP_ROWS_NOOP_JOBS = 4
 DROP_ROWS_JOBS = 8
 # Compacting a 4-file batch and reconciling both manifests ran 28 jobs
-# (32 with a distinct-column collect per manifest).
-COMPACT_JOBS = 29
+# (32 with a distinct-column collect per manifest), and 22 once
+# compact_files stopped counting the rows it wrote (3 jobs per call).
+COMPACT_JOBS = 22
 
 
 def _batch_a(spark, sf_dir):
@@ -173,7 +174,7 @@ def test_zonemap_manifest_tracks_corpus_incrementally(spark, state):
         read_zonemap,
         update_zonemap,
     )
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     zm = read_zonemap(spark, f"{root}/zonemap")
     on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, f"{root}/corpus")}
@@ -232,7 +233,7 @@ def test_seen_probe_broadcasts_delta_never_shuffles_history(spark, state):
     delta = spark.range(100).select(
         F.col("id").alias("doc_id"), F.sha2(F.col("id").cast("string"), 256).alias("content_hash")
     )
-    hits = history_exact_hits(hist, delta, broadcast_delta=True)
+    hits = history_exact_hits(hist, delta)
     plan = hits._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -361,7 +362,7 @@ def test_compact_ingest_batch_preserves_content_and_manifest(spark, sf_dir, tmp_
         CompactBatchStats,
         compact_ingest_batch,
     )
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     root = str(tmp_path / "state")
     a, _ = _batch_a(spark, sf_dir)
@@ -406,7 +407,7 @@ def test_compact_ingest_batch_keeps_every_zonemap_column(spark, sf_dir, tmp_path
     ``n_chars``."""
     from docling_jobkit_spark.operators.zonemap import _canon, read_zonemap
     from docling_jobkit_spark.plans.ingest import compact_ingest_batch
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     root = str(tmp_path / "state")
     a, _ = _batch_a(spark, sf_dir)
@@ -467,7 +468,7 @@ def test_failed_tmp_certificate_is_never_healed(spark, sf_dir, tmp_path, monkeyp
     intact source instead of applying the short tmp as a heal copy."""
     import docling_jobkit_spark.sinks.maintenance as maintenance
     from docling_jobkit_spark.plans.ingest import CORPUS_SCHEMA, compact_ingest_batch
-    from docling_jobkit_spark.sinks.maintenance import (
+    from docling_jobkit_spark.checkpoint import (
         _list_parquet_files,
         content_signature,
     )
@@ -505,7 +506,7 @@ def test_failed_tmp_certificate_is_never_healed(spark, sf_dir, tmp_path, monkeyp
 
 def test_ingest_state_report(spark, state):
     from docling_jobkit_spark.plans.ingest import ingest_state_report
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     root, a, _, res_a, res_b = state
     rep = {r["batch_id"]: r for r in ingest_state_report(spark, root).collect()}
@@ -777,7 +778,7 @@ def test_bloom_manifest_locates_content_and_survives_lifecycle(
     bi2 = read_bloom_index(spark, f"{root}/bloomidx")
     live = {r["file"] for r in bi2.select("file").distinct().collect()}
     from docling_jobkit_spark.operators.zonemap import _canon
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     on_disk = {_canon(p) for p, _ in _list_parquet_files(spark, f"{root}/corpus")}
     assert live == on_disk
@@ -940,7 +941,7 @@ def test_delete_content_rewrites_only_affected_files(spark, sf_dir, tmp_path):
         locate_content,
     )
     from docling_jobkit_spark.operators.zonemap import read_zonemap
-    from docling_jobkit_spark.sinks.maintenance import (
+    from docling_jobkit_spark.checkpoint import (
         _list_parquet_files,
         content_signature,
     )
@@ -1036,7 +1037,7 @@ def test_delete_content_heals_torn_apply(spark, sf_dir, tmp_path):
         _TAKEDOWN_SCHEMA,
         delete_content,
     )
-    from docling_jobkit_spark.sinks.maintenance import (
+    from docling_jobkit_spark.checkpoint import (
         _list_parquet_files,
         content_signature,
     )
@@ -1209,7 +1210,7 @@ def test_delete_content_spans_batches(spark, sf_dir, tmp_path):
         delete_content,
         locate_content,
     )
-    from docling_jobkit_spark.sinks.maintenance import content_signature
+    from docling_jobkit_spark.checkpoint import content_signature
 
     root = str(tmp_path / "state")
     a, fresh_b = _batch_a(spark, sf_dir)
@@ -1338,7 +1339,7 @@ def test_compact_ingest_batch_job_budget(spark, tmp_path, count_jobs):
         write_zonemap,
     )
     from docling_jobkit_spark.plans.ingest import compact_ingest_batch
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+    from docling_jobkit_spark.checkpoint import _list_parquet_files
 
     root = str(tmp_path / "state")
     spark.range(40).select(

@@ -233,9 +233,7 @@ def test_probe_after_append_matches_itself(spark, docs, tmp_path):
 
 def test_broadcast_probe_never_shuffles_the_index(spark, docs, index_path):
     idx = read_minhash_index(spark, index_path)
-    pairs = near_dup_pairs_against_index(
-        _new_snapshot(docs), idx, tau=TAU, broadcast_new=True
-    )
+    pairs = near_dup_pairs_against_index(_new_snapshot(docs), idx, tau=TAU)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

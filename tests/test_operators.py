@@ -43,6 +43,18 @@ def test_jaccard_pairs_finds_near_dup(spark, docs):
     assert not any(a == 2 or b == 2 for a, b in pairs)  # different lang block
 
 
+@pytest.mark.parametrize("num,den", [(0, 2), (3, 2), (1, 0)])
+def test_jaccard_pairs_rejects_thresholds_outside_unit_interval(spark, docs, num, den):
+    """The prefix join only finds pairs sharing an element, so it can
+    answer J >= t for 0 < t <= 1 only: a threshold <= 0 would silently
+    miss disjoint pairs, one > 1 matches nothing, and a zero
+    denominator is no threshold at all."""
+    from docling_jobkit_spark.operators.dedup import jaccard_pairs
+
+    with pytest.raises(ValueError, match="threshold"):
+        jaccard_pairs(docs, threshold_num=num, threshold_den=den)
+
+
 def test_minhash_and_simhash_agree_on_dups(spark, docs):
     from docling_jobkit_spark.operators.dedup import (
         minhash_near_duplicates,

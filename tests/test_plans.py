@@ -452,7 +452,7 @@ def _barrier_operator(name, docs, emb):
     from docling_jobkit_spark.operators.textstats import gopher_filter, gopher_stamp
 
     return {
-        "jaccard_pairs": lambda: jaccard_pairs(docs, prefix_filter=True),
+        "jaccard_pairs": lambda: jaccard_pairs(docs),
         "minhash_near_duplicates": lambda: minhash_near_duplicates(docs),
         "contamination_fuzzy_pairs": lambda: contamination_fuzzy_pairs(
             docs, docs.where("doc_id < 5")
@@ -579,8 +579,10 @@ def test_twin_algorithms_have_one_home():
     the hash beside ``length(bin(r))``) and the HLL estimator's scaled
     ``shiftleft`` for global and grouped sketches alike, the band slice
     of ``sig`` in the one MinHash banding, and the signature-agreement
-    ``zip_with(..., a == b)`` fold in the one band-join probe. A second
-    site is a twin that can drift from the first."""
+    ``zip_with(..., a == b)`` fold in the one band-join probe, and the
+    Bloom bit → (packed word, mask) arithmetic (``_pos div 62`` beside
+    ``pmod(_pos, 62)``) with its ``_WORD`` width in ``bloom.bloom_word``.
+    A second site is a twin that can drift from the first."""
     import ast
     import pathlib
 
@@ -594,12 +596,19 @@ def test_twin_algorithms_have_one_home():
         return isinstance(node, ast.Constant) and node.value == value
 
     sites: dict[str, set[str]] = {
-        k: set() for k in ("chunk_row", "hll_rho", "hll_estimator", "band_slice", "agreement")
+        k: set()
+        for k in (
+            "chunk_row", "hll_rho", "hll_estimator", "band_slice", "agreement", "bloom_word"
+        )
     }
     for path in pathlib.Path(ops.__file__).parent.glob("*.py"):
         tree = ast.parse(path.read_text())
         for top in tree.body:
             where = f"{path.stem}.{getattr(top, 'name', '<module>')}"
+            if isinstance(top, ast.Assign) and any(
+                getattr(t, "id", None) == "_WORD" for t in top.targets
+            ):
+                sites["bloom_word"].add(f"{path.stem}._WORD")
             calls = set()
             for node in ast.walk(top):
                 if isinstance(node, ast.Dict) and any(
@@ -609,6 +618,8 @@ def test_twin_algorithms_have_one_home():
                 if isinstance(node, ast.Constant) and isinstance(node.value, str):
                     if node.value == " - register)":  # 2^(S+1-register)
                         sites["hll_estimator"].add(where)
+                    if " div " in node.value or "CAST(pmod(" in node.value:
+                        sites["bloom_word"].add(where)
                 if not isinstance(node, ast.Call):
                     continue
                 name = call_name(node)
@@ -631,6 +642,7 @@ def test_twin_algorithms_have_one_home():
         "hll_estimator": {"sketches._hll_estimates"},
         "band_slice": {"dedup._minhash_bands"},
         "agreement": {"minhash_index._agreeing_pairs"},
+        "bloom_word": {"bloom.bloom_word", "bloom._WORD"},
     }, sites
 
     index_src = (pathlib.Path(ops.__file__).parent / "minhash_index.py").read_text()

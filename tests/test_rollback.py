@@ -21,7 +21,7 @@ from docling_jobkit_spark.plans.ingest import (
     read_corpus_asof,
     rollback_batch,
 )
-from docling_jobkit_spark.sinks.maintenance import content_signature
+from docling_jobkit_spark.checkpoint import content_signature
 
 CFG = IngestConfig()
 FAMILIES = ("corpus", "seen", "index", "shards", "ledger")
